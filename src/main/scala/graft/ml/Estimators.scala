@@ -346,13 +346,13 @@ final class GraftXGBClassifier extends GraftEstimator[GraftXGBClassifier] {
           "eval-set history needs per-round models (multiclassStrategy=ovr " +
           "or softprob); RandomForest multiclass has no boosting rounds")
         evalsResult = fitted.model match {
-          case sp: SoftprobBoost.SoftprobModel =>
+          case mm: MultiSparse.MultiSparseModel =>
             // true softprob: one staged walk of the joint forest
             evalSets.map { case (name, d) =>
               val data = GraftBoost.assemble(
                 d.withColumn("label", col(labelCol).cast("double")),
                 featureCols, fitted.imputation)
-              name -> SoftprobBoost.stagedEval(sp, data, evalWeights.get(name))
+              name -> mm.stagedEval(data, evalWeights.get(name))
             }
           case _ =>
             evalSets.map { case (name, d) =>

@@ -64,10 +64,11 @@ object GraftBoost {
     *                         replaced per `missingStrategy` before
     *                         assembly — a documented divergence from
     *                         XGBoost.
-    * @param multiclassStrategy "ovr" = OneVsRest over binary GBT
-    *                         (closest to multi:softprob boosting);
-    *                         "rf" = RandomForest (single model,
-    *                         native probabilities; faster at scale)
+    * @param multiclassStrategy "softprob" = true multi:softprob
+    *                         boosting, K native trees per round
+    *                         ([[SoftprobBoost]]); "ovr" = OneVsRest
+    *                         over binary GBT; "rf" = RandomForest
+    *                         (single model, native probabilities)
     * @param seed             determinism anchor
     */
   final case class BoostParams(
@@ -535,6 +536,26 @@ object GraftBoost {
         */
       marginCol: Option[String] = None
   ): GraftBoostModel = {
+    // the fit labels its jobs `boost: <phase>`; the caller's own job
+    // description is put back however the fit ends
+    val sc = df.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try fit(df, featureCols, labelCol, params, weightCol, validationCol,
+      groupCol, marginCol, callerDescription)
+    finally sc.setJobDescription(callerDescription)
+  }
+
+  private def fit(
+      df: DataFrame,
+      featureCols: Seq[String],
+      labelCol: String,
+      params: BoostParams,
+      weightCol: Option[String],
+      validationCol: Option[String],
+      groupCol: Option[String],
+      marginCol: Option[String],
+      callerDescription: String
+  ): GraftBoostModel = {
     val native = params.missingStrategy == "native"
     if (marginCol.isDefined)
       require((native || params.objective == "reg:gamma" ||
@@ -606,7 +627,8 @@ object GraftBoost {
     val data =
       (if (trainParts > 1) assembled.repartition(trainParts) else assembled)
         .localCheckpoint()
-    df.sparkSession.sparkContext.setJobDescription(null)
+    // unlabelled phases (the MLlib fits) run under the caller's label
+    df.sparkSession.sparkContext.setJobDescription(callerDescription)
 
     if (params.booster == "gblinear") {
       require(!native,
@@ -840,7 +862,6 @@ object GraftBoost {
       case m: GBTClassificationModel     => m.transform(data)
       case m: RandomForestClassificationModel => m.transform(data)
       case m: OneVsRestModel             => m.transform(data)
-      case m: SoftprobBoost.SoftprobModel => m.transform(data).drop("margins")
       case m: MultiSparse.MultiSparseModel => m.transform(data).drop("margins")
       case m: QuantileBoost.QuantileModel => m.transform(data)
       case m: PoissonBoost.PoissonModel   => m.transform(data)
@@ -896,11 +917,7 @@ object GraftBoost {
           Array(1.0 - p, p)
         })
         data.withColumn("proba", pU(col("features"))).drop("features")
-      case m: SoftprobBoost.SoftprobModel => softmaxProba(m.transform(data))
-      case m: MultiSparse.MultiSparseModel =>
-        // the ingested-document scorer shares the softprob path —
-        // its margins column has the same contract
-        softmaxProba(m.transform(data))
+      case m: MultiSparse.MultiSparseModel => softmaxProba(m.transform(data))
       case m: ProbabilisticClassificationModel[_, _] =>
         m.transform(data)
           .withColumn("proba", vector_to_array(col("probability")))
@@ -1067,9 +1084,6 @@ object GraftBoost {
             s"local OvR predict needs GBT per class, got ${other.getClass}")
         }
         scores.indices.maxBy(scores(_)).toDouble
-      case m: SoftprobBoost.SoftprobModel =>
-        val margins = m.marginsOf(f)
-        margins.indices.maxBy(margins(_)).toDouble
       case m: MultiSparse.MultiSparseModel =>
         val margins = m.marginsOf(f)
         margins.indices.maxBy(margins(_)).toDouble
@@ -1091,7 +1105,7 @@ object GraftBoost {
     */
   def featureImportances(model: GraftBoostModel): Map[String, Double] = {
     // equal-weight average over an ensemble's member importances,
-    // renormalized to sum 1 (shared by the OvR and softprob branches)
+    // renormalized to sum 1
     def avgNormalized(per: Seq[Array[Double]]): Array[Double] = {
       val avg = per.head.indices.map(i => per.map(_(i)).sum / per.length).toArray
       val total = avg.sum
@@ -1102,18 +1116,14 @@ object GraftBoost {
       case g: GBTClassificationModel          => g.featureImportances.toArray
       case g: RandomForestClassificationModel => g.featureImportances.toArray
       case o: OneVsRestModel => avgNormalized(o.models.map(ofModel))
-      case sp: SoftprobBoost.SoftprobModel =>
-        // average the h-weighted-variance importances over the whole
-        // joint forest, renormalized — every (round, class) tree
-        // contributes equally, matching XGBoost's gain averaging
-        avgNormalized(sp.trees.flatten.map(_.featureImportances.toArray))
       case sb: SparseBoost.SparseModel =>
         // per-feature total split gain accumulated during training —
         // XGBoost's `total_gain` importance, already normalized
         sb.importances
       case mm: MultiSparse.MultiSparseModel =>
-        // ingested multiclass document: normalized total_gain over
-        // the statistics rebuilt from loss_changes at ingest
+        // softprob forest: normalized total_gain over the training
+        // split statistics (or, for an ingested document, the ones
+        // rebuilt from its loss_changes)
         val g = mm.importanceByType("total_gain")
         val tot = g.sum
         if (tot > 0) g.map(_ / tot) else g

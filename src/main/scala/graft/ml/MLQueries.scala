@@ -795,9 +795,9 @@ object MLQueries {
   )
 
   /** True single-model multi:softprob lifecycle (core.py:580-590
-    * MECHANISM parity — [[SoftprobBoost]]: K trees per round on
-    * shared multinomial gradients, Newton leaves) on a 4-class slice
-    * of the embeddings table. Gates: accuracy well above the majority
+    * MECHANISM parity — [[SoftprobBoost]]: K native histogram trees
+    * per round on shared multinomial gradients, Newton leaves) on a
+    * 4-class slice of the embeddings table. Gates: accuracy well above the majority
     * class, train mlogloss monotone improving over rounds, and the
     * probability rows normalized — the three things that break if the
     * joint gradient bookkeeping is wrong. Class slice + 5 rounds keep

@@ -35,9 +35,6 @@ object ModelIO {
       evalsResult: Map[String, Map[String, Array[Double]]],
       calibrationA: Seq[Double] = Seq.empty,
       calibrationB: Seq[Double] = Seq.empty,
-      // softprob forest shape (modelClass SoftprobModel only)
-      softprobEta: Double = 0.0,
-      softprobRounds: Int = 0,
       // poisson booster shape (modelClass PoissonModel only)
       poissonBase: Double = 0.0,
       poissonEta: Double = 0.0,
@@ -107,9 +104,9 @@ object ModelIO {
       cats: Seq[Seq[Seq[Int]]] = Seq.empty
   )
 
-  /** Serialized form of a [[MultiSparse.MultiSparseModel]] (ingested
-    * or converted multiclass forest) — model-sized driver arrays
-    * under `model/multisparse.json`.
+  /** Serialized form of a [[MultiSparse.MultiSparseModel]] (trained
+    * softprob or ingested multiclass forest) — model-sized driver
+    * arrays under `model/multisparse.json`.
     */
   private case class MultiSparseDoc(
       base: Double,
@@ -168,16 +165,13 @@ object ModelIO {
     }
     val multi =
       if (model.numClasses > 2) model.model match {
-        case _: SoftprobBoost.SoftprobModel =>
-          Some("multiclass: single-model softprob boosting — K trees per " +
-            "round on shared multinomial softmax gradients, Newton leaves " +
-            "via hessian-weighted least squares (core.py:580-590 mechanism " +
-            "parity up to split-finding details).")
         case _: MultiSparse.MultiSparseModel =>
-          Some("multiclass: native tree_info-routed forest (XGBoost JSON " +
-            "ingest / conversion) — per-class margins summed over the " +
-            "document's trees, softmax probabilities; true multi:softprob " +
-            "serving semantics incl. default-branch NaN routing.")
+          Some("multiclass: single-model softprob forest — K trees per " +
+            "round on shared multinomial softmax gradients with Newton " +
+            "leaves and gains (core.py:580-590 mechanism parity up to " +
+            "split-finding details), or an ingested XGBoost tree_info-" +
+            "routed document; per-class margins summed over the trees, " +
+            "softmax probabilities, default-branch NaN routing.")
         case _ =>
           Some("multiclass: one-vs-rest / RF ensemble, per-class scores " +
             "normalized (+ optional Platt calibration) — NOT XGBoost " +
@@ -236,13 +230,6 @@ object ModelIO {
 
   def save(spark: SparkSession, model: GraftBoostModel, path: String): Unit = {
     model.model match {
-      // a softprob forest is a composite: one MLlib tree writer per
-      // (round, class) under model/tree_r<r>_k<k>; shape/eta live in
-      // graft_meta.json so load can reassemble it
-      case sp: SoftprobBoost.SoftprobModel =>
-        for (r <- sp.trees.indices; k <- 0 until sp.numClasses)
-          sp.trees(r)(k).write.overwrite()
-            .save(new Path(path, s"model/tree_r${r}_k$k").toString)
       // a poisson booster is one MLlib tree writer per round plus the
       // (base, eta) scalars in graft_meta.json
       case pm: PoissonBoost.PoissonModel =>
@@ -289,8 +276,8 @@ object ModelIO {
         val outS = fsS.create(new Path(path, "model/sparse.json"), true)
         try outS.write(Serialization.write(doc).getBytes("UTF-8"))
         finally outS.close()
-      // a multiclass native forest (XgbJson ingest / conversion) is
-      // model-sized driver arrays — one JSON
+      // a multiclass native forest (trained softprob or XgbJson
+      // ingest) is model-sized driver arrays — one JSON
       case mm: MultiSparse.MultiSparseModel =>
         import org.json4s.DefaultFormats
         import org.json4s.jackson.Serialization
@@ -347,14 +334,6 @@ object ModelIO {
       model.evalsResult,
       model.calibration.map(_.map(_._1).toSeq).getOrElse(Seq.empty),
       model.calibration.map(_.map(_._2).toSeq).getOrElse(Seq.empty),
-      softprobEta = model.model match {
-        case sp: SoftprobBoost.SoftprobModel => sp.eta
-        case _ => 0.0
-      },
-      softprobRounds = model.model match {
-        case sp: SoftprobBoost.SoftprobModel => sp.trees.length
-        case _ => 0
-      },
       poissonBase = model.model match {
         case pm: PoissonBoost.PoissonModel => pm.base
         case _ => 0.0
@@ -392,14 +371,6 @@ object ModelIO {
       case c if c.endsWith("RandomForestClassificationModel") =>
         RandomForestClassificationModel.load(modelPath)
       case c if c.endsWith("OneVsRestModel") => OneVsRestModel.load(modelPath)
-      case c if c.endsWith("SoftprobModel") =>
-        val trees = Array.tabulate(meta.softprobRounds, meta.numClasses) {
-          (r, k) =>
-            org.apache.spark.ml.regression.DecisionTreeRegressionModel
-              .load(new Path(path, s"model/tree_r${r}_k$k").toString)
-        }
-        new SoftprobBoost.SoftprobModel(
-          s"softprob_loaded", trees, meta.softprobEta, meta.numClasses)
       case c if c.endsWith("PoissonModel") =>
         val trees = Array.tabulate(meta.poissonRounds) { r =>
           org.apache.spark.ml.regression.DecisionTreeRegressionModel

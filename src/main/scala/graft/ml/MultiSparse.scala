@@ -18,16 +18,14 @@ import SparseBoost.{ImportanceAcc, SparseTree}
   * `tree_info` carries each tree's class id (round-major: round r owns
   * trees [r·K, (r+1)·K) for a plain K-class fit).
   *
-  * This is the scoring form behind multiclass [[XgbJson]] interchange
-  * (reference `core.py:580-590` rewrites binary objectives to
-  * `multi:softprob`; its tests `test_core.py:72-101` exercise the
-  * multiclass lifecycle): a stock XGBoost multiclass document ingests
-  * into this model and scores with serving semantics (NaN routed along
-  * each split's `default_left`), and the engine's own
-  * [[SoftprobBoost.SoftprobModel]] forests convert losslessly via
-  * [[MultiSparse.fromMLlibTree]] for export. Scoring broadcasts the
-  * model-sized tree arrays once — one map-side pass, no shuffle, no
-  * driver data path.
+  * This is the model [[SoftprobBoost]] trains (reference
+  * `core.py:580-590` rewrites binary objectives to `multi:softprob`;
+  * its tests `test_core.py:72-101` exercise the multiclass lifecycle)
+  * and the scorer multiclass [[XgbJson]] documents ingest into: a
+  * stock XGBoost multiclass document scores with serving semantics
+  * (NaN routed along each split's `default_left`). Scoring broadcasts
+  * the model-sized tree arrays once — one map-side pass, no shuffle,
+  * no driver data path.
   */
 object MultiSparse {
 
@@ -48,8 +46,9 @@ object MultiSparse {
       val base: Double,
       val objective: String,
       /** Raw per-feature split statistics (the `get_score` inputs) —
-        * recomputed at ingest from the document's `loss_changes` /
-        * `sum_hessian` when available; empty = stats unavailable.
+        * accumulated by the grower in training, or recomputed at
+        * ingest from the document's `loss_changes` / `sum_hessian`
+        * when available; empty = stats unavailable.
         */
       val stats: ImportanceAcc = ImportanceAcc.empty,
       /** True when this forest came through a dart document (drop
@@ -69,9 +68,8 @@ object MultiSparse {
         objective, stats, dartFolded)
 
     /** Accumulated per-class margins for one feature vector — tree
-      * order, so a forest converted from [[SoftprobBoost]] sums each
-      * class's rounds in the exact order the original model does
-      * (bit-identical margins).
+      * order, so each class sums its rounds in the order
+      * [[SoftprobBoost]] accumulated its training margins.
       */
     def marginsOf(v: Vector): Array[Double] = {
       val m = Array.fill(numClasses)(base)
@@ -83,8 +81,7 @@ object MultiSparse {
     }
 
     /** Softmax probabilities (max-shifted) for one feature vector. */
-    def probaOf(v: Vector): Array[Double] =
-      SoftprobBoost.softmaxInPlace(marginsOf(v))
+    def probaOf(v: Vector): Array[Double] = softmaxInPlace(marginsOf(v))
 
     /** XGBoost `get_score` parity over recomputed split statistics —
       * one shared dispatch ([[ImportanceAcc.byType]]) with the same
@@ -104,8 +101,79 @@ object MultiSparse {
         .add(StructField("margins", ArrayType(DoubleType, containsNull = false)))
         .add(StructField("prediction", DoubleType))
 
-    override def transform(ds: Dataset[_]): DataFrame =
-      argmaxTransform(ds, this)((m, v) => m.marginsOf(v))
+    /** Appends `margins` (array of K doubles) and `prediction` — the
+      * argmax class id with ties breaking to the LOWEST class
+      * (array_position finds the first maximum).
+      */
+    override def transform(ds: Dataset[_]): DataFrame = {
+      val bc = ds.sparkSession.sparkContext.broadcast(this)
+      val mU = udf((v: Vector) => bc.value.marginsOf(v))
+      ds.withColumn("margins", mU(col("features")))
+        .withColumn("prediction",
+          (array_position(col("margins"), array_max(col("margins"))) - 1L)
+            .cast(DoubleType))
+    }
+
+    /** Boosting rounds of the plain round-major layout (tree i ->
+      * class i mod K); refuses an irregular tree_info, which has no
+      * round structure.
+      */
+    def numRounds: Int = {
+      val roundMajor = trees.length % numClasses == 0 &&
+        treeInfo.indices.forall(i => treeInfo(i) == i % numClasses)
+      require(roundMajor,
+        "round-indexed use needs the round-major tree layout (tree i -> " +
+        "class i mod K); this document's tree_info is irregular")
+      trees.length / numClasses
+    }
+
+    /** Per-round eval history on a frame in ONE pass (the multiclass
+      * analog of [[StagedEval]]'s staged margins): each row walks the
+      * forest once, round by round (K trees each), emitting that
+      * round's (logloss, error) contribution; the per-round averages
+      * are one weighted aggregation. `df` must carry `features` and
+      * `label`; the optional weight column weights both metrics
+      * (`sample_weight_eval_set`).
+      *
+      * @return ("mlogloss" → per-round, "merror" → per-round)
+      */
+    def stagedEval(
+        df: DataFrame,
+        weightCol: Option[String] = None
+    ): Map[String, Array[Double]] = {
+      require(!dartFolded,
+        "staged evaluation of a dart-folded forest: its tree prefixes " +
+        "are no training-time round margins")
+      val rounds = numRounds
+      val K = numClasses
+      val bc = df.sparkSession.sparkContext.broadcast(this)
+      val perRound = udf((v: Vector, label: Double) => {
+        val m = bc.value
+        val f = Array.fill(K)(m.base)
+        val li = label.toInt
+        (0 until rounds).map { r =>
+          var k = 0
+          while (k < K) { f(k) += m.trees(r * K + k).valueOf(v); k += 1 }
+          val p = softmaxInPlace(f.clone())
+          var am = 0; k = 1
+          while (k < K) { if (f(k) > f(am)) am = k; k += 1 }
+          (-math.log(math.max(p(li), 1e-15)), if (am == li) 0.0 else 1.0)
+        }
+      })
+      val w = weightCol.map(col).getOrElse(lit(1.0))
+      val staged = df
+        .select(perRound(col("features"), col("label").cast(DoubleType)).as("s"),
+          w.as("w"))
+      val aggs = (0 until rounds).flatMap { r =>
+        Seq(sum(element_at(col("s"), r + 1)("_1") * col("w")).as(s"l$r"),
+          sum(element_at(col("s"), r + 1)("_2") * col("w")).as(s"e$r"))
+      } :+ sum(col("w")).as("wt")
+      val row = staged.agg(aggs.head, aggs.tail: _*).head()
+      val wt = row.getDouble(2 * rounds)
+      val lo = Array.tabulate(rounds)(r => row.getDouble(2 * r) / wt)
+      val er = Array.tabulate(rounds)(r => row.getDouble(2 * r + 1) / wt)
+      Map("mlogloss" -> lo, "merror" -> er)
+    }
 
     /** Truncated copy keeping the first `rounds` boosting rounds —
       * XGBoost's `iteration_range` on a multiclass document. Needs
@@ -121,14 +189,9 @@ object MultiSparse {
         "cannot truncate a dart-folded forest: drop-weight rescales " +
         "mean no tree prefix reproduces a training-time round margin " +
         "(XGBoost likewise forbids ntree_limit with booster='dart')")
-      val roundMajor = trees.length % numClasses == 0 &&
-        treeInfo.indices.forall(i => treeInfo(i) == i % numClasses)
-      require(roundMajor,
-        "truncation needs the round-major tree layout (tree i -> " +
-        "class i mod K); this document's tree_info is irregular")
-      val numRounds = trees.length / numClasses
-      require(rounds >= 1 && rounds <= numRounds,
-        s"rounds must be in [1, $numRounds], got $rounds")
+      val n = numRounds
+      require(rounds >= 1 && rounds <= n,
+        s"rounds must be in [1, $n], got $rounds")
       val kept = trees.take(rounds * numClasses)
       val newStats =
         if (stats.gain.isEmpty || kept.exists(t => t.gain.length != t.feature.length))
@@ -149,37 +212,15 @@ object MultiSparse {
     }
   }
 
-  /** THE multiclass scoring transform, shared by both margin scorers
-    * ([[MultiSparseModel]] and [[SoftprobBoost.SoftprobModel]]):
-    * broadcast the model once, append `margins` (array of K doubles)
-    * and `prediction` — the argmax class id with ties breaking to the
-    * LOWEST class (array_position finds the first maximum). One
-    * definition so the tie-break contract can never drift between the
-    * trained and the ingested scorer.
-    */
-  private[ml] def argmaxTransform[M <: java.io.Serializable : scala.reflect.ClassTag](
-      ds: Dataset[_], model: M)(
-      marginsOf: (M, Vector) => Array[Double]): DataFrame = {
-    val bc = ds.sparkSession.sparkContext.broadcast(model)
-    val mU = udf((v: Vector) => marginsOf(bc.value, v))
-    ds.withColumn("margins", mU(col("features")))
-      .withColumn("prediction",
-        (array_position(col("margins"), array_max(col("margins"))) - 1L)
-          .cast(DoubleType))
-  }
-
-  /** Lossless array-form view of a trained softprob forest: round-
-    * major flatten (round r's K class trees in class order) with
-    * `tree_info` class ids — the exact layout [[XgbJson]] exports and
-    * the per-class sum order that keeps margins bit-identical to
-    * [[SoftprobBoost.SoftprobModel.marginsOf]]. Base margin is 0 (the
-    * softprob loop starts every class at F = 0).
-    */
-  def fromSoftprob(sp: SoftprobBoost.SoftprobModel): MultiSparseModel = {
-    val K = sp.numClasses
-    val flat = sp.trees.flatMap(_.map(fromMLlibTree(_, sp.eta)))
-    new MultiSparseModel(sp.uid + "_arr", flat,
-      Array.tabulate(flat.length)(_ % K), K, 0.0, "multi:softprob")
+  /** Max-shifted softmax of `m`, in place. */
+  private[ml] def softmaxInPlace(m: Array[Double]): Array[Double] = {
+    var mx = m(0); var k = 1
+    while (k < m.length) { if (m(k) > mx) mx = m(k); k += 1 }
+    var s = 0.0; k = 0
+    while (k < m.length) { m(k) = math.exp(m(k) - mx); s += m(k); k += 1 }
+    k = 0
+    while (k < m.length) { m(k) /= s; k += 1 }
+    m
   }
 
   /** Flatten one MLlib regression tree into the array form, scaling

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
 /** Poisson count regression — XGBoost's `count:poisson` objective
   * (log link), reached through the reference's params-dict passthrough
   * (`core.py:164-321`). MLlib's GBT has neither a Poisson loss nor a
-  * link function, so this is the scalar sibling of the
-  * [[SoftprobBoost]] Newton loop:
+  * link function, so this is a custom Newton loop on MLlib
+  * regression trees:
   *
   *  1. F₀ = ln(ȳ) (the MLE of the constant log-rate),
   *  2. each round fits a [[DecisionTreeRegressor]] to the Newton

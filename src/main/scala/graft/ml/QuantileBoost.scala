@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * objective (pinball/check loss), which the reference exposes through
   * its params dict passthrough (`core.py:164-321` forwards arbitrary
   * `params` to `xgb.train`). MLlib's GBT has no quantile loss, so this
-  * is a from-scratch gradient-boosting loop in the [[SoftprobBoost]]
-  * style:
+  * is a from-scratch gradient-boosting loop on MLlib regression
+  * trees:
   *
   *  1. F₀ = the exact α-quantile of the labels (one distributed
   *     `percentile` aggregate),
@@ -109,7 +109,7 @@ object QuantileBoost {
 
   /** The trained quantile booster: F(x) = base + η · Σ_r γ_r(x).
     * Slots into [[GraftBoost.GraftBoostModel]] like the other custom
-    * loop ([[SoftprobBoost.SoftprobModel]]); transform appends
+    * loop ([[PoissonBoost.PoissonModel]]); transform appends
     * `prediction`. Scoring broadcasts the (model-sized) tree arrays
     * once — one map-side pass, no shuffle.
     */
@@ -235,7 +235,6 @@ object QuantileBoost {
       spark.sparkContext.setJobDescription(s"boost: r$r loss")
       hist += pinball(cur, alpha)
     }
-    spark.sparkContext.setJobDescription(null)
     (new QuantileModel(s"quantile_${params.seed}_$alpha", forest.toArray,
       base, params.eta, alpha), hist.toArray)
   }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * and pins in `test_core.py:365-382`). MLlib rejects NaN features
   * outright, so the impute/sentinel strategies of [[GraftBoost]] were
   * approximations; this is the real mechanism, as a from-scratch
-  * histogram tree learner in the [[SoftprobBoost]]/[[QuantileBoost]]
-  * custom-loop family:
+  * histogram tree learner — also the tree learner of the
+  * [[RankBoost]] and [[SoftprobBoost]] loops:
   *
   *  1. per feature, split candidates are the exact (maxBins−1)
   *     quantiles of the NON-missing values — XGBoost's global
@@ -1193,7 +1193,6 @@ object SparseBoost {
       sc.setJobDescription(s"boost: r$r loss")
       hist += lossOf(cur, params.objective, rho)
     }
-    sc.setJobDescription(null)
     val acc = ImportanceAcc.sum(roundAccs.toSeq, numFeat)
     val gSum = acc.gain.sum
     val imp = if (gSum > 0) acc.gain.map(_ / gSum) else acc.gain.clone()

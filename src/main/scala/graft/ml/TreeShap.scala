@@ -365,10 +365,10 @@ object TreeShap {
     * `pred_contribs=True` with `num_class > 1` (one attribution
     * vector per class, reference multiclass lifecycle
     * `core.py:580-590`). Accepts the native multiclass scorer
-    * ([[MultiSparse.MultiSparseModel]], e.g. an ingested XGBoost
-    * document) or a trained softprob forest (converted losslessly —
-    * its hessian instance weights ARE the cover statistics the
-    * conditional-expectation game needs). Appends `bias`
+    * ([[MultiSparse.MultiSparseModel]]: a trained softprob forest,
+    * whose per-node hessian sums ARE the cover statistics the
+    * conditional-expectation game needs, or an ingested XGBoost
+    * document). Appends `bias`
     * (array<double>, length K: per-class forest expectation + base)
     * and `shap` (row-major K×M flattened array<double>). Per class,
     * local accuracy `bias(k) + Σ_j shap(k·M+j) = margin_k` holds
@@ -382,10 +382,9 @@ object TreeShap {
       model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame = {
     val mm = model.model match {
       case m: MultiSparse.MultiSparseModel => m
-      case m: SoftprobBoost.SoftprobModel => MultiSparse.fromSoftprob(m)
       case m => throw new UnsupportedOperationException(
-        "multiclass TreeSHAP needs a multiclass forest (native " +
-        s"MultiSparseModel or softprob); got ${m.getClass} — use " +
+        "multiclass TreeSHAP needs a multiclass forest (softprob or " +
+        s"ingested MultiSparseModel); got ${m.getClass} — use " +
         "transform for single-target forests")
     }
     require(!mm.trees.exists(_.hasCategorical),

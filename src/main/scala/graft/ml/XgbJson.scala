@@ -18,16 +18,15 @@ import SparseBoost.{ImportanceAcc, SparseModel, SparseTree}
   *    single-target AND multiclass (`num_class` = K with round-major
   *    trees and per-tree class ids in `tree_info`, the schema's
   *    multiclass layout). The engine's true-softprob forests
-  *    ([[SoftprobBoost.SoftprobModel]], reference `core.py:580-590`)
-  *    export through a lossless MLlib→array conversion
-  *    ([[MultiSparse.fromMLlibTree]]); multiclass documents ingest
-  *    into the native [[MultiSparse.MultiSparseModel]] scorer. The
-  *    wrapped MLlib GBT paths export too: regression folds each tree
-  *    weight into its node values (margins bit-exact), binary
-  *    classification folds 2·wᵢ so stock `sigmoid(margin)` matches
-  *    MLlib's probability to complement-form rounding (~ulp(1);
-  *    MLlib evaluates 1 − sigmoid(−2m)) with the decision boundary
-  *    exact.
+  *    ([[SoftprobBoost]], reference `core.py:580-590`) ARE the native
+  *    [[MultiSparse.MultiSparseModel]] scorer multiclass documents
+  *    ingest into. The wrapped MLlib GBT paths export too, through
+  *    the lossless MLlib→array walk ([[MultiSparse.fromMLlibTree]]):
+  *    regression folds each tree weight into its node values
+  *    (margins bit-exact), binary classification folds 2·wᵢ so stock
+  *    `sigmoid(margin)` matches MLlib's probability to
+  *    complement-form rounding (~ulp(1); MLlib evaluates
+  *    1 − sigmoid(−2m)) with the decision boundary exact.
   *  - `dart` — a forest whose dropout rounds fired exports as the
   *    schema's dart slot (gbtree submodel + `weight_drop`); ingest
   *    folds `weight_drop` into the stored leaf values (the plain-sum
@@ -68,10 +67,6 @@ import SparseBoost.{ImportanceAcc, SparseModel, SparseTree}
   *    `graft.stats_absent` attribute; ingest honors the marker by
   *    restoring "stats unavailable" (empty gain arrays, no aggregate
   *    stats) instead of silently converting absence into real 0.0s.
-  *  - SOFTPROB GAINS. The softprob forest's per-node gains are
-  *    MLlib's hessian-weighted variance-impurity decreases — genuine
-  *    loss changes, but not XGBoost's regularized Newton gain formula
-  *    (divergence stamped; covers and structure are exact).
   *  - DART WEIGHTS. This engine folds dropout normalization into the
   *    stored leaf values at train time (the stored forest is a plain
   *    sum), so its dart export carries `weight_drop` of all 1.0 —
@@ -145,7 +140,7 @@ object XgbJson {
 
   /** Serialize a model to the XGBoost JSON model format. Dispatches
     * on the trained booster: native-loop forests → `gbtree` (or
-    * `dart` when dropout rounds fired), softprob / ingested
+    * `dart` when dropout rounds fired), trained softprob / ingested
     * multiclass forests → multiclass `gbtree`, wrapped MLlib GBT →
     * `gbtree` (tree weights folded into node values), linear models
     * → `gblinear`, Poisson Newton loop → `gbtree count:poisson`.
@@ -203,27 +198,6 @@ object XgbJson {
         dartRescaled = mm.dartFolded,
         categoricalFeatures = categoricalSlots(mm.trees))
 
-    case sp: SoftprobBoost.SoftprobModel =>
-      // round-major flatten: round r emits its K class trees in class
-      // order, tree_info carrying the class ids — the schema's
-      // multiclass layout. The MLlib→array conversion is lossless
-      // (thresholds/leaf outputs bit-exact; covers from the weighted
-      // node stats; see MultiSparse.fromMLlibTree).
-      val mm = MultiSparse.fromSoftprob(sp)
-      val K = mm.numClasses
-      val maxIdx = mm.trees.iterator.flatMap(_.feature.iterator)
-        .filter(_ >= 0).maxOption.getOrElse(-1)
-      namedFeatureGuard(model, maxIdx)
-      val booster = JObject(
-        "model" -> treeModelJson(mm.trees, mm.treeInfo,
-          model.featureCols.length, K),
-        "name" -> JString("gbtree"))
-      learnerDoc(model, booster, numClass = K, baseMargin = 0.0,
-        objectiveJson("multi:softprob", K), statsAbsent = false,
-        extraDivergence = "; softprob per-node gains are MLlib " +
-          "hessian-weighted variance decreases, not regularized " +
-          "Newton gains")
-
     case lm: LinearModel =>
       namedFeatureGuard(model, lm.weights.length - 1)
       require(lm.weights.length == model.featureCols.length,
@@ -274,7 +248,7 @@ object XgbJson {
 
     case other => throw new IllegalArgumentException(
       "XGBoost JSON interchange covers the native-loop forests " +
-      "(single and multiclass), softprob forests, the wrapped MLlib " +
+      "(single and multiclass, softprob included), the wrapped MLlib " +
       s"GBT paths and the linear booster; got " +
       s"${other.getClass.getSimpleName} — use ModelIO for " +
       "engine-native persistence")

@@ -9,7 +9,7 @@ import graft.ml.GraftBoost._
 /** True single-model multi:softprob boosting ([[SoftprobBoost]]) —
   * the mechanism-parity close of the reference's `core.py:580-590`:
   * K trees per round on shared multinomial softmax gradients with
-  * Newton leaves (hessian-weighted least squares), vs. the OvR/RF
+  * Newton leaves (the native histogram grower), vs. the OvR/RF
   * capability-equivalents the engine also ships.
   */
 class SoftprobSpec extends AnyFunSuite {
@@ -24,9 +24,10 @@ class SoftprobSpec extends AnyFunSuite {
     val clf = new GraftXGBClassifier().setNEstimators(8).setMaxDepth(3)
       .setMulticlassStrategy("softprob")
     clf.fit(train, Seq("x1", "x2"), "label")
-    val sp = clf.model.get.model.asInstanceOf[SoftprobBoost.SoftprobModel]
-    assert(sp.trees.length == 8 && sp.trees.forall(_.length == 3),
-      "forest must be rounds x classes")
+    val sp = clf.model.get.model.asInstanceOf[MultiSparse.MultiSparseModel]
+    assert(sp.trees.length == 8 * 3 && sp.numRounds == 8 &&
+      sp.treeInfo.toSeq == (0 until 24).map(_ % 3),
+      "forest must be rounds x classes, round-major")
     val hist = clf.model.get.evalsResult("train")("mlogloss")
     assert(hist.length == 8)
     assert(hist.last < hist.head,
@@ -130,5 +131,28 @@ class SoftprobSpec extends AnyFunSuite {
     val (a, b) = (probs(w1), probs(w2))
     assert(a.zip(b).exists { case (x, y) => x != y },
       "upweighting class 0 must change the trained forest")
+  }
+
+  test("a fit puts the caller's job description back, also when it fails") {
+    val sc = spark.sparkContext
+    def description = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller: boosting fits")
+    try {
+      GraftBoost.train(train, Seq("x1", "x2"), "label",
+        BoostParams("multi:softprob", numRound = 2, maxDepth = 2,
+          multiclassStrategy = "softprob"))
+      assert(description == "caller: boosting fits")
+      GraftBoost.train(train.withColumn("y", (col("label") === 0.0).cast("double")),
+        Seq("x1", "x2"), "y", BoostParams("binary:logistic", numRound = 1,
+          maxDepth = 2, missingStrategy = "native"))
+      assert(description == "caller: boosting fits")
+      // fails inside the fit loop, after it has labelled its own jobs
+      intercept[IllegalArgumentException] {
+        GraftBoost.train(train, Seq("x1", "x2"), "label",
+          BoostParams("multi:softprob", numRound = 1,
+            multiclassStrategy = "softprob", monotoneConstraints = Seq(1)))
+      }
+      assert(description == "caller: boosting fits")
+    } finally sc.setJobDescription(null)
   }
 }

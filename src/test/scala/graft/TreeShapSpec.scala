@@ -327,8 +327,7 @@ class TreeShapSpec extends AnyFunSuite {
     val m = GraftBoost.train(df, Seq("x1", "x2"), "label",
       BoostParams("multi:softprob", numRound = 3, maxDepth = 3,
         multiclassStrategy = "softprob"))
-    val sp = m.model.asInstanceOf[SoftprobBoost.SoftprobModel]
-    val mm = MultiSparse.fromSoftprob(sp)
+    val mm = m.model.asInstanceOf[MultiSparse.MultiSparseModel]
     val K = 3; val M = 2
     val out = TreeShap.transformMulticlass(m, df)
       .select(col("x1"), col("x2"), col("bias"), col("shap"))
@@ -336,7 +335,7 @@ class TreeShapSpec extends AnyFunSuite {
     assert(out.nonEmpty)
     out.foreach { r =>
       val v = Vectors.dense(r.getDouble(0), r.getDouble(1))
-      val margins = mm.marginsOf(v) // bit-identical to sp.marginsOf (spec'd)
+      val margins = mm.marginsOf(v)
       val bias = r.getSeq[Double](2)
       val shap = r.getSeq[Double](3)
       assert(bias.length == K && shap.length == K * M)
@@ -347,9 +346,11 @@ class TreeShapSpec extends AnyFunSuite {
           s"class $k: bias + sum(shap) = $reconstructed != margin ${margins(k)}")
       }
     }
-    // the converted forest scores identically to the source softprob
+    // the local margins are the distributed scorer's margins
     val probe = Vectors.dense(5.0, 2.0)
-    assert(mm.marginsOf(probe).toSeq == sp.marginsOf(probe).toSeq)
+    val distributed = mm.transform(Seq(Tuple1(probe)).toDF("features"))
+      .select("margins").head().getSeq[Double](0)
+    assert(mm.marginsOf(probe).toSeq == distributed)
     // ingested documents take the same path: round-trip and re-score
     val ingested = XgbJson.importModel(XgbJson.export(m))
     val viaIngest = TreeShap.transformMulticlass(ingested, df.limit(5))

@@ -209,7 +209,7 @@ class XgbJsonSpec extends AnyFunSuite {
 
   test("softprob: export -> import scores bit-identically via the native scorer") {
     val (m, df) = fitSoftprob()
-    val sp = m.model.asInstanceOf[graft.ml.SoftprobBoost.SoftprobModel]
+    val sp = m.model.asInstanceOf[graft.ml.MultiSparse.MultiSparseModel]
     val doc = XgbJson.export(m)
     assert(doc.contains("\"num_class\":\"3\""))
     assert(doc.contains("multi:softprob"))
@@ -238,6 +238,33 @@ class XgbJsonSpec extends AnyFunSuite {
       .collect().map(_.getSeq[Double](0))
     assert(pOrig.zip(pRt).forall { case (a, b) => a == b },
       "softmax probabilities must round-trip bit-exactly")
+    df.unpersist()
+  }
+
+  test("softprob export carries the grower's per-node gains and no MLlib-gain stamp") {
+    import org.json4s._
+    val (m, df) = fitSoftprob()
+    val sp = m.model.asInstanceOf[graft.ml.MultiSparse.MultiSparseModel]
+    val js = org.json4s.jackson.JsonMethods.parse(XgbJson.export(m))
+    val JArray(trees) = js \ "learner" \ "gradient_booster" \ "model" \ "trees"
+    assert(trees.length == sp.trees.length)
+    sp.trees.zip(trees).foreach { case (t, tj) =>
+      val JArray(lc) = tj \ "loss_changes"
+      val gains = lc.map { case JDouble(d) => d; case other => fail(s"$other") }
+      assert(gains == t.gain.toSeq, "loss_changes must be the grower's gains")
+      t.feature.indices.foreach { i =>
+        if (t.feature(i) >= 0) assert(gains(i) > 0.0, s"split $i has no gain")
+        else assert(gains(i) == 0.0, s"leaf $i carries a gain")
+      }
+    }
+    // the per-node gains are the ones the importances were summed from
+    val perNode = sp.trees.flatMap(t =>
+      t.feature.indices.filter(t.feature(_) >= 0).map(t.gain(_))).sum
+    assert(math.abs(sp.importanceByType("total_gain").sum - perNode) <= 1e-9 * perNode)
+    val JObject(attrs) = js \ "learner" \ "attributes"
+    val divergences = attrs.collectFirst { case ("graft.divergences", JString(d)) => d }
+    assert(divergences.exists(!_.contains("MLlib")), divergences)
+    assert(!attrs.exists(_._1 == "graft.stats_absent"))
     df.unpersist()
   }
 
@@ -783,14 +810,14 @@ class XgbJsonSpec extends AnyFunSuite {
 
   test("multiclass truncate: iteration_range on an ingested document") {
     val (m, df) = fitSoftprob()
-    val sp = m.model.asInstanceOf[graft.ml.SoftprobBoost.SoftprobModel]
+    val sp = m.model.asInstanceOf[graft.ml.MultiSparse.MultiSparseModel]
     val mm = XgbJson.importModel(XgbJson.export(m))
       .model.asInstanceOf[graft.ml.MultiSparse.MultiSparseModel]
     val cut = mm.truncate(2)
     assert(cut.trees.length == 6 && cut.treeInfo.toSeq == (0 until 6).map(_ % 3))
     // the 2-round prefix scores bit-identically to the truncated
     // SOURCE forest (same per-class sum order)
-    val spCut = graft.ml.MultiSparse.fromSoftprob(sp.truncate(2))
+    val spCut = sp.truncate(2)
     import org.apache.spark.ml.linalg.Vectors
     Seq(Vectors.dense(10.0, 0.05, 0.02), Vectors.dense(45.0, 0.0, 0.08))
       .foreach { v =>
