@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
 object Contributions {
 
   /** Array-flattened tree with per-NODE expected values (unlike
-    * [[QuantileBoost.PlainTree]], internal predictions matter here —
+    * a scorer's leaf-only walk, internal predictions matter here —
     * they are what the path deltas difference). Leaf iff
     * `feature(i) < 0`; else `x(feature(i)) ≤ thresh(i)` goes left,
     * and a NaN feature follows `defaultLeft(i)` (native sparse

@@ -44,7 +44,7 @@ object GraftBoost {
     * gate boolean is layout-independent — the round-8 flake class.
     */
   def TrainRowsPerTask: Long =
-    sys.props.get("graft.train.rowsPerTask").map(_.toLong).getOrElse(20000L)
+    graft.Knobs.long("graft.train.rowsPerTask", 20000L)
 
   /** Training parameters, mirroring the reference's canonical param
     * dict (`test_core.py:31-36`: max_depth, eta, objective) plus the
@@ -373,11 +373,19 @@ object GraftBoost {
     * objectives (XGBoost's default eval metric per objective).
     */
   private[ml] def sparseMetricName(objective: String): String = objective match {
-    case "binary:logistic" => "logloss"
-    case "reg:gamma"       => "gamma-deviance"
-    case "reg:tweedie"     => "tweedie-nloglik"
-    case _                 => "rmse"
+    case "binary:logistic"   => "logloss"
+    case "reg:gamma"         => "gamma-deviance"
+    case "reg:tweedie"       => "tweedie-nloglik"
+    case "count:poisson"     => "poisson-deviance"
+    case "reg:quantileerror" => "pinball"
+    case _                   => "rmse"
   }
+
+  /** Objectives MLlib GBT has no loss for: they train in the native
+    * sparse loop ([[SparseBoost]]) under every missing strategy.
+    */
+  private val NativeOnlyObjectives =
+    Set("reg:gamma", "reg:tweedie", "count:poisson", "reg:quantileerror")
 
   /** Single validator shared by BoostParams and the estimator setter
     * — one place to extend when a new strategy is added.
@@ -557,13 +565,17 @@ object GraftBoost {
       callerDescription: String
   ): GraftBoostModel = {
     val native = params.missingStrategy == "native"
+    val ranking = params.objective.startsWith("rank:")
+    // the fit runs in SparseBoost.train: every non-ranking objective
+    // under missingStrategy "native", and the native-only objectives
+    // under any strategy
+    val nativeLoop =
+      (native || NativeOnlyObjectives(params.objective)) && !ranking
+    val toNativeLoop = "set missingStrategy=\"native\" (or a gamma, " +
+      "tweedie, poisson or quantile objective)"
     if (marginCol.isDefined)
-      require((native || params.objective == "reg:gamma" ||
-        params.objective == "reg:tweedie") &&
-        !params.objective.startsWith("rank:") &&
-        params.booster != "gblinear",
-        "per-row base_margin runs in the native sparse loop — set " +
-        "missingStrategy=\"native\" (or a gamma/tweedie objective); " +
+      require(nativeLoop && params.booster != "gblinear",
+        s"per-row base_margin runs in the native sparse loop — $toNativeLoop; " +
         "the MLlib-backed, linear, ranking and multiclass paths have " +
         "no margin-initialization hook")
     val imputation = params.missing.map { m =>
@@ -648,24 +660,16 @@ object GraftBoost {
     // loop, which manages its own forest without dropout) would fake
     // the mechanism
     if (params.booster == "dart")
-      require((native || params.objective == "reg:gamma" ||
-        params.objective == "reg:tweedie") &&
-        !params.objective.startsWith("rank:"),
-        "booster=\"dart\" runs in the native loop — set " +
-        "missingStrategy=\"native\" (or a gamma/tweedie objective); " +
+      require(nativeLoop,
+        s"booster=\"dart\" runs in the native loop — $toNativeLoop; " +
         "ranking objectives have no DART path")
     if (params.growPolicy == "lossguide")
-      require(native || params.objective == "reg:gamma" ||
-        params.objective == "reg:tweedie" ||
-        params.objective.startsWith("rank:"),
-        "grow_policy=\"lossguide\" runs in the native tree loop — set " +
-        "missingStrategy=\"native\" (or a gamma/tweedie/rank objective)")
+      require(nativeLoop || ranking,
+        s"grow_policy=\"lossguide\" runs in the native tree loop — " +
+        s"$toNativeLoop, or a rank objective")
     if (params.numParallelTree > 1)
-      require((native || params.objective == "reg:gamma" ||
-        params.objective == "reg:tweedie") &&
-        !params.objective.startsWith("rank:"),
-        "num_parallel_tree > 1 runs in the native tree loop — set " +
-        "missingStrategy=\"native\" (or a gamma/tweedie objective); " +
+      require(nativeLoop,
+        s"num_parallel_tree > 1 runs in the native tree loop — $toNativeLoop; " +
         "the ranking loop has no parallel-tree path")
 
     if (params.objective == "rank:pairwise" || params.objective == "rank:ndcg") {
@@ -684,9 +688,10 @@ object GraftBoost {
         params.missingStrategy)
     }
 
-    if (native) {
+    if (nativeLoop) {
       // XGBoost's sparsity-aware mechanism — a custom histogram loop
-      // (SparseBoost) since MLlib rejects NaN features outright
+      // (SparseBoost) since MLlib rejects NaN features outright and
+      // has none of the native-only losses
       require(validationCol.isEmpty,
         "native sparse boosting records its train history itself; " +
         "use StagedEval on the returned model for validation metrics")
@@ -694,7 +699,7 @@ object GraftBoost {
       return GraftBoostModel(m, featureCols, params.objective,
         if (params.objective == "binary:logistic") 2 else 0,
         Map("train" -> Map(sparseMetricName(params.objective) -> histN)),
-        imputation, "native")
+        imputation, params.missingStrategy)
     }
 
     params.objective match {
@@ -726,39 +731,6 @@ object GraftBoost {
         validationCol.foreach(gbt.setValidationIndicatorCol)
         val model = gbt.fit(data)
         GraftBoostModel(model, featureCols, params.objective, 0, Map.empty, imputation, params.missingStrategy)
-
-      case "reg:quantileerror" =>
-        // pinball-loss boosting with exact leaf-quantile line search —
-        // a custom loop (QuantileBoost), MLlib GBT has no quantile loss
-        require(validationCol.isEmpty,
-          "quantile boosting records its train history itself; " +
-          "validation-indicator early stopping is unavailable")
-        val (m, histQ) = QuantileBoost.train(data, params,
-          params.quantileAlpha, weightCol)
-        GraftBoostModel(m, featureCols, params.objective, 0,
-          Map("train" -> Map("pinball" -> histQ)), imputation,
-          params.missingStrategy)
-
-      case "reg:gamma" | "reg:tweedie" =>
-        // log-link deviance objectives — always the native histogram
-        // loop (SparseBoost); MLlib GBT has neither loss family
-        require(validationCol.isEmpty,
-          "gamma/tweedie boosting records its train history itself")
-        val (m, histG) = SparseBoost.train(data, params, weightCol, marginCol)
-        GraftBoostModel(m, featureCols, params.objective, 0,
-          Map("train" -> Map(sparseMetricName(params.objective) -> histG)),
-          imputation, params.missingStrategy)
-
-      case "count:poisson" =>
-        // log-link Newton boosting — a custom loop (PoissonBoost),
-        // MLlib GBT has neither Poisson loss nor link functions
-        require(validationCol.isEmpty,
-          "poisson boosting records its train history itself; " +
-          "validation-indicator early stopping is unavailable")
-        val (m, histP) = PoissonBoost.train(data, params, weightCol)
-        GraftBoostModel(m, featureCols, params.objective, 0,
-          Map("train" -> Map("poisson-deviance" -> histP)), imputation,
-          params.missingStrategy)
 
       case "binary:logistic" =>
         val gbt = new GBTClassifier()
@@ -863,8 +835,6 @@ object GraftBoost {
       case m: RandomForestClassificationModel => m.transform(data)
       case m: OneVsRestModel             => m.transform(data)
       case m: MultiSparse.MultiSparseModel => m.transform(data).drop("margins")
-      case m: QuantileBoost.QuantileModel => m.transform(data)
-      case m: PoissonBoost.PoissonModel   => m.transform(data)
       case m => throw new IllegalStateException(s"unknown model ${m.getClass}")
     }
     scored.drop("features", "rawPrediction", "probability")
@@ -1087,8 +1057,6 @@ object GraftBoost {
       case m: MultiSparse.MultiSparseModel =>
         val margins = m.marginsOf(f)
         margins.indices.maxBy(margins(_)).toDouble
-      case m: QuantileBoost.QuantileModel => m.predictOne(f)
-      case m: PoissonBoost.PoissonModel   => m.predictOne(f)
       case m: SparseBoost.SparseModel     => m.predictOne(f)
       case m: LinearBoost.LinearModel     => m.predictOne(f)
       case m => throw new UnsupportedOperationException(

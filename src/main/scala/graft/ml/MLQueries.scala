@@ -193,8 +193,9 @@ object MLQueries {
   )
 
   /** Quantile-regression lifecycle (XGBoost `reg:quantileerror` via
-    * the params passthrough, `core.py:164-321`): pinball boosting with
-    * exact leaf-quantile line search ([[QuantileBoost]]) at α = 0.9
+    * the params passthrough, `core.py:164-321`): pinball boosting on
+    * the native grower with the exact leaf-quantile line search as its
+    * leaf rule ([[SparseBoost]]) at α = 0.9
     * over the fact table. Gates: (a) train-set coverage lands near α
     * (a broken line search collapses to the squared-loss mean and
     * drops to ~0.5), and (b) the model's pinball loss beats the
@@ -206,7 +207,7 @@ object MLQueries {
     * quantity term (100-5000) is learnable structure, the
     * uncorrelated extendedprice term (~1-100) is genuine conditional
     * spread, so per-leaf quantiles beat the global quantile solidly
-    * (measured ratio 0.61 at sf0.01) while coverage stays ≈ α.
+    * (measured ratio 0.63 at sf0.01) while coverage stays ≈ α.
     */
   /** Raw quantile-lifecycle quantities (n_rows, cov, pin_model,
     * pin_const) — the query's gates AND tools.GateMarginProbe's
@@ -223,11 +224,10 @@ object MLQueries {
       .select((feats.map(col) :+ col("target")): _*)
       .transform(fanOut)
       .cache()
-    // subsample = 0.2 (XGBoost stochastic boosting): each round is
-    // an INDEPENDENT tree fit + exact leaf-percentile pass (unlike
-    // GBTRegressor, which amortizes binning across its internal
-    // iterations), so the per-round fit set is the direct cost knob
-    // — margins and gates still run over the FULL table, and the
+    // subsample = 0.2 (XGBoost stochastic boosting): each round's
+    // histogram passes and exact leaf-percentile pass read only its
+    // sample, so the per-round fit set is the direct cost knob —
+    // margins and gates still run over the FULL table, and the
     // coverage/pinball gates saturate well before round 5
     val m = GraftBoost.train(df, feats, "target",
       GraftBoost.BoostParams("reg:quantileerror", numRound = 5,
@@ -237,7 +237,7 @@ object MLQueries {
       (col("target") - pred) * alpha, (col("target") - pred) * (alpha - 1.0)))
     // the model's base score IS the exact global α-quantile — reuse
     // it rather than paying the (expensive, exact) percentile twice
-    val q90 = m.model.asInstanceOf[QuantileBoost.QuantileModel].base
+    val q90 = m.model.asInstanceOf[SparseBoost.SparseModel].base
     val out = GraftBoost.predict(m, df)
       .agg(
         count(lit(1)).as("n_rows"),
@@ -255,8 +255,8 @@ object MLQueries {
     "ml_quantile_regression",
     (s, dir) => {
       val d = quantileDetail(s, dir)
-      // margins sized from the measured operating point (cov 0.938,
-      // pinball ratio 0.61 at sf0.01): a broken line search lands at
+      // margins sized from the measured operating point (cov 0.927,
+      // pinball ratio 0.63 at sf0.01): a broken line search lands at
       // cov ≈ 0.5 / ratio ≈ 1.0, an intact one stays well inside —
       // no boundary within jitter distance in either direction
       val out = d.select(col("n_rows").cast("long").as("n_rows"),
@@ -332,10 +332,11 @@ object MLQueries {
     """)
   )
 
-  /** Poisson count-regression lifecycle (XGBoost `count:poisson`,
-    * [[PoissonBoost]]): predict each order's LINE COUNT (a real count,
-    * 1-7) from its total quantity — qty accumulates over lines
-    * (~25.5/line), so the covariate is genuinely informative. Gates:
+  /** Poisson count-regression lifecycle (XGBoost `count:poisson` on
+    * the native grower, [[SparseBoost]]): predict each order's LINE
+    * COUNT (a real count, 1-7) from its total quantity — qty
+    * accumulates over lines (~25.5/line), so the covariate is
+    * genuinely informative. Gates:
     * the fitted deviance beats the constant-rate model by ≥ 50 %
     * (measured ratio ≈ 0.27 at sf0.01; a broken link/gradient stays
     * at ~1.0), and the count-scale predictions stay within the

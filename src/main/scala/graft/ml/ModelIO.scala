@@ -35,10 +35,6 @@ object ModelIO {
       evalsResult: Map[String, Map[String, Array[Double]]],
       calibrationA: Seq[Double] = Seq.empty,
       calibrationB: Seq[Double] = Seq.empty,
-      // poisson booster shape (modelClass PoissonModel only)
-      poissonBase: Double = 0.0,
-      poissonEta: Double = 0.0,
-      poissonRounds: Int = 0,
       // documented behavioral deviations from the reference engine,
       // stamped on the artifact so a loaded model STATES how it was
       // trained instead of relying on out-of-band docs (VERDICT r4 §8)
@@ -49,21 +45,6 @@ object ModelIO {
       // as this flag; the replacement map persists normally (finite)
       // except under "native", where it is rebuilt as NaN pass-through.
       nanMissing: Boolean = false
-  )
-
-  /** Serialized form of one [[QuantileBoost.PlainTree]] plus the
-    * booster scalars — small driver-side arrays, stored as one JSON
-    * under `model/quantile.json`.
-    */
-  private case class QuantileDoc(
-      base: Double,
-      eta: Double,
-      alpha: Double,
-      feature: Seq[Seq[Int]],
-      thresh: Seq[Seq[Double]],
-      left: Seq[Seq[Int]],
-      right: Seq[Seq[Int]],
-      value: Seq[Seq[Double]]
   )
 
   /** Serialized form of a [[SparseBoost.SparseModel]] — model-sized
@@ -230,27 +211,6 @@ object ModelIO {
 
   def save(spark: SparkSession, model: GraftBoostModel, path: String): Unit = {
     model.model match {
-      // a poisson booster is one MLlib tree writer per round plus the
-      // (base, eta) scalars in graft_meta.json
-      case pm: PoissonBoost.PoissonModel =>
-        for (r <- pm.trees.indices)
-          pm.trees(r).write.overwrite()
-            .save(new Path(path, s"model/ptree_r$r").toString)
-      // a quantile booster is model-sized driver arrays — one JSON
-      case qm: QuantileBoost.QuantileModel =>
-        import org.json4s.DefaultFormats
-        import org.json4s.jackson.Serialization
-        implicit val fmt: DefaultFormats.type = DefaultFormats
-        val doc = QuantileDoc(qm.base, qm.eta, qm.alpha,
-          qm.trees.map(_.feature.toSeq).toSeq,
-          qm.trees.map(_.thresh.toSeq).toSeq,
-          qm.trees.map(_.left.toSeq).toSeq,
-          qm.trees.map(_.right.toSeq).toSeq,
-          qm.trees.map(_.value.toSeq).toSeq)
-        val fsQ = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val outQ = fsQ.create(new Path(path, "model/quantile.json"), true)
-        try outQ.write(Serialization.write(doc).getBytes("UTF-8"))
-        finally outQ.close()
       // a sparse booster is model-sized driver arrays — one JSON
       case sm: SparseBoost.SparseModel =>
         import org.json4s.DefaultFormats
@@ -334,18 +294,6 @@ object ModelIO {
       model.evalsResult,
       model.calibration.map(_.map(_._1).toSeq).getOrElse(Seq.empty),
       model.calibration.map(_.map(_._2).toSeq).getOrElse(Seq.empty),
-      poissonBase = model.model match {
-        case pm: PoissonBoost.PoissonModel => pm.base
-        case _ => 0.0
-      },
-      poissonEta = model.model match {
-        case pm: PoissonBoost.PoissonModel => pm.eta
-        case _ => 0.0
-      },
-      poissonRounds = model.model match {
-        case pm: PoissonBoost.PoissonModel => pm.trees.length
-        case _ => 0
-      },
       divergences = divergenceNotes(model),
       nanMissing = model.imputation.exists(_._1.isNaN)
     )
@@ -371,13 +319,6 @@ object ModelIO {
       case c if c.endsWith("RandomForestClassificationModel") =>
         RandomForestClassificationModel.load(modelPath)
       case c if c.endsWith("OneVsRestModel") => OneVsRestModel.load(modelPath)
-      case c if c.endsWith("PoissonModel") =>
-        val trees = Array.tabulate(meta.poissonRounds) { r =>
-          org.apache.spark.ml.regression.DecisionTreeRegressionModel
-            .load(new Path(path, s"model/ptree_r$r").toString)
-        }
-        new PoissonBoost.PoissonModel("poisson_loaded", trees,
-          meta.poissonBase, meta.poissonEta)
       case c if c.endsWith("MultiSparseModel") =>
         // MUST precede the SparseModel case: that suffix matches too
         val inM = fs.open(new Path(path, "model/multisparse.json"))
@@ -442,17 +383,6 @@ object ModelIO {
         val doc = JsonMethods.parse(jsonL).extract[LinearDoc]
         new LinearBoost.LinearModel("gblinear_loaded", doc.weights.toArray,
           doc.bias, doc.base, doc.objective)
-      case c if c.endsWith("QuantileModel") =>
-        val inQ = fs.open(new Path(path, "model/quantile.json"))
-        val jsonQ = try scala.io.Source.fromInputStream(inQ, "UTF-8").mkString
-          finally inQ.close()
-        val doc = JsonMethods.parse(jsonQ).extract[QuantileDoc]
-        val trees = doc.feature.indices.map { i =>
-          QuantileBoost.PlainTree(doc.feature(i).toArray, doc.thresh(i).toArray,
-            doc.left(i).toArray, doc.right(i).toArray, doc.value(i).toArray)
-        }.toArray
-        new QuantileBoost.QuantileModel("quantile_loaded", trees,
-          doc.base, doc.eta, doc.alpha)
       case c => throw new UnsupportedOperationException(s"unknown model class: $c")
     }
     GraftBoostModel(

@@ -224,8 +224,8 @@ object MultiSparse {
   }
 
   /** Flatten one MLlib regression tree into the array form, scaling
-    * every node value by `scale` (the learning rate — XGBoost
-    * documents store η-scaled leaf values; internal `base_weights`
+    * every node value by `scale` (the GBT tree weight — XGBoost
+    * documents store plain-sum leaf values; internal `base_weights`
     * then stay the cover-weighted subtree means of the scaled leaf
     * outputs, because an MLlib variance-impurity node prediction IS
     * the weight-weighted mean of its subtree's targets — the Saabas

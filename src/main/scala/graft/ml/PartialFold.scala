@@ -50,7 +50,7 @@ private[graft] object PartialFold {
     * configuration would otherwise traverse it end-to-end).
     */
   def BlockSize: Int =
-    sys.props.get("graft.partialfold.blockSize").map(_.toInt).getOrElse(64)
+    graft.Knobs.int("graft.partialfold.blockSize", 64)
 
   /** Zero-initialized in-order fold (matches the historical driver
     * loop exactly: acc starts as zeros, partials added left to

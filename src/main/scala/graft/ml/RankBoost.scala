@@ -193,15 +193,25 @@ object RankBoost {
       // group — nothing group-quadratic is materialized. Under
       // rank:ndcg each pair is weighted by |ΔNDCG| — the NDCG swap
       // cost at the CURRENT ranks (Burges' LambdaMART), so top
-      // positions dominate the gradient.
+      // positions dominate the gradient. The walker checks that
+      // contiguity as it goes: each run's group id must exceed the
+      // previous run's, or a split group would silently lose the
+      // pairs across its pieces.
       val grad = cur.select(col("group"), col("features"), col("label"), col("f"))
         .as[(Long, Vector, Double, Double)]
         .mapPartitions { (it: Iterator[(Long, Vector, Double, Double)]) =>
           val in = it.buffered
+          var prev = Option.empty[Long]
           val perGroup = new Iterator[Iterator[(Vector, Double, Double)]] {
             def hasNext: Boolean = in.hasNext
             def next(): Iterator[(Vector, Double, Double)] = {
               val gId = in.head._1
+              if (prev.exists(_ >= gId))
+                throw new IllegalStateException(
+                  s"ranking group $gId is not one contiguous run in its " +
+                  s"partition (it follows group ${prev.get}): the " +
+                  "group-sorted layout was lost")
+              prev = Some(gId)
               val groupRows = ArrayBuffer.empty[(Long, Vector, Double, Double)]
               while (in.hasNext && in.head._1 == gId)
                 groupRows += in.next()

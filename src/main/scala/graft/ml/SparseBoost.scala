@@ -39,12 +39,25 @@ import org.apache.spark.sql.types._
   *     approximate it with minInstancesPerNode.
   *
   * Objectives: `binary:logistic` (g = p − y, h = p(1−p)),
-  * `reg:squarederror` (g = f − y, h = 1), and the log-link deviance
+  * `reg:squarederror` (g = f − y, h = 1), the log-link deviance
   * pair `reg:gamma` / `reg:tweedie` (XGBoost's insurance-severity
   * objectives; exact Newton g/h on the margin scale, predictions on
-  * the response scale e^f). binary/squared are reached under
-  * `missingStrategy = "native"`; gamma/tweedie ALWAYS train here —
-  * MLlib GBT has neither loss family.
+  * the response scale e^f), `count:poisson` (log link, g = μ − y,
+  * h = μ, μ = e^f) and `reg:quantileerror` (pinball loss, g = 1{y ≤ f}
+  * − α, h = 1, plus the α-quantile leaf rule of [[quantileLeaves]]).
+  * binary/squared are reached under `missingStrategy = "native"`; the
+  * other four ALWAYS train here — MLlib GBT has none of those losses.
+  *
+  * Poisson and quantile moved here from their own per-round MLlib
+  * regression-tree loops, and their fitted values moved with them:
+  * splits are chosen by the Newton gain above with
+  * λ-regularized leaves (Poisson leaves are −G/(H+λ)), and
+  * `min_child_weight` bounds a hessian sum, not a row count. The old
+  * Poisson loop clipped each row's working response (y − μ)/μ to ±2;
+  * that clip is gone, and `maxDeltaStep` is the leaf guard instead.
+  * Both objectives now also honour gamma, monotone and interaction
+  * constraints, colsample, dart, lossguide, `num_parallel_tree`, NaN
+  * routing and `base_margin`, like every objective of this loop.
   *
   * Determinism: histogram partials merge through [[PartialFold]] —
   * partition-index-ordered folds whose addition tree is a pure
@@ -69,7 +82,8 @@ object SparseBoost {
 
   /** Array-flattened tree with per-split default directions. Node i
     * is a leaf iff `feature(i) < 0` (then `value(i)` is its η-scaled
-    * Newton weight); otherwise x(feature) ≤ thresh goes left, and a
+    * weight — the Newton step, or the quantile leaf rule's value);
+    * otherwise x(feature) ≤ thresh goes left, and a
     * MISSING x(feature) follows `defaultLeft(i)` — the learned
     * default branch of Chen & Guestrin §3.3.
     */
@@ -210,10 +224,9 @@ object SparseBoost {
     def probOf(v: Vector): Double = 1.0 / (1.0 + math.exp(-marginOf(v)))
 
     /** Response-scale value of a margin — the objective's inverse
-      * link. count:* only arises via XgbJson ingest (training routes
-      * count:poisson to PoissonBoost); without that arm an ingested
-      * Poisson document would silently emit log-rates instead of
-      * counts.
+      * link. count:* covers both a trained `count:poisson` forest and
+      * any XgbJson-ingested count document; without that arm either
+      * would silently emit log-rates instead of counts.
       */
     private[ml] def link(f: Double): Double = objective match {
       case "binary:logistic" => if (f > 0.0) 1.0 else 0.0
@@ -372,6 +385,13 @@ object SparseBoost {
     * parameter, the proposal that survives a 100 TB scan where the
     * exact form's per-value count map cannot. The histogram passes
     * downstream are identical either way.
+    *
+    * "exact" assumes NARROW feature vectors: it posexplodes every row
+    * and shuffles numFeat × rows values to group them by feature, so
+    * its shuffle grows linearly with the feature count (every native
+    * fit pays it once, Poisson and quantile included). Wide vectors
+    * (embeddings, hashed text) should take `splitProposal = "approx"`,
+    * a single-row aggregate with no shuffle of the values.
     */
   private[ml] def proposeEdges(
       data: DataFrame,
@@ -947,9 +967,44 @@ object SparseBoost {
       node: Int, g: Double, h: Double, cnt: Double, lo: Double, hi: Double,
       path: Set[Int] = Set.empty, depth: Int = 0)
 
+  /** `reg:quantileerror`'s leaf rule, run on each tree right after
+    * [[growTree]]: every leaf is reset to η · the exact α-quantile of
+    * the residuals y − f of the rows that land in it, over the same
+    * round sample the tree was grown on (sklearn's QuantileLossFunction
+    * `_update_terminal_region`; Friedman's TreeBoost line search). The
+    * Newton values the grower wrote are discarded, so neither the
+    * monotone value fence nor `maxDeltaStep` constrains these leaves.
+    * Rows are routed by [[SparseTree.leafOf]], the scorer's own walk.
+    *
+    * The quantile is UNWEIGHTED: `percentile`'s frequency argument is
+    * integral, so fractional instance weights cannot reach the order
+    * statistic. Weights steer the split search only.
+    *
+    * The per-leaf value multiset is partition-order-free, so the
+    * merges run one leaf per task; the explicit keyed repartition
+    * stops AQE from coalescing this small shuffle back onto one
+    * reducer (×4 oversampling against hash collisions, as in
+    * [[proposeEdges]]).
+    */
+  private def quantileLeaves(
+      tree: SparseTree, rows: DataFrame, resid: Column,
+      alpha: Double, eta: Double): Unit = {
+    val sc = rows.sparkSession.sparkContext
+    val bc = sc.broadcast(tree)
+    val leafU = udf((v: Vector) => bc.value.leafOf(v))
+    val parts = math.max(1, math.min(sc.defaultParallelism,
+      tree.feature.count(_ < 0) * 4))
+    rows.withColumn("leaf", leafU(col("features")))
+      .repartition(parts, col("leaf"))
+      .groupBy(col("leaf"))
+      .agg(percentile(resid, lit(alpha)))
+      .collect()
+      .foreach(r => tree.value(r.getInt(0)) = eta * r.getDouble(1))
+  }
+
   /** Mean loss of margin column `f` for the round history. */
-  private def lossOf(df: DataFrame, objective: String, rho: Double): Double =
-    objective match {
+  private def lossOf(df: DataFrame, params: GraftBoost.BoostParams): Double =
+    params.objective match {
       case "binary:logistic" =>
         // logloss with the standard 1e-15 clip
         val p = lit(1.0) / (lit(1.0) + exp(-col("f")))
@@ -961,9 +1016,25 @@ object SparseBoost {
         val mu = exp(col("f"))
         df.select(avg(lit(2.0) * (-log(col("label") / mu) +
           (col("label") - mu) / mu))).head().getDouble(0)
+      case "count:poisson" =>
+        // mean Poisson deviance 2·(y·ln(y/μ) − (y−μ)), μ = e^f, the
+        // y·ln term 0 at y = 0
+        df.select(avg(lit(2.0) * (
+            when(col("label") > 0.0,
+              col("label") * log(col("label") / exp(col("f")))).otherwise(lit(0.0))
+              - (col("label") - exp(col("f"))))))
+          .head().getDouble(0)
+      case "reg:quantileerror" =>
+        // mean pinball (check) loss at α
+        val alpha = params.quantileAlpha
+        df.select(avg(greatest(
+            (col("label") - col("f")) * alpha,
+            (col("label") - col("f")) * (alpha - 1.0))))
+          .head().getDouble(0)
       case "reg:tweedie" =>
         // tweedie negative log-likelihood kernel (XGBoost's
         // tweedie-nloglik@ρ): −y·e^{(1−ρ)f}/(1−ρ) + e^{(2−ρ)f}/(2−ρ)
+        val rho = params.tweedieVariancePower
         df.select(avg(
           -col("label") * exp(lit(1.0 - rho) * col("f")) / (1.0 - rho) +
           exp(lit(2.0 - rho) * col("f")) / (2.0 - rho))).head().getDouble(0)
@@ -985,8 +1056,8 @@ object SparseBoost {
     * the scalar base, so standalone scoring (no margin) falls back to
     * base_score — also stock behavior.
     *
-    * @return the model plus the per-round TRAIN loss history
-    *         (logloss for binary:logistic, rmse for reg:squarederror)
+    * @return the model plus the per-round TRAIN loss history (the
+    *         [[GraftBoost.sparseMetricName]] metric of the objective)
     */
   def train(
       data: DataFrame,
@@ -995,14 +1066,20 @@ object SparseBoost {
       marginCol: Option[String] = None
   ): (SparseModel, Array[Double]) = {
     require(Set("binary:logistic", "reg:squarederror", "reg:gamma",
-      "reg:tweedie").contains(params.objective),
+      "reg:tweedie", "count:poisson", "reg:quantileerror")
+        .contains(params.objective),
       s"native sparse boosting supports binary:logistic, reg:squarederror, " +
-      s"reg:gamma and reg:tweedie, got ${params.objective}")
+      s"reg:gamma, reg:tweedie, count:poisson and reg:quantileerror, " +
+      s"got ${params.objective}")
     val binary = params.objective == "binary:logistic"
+    val quantile = params.objective == "reg:quantileerror"
     val rho = params.tweedieVariancePower
+    val alpha = params.quantileAlpha
     if (params.objective == "reg:tweedie")
       require(rho > 1.0 && rho < 2.0,
         s"tweedie variance power must be in (1, 2), got $rho")
+    if (quantile)
+      require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1), got $alpha")
     val keep = Seq(col("features"), col("label")) ++ weightCol.map(col) ++
       marginCol.map(c => GraftBoost.marginColumn(c).as("graft_bm"))
     val src = data.select(keep: _*)
@@ -1042,12 +1119,15 @@ object SparseBoost {
 
     // XGBoost base_score = 0.5: margin 0 for logistic, 0.5 for
     // squared error. The log-link objectives start from ln(mean) —
-    // the intercept MLE, same convention as [[PoissonBoost]]
+    // the intercept MLE — and quantile from the exact α-quantile of
+    // the labels (the constant that minimizes the pinball loss)
     val base =
       if (!params.baseScore.isNaN) params.baseScore
       else params.objective match {
         case "binary:logistic" => 0.0
-        case "reg:gamma" | "reg:tweedie" =>
+        case "reg:quantileerror" =>
+          src.select(percentile(col("label"), lit(alpha))).head().getDouble(0)
+        case "reg:gamma" | "reg:tweedie" | "count:poisson" =>
           val mean = src.select(avg(col("label"))).head().getDouble(0)
           require(mean > 0.0, "log-link objectives need a positive label mean")
           math.log(mean)
@@ -1114,6 +1194,15 @@ object SparseBoost {
           val b = exp(lit(2.0 - rho) * fm)
           (b - a,
             greatest(lit(2.0 - rho) * b - lit(1.0 - rho) * a, lit(1e-16)))
+        case "count:poisson" =>
+          // Poisson deviance, log link: g = μ − y, h = μ
+          val mu = exp(fm)
+          (mu - col("label"), greatest(mu, lit(1e-16)))
+        case "reg:quantileerror" =>
+          // pinball loss at α: g = 1{y ≤ f} − α, h = 1 — the split
+          // search sees these, the leaf values come from quantileLeaves
+          (when(col("label") <= fm, lit(1.0 - alpha)).otherwise(lit(-alpha)),
+            lit(1.0))
         case _ => (fm - col("label"), lit(1.0))
       }
       // instance weight = user weight × scale_pos_weight on positives
@@ -1149,6 +1238,10 @@ object SparseBoost {
         val tree = growTree(
           sampledT.withColumn("g", gw).withColumn("h", hw), edges, params,
           roundAcc, roundMask(idx), constraints, params.seed ^ (1337L * idx))
+        if (quantile) {
+          sc.setJobDescription(s"boost: r$r leaf-quantile")
+          quantileLeaves(tree, sampledT, col("label") - fm, alpha, params.eta)
+        }
         // "sum" (XGBoost compat) keeps member trees unscaled; the
         // default averages them (1/T pre-scale, see BoostParams)
         if (T > 1 && params.parallelTreeUpdate == "average") {
@@ -1191,7 +1284,7 @@ object SparseBoost {
       }
       forest ++= newTrees
       sc.setJobDescription(s"boost: r$r loss")
-      hist += lossOf(cur, params.objective, rho)
+      hist += lossOf(cur, params)
     }
     val acc = ImportanceAcc.sum(roundAccs.toSeq, numFeat)
     val gSum = acc.gain.sum

@@ -140,15 +140,23 @@ object XgbJson {
 
   /** Serialize a model to the XGBoost JSON model format. Dispatches
     * on the trained booster: native-loop forests → `gbtree` (or
-    * `dart` when dropout rounds fired), trained softprob / ingested
-    * multiclass forests → multiclass `gbtree`, wrapped MLlib GBT →
-    * `gbtree` (tree weights folded into node values), linear models
-    * → `gblinear`, Poisson Newton loop → `gbtree count:poisson`.
-    * Refuses quantile / ranking / RF-multiclass models — their
-    * scoring rules have no schema slot; [[ModelIO]] persists those.
+    * `dart` when dropout rounds fired; `count:poisson` among them,
+    * its log-link base carried as an exp-link `base_score`), trained
+    * softprob / ingested multiclass forests → multiclass `gbtree`,
+    * wrapped MLlib GBT → `gbtree` (tree weights folded into node
+    * values), linear models → `gblinear`. Refuses
+    * `reg:quantileerror` forests (by objective name) and the RF / OvR
+    * multiclass models — their scoring rules have no schema slot;
+    * [[ModelIO]] persists those.
     */
   def export(model: GraftBoostModel): String = model.model match {
     case sm: SparseModel =>
+      // the quantile leaf rule writes α-quantiles of residuals, not
+      // the Newton steps a gbtree document's leaves are
+      require(sm.objective != "reg:quantileerror",
+        "XGBoost JSON has no slot for a reg:quantileerror forest's " +
+        "line-searched leaves — use ModelIO for engine-native " +
+        "persistence")
       val maxIdx = sm.trees.iterator.flatMap(_.feature.iterator)
         .filter(_ >= 0).maxOption.getOrElse(-1)
       namedFeatureGuard(model, maxIdx)
@@ -226,15 +234,6 @@ object XgbJson {
           .map { case (t, w) => MultiSparse.fromMLlibTree(t, w) },
         model.objective, baseMargin = 0.0)
 
-    // Poisson Newton loop: μ = exp(base + η·Σ treeᵣ(x)) — η folds
-    // into the node values, the log-link base rides base_score (exp
-    // link) + the exact margin attribute; ingest scores exp(margin)
-    // via the count:* arm of SparseModel.predictOne
-    case pm: PoissonBoost.PoissonModel =>
-      walkedGbtreeDoc(model,
-        pm.trees.map(MultiSparse.fromMLlibTree(_, pm.eta)),
-        "count:poisson", baseMargin = pm.base)
-
     // MLlib binary GBT probability = sigmoid(2·Σ wᵢ·treeᵢ(x)) —
     // folding 2·wᵢ into the node values makes stock XGBoost's
     // sigmoid(margin) reproduce the probability up to the complement
@@ -255,8 +254,8 @@ object XgbJson {
   }
 
   /** Single-target gbtree document for an MLlib-walked forest (the
-    * wrapped GBT paths and the Poisson Newton loop): one shared guard
-    * + booster + learner assembly so the three arms cannot drift.
+    * wrapped GBT regression and classification paths): one shared
+    * guard + booster + learner assembly so the two arms cannot drift.
     */
   private def walkedGbtreeDoc(
       model: GraftBoostModel,

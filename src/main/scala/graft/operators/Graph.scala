@@ -37,11 +37,11 @@ object Graph {
     * ONCE so only the node-sized side moves per round. Default ≈ 10⁷
     * rows (~hundreds of MB of longs — the autoBroadcastJoinThreshold
     * ballpark); tests force the fallback shape via the system
-    * property.
+    * property (0 = never broadcast).
     */
   private[graft] def broadcastMaxRows: Long =
-    sys.props.get("graft.graph.broadcastMaxRows").map(_.toLong)
-      .getOrElse(10L * 1000 * 1000)
+    graft.Knobs.long("graft.graph.broadcastMaxRows", 10L * 1000 * 1000,
+      min = 0L)
 
   /** Broadcast only under [[broadcastMaxRows]]; past it the frame is
     * returned unhinted so the planner shuffles on the join keys.

@@ -124,9 +124,8 @@ object Tables {
     * entirely (layout-invariance sweeps force both settings).
     */
   private def fanOutBytesPerTask: Long =
-    sys.props.get("graft.scan.fanout.bytesPerTask")
-      .orElse(sys.env.get("GRAFT_SCAN_FANOUT_BYTES")).map(_.toLong)
-      .getOrElse(64L * 1024)
+    graft.Knobs.long("graft.scan.fanout.bytesPerTask", 64L * 1024,
+      env = Some("GRAFT_SCAN_FANOUT_BYTES"), min = 0L)
 
   /** Only files up to this size are fanned out at the SOURCE layer.
     * The source-level repartition is cheap insurance: for an MB-scale
@@ -141,9 +140,8 @@ object Tables {
     * `-Dgraft.scan.fanout.maxBytes` / `GRAFT_SCAN_FANOUT_MAX`.
     */
   private def fanOutMaxBytes: Long =
-    sys.props.get("graft.scan.fanout.maxBytes")
-      .orElse(sys.env.get("GRAFT_SCAN_FANOUT_MAX")).map(_.toLong)
-      .getOrElse(2L * 1024 * 1024)
+    graft.Knobs.long("graft.scan.fanout.maxBytes", 2L * 1024 * 1024,
+      env = Some("GRAFT_SCAN_FANOUT_MAX"))
 
   /** Repartition a scan whose PHYSICAL layout cannot reach the
     * session's parallelism — the optimization-guide §2.5 "one huge

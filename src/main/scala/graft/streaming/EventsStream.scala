@@ -82,8 +82,8 @@ object EventsStream {
     * of keys; here it is sized to the test corpus' keyspace.
     */
   def StatePartitions: Int =
-    sys.props.get("graft.stream.stateParts")
-      .orElse(sys.env.get("GRAFT_STATE_PARTS")).map(_.toInt).getOrElse(8)
+    graft.Knobs.int("graft.stream.stateParts", 8,
+      env = Some("GRAFT_STATE_PARTS"))
 
   private def runToTable(df: DataFrame, mode: OutputMode): DataFrame = {
     val name = "graft_sink_" + UUID.randomUUID().toString.replace("-", "")

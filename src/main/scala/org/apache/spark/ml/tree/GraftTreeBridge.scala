@@ -3,14 +3,11 @@ package org.apache.spark.ml.tree
 /** Bridge to the `private[ml]` node statistics of spark.ml trees.
   *
   * XGBoost-JSON interchange of the MLlib-tree-backed forests (the
-  * wrapped GBT paths and [[graft.ml.PoissonBoost]]) needs each node's
-  * hessian mass for the document's `sum_hessian` slot (XGBoost's
-  * `cover`). MLlib keeps it on `Node.impurityStats` (the
-  * `ImpurityCalculator` behind the split search) which is
-  * `private[ml]` — for a weighted `DecisionTreeRegressor` fit,
-  * `impurityStats.count` IS the node's total instance weight (the
-  * hessian sum when the instance weight is the hessian, as in the
-  * Newton-weighted Poisson loop).
+  * wrapped GBT paths) needs each node's mass for the document's
+  * `sum_hessian` slot (XGBoost's `cover`). MLlib keeps it on
+  * `Node.impurityStats` (the `ImpurityCalculator` behind the split
+  * search) which is `private[ml]` — for a GBT member tree,
+  * `impurityStats.count` IS the node's total instance weight.
   */
 object GraftTreeBridge {
 

@@ -6,12 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 import graft.ml.GraftBoost._
 
-/** Poisson count boosting ([[PoissonBoost]]) — XGBoost's
-  * `count:poisson` (log link, Newton leaves), via the reference's
-  * params passthrough (`core.py:164-321`). Pins convergence to
-  * per-region Poisson MLEs (= region means), deviance monotonicity,
-  * positivity of the count-scale output, lifecycle dispatch and the
-  * model sink round-trip.
+/** Poisson count boosting — XGBoost's `count:poisson` (log link,
+  * Newton leaves) on the native grower ([[SparseBoost]]), via the
+  * reference's params passthrough (`core.py:164-321`). Pins
+  * convergence to per-region Poisson MLEs (= region means), deviance
+  * monotonicity, positivity of the count-scale output, lifecycle
+  * dispatch, TreeSHAP on the log-rate margin and the model sink
+  * round-trip.
   */
 class PoissonBoostSpec extends AnyFunSuite {
   import TestSession._
@@ -109,5 +110,40 @@ class PoissonBoostSpec extends AnyFunSuite {
       .select("prediction").collect().map(_.getDouble(0))
     assert(a.sameElements(b), "reloaded poisson model must score bit-identically")
     assert(loaded.evalsResult("train")("poisson-deviance").length == 4)
+  }
+
+  test("TreeSHAP bias + contributions equal the log-rate margin") {
+    val m = GraftBoost.train(grouped, Seq("x"), "y",
+      BoostParams("count:poisson", numRound = 5, maxDepth = 2, eta = 0.5))
+    val scored = GraftBoost.predict(m, grouped)
+    val rows = TreeShap.transform(m, scored)
+      .select(col("prediction"), col("bias"), col("shap")).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val margin = math.log(r.getDouble(0))
+      val sum = r.getDouble(1) + r.getSeq[Double](2).sum
+      assert(math.abs(sum - margin) < 1e-9,
+        s"bias + sum(shap) = $sum, margin ln(prediction) = $margin")
+    }
+  }
+
+  test("artifacts of the removed Poisson and quantile model classes fail to load by name") {
+    // graft_meta.json as the old per-objective loops wrote it: the
+    // Poisson scalars rode the meta, the model class named the loop
+    for (cls <- Seq("graft.ml.PoissonBoost$PoissonModel",
+        "graft.ml.QuantileBoost$QuantileModel")) {
+      val dir = java.nio.file.Files.createTempDirectory("legacy_io")
+      val meta = s"""{"modelClass":"$cls","featureCols":["x"],""" +
+        """"objective":"count:poisson","numClasses":0,""" +
+        """"missingStrategy":"impute","imputationMeans":{},""" +
+        """"evalsResult":{},"poissonBase":1.5,"poissonEta":0.3,""" +
+        """"poissonRounds":2}"""
+      java.nio.file.Files.write(dir.resolve("graft_meta.json"),
+        meta.getBytes("UTF-8"))
+      val e = intercept[UnsupportedOperationException] {
+        ModelIO.load(spark, dir.toString)
+      }
+      assert(e.getMessage == s"unknown model class: $cls", e.getMessage)
+    }
   }
 }

@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 import graft.ml.GraftBoost._
 
-/** Quantile-regression boosting ([[QuantileBoost]]) — XGBoost's
-  * `reg:quantileerror` (pinball loss), reached through the reference's
-  * params-dict passthrough (`core.py:164-321`). Pins the mechanism
-  * (exact leaf-quantile line search), the statistical contract
+/** Quantile-regression boosting — XGBoost's `reg:quantileerror`
+  * (pinball loss) on the native grower ([[SparseBoost]]), reached
+  * through the reference's params-dict passthrough
+  * (`core.py:164-321`). Pins the mechanism (exact leaf-quantile line
+  * search as the leaf rule), the statistical contract
   * (coverage ≈ α, quantile monotonicity in α), and the lifecycle
   * integration (GraftBoostModel dispatch, history, local predict).
   */
@@ -168,16 +169,14 @@ class QuantileBoostSpec extends AnyFunSuite {
       val w = if (i % 2 == 0) 100.0 else 1.0
       (x1, x2, y, w)
     }.toDF("x1", "x2", "y", "w")
-    val unw = QuantileBoost.train(
-      GraftBoost.assemble(mixed, Seq("x1", "x2"), None)
-        .withColumn("label", col("y")),
-      BoostParams(numRound = 2, maxDepth = 2), 0.5, None)._1
-    val wtd = QuantileBoost.train(
-      GraftBoost.assemble(mixed, Seq("x1", "x2"), None)
-        .withColumn("label", col("y")).withColumn("w", col("w")),
-      BoostParams(numRound = 2, maxDepth = 2), 0.5, Some("w"))._1
+    val p = BoostParams("reg:quantileerror", numRound = 2, maxDepth = 2,
+      quantileAlpha = 0.5)
+    val unw = GraftBoost.train(mixed, Seq("x1", "x2"), "y", p)
+    val wtd = GraftBoost.train(mixed, Seq("x1", "x2"), "y", p,
+      weightCol = Some("w"))
     val probe = org.apache.spark.ml.linalg.Vectors.dense(19.0, 0.0)
-    assert(unw.predictOne(probe) != wtd.predictOne(probe),
+    assert(GraftBoost.predictLocal(unw, probe) !=
+      GraftBoost.predictLocal(wtd, probe),
       "100x weights must move the fitted trees")
   }
 }

@@ -177,12 +177,10 @@ class XgbJsonSpec extends AnyFunSuite {
   }
 
   test("refuses what the schema cannot carry") {
-    val (m, df) = fitNative("reg:squarederror")
+    val (q, df) = fitNative("reg:quantileerror")
     df.unpersist()
     // pinball-loss forests have no schema slot (gbtree leaf values
-    // are Newton steps; the quantile loop's are leaf quantiles)
-    val q = m.copy(model = new graft.ml.QuantileBoost.QuantileModel(
-      "u", Array.empty, 0.0, 0.1, 0.5))
+    // are Newton steps; the quantile leaf rule's are leaf quantiles)
     intercept[IllegalArgumentException] { XgbJson.export(q) }
     // multi-group gblinear (num_class > 1) has a different weights
     // layout — refused loudly rather than mis-sliced
@@ -749,7 +747,8 @@ class XgbJsonSpec extends AnyFunSuite {
       .cache()
     val m = GraftBoost.train(df, feats, "label",
       GraftBoost.BoostParams("count:poisson", numRound = 3, maxDepth = 3))
-    assert(m.model.isInstanceOf[graft.ml.PoissonBoost.PoissonModel])
+    assert(m.model.asInstanceOf[SparseBoost.SparseModel]
+      .objective == "count:poisson")
     val doc = XgbJson.export(m)
     assert(doc.contains("count:poisson"))
     val back = XgbJson.importModel(doc)
