@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-keyed build memo — THE pattern behind every shared
@@ -132,21 +133,48 @@ object SharedBuilds {
         ()
       }
     )
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.length)
+    runChains(s.sparkContext, chains)
+  }
+
+  /** Run independent build chains overlapped, one pool thread each.
+    * Every chain's Spark jobs carry that chain's job tag. The first
+    * chain to fail stops the rest: its siblings' futures are cancelled
+    * (interrupting their threads), their tagged jobs are cancelled, the
+    * pool is shut down, and once its threads are gone the tags are
+    * cancelled once more (a thread interrupted between two jobs may
+    * have submitted one after the first sweep). Then the failed
+    * chain's own cause is rethrown — a failed build fails exactly as it
+    * did sequentially, and no detached thread keeps submitting jobs.
+    */
+  private[graft] def runChains(sc: SparkContext, chains: Seq[() => Unit]): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors,
+      ExecutorCompletionService, TimeUnit}
+    val run = java.util.UUID.randomUUID()
+    val tags = chains.indices.map(i => s"graft-shared-build-$run-$i")
+    val pool = Executors.newFixedThreadPool(chains.length)
+    val done = new ExecutorCompletionService[Unit](pool)
     try {
-      val futures = chains.map(c => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = c()
-      }))
-      // get() rethrows any chain's failure (unwrapped below) — a
-      // failed build must fail buildAll exactly as it did sequentially
-      futures.foreach { f =>
-        try f.get()
+      val futures = chains.zip(tags).map { case (chain, tag) =>
+        done.submit(new Callable[Unit] {
+          def call(): Unit = {
+            sc.addJobTag(tag)
+            try chain() finally sc.removeJobTag(tag)
+          }
+        })
+      }
+      chains.indices.foreach { _ =>
+        try done.take().get()
         catch {
-          case e: java.util.concurrent.ExecutionException =>
+          case e: ExecutionException =>
+            futures.foreach(_.cancel(true))
+            tags.foreach(sc.cancelJobsWithTag)
+            pool.shutdownNow()
+            pool.awaitTermination(60, TimeUnit.SECONDS)
+            tags.foreach(sc.cancelJobsWithTag)
             throw Option(e.getCause).getOrElse(e)
         }
       }
-    } finally pool.shutdown()
+    } finally pool.shutdownNow()
   }
 
   /** Drop every memoized shared frame (unpersisting live entries) so

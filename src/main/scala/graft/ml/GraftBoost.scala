@@ -66,7 +66,7 @@ object GraftBoost {
     *                         XGBoost.
     * @param multiclassStrategy "softprob" = true multi:softprob
     *                         boosting, K native trees per round
-    *                         ([[SoftprobBoost]]); "ovr" = OneVsRest
+    *                         ([[Objective.Softprob]]); "ovr" = OneVsRest
     *                         over binary GBT; "rf" = RandomForest
     *                         (single model, native probabilities)
     * @param seed             determinism anchor
@@ -369,18 +369,6 @@ object GraftBoost {
       if (out.isEmpty) df else out
     }
 
-  /** Train-history metric name for the native sparse loop's
-    * objectives (XGBoost's default eval metric per objective).
-    */
-  private[ml] def sparseMetricName(objective: String): String = objective match {
-    case "binary:logistic"   => "logloss"
-    case "reg:gamma"         => "gamma-deviance"
-    case "reg:tweedie"       => "tweedie-nloglik"
-    case "count:poisson"     => "poisson-deviance"
-    case "reg:quantileerror" => "pinball"
-    case _                   => "rmse"
-  }
-
   /** Objectives MLlib GBT has no loss for: they train in the native
     * sparse loop ([[SparseBoost]]) under every missing strategy.
     */
@@ -566,11 +554,14 @@ object GraftBoost {
   ): GraftBoostModel = {
     val native = params.missingStrategy == "native"
     val ranking = params.objective.startsWith("rank:")
-    // the fit runs in SparseBoost.train: every non-ranking objective
-    // under missingStrategy "native", and the native-only objectives
-    // under any strategy
+    val multiclass =
+      params.objective == "multi:softprob" || params.objective == "multi:softmax"
+    val softprob = multiclass && params.multiclassStrategy == "softprob"
+    // the per-row objectives of the round loop (SparseBoost.train):
+    // all under missingStrategy "native", the native-only ones always.
+    // Ranking and softprob run in the same loop with their own rejections
     val nativeLoop =
-      (native || NativeOnlyObjectives(params.objective)) && !ranking
+      (native || NativeOnlyObjectives(params.objective)) && !ranking && !multiclass
     val toNativeLoop = "set missingStrategy=\"native\" (or a gamma, " +
       "tweedie, poisson or quantile objective)"
     if (marginCol.isDefined)
@@ -652,13 +643,13 @@ object GraftBoost {
       val (m, histL) = LinearBoost.train(data, params, weightCol)
       return GraftBoostModel(m, featureCols, params.objective,
         if (params.objective == "binary:logistic") 2 else 0,
-        Map("train" -> Map(sparseMetricName(params.objective) -> histL)),
+        Map("train" -> Map(Objective(params).metricName -> histL)),
         imputation, params.missingStrategy)
     }
-    // DART dropout lives in the native sparse TRAIN loop only —
-    // ignoring it silently on an MLlib path (or in the RankBoost
-    // loop, which manages its own forest without dropout) would fake
-    // the mechanism
+    // DART dropout drops trees from one per-row margin — ignoring it
+    // silently on an MLlib path, or under the ranking and softprob
+    // objectives (per-group gradients, K margins), would fake the
+    // mechanism
     if (params.booster == "dart")
       require(nativeLoop,
         s"booster=\"dart\" runs in the native loop — $toNativeLoop; " +
@@ -672,34 +663,39 @@ object GraftBoost {
         s"num_parallel_tree > 1 runs in the native tree loop — $toNativeLoop; " +
         "the ranking loop has no parallel-tree path")
 
-    if (params.objective == "rank:pairwise" || params.objective == "rank:ndcg") {
-      // pairwise learning-to-rank (plain RankNet pairs or ΔNDCG-
-      // weighted LambdaMART) — a custom loop (RankBoost) whose tree
-      // learner is the shared sparse histogram grower, so the native
-      // NaN routing above applies to ranking too
-      require(groupCol.isDefined,
-        "ranking objectives need groupCol (the DMatrix group vector)")
+    if (nativeLoop || ranking || softprob) {
+      // everything MLlib cannot grow: NaN routing, the native-only
+      // losses, true softprob and the pairwise rankers
       require(validationCol.isEmpty,
-        "ranking records its NDCG train history itself")
-      val (m, histR) = RankBoost.train(
-        data.withColumn("group", col(groupCol.get)), params)
-      return GraftBoostModel(m, featureCols, params.objective, 0,
-        Map("train" -> Map("ndcg@10" -> histR)), imputation,
+        "the boosting round loop records its train history itself; " +
+        "use StagedEval on the returned model for validation metrics " +
+        "(or multiclassStrategy=ovr for a validation column)")
+      if (ranking) {
+        require(groupCol.isDefined,
+          "ranking objectives need groupCol (the DMatrix group vector)")
+        require(weightCol.isEmpty,
+          "ranking objectives take no weightCol: their pair gradients " +
+          "are per group, and a per-row weight has no place in them")
+      }
+      // Class inference = the reference's eager distributed distinct
+      // (`core.py:561-566`).
+      val numClasses =
+        if (softprob) data.select(max(col("label"))).first().getDouble(0).toInt + 1
+        else if (params.objective == "binary:logistic") 2
+        else 0
+      val objective = Objective(params, numClasses)
+      val fit = SparseBoost.train(
+        if (ranking) data.withColumn("group", col(groupCol.get)) else data,
+        params, objective, weightCol, marginCol)
+      val model: Model[_] =
+        if (softprob) // round-major: round r's K class trees follow round r−1's
+          new MultiSparse.MultiSparseModel(s"softprob_${params.seed}", fit.trees,
+            Array.tabulate(fit.trees.length)(i => i / params.numParallelTree % numClasses),
+            numClasses, fit.base, objective.name, fit.stats)
+        else fit.sparseModel(s"${if (ranking) "rank" else "sparse"}_${params.seed}", params)
+      return GraftBoostModel(model, featureCols, params.objective, numClasses,
+        Map("train" -> Map(objective.metricName -> fit.history)), imputation,
         params.missingStrategy)
-    }
-
-    if (nativeLoop) {
-      // XGBoost's sparsity-aware mechanism — a custom histogram loop
-      // (SparseBoost) since MLlib rejects NaN features outright and
-      // has none of the native-only losses
-      require(validationCol.isEmpty,
-        "native sparse boosting records its train history itself; " +
-        "use StagedEval on the returned model for validation metrics")
-      val (m, histN) = SparseBoost.train(data, params, weightCol, marginCol)
-      return GraftBoostModel(m, featureCols, params.objective,
-        if (params.objective == "binary:logistic") 2 else 0,
-        Map("train" -> Map(sparseMetricName(params.objective) -> histN)),
-        imputation, params.missingStrategy)
     }
 
     params.objective match {
@@ -746,51 +742,42 @@ object GraftBoost {
         GraftBoostModel(model, featureCols, params.objective, 2, Map.empty, imputation, params.missingStrategy)
 
       case "multi:softprob" | "multi:softmax" =>
-        // Class inference = the reference's eager distributed
-        // distinct (`core.py:561-566`).
+        require(!native,
+          "missingStrategy=\"native\" trains multiclass only as " +
+          "multiclassStrategy=\"softprob\"")
+        // Class inference = the reference's eager distributed distinct
+        // (`core.py:561-566`).
         val numClasses = data.select(max(col("label"))).first().getDouble(0).toInt + 1
-        if (params.multiclassStrategy == "softprob") {
-          // the TRUE single-model mechanism (core.py:580-590): K trees
-          // per round on shared multinomial softmax gradients
-          require(validationCol.isEmpty,
-            "softprob multiclass records its train history itself; " +
-            "use multiclassStrategy=ovr for validation columns")
-          val (m, hist) = SoftprobBoost.train(data, params, numClasses, weightCol)
-          GraftBoostModel(m, featureCols, params.objective, numClasses,
-            Map("train" -> Map("mlogloss" -> hist)), imputation,
-            params.missingStrategy)
-        } else {
-          val model: Model[_] = params.multiclassStrategy match {
-            case "rf" =>
-              require(validationCol.isEmpty,
-                "RandomForest multiclass has no validation-based early stopping; " +
-                "use multiclassStrategy=ovr for validation columns")
-              val rf = new RandomForestClassifier()
-                .setFeaturesCol("features").setLabelCol("label")
-                .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
-                .setSubsamplingRate(params.subsample)
-                .setMinInstancesPerNode(params.minChildWeight)
-                .setMaxBins(params.maxBins)
-                .setSeed(params.seed)
-              weightCol.foreach(rf.setWeightCol)
-              rf.fit(data)
-            case _ =>
-              val base = new GBTClassifier()
-                .setFeaturesCol("features").setLabelCol("label")
-                .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
-                .setStepSize(params.eta).setSubsamplingRate(params.subsample)
-                .setMaxBins(params.maxBins)
-                .setSeed(params.seed)
-              weightCol.foreach(base.setWeightCol)
-              validationCol.foreach(base.setValidationIndicatorCol)
-              val ovr = new OneVsRest().setClassifier(base)
-                .setFeaturesCol("features").setLabelCol("label")
-              weightCol.foreach(ovr.setWeightCol)
-              ovr.fit(data)
-          }
-          GraftBoostModel(model, featureCols, params.objective, numClasses,
-            Map.empty, imputation, params.missingStrategy)
+        val model: Model[_] = params.multiclassStrategy match {
+          case "rf" =>
+            require(validationCol.isEmpty,
+              "RandomForest multiclass has no validation-based early stopping; " +
+              "use multiclassStrategy=ovr for validation columns")
+            val rf = new RandomForestClassifier()
+              .setFeaturesCol("features").setLabelCol("label")
+              .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
+              .setSubsamplingRate(params.subsample)
+              .setMinInstancesPerNode(params.minChildWeight)
+              .setMaxBins(params.maxBins)
+              .setSeed(params.seed)
+            weightCol.foreach(rf.setWeightCol)
+            rf.fit(data)
+          case _ =>
+            val base = new GBTClassifier()
+              .setFeaturesCol("features").setLabelCol("label")
+              .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
+              .setStepSize(params.eta).setSubsamplingRate(params.subsample)
+              .setMaxBins(params.maxBins)
+              .setSeed(params.seed)
+            weightCol.foreach(base.setWeightCol)
+            validationCol.foreach(base.setValidationIndicatorCol)
+            val ovr = new OneVsRest().setClassifier(base)
+              .setFeaturesCol("features").setLabelCol("label")
+            weightCol.foreach(ovr.setWeightCol)
+            ovr.fit(data)
         }
+        GraftBoostModel(model, featureCols, params.objective, numClasses,
+          Map.empty, imputation, params.missingStrategy)
 
       case other =>
         throw new IllegalArgumentException(s"unsupported objective: $other")

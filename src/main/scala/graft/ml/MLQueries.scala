@@ -796,7 +796,7 @@ object MLQueries {
   )
 
   /** True single-model multi:softprob lifecycle (core.py:580-590
-    * MECHANISM parity — [[SoftprobBoost]]: K native histogram trees
+    * MECHANISM parity — [[Objective.Softprob]]: K native histogram trees
     * per round on shared multinomial gradients, Newton leaves) on a
     * 4-class slice of the embeddings table. Gates: accuracy well above the majority
     * class, train mlogloss monotone improving over rounds, and the
@@ -916,7 +916,7 @@ object MLQueries {
     """)
   )
 
-  /** Pairwise learning-to-rank lifecycle ([[RankBoost]], XGBoost's
+  /** Pairwise learning-to-rank lifecycle ([[Objective.Rank]], XGBoost's
     * `rank:pairwise` via the reference's params passthrough). Orders
     * are the query groups (l_orderkey), graded relevance is the NET
     * REVENUE tier — price·(1−discount) bucketed — so the ranker must
@@ -1386,7 +1386,7 @@ object MLQueries {
           growPolicy = "lossguide", maxLeaves = 5))
       val sm = model.model.asInstanceOf[SparseBoost.SparseModel]
       val leavesOk = sm.trees.forall(_.feature.count(_ < 0) <= 5)
-      val hist = model.evalsResult("train")(GraftBoost.sparseMetricName("reg:squarederror"))
+      val hist = model.evalsResult("train")(Objective.SquaredError.metricName)
       val sd = df.select(stddev_pop(col("target"))).head().getDouble(0)
       val out = GraftBoost.predict(model, df)
         .agg(

@@ -18,7 +18,8 @@ import SparseBoost.{ImportanceAcc, SparseTree}
   * `tree_info` carries each tree's class id (round-major: round r owns
   * trees [r·K, (r+1)·K) for a plain K-class fit).
   *
-  * This is the model [[SoftprobBoost]] trains (reference
+  * This is the model the boosting round loop trains under
+  * [[Objective.Softprob]] (reference
   * `core.py:580-590` rewrites binary objectives to `multi:softprob`;
   * its tests `test_core.py:72-101` exercise the multiclass lifecycle)
   * and the scorer multiclass [[XgbJson]] documents ingest into: a
@@ -69,7 +70,7 @@ object MultiSparse {
 
     /** Accumulated per-class margins for one feature vector — tree
       * order, so each class sums its rounds in the order
-      * [[SoftprobBoost]] accumulated its training margins.
+      * the boosting round loop accumulated its training margins.
       */
     def marginsOf(v: Vector): Array[Double] = {
       val m = Array.fill(numClasses)(base)

@@ -3,42 +3,19 @@ package graft.ml
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Pairwise learning-to-rank boosting — XGBoost's `rank:pairwise`
-  * (plain RankNet pair gradients) and `rank:ndcg` (LambdaMART:
-  * pairs weighted by |ΔNDCG| at the current ranks, Burges 2010)
-  * objectives, reachable in the reference through its params passthrough
-  * (`core.py:164-321` forwards arbitrary `params` to `xgb.train`;
-  * group structure rides the DMatrix). A Spark-native restatement:
-  *
-  *  1. rows carry (features, relevance label, group id, margin f),
-  *     hash-partitioned and sorted by group id ONCE at fit entry;
-  *     each round computes RankNet gradients PER GROUP with a
-  *     partition-local run-walker over the contiguous groups — for
-  *     every in-group pair (i, j) with rel_i > rel_j,
-  *     ρ = σ(−(f_i − f_j)) contributes −ρ to g_i, +ρ to g_j and
-  *     ρ(1−ρ) to both hessians (the exact XGBoost pairwise loop).
-  *     Groups are queries: thousands of documents at most, so the
-  *     in-group O(n²) is bounded and the across-group parallelism is
-  *     the scale axis. ONE shuffle establishes the group clustering
-  *     for the whole fit — the per-round gradient walk, the margin
-  *     updates (narrow) and the NDCG windows (clustered-distribution
-  *     reuse) all ride it; at 100 TB this is the natural
-  *     co-partitioning — group id is the key everywhere,
-  *  2. the gradient frame is localCheckpoint'ed once per round, then
-  *     [[SparseBoost.growTree]] fits a histogram tree on it (shared
-  *     split-proposal edges, missing-bin routing, monotone/colsample
-  *     knobs all inherited),
-  *  3. the model IS a [[SparseBoost.SparseModel]] with objective
-  *     `rank:pairwise` (margins are the ranking scores), so the whole
-  *     lifecycle — sink/load, importances, local predict, staged
-  *     truncation — comes for free,
-  *  4. the per-round history is mean NDCG@k over groups, computed
-  *     distributed with window functions (deterministic tie-break on
-  *     the row hash).
+/** The ranking parts of `rank:pairwise` (RankNet pair gradients) and
+  * `rank:ndcg` (LambdaMART: pairs weighted by |ΔNDCG| at the current
+  * ranks, Burges 2010), the objectives [[Objective.Rank]] runs in the
+  * boosting round loop: the per-group pair gradients and the mean-NDCG
+  * history metric. For every in-group pair (i, j) with rel_i > rel_j,
+  * ρ = σ(−(f_i − f_j)) contributes −ρ to g_i, +ρ to g_j and ρ(1−ρ) to
+  * both hessians (the exact XGBoost pairwise loop). Groups are
+  * queries: the in-group O(n²) is bounded, and the across-group
+  * parallelism is the scale axis.
   */
 object RankBoost {
 
@@ -78,14 +55,6 @@ object RankBoost {
     scored.head().getDouble(0)
   }
 
-  /** Train the pairwise ranker. `data` must carry `features`
-    * (vector), `label` (graded relevance, larger = better) and
-    * `group` (long query/group id).
-    *
-    * @return the model (a [[SparseBoost.SparseModel]] whose margins
-    *         are ranking scores) plus the per-round TRAIN NDCG@10
-    *         history
-    */
   /** RankNet / LambdaMART gradients for ONE group's rows. The rows
     * are first put in a deterministic in-group order (margin desc,
     * relevance desc, content-hash tie-break) so the rank positions —
@@ -95,7 +64,7 @@ object RankBoost {
   private def pairGradients(
       groupRows: Array[(Long, Vector, Double, Double)],
       ndcgWeighted: Boolean
-  ): Iterator[(Vector, Double, Double)] = {
+  ): Iterator[(Vector, Double, Double, Double)] = {
     val rows = groupRows.sortBy { case (_, v, rel, f) =>
       (-f, -rel, java.util.Arrays.hashCode(v.toArray))
     }
@@ -140,104 +109,40 @@ object RankBoost {
       }
       i += 1
     }
-    (0 until n).iterator.map(i2 => (rows(i2)._2, g(i2), h(i2)))
+    (0 until n).iterator.map(i2 => (rows(i2)._2, rows(i2)._3, g(i2), h(i2)))
   }
 
-  def train(
-      data: DataFrame,
-      params: GraftBoost.BoostParams
-  ): (SparseBoost.SparseModel, Array[Double]) = {
-    require(params.objective == "rank:pairwise" ||
-      params.objective == "rank:ndcg",
-      s"ranking objectives are rank:pairwise and rank:ndcg, " +
-      s"got ${params.objective}")
-    val spark = data.sparkSession
-    import spark.implicits._
-    val src = data.select(col("features"), col("label").cast("double"),
-      col("group").cast("long"))
-
-    val numFeat = src.select(col("features")).head().getAs[Vector](0).size
-    val edges = SparseBoost.proposeEdges(src, numFeat, params.maxBins,
-      params.splitProposal)
-    SparseBoost.validateFeatureParams(params, numFeat)
-    val constraints =
-      if (params.monotoneConstraints.isEmpty) new Array[Int](numFeat)
-      else params.monotoneConstraints.toArray
-    val allowed = Array.fill(numFeat)(true)
-
-    // Establish the group partitioning ONCE (guide §2.4 "two
-    // operations keyed the same way can share one exchange"): the
-    // per-round gradient pass needs rows grouped by query id and the
-    // per-round NDCG windows need a clustered-by-group distribution —
-    // hash-partitioning + an in-partition group sort here satisfies
-    // BOTH for every round, where the previous groupByKey (opaque
-    // lambda key — Catalyst cannot see it equals the group column)
-    // re-shuffled the full feature frame every round and meanNdcg
-    // added a second full exchange per round on top.
-    val groupParts = math.max(1, src.rdd.getNumPartitions)
-    var cur = src.withColumn("f", lit(0.0))
-      .repartition(groupParts, col("group"))
-      .sortWithinPartitions(col("group"))
-      .localCheckpoint()
-    val roundAccs = new ArrayBuffer[SparseBoost.ImportanceAcc](params.numRound)
-    val hist = new ArrayBuffer[Double](params.numRound)
-    val forest = new ArrayBuffer[SparseBoost.SparseTree](params.numRound)
-
-    val ndcgWeighted = params.objective == "rank:ndcg"
-    for (r <- 1 to params.numRound) {
-      // RankNet / LambdaMART gradients, one group at a time. Groups
-      // are CONTIGUOUS within each partition (established above and
-      // preserved by the narrow margin updates), so a partition-local
-      // run-walker replaces the per-round shuffle; the pair loop stays
-      // in primitive arrays and only (features, g, h) rows leave the
-      // group — nothing group-quadratic is materialized. Under
-      // rank:ndcg each pair is weighted by |ΔNDCG| — the NDCG swap
-      // cost at the CURRENT ranks (Burges' LambdaMART), so top
-      // positions dominate the gradient. The walker checks that
-      // contiguity as it goes: each run's group id must exceed the
-      // previous run's, or a split group would silently lose the
-      // pairs across its pieces.
-      val grad = cur.select(col("group"), col("features"), col("label"), col("f"))
-        .as[(Long, Vector, Double, Double)]
-        .mapPartitions { (it: Iterator[(Long, Vector, Double, Double)]) =>
-          val in = it.buffered
-          var prev = Option.empty[Long]
-          val perGroup = new Iterator[Iterator[(Vector, Double, Double)]] {
-            def hasNext: Boolean = in.hasNext
-            def next(): Iterator[(Vector, Double, Double)] = {
-              val gId = in.head._1
-              if (prev.exists(_ >= gId))
-                throw new IllegalStateException(
-                  s"ranking group $gId is not one contiguous run in its " +
-                  s"partition (it follows group ${prev.get}): the " +
-                  "group-sorted layout was lost")
-              prev = Some(gId)
-              val groupRows = ArrayBuffer.empty[(Long, Vector, Double, Double)]
-              while (in.hasNext && in.head._1 == gId)
-                groupRows += in.next()
-              pairGradients(groupRows.toArray, ndcgWeighted)
-            }
-          }
-          perGroup.flatten
-        }
-        .toDF("features", "g", "h")
-        .localCheckpoint()
-
-      val roundAcc = SparseBoost.ImportanceAcc(numFeat)
-      roundAccs += roundAcc
-      val tree = SparseBoost.growTree(grad, edges, params, roundAcc,
-        allowed, constraints, params.seed ^ (1337L * r))
-      forest += tree
-
-      val bc = spark.sparkContext.broadcast(tree)
-      val upd = udf((v: Vector, f: Double) => f + bc.value.valueOf(v))
-      cur = cur.withColumn("f", upd(col("features"), col("f"))).localCheckpoint()
-      hist += meanNdcg(cur, "group", "label", "f", 10)
+  /** Pair gradients of a partition of (group, features, relevance,
+    * margin) rows as (features, relevance, g, h) rows, one group run
+    * at a time. Groups must be CONTIGUOUS in the partition (the
+    * group-sorted layout [[Objective.Rank]] sets up once per fit), so
+    * a run-walker replaces a per-round shuffle and nothing
+    * group-quadratic is materialized. The walker checks that: each
+    * run's group id must exceed the previous run's, or a split group
+    * would silently lose the pairs across its pieces.
+    */
+  private[ml] def groupGradients(
+      it: Iterator[(Long, Vector, Double, Double)],
+      ndcgWeighted: Boolean
+  ): Iterator[(Vector, Double, Double, Double)] = {
+    val in = it.buffered
+    var prev = Option.empty[Long]
+    val perGroup = new Iterator[Iterator[(Vector, Double, Double, Double)]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Iterator[(Vector, Double, Double, Double)] = {
+        val gId = in.head._1
+        if (prev.exists(_ >= gId))
+          throw new IllegalStateException(
+            s"ranking group $gId is not one contiguous run in its " +
+            s"partition (it follows group ${prev.get}): the " +
+            "group-sorted layout was lost")
+        prev = Some(gId)
+        val groupRows = ArrayBuffer.empty[(Long, Vector, Double, Double)]
+        while (in.hasNext && in.head._1 == gId)
+          groupRows += in.next()
+        pairGradients(groupRows.toArray, ndcgWeighted)
+      }
     }
-    val acc = SparseBoost.ImportanceAcc.sum(roundAccs.toSeq, numFeat)
-    val gSum = acc.gain.sum
-    val imp = if (gSum > 0) acc.gain.map(_ / gSum) else acc.gain.clone()
-    (new SparseBoost.SparseModel(s"rank_${params.seed}", forest.toArray, 0.0,
-      params.objective, imp, acc, Some(roundAccs.toSeq)), hist.toArray)
+    perGroup.flatten
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * and pins in `test_core.py:365-382`). MLlib rejects NaN features
   * outright, so the impute/sentinel strategies of [[GraftBoost]] were
   * approximations; this is the real mechanism, as a from-scratch
-  * histogram tree learner — also the tree learner of the
-  * [[RankBoost]] and [[SoftprobBoost]] loops:
+  * histogram tree learner, grown by the one boosting round loop
+  * ([[train]]) for every [[Objective]]:
   *
   *  1. per feature, split candidates are the exact (maxBins−1)
   *     quantiles of the NON-missing values — XGBoost's global
@@ -47,6 +47,9 @@ import org.apache.spark.sql.types._
   * − α, h = 1, plus the α-quantile leaf rule of [[quantileLeaves]]).
   * binary/squared are reached under `missingStrategy = "native"`; the
   * other four ALWAYS train here — MLlib GBT has none of those losses.
+  * The same loop grows `multi:softprob` (K trees per round on the
+  * softmax gradients, [[Objective.Softprob]]) and `rank:pairwise` /
+  * `rank:ndcg` (per-group pair gradients, [[Objective.Rank]]).
   *
   * Poisson and quantile moved here from their own per-round MLlib
   * regression-tree loops, and their fitted values moved with them:
@@ -342,25 +345,6 @@ object SparseBoost {
         }
       }
       out
-    }
-  }
-
-  /** Per-feature constraint validation shared by every loop that
-    * feeds [[growTree]] (the sparse train loop AND [[RankBoost]]) —
-    * the same params must fail identically everywhere.
-    */
-  private[ml] def validateFeatureParams(
-      params: GraftBoost.BoostParams, numFeat: Int): Unit = {
-    if (params.monotoneConstraints.nonEmpty) {
-      require(params.monotoneConstraints.length == numFeat,
-        s"monotoneConstraints has ${params.monotoneConstraints.length} " +
-        s"entries for $numFeat features")
-      require(params.monotoneConstraints.forall(c => c >= -1 && c <= 1),
-        "monotone constraints must be -1, 0 or +1")
-    }
-    params.interactionConstraints.foreach { g =>
-      require(g.nonEmpty && g.forall(j => j >= 0 && j < numFeat),
-        s"interaction group $g has indices outside [0, $numFeat)")
     }
   }
 
@@ -986,7 +970,7 @@ object SparseBoost {
     * reducer (×4 oversampling against hash collisions, as in
     * [[proposeEdges]]).
     */
-  private def quantileLeaves(
+  private[ml] def quantileLeaves(
       tree: SparseTree, rows: DataFrame, resid: Column,
       alpha: Double, eta: Double): Unit = {
     val sc = rows.sparkSession.sparkContext
@@ -1002,49 +986,42 @@ object SparseBoost {
       .foreach(r => tree.value(r.getInt(0)) = eta * r.getDouble(1))
   }
 
-  /** Mean loss of margin column `f` for the round history. */
-  private def lossOf(df: DataFrame, params: GraftBoost.BoostParams): Double =
-    params.objective match {
-      case "binary:logistic" =>
-        // logloss with the standard 1e-15 clip
-        val p = lit(1.0) / (lit(1.0) + exp(-col("f")))
-        val pc = least(greatest(p, lit(1e-15)), lit(1.0 - 1e-15))
-        df.select(avg(-(col("label") * log(pc) +
-          (lit(1.0) - col("label")) * log(lit(1.0) - pc)))).head().getDouble(0)
-      case "reg:gamma" =>
-        // mean gamma deviance: 2·(−ln(y/μ) + (y−μ)/μ), μ = e^f
-        val mu = exp(col("f"))
-        df.select(avg(lit(2.0) * (-log(col("label") / mu) +
-          (col("label") - mu) / mu))).head().getDouble(0)
-      case "count:poisson" =>
-        // mean Poisson deviance 2·(y·ln(y/μ) − (y−μ)), μ = e^f, the
-        // y·ln term 0 at y = 0
-        df.select(avg(lit(2.0) * (
-            when(col("label") > 0.0,
-              col("label") * log(col("label") / exp(col("f")))).otherwise(lit(0.0))
-              - (col("label") - exp(col("f"))))))
-          .head().getDouble(0)
-      case "reg:quantileerror" =>
-        // mean pinball (check) loss at α
-        val alpha = params.quantileAlpha
-        df.select(avg(greatest(
-            (col("label") - col("f")) * alpha,
-            (col("label") - col("f")) * (alpha - 1.0))))
-          .head().getDouble(0)
-      case "reg:tweedie" =>
-        // tweedie negative log-likelihood kernel (XGBoost's
-        // tweedie-nloglik@ρ): −y·e^{(1−ρ)f}/(1−ρ) + e^{(2−ρ)f}/(2−ρ)
-        val rho = params.tweedieVariancePower
-        df.select(avg(
-          -col("label") * exp(lit(1.0 - rho) * col("f")) / (1.0 - rho) +
-          exp(lit(2.0 - rho) * col("f")) / (2.0 - rho))).head().getDouble(0)
-      case _ =>
-        df.select(sqrt(avg(pow(col("label") - col("f"), 2)))).head().getDouble(0)
+  /** What the round loop grew: the forest in growth order (round r,
+    * channel k, parallel tree t at ((r−1)·K + k)·T + t − 1), the start
+    * margin, the per-round split statistics and their sum, the
+    * per-round train history and whether a DART round rescaled
+    * earlier trees.
+    */
+  final case class Fit(
+      trees: Array[SparseTree],
+      base: Double,
+      roundAccs: Seq[ImportanceAcc],
+      stats: ImportanceAcc,
+      history: Array[Double],
+      dartRescaled: Boolean
+  ) {
+    /** The forest as a single-channel model. */
+    def sparseModel(uid: String, params: GraftBoost.BoostParams): SparseModel = {
+      val gSum = stats.gain.sum
+      val imp = if (gSum > 0) stats.gain.map(_ / gSum) else stats.gain.clone()
+      new SparseModel(uid, trees, base, params.objective, imp, stats,
+        Some(roundAccs), params.numParallelTree, dartRescaled)
     }
+  }
 
-  /** Train the sparsity-aware booster. `data` must carry `features`
-    * (vector; NaN marks missing) and `label`; an optional weight
-    * column scales each row's (g, h) — XGBoost's instance weights.
+  /** The boosting round loop — the one `xgb.train` loop of the
+    * reference (`core.py:164-321`), for every [[Objective]]. `data`
+    * must carry `features` (vector; NaN marks missing), `label` and
+    * the objective's [[Objective.inputs]]; an optional weight column
+    * scales each row's (g, h) — XGBoost's instance weights.
+    *
+    * Round r grows T trees per channel k. Each tree draws its own
+    * `subsample` rows ([[GraftBoost.roundSample]]), `colsample_bytree`
+    * features and grower seed from its index idx = ((r−1)·K + k)·T + t:
+    * (r−1)·T + t for one channel, (r−1)·K + k + 1 for softprob's
+    * single trees. Softprob and ranking honour both samples too;
+    * softprob's rows are drawn per tree, where its old loop drew them
+    * once per round (no-ops at the default 1.0).
     *
     * `marginCol` names a per-row `base_margin` column (the reference
     * forwards it through `dmatrix_kwargs`, `core.py:143-147`): the
@@ -1052,53 +1029,51 @@ object SparseBoost {
     * scalar base — stock semantics, where a supplied base_margin makes
     * base_score unused. The classic boosting-continuation pattern:
     * score an existing model's margins, pass them here, and the new
-    * trees continue that fit exactly. The returned model still carries
-    * the scalar base, so standalone scoring (no margin) falls back to
+    * trees continue that fit exactly. The returned base is still the
+    * scalar one, so standalone scoring (no margin) falls back to
     * base_score — also stock behavior.
-    *
-    * @return the model plus the per-round TRAIN loss history (the
-    *         [[GraftBoost.sparseMetricName]] metric of the objective)
     */
   def train(
       data: DataFrame,
       params: GraftBoost.BoostParams,
+      objective: Objective,
       weightCol: Option[String] = None,
       marginCol: Option[String] = None
-  ): (SparseModel, Array[Double]) = {
-    require(Set("binary:logistic", "reg:squarederror", "reg:gamma",
-      "reg:tweedie", "count:poisson", "reg:quantileerror")
-        .contains(params.objective),
-      s"native sparse boosting supports binary:logistic, reg:squarederror, " +
-      s"reg:gamma, reg:tweedie, count:poisson and reg:quantileerror, " +
-      s"got ${params.objective}")
-    val binary = params.objective == "binary:logistic"
-    val quantile = params.objective == "reg:quantileerror"
-    val rho = params.tweedieVariancePower
-    val alpha = params.quantileAlpha
-    if (params.objective == "reg:tweedie")
-      require(rho > 1.0 && rho < 2.0,
-        s"tweedie variance power must be in (1, 2), got $rho")
-    if (quantile)
-      require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1), got $alpha")
+  ): Fit = {
+    val K = objective.channels
+    require(params.booster != "dart" || objective.supportsDart,
+      s"booster=\"dart\" drops trees from one per-row margin; " +
+      s"${objective.name} has none")
     val keep = Seq(col("features"), col("label")) ++ weightCol.map(col) ++
-      marginCol.map(c => GraftBoost.marginColumn(c).as("graft_bm"))
+      marginCol.map(c => GraftBoost.marginColumn(c).as("graft_bm")) ++
+      objective.inputs
     val src = data.select(keep: _*)
 
     val sc = data.sparkSession.sparkContext
     sc.setJobDescription("boost: propose-edges")
     val numFeat = src.select(col("features")).head().getAs[Vector](0).size
     val edges = proposeEdges(src, numFeat, params.maxBins, params.splitProposal)
-    validateFeatureParams(params, numFeat)
+    if (params.monotoneConstraints.nonEmpty) {
+      require(params.monotoneConstraints.length == numFeat,
+        s"monotoneConstraints has ${params.monotoneConstraints.length} " +
+        s"entries for $numFeat features")
+      require(params.monotoneConstraints.forall(c => c >= -1 && c <= 1),
+        "monotone constraints must be -1, 0 or +1")
+    }
+    params.interactionConstraints.foreach { g =>
+      require(g.nonEmpty && g.forall(j => j >= 0 && j < numFeat),
+        s"interaction group $g has indices outside [0, $numFeat)")
+    }
     val constraints =
       if (params.monotoneConstraints.isEmpty) new Array[Int](numFeat)
       else params.monotoneConstraints.toArray
     require(params.colsampleBytree > 0.0 && params.colsampleBytree <= 1.0,
       s"colsampleBytree must be in (0, 1], got ${params.colsampleBytree}")
 
-    /** XGBoost's `colsample_bytree`: the round's feature subset is the
-      * ⌈colsample·numFeat⌉ features with the smallest (feature, round,
+    /** XGBoost's `colsample_bytree`: the tree's feature subset is the
+      * ⌈colsample·numFeat⌉ features with the smallest (feature, draw,
       * seed) mix hash — a deterministic sample that reshuffles per
-      * round with no RNG state (same discipline as
+      * tree with no RNG state (same discipline as
       * [[GraftBoost.roundSample]]).
       */
     def roundMask(round: Int): Array[Boolean] =
@@ -1117,33 +1092,23 @@ object SparseBoost {
         mask
       }
 
-    // XGBoost base_score = 0.5: margin 0 for logistic, 0.5 for
-    // squared error. The log-link objectives start from ln(mean) —
-    // the intercept MLE — and quantile from the exact α-quantile of
-    // the labels (the constant that minimizes the pinball loss)
     val base =
       if (!params.baseScore.isNaN) params.baseScore
-      else params.objective match {
-        case "binary:logistic" => 0.0
-        case "reg:quantileerror" =>
-          src.select(percentile(col("label"), lit(alpha))).head().getDouble(0)
-        case "reg:gamma" | "reg:tweedie" | "count:poisson" =>
-          val mean = src.select(avg(col("label"))).head().getDouble(0)
-          require(mean > 0.0, "log-link objectives need a positive label mean")
-          math.log(mean)
-        case _ => 0.5
-      }
+      else objective.defaultBase(src)
     // per-row base_margin REPLACES the scalar base as the boosting
     // start point (stock: base_score is unused when base_margin rides
     // the DMatrix)
+    val start =
+      if (marginCol.isDefined) col("graft_bm")
+      else if (K == 1) lit(base)
+      else array_repeat(lit(base), K)
     sc.setJobDescription("boost: init-margin")
-    var cur = src.withColumn("f",
-      if (marginCol.isDefined) col("graft_bm") else lit(base))
-      .localCheckpoint()
+    var cur = objective.initMargins(src, start).localCheckpoint()
+    var scored = objective.scored(cur)
 
     val roundAccs = new ArrayBuffer[ImportanceAcc](params.numRound)
     val hist = new ArrayBuffer[Double](params.numRound)
-    val forest = new ArrayBuffer[SparseTree](params.numRound)
+    val forest = new ArrayBuffer[SparseTree](params.numRound * K)
     // set once a dropout round fires (k > 0): earlier leaves are then
     // mutated in place and the model must refuse round-indexed use
     var anyDartRescale = false
@@ -1154,6 +1119,8 @@ object SparseBoost {
         (b * 0xc2b2ae3d27d4eb4fL) ^ (c * 0xff51afd7ed558ccdL))
       (h >>> 11).toDouble / (1L << 53).toDouble
     }
+    val T = params.numParallelTree
+    val w = objective.instanceWeight(weightCol.map(col))
 
     for (r <- 1 to params.numRound) {
       // DART: pick the round's dropped tree set (empty = plain round)
@@ -1165,10 +1132,9 @@ object SparseBoost {
       // s = the dropped trees' margin share; the round's gradients are
       // taken at f − s (the paper's "fit against the rest")
       val withS =
-        if (k == 0) cur.withColumn("s", lit(0.0))
+        if (k == 0) scored.withColumn("s", lit(0.0))
         else {
-          val bcD = data.sparkSession.sparkContext
-            .broadcast(dropped.map(forest).toArray)
+          val bcD = sc.broadcast(dropped.map(forest).toArray)
           val sU = udf((v: Vector) => {
             var acc = 0.0
             bcD.value.foreach(t => acc += t.valueOf(v))
@@ -1177,71 +1143,30 @@ object SparseBoost {
           // pin s: growTree re-reads the frame once per level (or per
           // lossguide expansion) and must not re-route the k dropped
           // trees on every pass
-          cur.withColumn("s", sU(col("features"))).localCheckpoint()
+          scored.withColumn("s", sU(col("features"))).localCheckpoint()
         }
       val fm = col("f") - col("s")
-      val (g: Column, h: Column) = params.objective match {
-        case "binary:logistic" =>
-          val p = lit(1.0) / (lit(1.0) + exp(-fm))
-          (p - col("label"), greatest(p * (lit(1.0) - p), lit(1e-16)))
-        case "reg:gamma" =>
-          // gamma deviance, log link: g = 1 − y·e^{−f}, h = y·e^{−f}
-          val ymu = col("label") * exp(-fm)
-          (lit(1.0) - ymu, greatest(ymu, lit(1e-16)))
-        case "reg:tweedie" =>
-          // XGBoost tweedie gradients, log link, variance power ρ
-          val a = col("label") * exp(lit(1.0 - rho) * fm)
-          val b = exp(lit(2.0 - rho) * fm)
-          (b - a,
-            greatest(lit(2.0 - rho) * b - lit(1.0 - rho) * a, lit(1e-16)))
-        case "count:poisson" =>
-          // Poisson deviance, log link: g = μ − y, h = μ
-          val mu = exp(fm)
-          (mu - col("label"), greatest(mu, lit(1e-16)))
-        case "reg:quantileerror" =>
-          // pinball loss at α: g = 1{y ≤ f} − α, h = 1 — the split
-          // search sees these, the leaf values come from quantileLeaves
-          (when(col("label") <= fm, lit(1.0 - alpha)).otherwise(lit(-alpha)),
-            lit(1.0))
-        case _ => (fm - col("label"), lit(1.0))
-      }
-      // instance weight = user weight × scale_pos_weight on positives
-      val spw: Option[Column] =
-        if (binary && params.scalePosWeight != 1.0)
-          Some(when(col("label") === 1.0, lit(params.scalePosWeight))
-            .otherwise(lit(1.0)))
-        else None
-      val w = (weightCol.map(col), spw) match {
-        case (Some(u), Some(s)) => Some(u * s)
-        case (u, s) => u.orElse(s)
-      }
-      val (gw, hw) = w match {
-        case Some(wc) => (g * wc, h * wc)
-        case None => (g, h)
-      }
+      val fitFrame = objective.roundFrame(withS, r)
       val roundAcc = ImportanceAcc(numFeat)
       roundAccs += roundAcc
-      // num_parallel_tree: T trees on the SAME round gradients, each
-      // with its own deterministic subsample/colsample draws; leaf
-      // values pre-scaled by 1/T so the stored model stays a plain
-      // sum and the round's update is the ensemble AVERAGE. The draw
-      // index is (r−1)·T + t, which reduces to r when T = 1 — the
-      // single-tree path is bit-identical to before.
-      val T = params.numParallelTree
-      val newTrees = (1 to T).map { tIdx =>
-        // idx reduces to r at T = 1, so every per-tree seed matches
-        // the single-tree path's draws exactly
-        val idx = (r - 1) * T + tIdx
+      // num_parallel_tree: T trees per channel on the SAME round
+      // gradients, each with its own deterministic subsample/colsample
+      // draws; leaf values pre-scaled by 1/T so the stored model stays
+      // a plain sum and the round's update is the ensemble AVERAGE
+      val newTrees = for (ch <- 0 until K; t <- 1 to T) yield {
+        val idx = ((r - 1) * K + ch) * T + t
         sc.setJobDescription(s"boost: r$r grow")
-        val sampledT = GraftBoost.roundSample(withS, params.subsample,
+        val sampled = GraftBoost.roundSample(fitFrame, params.subsample,
           params.seed + 197L * idx)
-        val tree = growTree(
-          sampledT.withColumn("g", gw).withColumn("h", hw), edges, params,
-          roundAcc, roundMask(idx), constraints, params.seed ^ (1337L * idx))
-        if (quantile) {
-          sc.setJobDescription(s"boost: r$r leaf-quantile")
-          quantileLeaves(tree, sampledT, col("label") - fm, alpha, params.eta)
+        val (g, h) = objective.gradients(ch, fm)
+        val (gw, hw) = w match {
+          case Some(wc) => (g * wc, h * wc)
+          case None => (g, h)
         }
+        val tree = growTree(
+          sampled.withColumn("g", gw).withColumn("h", hw), edges, params,
+          roundAcc, roundMask(idx), constraints, params.seed ^ (1337L * idx))
+        objective.leafRule(tree, sampled, fm, params.eta, r)
         // "sum" (XGBoost compat) keeps member trees unscaled; the
         // default averages them (1/T pre-scale, see BoostParams)
         if (T > 1 && params.parallelTreeUpdate == "average") {
@@ -1251,25 +1176,27 @@ object SparseBoost {
         tree
       }
 
-      // margin update f' = f + (Σ t_new − s)/(k+1): simultaneously
-      // adds the round's trees (1/T-pre-scaled under the default
-      // "average" mode; unscaled under "sum") and removes the
-      // share the dropped trees lose to their k/(k+1) rescale (k = 0
-      // for every non-DART round — DART forbids T > 1, so Σ is one
-      // tree whenever k > 0). localCheckpoint is eager, so the
+      // margin update f'_k = f_k + (Σ_t tree_{k,t} − s)/(k+1):
+      // simultaneously adds the channel's trees (1/T-pre-scaled under
+      // the default "average" mode; unscaled under "sum") and removes
+      // the share the dropped trees lose to their k/(k+1) rescale
+      // (k = 0 for every non-DART round — DART forbids T > 1, so Σ is
+      // one tree whenever k > 0). localCheckpoint is eager, so the
       // in-place leaf rescale below cannot race the broadcast reads.
-      val bc = data.sparkSession.sparkContext.broadcast(newTrees.toArray)
+      val bc = sc.broadcast(newTrees.toArray)
       val kd = (k + 1).toDouble
-      val upd = udf((v: Vector, f: Double, sv: Double) => {
-        var acc = -sv
-        val ts = bc.value
-        var i = 0
-        while (i < ts.length) { acc += ts(i).valueOf(v); i += 1 }
-        f + acc / kd
-      })
+      val margins =
+        if (K == 1)
+          udf((v: Vector, f: Double, sv: Double) =>
+            f + channelStep(bc.value, 0, T, v, sv, kd))
+            .apply(col("features"), col("f"), col("s"))
+        else
+          udf((v: Vector, f: Seq[Double]) =>
+            Array.tabulate(K)(ch => f(ch) + channelStep(bc.value, ch, T, v, 0.0, kd)))
+            .apply(col("features"), col("f"))
       sc.setJobDescription(s"boost: r$r margin-update")
-      cur = withS.withColumn("f", upd(col("features"), col("f"), col("s")))
-        .drop("s").localCheckpoint()
+      val next = withS.withColumn("f", margins)
+        .drop(withS.columns.diff(cur.columns): _*).localCheckpoint()
       if (k > 0) {
         anyDartRescale = true
         val scaleOld = k.toDouble / kd
@@ -1283,14 +1210,25 @@ object SparseBoost {
         while (j < t0.value.length) { t0.value(j) /= kd; j += 1 }
       }
       forest ++= newTrees
+      if (scored ne cur) scored.unpersist(false)
+      cur = next
       sc.setJobDescription(s"boost: r$r loss")
-      hist += lossOf(cur, params)
+      scored = objective.scored(cur)
+      hist += objective.loss(scored)
     }
-    val acc = ImportanceAcc.sum(roundAccs.toSeq, numFeat)
-    val gSum = acc.gain.sum
-    val imp = if (gSum > 0) acc.gain.map(_ / gSum) else acc.gain.clone()
-    (new SparseModel(s"sparse_${params.seed}", forest.toArray, base,
-      params.objective, imp, acc, Some(roundAccs.toSeq),
-      params.numParallelTree, anyDartRescale), hist.toArray)
+    if (scored ne cur) scored.unpersist(false)
+    Fit(forest.toArray, base, roundAccs.toSeq,
+      ImportanceAcc.sum(roundAccs.toSeq, numFeat), hist.toArray, anyDartRescale)
+  }
+
+  /** Channel `ch`'s share of a round's margin step at `v`: its T trees
+    * (stored channel-major) less the dropped share `s`, over k + 1.
+    */
+  private def channelStep(trees: Array[SparseTree], ch: Int, T: Int,
+      v: Vector, s: Double, kd: Double): Double = {
+    var acc = -s
+    var i = ch * T
+    while (i < (ch + 1) * T) { acc += trees(i).valueOf(v); i += 1 }
+    acc / kd
   }
 }

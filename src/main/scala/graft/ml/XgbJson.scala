@@ -18,7 +18,7 @@ import SparseBoost.{ImportanceAcc, SparseModel, SparseTree}
   *    single-target AND multiclass (`num_class` = K with round-major
   *    trees and per-tree class ids in `tree_info`, the schema's
   *    multiclass layout). The engine's true-softprob forests
-  *    ([[SoftprobBoost]], reference `core.py:580-590`) ARE the native
+  *    ([[Objective.Softprob]], reference `core.py:580-590`) ARE the native
   *    [[MultiSparse.MultiSparseModel]] scorer multiclass documents
   *    ingest into. The wrapped MLlib GBT paths export too, through
   *    the lossless MLlib→array walk ([[MultiSparse.fromMLlibTree]]):

@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 import graft.ml.GraftBoost._
 
-/** Pairwise ranking boosting ([[RankBoost]], XGBoost's
-  * `rank:pairwise` via the reference's params passthrough,
-  * `core.py:164-321`). Pins the RankNet gradient hand math through
+/** Pairwise ranking boosting ([[Objective.Rank]] in the boosting
+  * round loop, XGBoost's `rank:pairwise` via the reference's params
+  * passthrough, `core.py:164-321`). Pins the RankNet gradient hand math through
   * one Newton leaf, NDCG learning on a synthetic ranking task,
   * determinism, and the shared [[SparseBoost.SparseModel]] lifecycle
   * (sink round-trip, importances).
@@ -17,6 +17,13 @@ import graft.ml.GraftBoost._
 class RankBoostSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
+
+  /** One ranking fit through the boosting round loop. */
+  private def rankFit(df: org.apache.spark.sql.DataFrame, p: BoostParams)
+      : (SparseBoost.SparseModel, Array[Double]) = {
+    val fit = SparseBoost.train(df, p, Objective(p))
+    (fit.sparseModel(s"rank_${p.seed}", p), fit.history)
+  }
 
   test("one round reproduces the RankNet gradient + Newton leaf hand math") {
     // 50 identical 2-doc groups, margins 0: ρ = ½ per pair, so the
@@ -28,7 +35,7 @@ class RankBoostSpec extends AnyFunSuite {
       .toDF("group", "x", "label")
       .withColumn("features",
         org.apache.spark.ml.functions.array_to_vector(array(col("x"))))
-    val (m, _) = RankBoost.train(df,
+    val (m, _) = rankFit(df,
       BoostParams("rank:pairwise", numRound = 1, maxDepth = 1, eta = 1.0))
     val gap = m.marginOf(Vectors.dense(1.0)) - m.marginOf(Vectors.dense(0.0))
     assert(math.abs(gap - 50.0 / 13.5) < 1e-12, s"margin gap $gap vs ${50.0 / 13.5}")
@@ -47,7 +54,7 @@ class RankBoostSpec extends AnyFunSuite {
     }.toDF("group", "x1", "x2", "label")
       .withColumn("features",
         org.apache.spark.ml.functions.array_to_vector(array(col("x1"), col("x2"))))
-    val (m, hist) = RankBoost.train(df,
+    val (m, hist) = rankFit(df,
       BoostParams("rank:pairwise", numRound = 6, maxDepth = 3, eta = 0.3))
     assert(hist.length == 6)
     assert(hist.last >= hist.head - 1e-12,
@@ -65,8 +72,8 @@ class RankBoostSpec extends AnyFunSuite {
       .withColumn("features",
         org.apache.spark.ml.functions.array_to_vector(array(col("x"))))
     val p = BoostParams("rank:pairwise", numRound = 4, maxDepth = 2, eta = 0.5)
-    val (m1, h1) = RankBoost.train(df, p)
-    val (m2, h2) = RankBoost.train(df, p)
+    val (m1, h1) = rankFit(df, p)
+    val (m2, h2) = rankFit(df, p)
     assert(h1.sameElements(h2), "NDCG history must be reproducible")
     val probe = Vectors.dense(3.5)
     assert(m1.marginOf(probe) == m2.marginOf(probe))
@@ -93,7 +100,7 @@ class RankBoostSpec extends AnyFunSuite {
     }.toDF("group", "x1", "x2", "label")
       .withColumn("features",
         org.apache.spark.ml.functions.array_to_vector(array(col("x1"), col("x2"))))
-    def fit(obj: String) = RankBoost.train(df,
+    def fit(obj: String) = rankFit(df,
       BoostParams(obj, numRound = 5, maxDepth = 3, eta = 0.3))
     val (mP, _) = fit("rank:pairwise")
     val (mN, hN) = fit("rank:ndcg")
@@ -139,5 +146,17 @@ class RankBoostSpec extends AnyFunSuite {
     assert(math.abs(RankBoost.meanNdcg(df, "group", "label", "score", 10) - 1.0) < 1e-12)
     val inv = df.withColumn("score", -col("score"))
     assert(RankBoost.meanNdcg(inv, "group", "label", "score", 10) < 0.8)
+  }
+
+  test("a ranking fit with a weight column fails naming weightCol") {
+    val df = (0 until 60).map(i =>
+      ((i / 6).toLong, (i % 6).toDouble, ((i % 6) / 2).toDouble, 2.0))
+      .toDF("group", "x", "label", "w")
+    val e = intercept[IllegalArgumentException] {
+      GraftBoost.train(df, Seq("x"), "label",
+        BoostParams("rank:pairwise", numRound = 1, maxDepth = 2),
+        weightCol = Some("w"), groupCol = Some("group"))
+    }
+    assert(e.getMessage.contains("weightCol"), e.getMessage)
   }
 }

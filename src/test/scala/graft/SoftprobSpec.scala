@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 import graft.ml.GraftBoost._
 
-/** True single-model multi:softprob boosting ([[SoftprobBoost]]) —
+/** True single-model multi:softprob boosting ([[Objective.Softprob]]) —
   * the mechanism-parity close of the reference's `core.py:580-590`:
   * K trees per round on shared multinomial softmax gradients with
   * Newton leaves (the native histogram grower), vs. the OvR/RF
@@ -146,6 +146,10 @@ class SoftprobSpec extends AnyFunSuite {
         Seq("x1", "x2"), "y", BoostParams("binary:logistic", numRound = 1,
           maxDepth = 2, missingStrategy = "native"))
       assert(description == "caller: boosting fits")
+      GraftBoost.train(train.withColumn("grp", col("x2").cast("long")),
+        Seq("x1"), "label", BoostParams("rank:pairwise", numRound = 1,
+          maxDepth = 2), groupCol = Some("grp"))
+      assert(description == "caller: boosting fits")
       // fails inside the fit loop, after it has labelled its own jobs
       intercept[IllegalArgumentException] {
         GraftBoost.train(train, Seq("x1", "x2"), "label",
@@ -154,5 +158,23 @@ class SoftprobSpec extends AnyFunSuite {
       }
       assert(description == "caller: boosting fits")
     } finally sc.setJobDescription(null)
+  }
+
+  test("colsample_bytree bounds the features each softprob tree splits on") {
+    // four independent informative features (unsampled, these trees
+    // split on three or four each): at colsample 0.5 every class tree
+    // may split on at most ⌈0.5·4⌉ = 2 of them
+    val df = (0 until 600).map { i =>
+      val (a, b, c, d) = ((i % 10).toDouble, ((i / 10) % 10).toDouble,
+        (i / 100).toDouble, ((i * 37) % 11).toDouble)
+      (a, b, c, d, math.min(2, ((a + b + c + d) / 12.0).toInt).toDouble)
+    }.toDF("a", "b", "c", "d", "label")
+    val m = GraftBoost.train(df, Seq("a", "b", "c", "d"), "label",
+      BoostParams("multi:softprob", numRound = 4, maxDepth = 3,
+        multiclassStrategy = "softprob", colsampleBytree = 0.5))
+    val used = m.model.asInstanceOf[MultiSparse.MultiSparseModel].trees
+      .map(_.feature.filter(_ >= 0).distinct.length)
+    assert(used.forall(_ <= 2) && used.exists(_ > 0),
+      s"features per tree at colsample 0.5 of 4: ${used.toSeq}")
   }
 }

@@ -921,4 +921,74 @@ class SparseBoostSpec extends AnyFunSuite {
       if (r.getDouble(0) > 0) assert(p1 > 0.5) else assert(p1 < 0.5)
     }
   }
+
+  /** SHA-256 of a fitted forest's [[TreeDump]] rows, doubles as raw
+    * bits: split feature, threshold, children, default branch, split
+    * gain or leaf value, and cover.
+    */
+  private def forestDigest(m: GraftBoostModel): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    TreeDump.treesToDataFrame(spark, m).collect().foreach { r =>
+      val cells = r.toSeq.map {
+        case d: java.lang.Double =>
+          java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+        case other => String.valueOf(other)
+      }
+      md.update(cells.mkString("|", "|", "\n").getBytes("UTF-8"))
+    }
+    md.digest().map(b => f"$b%02x").mkString.take(16)
+  }
+
+  test("one round loop: every objective's forest matches its pinned TreeDump digest") {
+    // The expected digests were generated by the per-objective round
+    // loops this single loop replaced (SparseBoost.train, the
+    // softprob loop and the ranking loop, at the commit before they
+    // were folded together); every fit here must grow those exact
+    // trees. Four training partitions, so the partition-ordered
+    // histogram folds are pinned too.
+    val df = (0 until 400).map { i =>
+      val x1 = (i % 20).toDouble
+      val x2 = if (i % 7 == 0) -999.0 else ((i * 13) % 17).toDouble
+      val x3 = ((i * 7) % 11).toDouble
+      val y = if (x1 + 0.4 * x3 > 12.0) 1.0 else 0.0
+      val pos = 0.5 + x1 / 4.0 + ((i * 3) % 5) * 0.3
+      val cls = if (x1 < 7) 0.0 else if (x1 < 14) 1.0 else 2.0
+      val rel = math.min(3.0, math.floor((x1 + (i % 3)) / 6.0))
+      (i.toLong / 8, x1, x2, x3, y, pos, cls, rel)
+    }.toDF("group", "x1", "x2", "x3", "y", "pos", "cls", "rel")
+    val feats = Seq("x1", "x2", "x3")
+    val native = BoostParams("binary:logistic", numRound = 3, maxDepth = 3,
+      eta = 0.3, missing = Some(-999.0), missingStrategy = "native")
+    val fits: Seq[(String, () => GraftBoostModel, String)] = Seq(
+      ("binary:logistic", () => GraftBoost.train(df, feats, "y",
+        native.copy(subsample = 0.8, colsampleBytree = 0.67)),
+        "fd2deb98a85faabd"),
+      ("reg:gamma", () => GraftBoost.train(df, feats, "pos",
+        native.copy(objective = "reg:gamma")), "bf08420140e8704b"),
+      ("reg:quantileerror", () => GraftBoost.train(df, feats, "pos",
+        native.copy(objective = "reg:quantileerror", quantileAlpha = 0.7)),
+        "27ae53953b9c99ee"),
+      ("dart", () => GraftBoost.train(df, feats, "y",
+        native.copy(numRound = 4, booster = "dart", rateDrop = 0.5)),
+        "e8dbb8788a79f089"),
+      ("multi:softprob", () => GraftBoost.train(df, feats, "cls",
+        BoostParams("multi:softprob", numRound = 3, maxDepth = 3, eta = 0.3,
+          missing = Some(-999.0), multiclassStrategy = "softprob")),
+        "89eecf5192b8dd19"),
+      ("rank:ndcg", () => GraftBoost.train(df, feats, "rel",
+        native.copy(objective = "rank:ndcg"), groupCol = Some("group")),
+        "356a44192c4193d5"))
+    val saved = sys.props.get("graft.train.rowsPerTask")
+    sys.props("graft.train.rowsPerTask") = "100"
+    val got =
+      try fits.map { case (name, fit, _) => name -> forestDigest(fit()) }
+      finally saved match {
+        case Some(v) => sys.props("graft.train.rowsPerTask") = v
+        case None => sys.props.remove("graft.train.rowsPerTask")
+      }
+    val wrong = fits.zip(got).collect {
+      case ((name, _, want), (_, have)) if want != have => s"$name: $have (pinned $want)"
+    }
+    assert(wrong.isEmpty, s"forests moved: ${wrong.mkString("; ")}")
+  }
 }
