@@ -321,15 +321,6 @@ object GraftBoost {
     GraftBoost.validateMissingStrategy(missingStrategy)
   }
 
-  /** Deterministic hash-Bernoulli row filter for stochastic-boosting
-    * rounds (XGBoost's `subsample`, Friedman 2002): keyed by the
-    * CONTENT of (features, label) mixed with the round seed, so the
-    * sample is reproducible across runs with no RNG state, reshuffles
-    * per round, and stays well-mixed even when labels take only a few
-    * distinct values (class ids, small counts — a label-only key
-    * would sample whole classes in or out). `df` must carry
-    * `features` (vector) and `label`.
-    */
   /** murmur3's 64-bit finalizer — the avalanche mix behind every
     * deterministic no-RNG-state draw in the boosting loops (round
     * subsampling keys, colsample masks, DART dropout). One definition
@@ -343,31 +334,33 @@ object GraftBoost {
     h
   }
 
-  private[ml] def roundSample(df: DataFrame, subsample: Double, seed: Long): DataFrame =
-    if (subsample >= 1.0) df
-    else {
-      val keep = math.round(subsample * 1000)
-      val hU = udf((v: Vector, label: Double) => {
-        var h = seed ^ 0x9e3779b97f4a7c15L
-        val a = v.toArray
-        var i = 0
-        while (i < a.length) {
-          h ^= java.lang.Double.doubleToLongBits(a(i))
-          h *= 0x100000001b3L
-          h ^= h >>> 33
-          i += 1
-        }
-        h ^= java.lang.Double.doubleToLongBits(label)
-        h *= 0x100000001b3L
-        h ^= h >>> 33
-        ((h % 1000) + 1000) % 1000
-      })
-      val out = df.filter(hU(col("features"), col("label").cast("double")) < lit(keep))
-      // content-identical rows sample together, so a tiny frame with
-      // few distinct rows can sample EMPTY — fall back to the full
-      // frame (deterministically) rather than hand MLlib an empty fit
-      if (out.isEmpty) df else out
+  /** Deterministic hash-Bernoulli row draw for stochastic-boosting
+    * trees (XGBoost's `subsample`, Friedman 2002): whether the row
+    * with these feature values and label is in the sample of
+    * `keep`/1000 at this seed. Keyed by the CONTENT of (features,
+    * label) mixed with the tree's seed, so the sample is reproducible
+    * across runs with no RNG state, reshuffles per tree, and stays
+    * well-mixed even when labels take only a few distinct values
+    * (class ids, small counts — a label-only key would sample whole
+    * classes in or out). Content-identical rows sample together, so a
+    * tiny frame with few distinct rows can draw no row at all; the
+    * round loop then grows that tree on every row.
+    */
+  private[ml] def roundSample(features: Array[Double], label: Double,
+      seed: Long, keep: Long): Boolean = {
+    var h = seed ^ 0x9e3779b97f4a7c15L
+    var i = 0
+    while (i < features.length) {
+      h ^= java.lang.Double.doubleToLongBits(features(i))
+      h *= 0x100000001b3L
+      h ^= h >>> 33
+      i += 1
     }
+    h ^= java.lang.Double.doubleToLongBits(label)
+    h *= 0x100000001b3L
+    h ^= h >>> 33
+    ((h % 1000) + 1000) % 1000 < keep
+  }
 
   /** Objectives MLlib GBT has no loss for: they train in the native
     * sparse loop ([[SparseBoost]]) under every missing strategy.
@@ -569,6 +562,8 @@ object GraftBoost {
         s"per-row base_margin runs in the native sparse loop — $toNativeLoop; " +
         "the MLlib-backed, linear, ranking and multiclass paths have " +
         "no margin-initialization hook")
+    val sc = df.sparkSession.sparkContext
+    sc.setJobDescription("boost: missing-stats")
     val imputation = params.missing.map { m =>
       params.missingStrategy match {
         case "sentinel" => (m, learnSentinels(df, featureCols, m))
@@ -608,9 +603,9 @@ object GraftBoost {
       .withColumn("label", col(labelCol).cast("double"))
       .select(trainCols: _*)
     val trainParts = {
-      df.sparkSession.sparkContext.setJobDescription("boost: input count")
+      sc.setJobDescription("boost: input count")
       val n = assembled.count()
-      math.min(df.sparkSession.sparkContext.defaultParallelism.toLong,
+      math.min(sc.defaultParallelism.toLong,
         math.max(1L, n / TrainRowsPerTask)).toInt
     }
     // Materialize the (repartitioned, slim) training frame ONCE before
@@ -626,12 +621,12 @@ object GraftBoost {
     // training frame across rounds×levels passes is the standard
     // distributed-boosting posture (XGBoost4J-Spark caches its
     // converted input the same way).
-    df.sparkSession.sparkContext.setJobDescription("boost: train materialize")
+    sc.setJobDescription("boost: train materialize")
     val data =
       (if (trainParts > 1) assembled.repartition(trainParts) else assembled)
         .localCheckpoint()
     // unlabelled phases (the MLlib fits) run under the caller's label
-    df.sparkSession.sparkContext.setJobDescription(callerDescription)
+    sc.setJobDescription(callerDescription)
 
     if (params.booster == "gblinear") {
       require(!native,
@@ -679,6 +674,7 @@ object GraftBoost {
       }
       // Class inference = the reference's eager distributed distinct
       // (`core.py:561-566`).
+      sc.setJobDescription("boost: class-count")
       val numClasses =
         if (softprob) data.select(max(col("label"))).first().getDouble(0).toInt + 1
         else if (params.objective == "binary:logistic") 2

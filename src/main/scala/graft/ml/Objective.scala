@@ -1,8 +1,9 @@
 package graft.ml
 
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import SparseBoost.Block
 
 /** One boosting objective of the round loop ([[SparseBoost.train]]).
   * The reference forwards its params dict to `xgb.train`
@@ -11,15 +12,18 @@ import org.apache.spark.sql.functions._
   * the loop, the tree grower and the margin bookkeeping are shared:
   *
   *  - [[channels]]: margin channels per row K — 1, or the class count
-  *    under `multi:softprob` (the margin column `f` is then an array
-  *    of K doubles and a round grows K trees),
+  *    under `multi:softprob` (a block's margins are then n × K and a
+  *    round grows K trees),
   *  - [[defaultBase]]: the start margin when `base_score` is unset,
-  *  - the gradients: per-row (g, h) Columns per channel
-  *    ([[gradients]]) over the round's frame ([[roundFrame]]) — for
-  *    ranking that frame is the pair-gradient walk over the groups of
-  *    a frame partitioned by group once at entry ([[initMargins]]),
+  *  - [[evaluate]]: per-row Scala functions over a training
+  *    [[SparseBoost.Block]] — the loss partial at the round's margins
+  *    and the next round's instance-weighted (g, h) per channel; for
+  *    ranking, the pair-gradient walk over the contiguous groups of a
+  *    frame partitioned by group once at entry ([[layout]]). Their
+  *    `exp` and `log` are `StrictMath`'s, as Spark SQL's were, so the
+  *    gradients are the bits the SQL forms gave,
   *  - the leaf rule: the grower's Newton leaves, or the α-quantile
-  *    reset of `reg:quantileerror` ([[leafRule]]),
+  *    reset of `reg:quantileerror` ([[leafQuantile]]),
   *  - the train-history loss ([[loss]]) and its metric name.
   */
 sealed abstract class Objective(val name: String, val metricName: String)
@@ -29,68 +33,92 @@ sealed abstract class Objective(val name: String, val metricName: String)
   def defaultBase(src: DataFrame): Double = 0.0
   /** Input columns read beyond features, label and weight. */
   def inputs: Seq[Column] = Nil
-  /** The margin frame at entry (`start` is `f`); every round keeps its layout. */
-  def initMargins(src: DataFrame, start: Column): DataFrame =
-    src.withColumn("f", start)
-  /** What a round's loss and the next round's gradients read the
-    * margins through; a cached frame is released by the loop.
-    */
-  def scored(margins: DataFrame): DataFrame = margins
-  /** Round `r`'s grower input before sampling: the scored frame plus
-    * the DART dropped share `s`.
-    */
-  def roundFrame(withS: DataFrame, r: Int): DataFrame = withS
-  /** Channel `k`'s (g, h) over [[roundFrame]]; `fm` = f − s. */
-  def gradients(k: Int, fm: Column): (Column, Column)
-  def instanceWeight(user: Option[Column]): Option[Column] = user
+  /** The training rows' partition layout, set once at entry. */
+  def layout(src: DataFrame): DataFrame = src
+  /** Whether rows carry an instance weight, given a user weight column. */
+  def weighted(userWeights: Boolean): Boolean = userWeights
+  /** A row's instance weight from its user weight (1.0 without one). */
+  def rowWeight(user: Double, label: Double): Double = user
   /** DART drops trees from one per-row margin. */
   def supportsDart: Boolean = false
-  /** Newton leaves stay as grown unless the objective resets them. */
-  def leafRule(tree: SparseBoost.SparseTree, sampled: DataFrame, fm: Column,
-      eta: Double, r: Int): Unit = ()
-  def loss(scored: DataFrame): Double
+  /** Some(α): every leaf becomes η · the α-quantile of its residuals. */
+  def leafQuantile: Option[Double] = None
+  /** The block's loss partial (sum, count) at margins `f` (n × K); when
+    * `g` is not null, also fills (g, h) (n × K, instance-weighted) at
+    * margins f − s (no `s`: f) and returns the row order the grower
+    * accumulates them in (null: block order).
+    */
+  def evaluate(b: Block, f: Array[Double], s: Array[Double],
+      g: Array[Double], h: Array[Double]): (Array[Double], Array[Int])
+  /** The history value of the partials folded over all blocks. */
+  def loss(partial: Array[Double]): Double = partial(0) / partial(1)
 }
 
 object Objective {
 
-  /** (g, h) and loss are per-row functions of one margin and the label. */
+  /** (g, h) and loss are per-row functions of one margin and the label;
+    * the history is the mean row loss.
+    */
   sealed abstract class PerRow(name: String, metricName: String)
       extends Objective(name, metricName) {
-    protected def lossAgg: Column
+    /** Unweighted (g, h) of a row at margin fm, written at index i. */
+    protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit
+    protected def rowLoss(y: Double, f: Double): Double
     override def supportsDart: Boolean = true
-    def loss(scored: DataFrame): Double =
-      scored.select(lossAgg).head().getDouble(0)
+    def evaluate(b: Block, f: Array[Double], s: Array[Double],
+        g: Array[Double], h: Array[Double]): (Array[Double], Array[Int]) = {
+      var sum = 0.0
+      var i = 0
+      while (i < b.n) {
+        val y = b.label(i)
+        sum += rowLoss(y, f(i))
+        if (g != null) {
+          gradient(y, if (s == null) f(i) else f(i) - s(i), g, h, i)
+          if (b.weight != null) {
+            g(i) = g(i) * b.weight(i)
+            h(i) = h(i) * b.weight(i)
+          }
+        }
+        i += 1
+      }
+      (Array(sum, b.n.toDouble), null)
+    }
   }
 
   /** XGBoost base_score = 0.5, margin 0 for logistic. */
   final case class Logistic(scalePosWeight: Double)
       extends PerRow("binary:logistic", "logloss") {
-    def gradients(k: Int, fm: Column): (Column, Column) = {
-      val p = lit(1.0) / (lit(1.0) + exp(-fm))
-      (p - col("label"), greatest(p * (lit(1.0) - p), lit(1e-16)))
+    protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit = {
+      val p = 1.0 / (1.0 + StrictMath.exp(-fm))
+      g(i) = p - y
+      h(i) = math.max(p * (1.0 - p), 1e-16)
     }
     /** user weight × scale_pos_weight on positives */
-    override def instanceWeight(user: Option[Column]): Option[Column] =
+    override def weighted(userWeights: Boolean): Boolean =
+      userWeights || scalePosWeight != 1.0
+    override def rowWeight(user: Double, label: Double): Double =
       if (scalePosWeight == 1.0) user
-      else {
-        val spw = when(col("label") === 1.0, lit(scalePosWeight)).otherwise(lit(1.0))
-        Some(user.fold(spw)(_ * spw))
-      }
+      else user * (if (label == 1.0) scalePosWeight else 1.0)
     // logloss with the standard 1e-15 clip
-    protected def lossAgg: Column = {
-      val p = lit(1.0) / (lit(1.0) + exp(-col("f")))
-      val pc = least(greatest(p, lit(1e-15)), lit(1.0 - 1e-15))
-      avg(-(col("label") * log(pc) +
-        (lit(1.0) - col("label")) * log(lit(1.0) - pc)))
+    protected def rowLoss(y: Double, f: Double): Double = {
+      val p = 1.0 / (1.0 + StrictMath.exp(-f))
+      val pc = math.min(math.max(p, 1e-15), 1.0 - 1e-15)
+      -(y * StrictMath.log(pc) + (1.0 - y) * StrictMath.log(1.0 - pc))
     }
   }
 
   case object SquaredError extends PerRow("reg:squarederror", "rmse") {
     override def defaultBase(src: DataFrame): Double = 0.5
-    def gradients(k: Int, fm: Column): (Column, Column) =
-      (fm - col("label"), lit(1.0))
-    protected def lossAgg: Column =
-      sqrt(avg(pow(col("label") - col("f"), 2)))
+    protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit = {
+      g(i) = fm - y
+      h(i) = 1.0
+    }
+    protected def rowLoss(y: Double, f: Double): Double = StrictMath.pow(y - f, 2.0)
+    override def loss(partial: Array[Double]): Double =
+      StrictMath.sqrt(partial(0) / partial(1))
   }
 
   /** Log-link objectives start from ln(mean label), the intercept MLE. */
@@ -105,14 +133,16 @@ object Objective {
 
   case object Gamma extends LogLink("reg:gamma", "gamma-deviance") {
     // gamma deviance, log link: g = 1 − y·e^{−f}, h = y·e^{−f}
-    def gradients(k: Int, fm: Column): (Column, Column) = {
-      val ymu = col("label") * exp(-fm)
-      (lit(1.0) - ymu, greatest(ymu, lit(1e-16)))
+    protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit = {
+      val ymu = y * StrictMath.exp(-fm)
+      g(i) = 1.0 - ymu
+      h(i) = math.max(ymu, 1e-16)
     }
     // mean gamma deviance: 2·(−ln(y/μ) + (y−μ)/μ), μ = e^f
-    protected def lossAgg: Column = {
-      val mu = exp(col("f"))
-      avg(lit(2.0) * (-log(col("label") / mu) + (col("label") - mu) / mu))
+    protected def rowLoss(y: Double, f: Double): Double = {
+      val mu = StrictMath.exp(f)
+      2.0 * (-StrictMath.log(y / mu) + (y - mu) / mu)
     }
   }
 
@@ -121,35 +151,37 @@ object Objective {
     require(rho > 1.0 && rho < 2.0,
       s"tweedie variance power must be in (1, 2), got $rho")
     // XGBoost tweedie gradients, log link, variance power ρ
-    def gradients(k: Int, fm: Column): (Column, Column) = {
-      val a = col("label") * exp(lit(1.0 - rho) * fm)
-      val b = exp(lit(2.0 - rho) * fm)
-      (b - a, greatest(lit(2.0 - rho) * b - lit(1.0 - rho) * a, lit(1e-16)))
+    protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit = {
+      val a = y * StrictMath.exp((1.0 - rho) * fm)
+      val b = StrictMath.exp((2.0 - rho) * fm)
+      g(i) = b - a
+      h(i) = math.max((2.0 - rho) * b - (1.0 - rho) * a, 1e-16)
     }
     // tweedie negative log-likelihood kernel (XGBoost's
     // tweedie-nloglik@ρ): −y·e^{(1−ρ)f}/(1−ρ) + e^{(2−ρ)f}/(2−ρ)
-    protected def lossAgg: Column =
-      avg(-col("label") * exp(lit(1.0 - rho) * col("f")) / (1.0 - rho) +
-        exp(lit(2.0 - rho) * col("f")) / (2.0 - rho))
+    protected def rowLoss(y: Double, f: Double): Double =
+      -y * StrictMath.exp((1.0 - rho) * f) / (1.0 - rho) +
+        StrictMath.exp((2.0 - rho) * f) / (2.0 - rho)
   }
 
   case object Poisson extends LogLink("count:poisson", "poisson-deviance") {
     // Poisson deviance, log link: g = μ − y, h = μ
-    def gradients(k: Int, fm: Column): (Column, Column) = {
-      val mu = exp(fm)
-      (mu - col("label"), greatest(mu, lit(1e-16)))
+    protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit = {
+      val mu = StrictMath.exp(fm)
+      g(i) = mu - y
+      h(i) = math.max(mu, 1e-16)
     }
     // mean Poisson deviance 2·(y·ln(y/μ) − (y−μ)), μ = e^f, the y·ln
     // term 0 at y = 0
-    protected def lossAgg: Column =
-      avg(lit(2.0) * (
-        when(col("label") > 0.0,
-          col("label") * log(col("label") / exp(col("f")))).otherwise(lit(0.0))
-          - (col("label") - exp(col("f")))))
+    protected def rowLoss(y: Double, f: Double): Double =
+      2.0 * ((if (y > 0.0) y * StrictMath.log(y / StrictMath.exp(f)) else 0.0) -
+        (y - StrictMath.exp(f)))
   }
 
   /** Pinball loss at α; the split search sees its (g, h), the leaf
-    * values come from [[SparseBoost.quantileLeaves]].
+    * values come from the α-quantile leaf rule ([[leafQuantile]]).
     */
   final case class Quantile(alpha: Double)
       extends PerRow("reg:quantileerror", "pinball") {
@@ -157,93 +189,99 @@ object Objective {
     /** The exact α-quantile of the labels: the constant that
       * minimizes the pinball loss.
       */
-    override def defaultBase(src: DataFrame): Double =
-      src.select(percentile(col("label"), lit(alpha))).head().getDouble(0)
-    // g = 1{y ≤ f} − α, h = 1
-    def gradients(k: Int, fm: Column): (Column, Column) =
-      (when(col("label") <= fm, lit(1.0 - alpha)).otherwise(lit(-alpha)),
-        lit(1.0))
-    override def leafRule(tree: SparseBoost.SparseTree, sampled: DataFrame,
-        fm: Column, eta: Double, r: Int): Unit = {
-      sampled.sparkSession.sparkContext
-        .setJobDescription(s"boost: r$r leaf-quantile")
-      SparseBoost.quantileLeaves(tree, sampled, col("label") - fm, alpha, eta)
+    override def defaultBase(src: DataFrame): Double = {
+      val labels = src.select(col("label")).rdd.mapPartitions(rows =>
+        Iterator.single((0, rows.map(_.getDouble(0)).toArray)))
+      SparseBoost.percentilesByKey(labels, 1, Array(alpha)).apply(0)(0)
     }
+    // g = 1{y ≤ f} − α, h = 1
+    protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit = {
+      g(i) = if (y <= fm) 1.0 - alpha else -alpha
+      h(i) = 1.0
+    }
+    override def leafQuantile: Option[Double] = Some(alpha)
     // mean pinball (check) loss at α
-    protected def lossAgg: Column =
-      avg(greatest((col("label") - col("f")) * alpha,
-        (col("label") - col("f")) * (alpha - 1.0)))
+    protected def rowLoss(y: Double, f: Double): Double =
+      math.max((y - f) * alpha, (y - f) * (alpha - 1.0))
   }
 
   /** `multi:softprob` (reference `core.py:580-590`): one forest whose
     * round fits K trees on the multinomial softmax gradients of the
-    * shared margin array, g = p_k − y_k, h = max(p_k(1−p_k), 1e-6) —
+    * row's K margins, g = p_k − y_k, h = max(p_k(1−p_k), 1e-6) —
     * XGBoost's softmax objective; the hessian floor guards saturated
-    * rows. The softmax frame is computed once per round and cached: it
-    * serves that round's mlogloss and the next round's gradients.
+    * rows. p is the max-shifted softmax, its sum taken left to right;
+    * one p per row serves the round's mlogloss and the next round's
+    * gradients.
     */
   final case class Softprob(numClasses: Int)
       extends Objective("multi:softprob", "mlogloss") {
     require(numClasses >= 2, s"numClasses must be >= 2, got $numClasses")
     override def channels: Int = numClasses
-
-    // softmax(f) as columns: max-shifted exp, normalized. The exp array
-    // and its sum are materialized in their own projections before the
-    // normalizing lambda references them (materialize-before-HOF rule —
-    // inlining re-evaluates them per element).
-    override def scored(margins: DataFrame): DataFrame = {
-      val mx = array_max(col("f"))
-      margins.withColumn("ex", transform(col("f"), x => exp(x - mx)))
-        .withColumn("exs", aggregate(col("ex"), lit(0.0), (a, y) => a + y))
-        .withColumn("p", transform(col("ex"), x => x / col("exs")))
-        .drop("ex", "exs")
-        .cache()
+    def evaluate(b: Block, f: Array[Double], s: Array[Double],
+        g: Array[Double], h: Array[Double]): (Array[Double], Array[Int]) = {
+      val k = numClasses
+      val p = new Array[Double](k)
+      var sum = 0.0
+      var i = 0
+      while (i < b.n) {
+        val o = i * k
+        var mx = f(o)
+        var c = 1
+        while (c < k) { if (f(o + c) > mx) mx = f(o + c); c += 1 }
+        var exs = 0.0
+        c = 0
+        while (c < k) { p(c) = StrictMath.exp(f(o + c) - mx); exs += p(c); c += 1 }
+        c = 0
+        while (c < k) { p(c) = p(c) / exs; c += 1 }
+        val y = b.label(i)
+        sum += -StrictMath.log(math.max(p(y.toInt), 1e-15))
+        if (g != null) {
+          c = 0
+          while (c < k) {
+            val yc = if (y == c.toDouble) 1.0 else 0.0
+            g(o + c) = p(c) - yc
+            h(o + c) = math.max(p(c) * (1.0 - p(c)), 1e-6)
+            if (b.weight != null) {
+              g(o + c) = g(o + c) * b.weight(i)
+              h(o + c) = h(o + c) * b.weight(i)
+            }
+            c += 1
+          }
+        }
+        i += 1
+      }
+      (Array(sum, b.n.toDouble), null)
     }
-    def gradients(k: Int, fm: Column): (Column, Column) = {
-      val pk = element_at(col("p"), k + 1)
-      val yk = when(col("label") === k.toDouble, lit(1.0)).otherwise(lit(0.0))
-      (pk - yk, greatest(pk * (lit(1.0) - pk), lit(1e-6)))
-    }
-    def loss(scored: DataFrame): Double =
-      scored.select(avg(-log(greatest(
-          element_at(col("p"), col("label").cast("int") + 1), lit(1e-15)))))
-        .head().getDouble(0)
   }
 
   /** `rank:pairwise` (RankNet pairs) and `rank:ndcg` (LambdaMART,
     * pairs weighted by |ΔNDCG|), reachable in the reference through
     * its params passthrough (`core.py:164-321`; groups ride the
     * DMatrix). The training frame carries `label` as graded relevance
-    * (larger = better) and `group`, the long query/group id. The
-    * margin frame is hash-partitioned and sorted by group id ONCE at
-    * entry; that one shuffle serves every round's pair walk
-    * ([[RankBoost.groupGradients]]), the narrow margin updates and the
-    * NDCG windows. The fit is a [[SparseBoost.SparseModel]] whose
-    * margins are ranking scores; its history is the train mean NDCG@10
-    * ([[RankBoost.meanNdcg]]).
+    * (larger = better) and `group`, the long query/group id. The rows
+    * are hash-partitioned and sorted by group id ONCE at entry; every
+    * block then holds whole groups as contiguous runs, which serve the
+    * pair walk ([[RankBoost.groupGradients]]) and the NDCG windows
+    * ([[RankBoost.ndcgPartial]]) of every round. The fit is a
+    * [[SparseBoost.SparseModel]] whose margins are ranking scores; its
+    * history is the train mean NDCG@10.
     */
   final case class Rank(ndcgWeighted: Boolean)
       extends Objective(if (ndcgWeighted) "rank:ndcg" else "rank:pairwise",
         "ndcg@10") {
-    override def inputs: Seq[Column] = Seq(col("group").cast("long"))
-    override def initMargins(src: DataFrame, start: Column): DataFrame =
-      src.withColumn("f", start)
-        .repartition(math.max(1, src.rdd.getNumPartitions), col("group"))
+    override def inputs: Seq[Column] = Seq(col("group").cast("long").as("group"))
+    override def layout(src: DataFrame): DataFrame =
+      src.repartition(math.max(1, src.rdd.getNumPartitions), col("group"))
         .sortWithinPartitions(col("group"))
-    override def roundFrame(withS: DataFrame, r: Int): DataFrame = {
-      val spark = withS.sparkSession
-      import spark.implicits._
-      spark.sparkContext.setJobDescription(s"boost: r$r gradients")
-      val weighted = ndcgWeighted
-      withS.select(col("group"), col("features"), col("label"), col("f"))
-        .as[(Long, Vector, Double, Double)]
-        .mapPartitions(it => RankBoost.groupGradients(it, weighted))
-        .toDF("features", "label", "g", "h")
-        .localCheckpoint()
+    def evaluate(b: Block, f: Array[Double], s: Array[Double],
+        g: Array[Double], h: Array[Double]): (Array[Double], Array[Int]) = {
+      val runs = RankBoost.groupRuns(b.group)
+      val order =
+        if (g == null) null
+        else RankBoost.groupGradients(runs, b.raw, b.label, f, ndcgWeighted, g, h)
+      (RankBoost.ndcgPartial(runs, b.group, b.label, f, 10), order)
     }
-    def gradients(k: Int, fm: Column): (Column, Column) = (col("g"), col("h"))
-    def loss(scored: DataFrame): Double =
-      RankBoost.meanNdcg(scored, "group", "label", "f", 10)
   }
 
   /** `numClasses` is the class count of a `multi:softprob` fit. */

@@ -2,10 +2,11 @@ package graft.ml
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** The ranking parts of `rank:pairwise` (RankNet pair gradients) and
   * `rank:ndcg` (LambdaMART: pairs weighted by |ΔNDCG| at the current
@@ -55,19 +56,68 @@ object RankBoost {
     scored.head().getDouble(0)
   }
 
-  /** RankNet / LambdaMART gradients for ONE group's rows. The rows
-    * are first put in a deterministic in-group order (margin desc,
-    * relevance desc, content-hash tie-break) so the rank positions —
-    * and the float accumulation order — never depend on arrival
-    * order; position i then IS the current rank i+1.
+  /** Start offsets of a block's group runs (plus the end): groups
+    * must be CONTIGUOUS in the block (the group-sorted layout
+    * [[Objective.Rank]] sets up once per fit), so a run-walker replaces
+    * a per-round shuffle. The walker checks that: each run's group id
+    * must exceed the previous run's, or a split group would silently
+    * lose the pairs across its pieces.
     */
-  private def pairGradients(
-      groupRows: Array[(Long, Vector, Double, Double)],
-      ndcgWeighted: Boolean
-  ): Iterator[(Vector, Double, Double, Double)] = {
-    val rows = groupRows.sortBy { case (_, v, rel, f) =>
-      (-f, -rel, java.util.Arrays.hashCode(v.toArray))
+  private[ml] def groupRuns(group: Array[Long]): Array[Int] = {
+    val runs = ArrayBuffer(0)
+    var i = 1
+    while (i <= group.length) {
+      if (i == group.length || group(i) != group(i - 1)) {
+        if (i < group.length && group(i) < group(i - 1))
+          throw new IllegalStateException(
+            s"ranking group ${group(i)} is not one contiguous run in its " +
+            s"partition (it follows group ${group(i - 1)}): the " +
+            "group-sorted layout was lost")
+        runs += i
+      }
+      i += 1
     }
+    if (group.isEmpty) Array(0) else runs.toArray
+  }
+
+  /** RankNet / LambdaMART gradients of a block's rows, one group run
+    * at a time, written at each row's index. Each group's rows are
+    * first put in a deterministic order (margin desc, relevance desc,
+    * content-hash tie-break) so the rank positions — and the float
+    * accumulation order — never depend on arrival order; position i
+    * then IS the current rank i+1. Returns the rows in that order,
+    * group after group: the order the grower accumulates them in.
+    */
+  private[ml] def groupGradients(
+      runs: Array[Int],
+      raw: Array[Array[Double]],
+      rel: Array[Double],
+      f: Array[Double],
+      ndcgWeighted: Boolean,
+      g: Array[Double],
+      h: Array[Double]
+  ): Array[Int] = {
+    val order = new Array[Int](rel.length)
+    var r = 0
+    while (r + 1 < runs.length) {
+      val rows = (runs(r) until runs(r + 1)).toArray.sortBy { i =>
+        (-f(i), -rel(i), java.util.Arrays.hashCode(raw(i)))
+      }
+      pairGradients(rows, rel, f, ndcgWeighted, g, h)
+      System.arraycopy(rows, 0, order, runs(r), rows.length)
+      r += 1
+    }
+    order
+  }
+
+  private def pairGradients(
+      rows: Array[Int],
+      rel: Array[Double],
+      f: Array[Double],
+      ndcgWeighted: Boolean,
+      gOut: Array[Double],
+      hOut: Array[Double]
+  ): Unit = {
     val n = rows.length
     val g = new Array[Double](n)
     val h = new Array[Double](n)
@@ -76,7 +126,7 @@ object RankBoost {
     val idcg =
       if (!ndcgWeighted) 1.0
       else {
-        val sortedRel = rows.map(_._3).sorted(Ordering[Double].reverse)
+        val sortedRel = rows.map(rel).sorted(Ordering[Double].reverse)
         var s = 0.0
         var i = 0
         while (i < n) {
@@ -89,7 +139,7 @@ object RankBoost {
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        val (ri, rj) = (rows(i)._3, rows(j)._3)
+        val (ri, rj) = (rel(rows(i)), rel(rows(j)))
         if (ri != rj) {
           // hi = preferred index, lo = the other
           val (hiI, loI) = if (ri > rj) (i, j) else (j, i)
@@ -98,7 +148,7 @@ object RankBoost {
             else math.abs(math.pow(2.0, ri) - math.pow(2.0, rj)) *
               math.abs(disc(i) - disc(j)) / idcg
           val rho = 1.0 / (1.0 +
-            math.exp(rows(hiI)._4 - rows(loI)._4))
+            math.exp(f(rows(hiI)) - f(rows(loI))))
           g(hiI) -= rho * w
           g(loI) += rho * w
           val hess = math.max(rho * (1.0 - rho) * w, 1e-16)
@@ -109,40 +159,54 @@ object RankBoost {
       }
       i += 1
     }
-    (0 until n).iterator.map(i2 => (rows(i2)._2, rows(i2)._3, g(i2), h(i2)))
+    i = 0
+    while (i < n) { gOut(rows(i)) = g(i); hOut(rows(i)) = h(i); i += 1 }
   }
 
-  /** Pair gradients of a partition of (group, features, relevance,
-    * margin) rows as (features, relevance, g, h) rows, one group run
-    * at a time. Groups must be CONTIGUOUS in the partition (the
-    * group-sorted layout [[Objective.Rank]] sets up once per fit), so
-    * a run-walker replaces a per-round shuffle and nothing
-    * group-quadratic is materialized. The walker checks that: each
-    * run's group id must exceed the previous run's, or a split group
-    * would silently lose the pairs across its pieces.
+  /** (Σ NDCG@k, number of groups) over a block's group runs whose ideal
+    * DCG is positive — [[meanNdcg]]'s terms, with the same ranking by
+    * margin (ties broken by the same content hash) and the same gains
+    * and discounts; only the float association of the sums differs.
     */
-  private[ml] def groupGradients(
-      it: Iterator[(Long, Vector, Double, Double)],
-      ndcgWeighted: Boolean
-  ): Iterator[(Vector, Double, Double, Double)] = {
-    val in = it.buffered
-    var prev = Option.empty[Long]
-    val perGroup = new Iterator[Iterator[(Vector, Double, Double, Double)]] {
-      def hasNext: Boolean = in.hasNext
-      def next(): Iterator[(Vector, Double, Double, Double)] = {
-        val gId = in.head._1
-        if (prev.exists(_ >= gId))
-          throw new IllegalStateException(
-            s"ranking group $gId is not one contiguous run in its " +
-            s"partition (it follows group ${prev.get}): the " +
-            "group-sorted layout was lost")
-        prev = Some(gId)
-        val groupRows = ArrayBuffer.empty[(Long, Vector, Double, Double)]
-        while (in.hasNext && in.head._1 == gId)
-          groupRows += in.next()
-        pairGradients(groupRows.toArray, ndcgWeighted)
+  private[ml] def ndcgPartial(runs: Array[Int], group: Array[Long],
+      rel: Array[Double], f: Array[Double], k: Int): Array[Double] = {
+    // SQL's double order: -0.0 equals 0.0
+    def cmp(a: Double, b: Double): Int =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+    def dcg(rows: Array[Int]): Double = {
+      var s = 0.0
+      var r = 0
+      while (r < math.min(k, rows.length)) {
+        s += (StrictMath.pow(2.0, rel(rows(r))) - 1.0) /
+          (StrictMath.log(r + 2.0) / StrictMath.log(2.0))
+        r += 1
       }
+      s
     }
-    perGroup.flatten
+    var sum = 0.0
+    var groups = 0.0
+    var r = 0
+    while (r + 1 < runs.length) {
+      val rows = (runs(r) until runs(r + 1)).toArray
+      val tie = rows.map { i =>
+        var hash = 42L
+        hash = XxHash64Function.hash(group(i), LongType, hash)
+        hash = XxHash64Function.hash(rel(i), DoubleType, hash)
+        XxHash64Function.hash(f(i), DoubleType, hash)
+      }
+      val ix = rows.indices.toArray
+      def ranked(key: Int => Double): Array[Int] =
+        ix.sortWith { (a, b) =>
+          val c = cmp(key(b), key(a))
+          if (c != 0) c < 0 else tie(a) < tie(b)
+        }.map(rows)
+      val ideal = dcg(ranked(a => rel(rows(a))))
+      if (ideal > 0) {
+        sum += dcg(ranked(a => f(rows(a)))) / ideal
+        groups += 1
+      }
+      r += 1
+    }
+    Array(sum, groups)
   }
 }

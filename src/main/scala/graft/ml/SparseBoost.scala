@@ -1,13 +1,17 @@
 package graft.ml
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.ml.Model
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Sparsity-aware gradient boosting — XGBoost's learned default
   * direction for missing values (Chen & Guestrin 2016 §3.3, the
@@ -22,11 +26,16 @@ import org.apache.spark.sql.types._
   *     quantiles of the NON-missing values — XGBoost's global
   *     approximate proposal (§3.2); missing rows never enter the
   *     candidate sketch, exactly as in the paper,
-  *  2. trees grow breadth-first; each level is ONE distributed pass
-  *     aggregating per (frontier-node, feature, bin) gradient/hessian
-  *     histograms plus a dedicated per-feature MISSING bin — the
-  *     histograms are model-sized (nodes × features × bins), only
-  *     they cross the network,
+  *  2. the training rows are binned ONCE per fit into persisted
+  *     partition blocks ([[Block]]: bin codes, label, weight, margins,
+  *     (g, h) and each row's node position per tree); trees grow
+  *     breadth-first, and each level is ONE distributed pass that
+  *     moves the positions down the last level's splits and
+  *     aggregates per (tree, frontier-node, feature, bin)
+  *     gradient/hessian histograms plus a dedicated per-feature
+  *     MISSING bin, for all of a round's trees (K softprob classes ×
+  *     `num_parallel_tree`) at once — the histograms are model-sized
+  *     (nodes × features × bins), only they cross the network,
   *  3. split search runs on the driver over the aggregated
   *     histograms: each feature is scanned left-to-right with the
   *     missing mass on the right, and again with it on the left —
@@ -69,7 +78,7 @@ import org.apache.spark.sql.types._
   * PartialFold.BlockSize, so a 10k-core fit ships the driver block
   * sums instead of an O(P) histogram funnel); split ties
   * break by (feature, bin, missing-right-first) enumeration order,
-  * and the `subsample` path reuses the content-hash Bernoulli filter
+  * and `subsample` is the content-hash Bernoulli draw
   * ([[GraftBoost.roundSample]]) — two trains on the same frame are
   * bit-identical. Histogram sizes are unchanged either way.
   */
@@ -349,7 +358,10 @@ object SparseBoost {
   }
 
   /** Region index of x among sorted candidate edges: the count of
-    * edges strictly below x, so region(x) ≤ b ⇔ x ≤ edges(b).
+    * edges strictly below x, so region(x) ≤ b ⇔ x ≤ edges(b). A row's
+    * bin code for feature j is this region, or edges(j).length + 1 (the
+    * MISSING bin) when x is NaN — so a code routes exactly as the
+    * stored threshold edges(j)(b) does.
     */
   private def regionOf(x: Double, edges: Array[Double]): Int = {
     var lo = 0
@@ -361,32 +373,115 @@ object SparseBoost {
     lo
   }
 
+  /** Spark SQL's exact `percentile(x, probs)` over the non-NaN values,
+    * bit for bit: the distinct values with their frequencies in
+    * ascending order, and for each probability p the position
+    * (count − 1)·p, interpolated linearly between the values at its
+    * floor and its ceiling. No values (SQL null) gives an empty result.
+    */
+  private[graft] def percentiles(values: Array[Double], probs: Array[Double]): Array[Double] = {
+    val xs = values.filter(!_.isNaN)
+    if (xs.isEmpty) return Array.emptyDoubleArray
+    java.util.Arrays.sort(xs)
+    // distinct values (equal as boxed doubles, like SQL's map keys)
+    // and their cumulative counts
+    val keys = new ArrayBuffer[Double]
+    val cum = new ArrayBuffer[Long]
+    var i = 0
+    while (i < xs.length) {
+      val bits = java.lang.Double.doubleToLongBits(xs(i))
+      var j = i + 1
+      while (j < xs.length && java.lang.Double.doubleToLongBits(xs(j)) == bits) j += 1
+      keys += xs(i)
+      cum += j.toLong
+      i = j
+    }
+    // SQL sorts its map's keys stably with -0.0 equal to 0.0, so two
+    // zeros keep the map's slot order
+    val nz = keys.indexWhere(k => java.lang.Double.doubleToRawLongBits(k) == Long.MinValue)
+    if (nz >= 0 && nz + 1 < keys.length && keys(nz + 1) == 0.0 && zeroFirst(keys.length)) {
+      val before = if (nz == 0) 0L else cum(nz - 1)
+      keys(nz) = 0.0
+      keys(nz + 1) = -0.0
+      cum(nz) = before + cum(nz + 1) - cum(nz)
+    }
+    val counts = cum.toArray
+    // index of the first distinct value whose cumulative count reaches n
+    def at(n: Long): Int = {
+      val ix = java.util.Arrays.binarySearch(counts, n)
+      if (ix < 0) -(ix + 1) else ix
+    }
+    val maxPosition = counts.last - 1
+    probs.map { p =>
+      val position = maxPosition * p
+      val lower = math.floor(position).toLong
+      val higher = math.ceil(position).toLong
+      val lo = at(lower + 1)
+      val hi = at(higher + 1)
+      // keys compare as numbers there: -0.0 == 0.0
+      if (higher == lower || keys(lo) == keys(hi)) keys(lo)
+      else (higher - position) * keys(lo) + (position - lower) * keys(hi)
+    }
+  }
+
+  /** Whether 0.0 sits before -0.0 in SQL `percentile`'s hash map of
+    * `distinct` keys: Spark's OpenHashSet grows from 64 slots, doubling
+    * past a 0.7 load, and homes a key at murmur3 of its hash code.
+    */
+  private def zeroFirst(distinct: Int): Boolean = {
+    var cap = 64
+    while (distinct > (0.7 * cap).toInt) cap *= 2
+    def slot(x: Double): Int =
+      com.google.common.hash.Hashing.murmur3_32_fixed()
+        .hashInt(java.lang.Double.hashCode(x)).asInt() & (cap - 1)
+    slot(0.0) < slot(-0.0)
+  }
+
+  /** [[percentiles]] per key, over chunks of values (many chunks may
+    * share a key). A value multiset's percentiles do not depend on the
+    * order it arrives in, so the keys merge in parallel: an explicit
+    * keyed shuffle into ×4 oversampled partitions (capped at the
+    * default parallelism) keeps hash collisions from stacking several
+    * keys' merges on one task.
+    */
+  private[graft] def percentilesByKey[K: ClassTag](
+      chunks: RDD[(K, Array[Double])], numKeys: Int,
+      probs: Array[Double]): Map[K, Array[Double]] = {
+    val parts = math.max(1,
+      math.min(chunks.sparkContext.defaultParallelism, numKeys * 4))
+    chunks.groupByKey(new HashPartitioner(parts))
+      .map { case (k, cs) => (k, percentiles(Array.concat(cs.toSeq: _*), probs)) }
+      .collect().toMap
+  }
+
   /** Per-feature quantile split candidates over NON-missing values
     * (maxBins−1 interior quantiles, deduplicated). "exact" computes
-    * true order statistics (deterministic); "approx" routes through
+    * true order statistics (deterministic, [[percentilesByKey]] over
+    * each block's per-feature values); "approx" routes through
     * Spark's `percentile_approx` — a mergeable Greenwald-Khanna
     * sketch whose per-partition memory is bounded by the accuracy
     * parameter, the proposal that survives a 100 TB scan where the
-    * exact form's per-value count map cannot. The histogram passes
+    * exact form's per-value merge cannot. The histogram passes
     * downstream are identical either way.
     *
-    * "exact" assumes NARROW feature vectors: it posexplodes every row
-    * and shuffles numFeat × rows values to group them by feature, so
-    * its shuffle grows linearly with the feature count (every native
-    * fit pays it once, Poisson and quantile included). Wide vectors
-    * (embeddings, hashed text) should take `splitProposal = "approx"`,
-    * a single-row aggregate with no shuffle of the values.
+    * "exact" assumes NARROW feature vectors: it shuffles every
+    * non-missing value once to group them by feature, so its shuffle
+    * grows linearly with the feature count (every native fit pays it
+    * once). Wide vectors (embeddings, hashed text) should take
+    * `splitProposal = "approx"`, a single-row aggregate with no
+    * shuffle of the values.
     */
   private[ml] def proposeEdges(
       data: DataFrame,
+      blocks: RDD[Block],
       numFeat: Int,
       maxBins: Int,
       mode: String = "exact"
   ): Array[Array[Double]] = {
-    import org.apache.spark.ml.functions.vector_to_array
     val probs = (1 until maxBins).map(_.toDouble / maxBins).toArray
-    val arr = vector_to_array(col("features"))
     if (mode == "approx") {
+      import org.apache.spark.ml.functions.vector_to_array
+      val arr = vector_to_array(col("features"))
       val aggs = (0 until numFeat).map { j =>
         val x = element_at(arr, j + 1)
         // GK accuracy ~10× the bin resolution: sketch error well
@@ -400,84 +495,216 @@ object SparseBoost {
         else row.getSeq[Double](j).distinct.sorted.toArray
       }.toArray
     } else {
-      // exact order statistics are a function of each feature's value
-      // MULTISET alone, so the per-feature aggregates can be grouped by
-      // feature index and merged in parallel: the single-task final
-      // merge of the ungrouped spelling (every partition's value buffer
-      // concatenated and sorted on ONE reducer — measured 1.5-2.7 s of
-      // serial wall per fit at bench scale) becomes numFeat independent
-      // group merges. Values are identical bit-for-bit.
-      val exploded = data
-        .select(posexplode(arr).as(Seq("j", "x")))
-        .filter(!isnan(col("x")))
-      // explicit keyed repartition: AQE would coalesce this small
-      // shuffle back to ONE post-shuffle partition and re-serialize
-      // the merges; ×4 oversampling keeps hash collisions from
-      // stacking several features on one task
-      val parts = math.max(1, math.min(
-        data.sparkSession.sparkContext.defaultParallelism, numFeat * 4))
-      val got = exploded.repartition(parts, col("j"))
-        .groupBy(col("j"))
-        .agg(percentile(col("x"), lit(probs)).as("qs"))
-        .collect()
-      val out = Array.fill(numFeat)(Array.empty[Double])
-      got.foreach { r =>
-        if (!r.isNullAt(1))
-          out(r.getInt(0)) = r.getSeq[Double](1).distinct.sorted.toArray
+      val got = percentilesByKey(blocks.flatMap { b =>
+        (0 until numFeat).iterator
+          .map(j => (j, b.raw.map(_(j)).filter(!_.isNaN)))
+          .filter(_._2.nonEmpty)
+      }, numFeat, probs)
+      Array.tabulate(numFeat) { j =>
+        got.get(j).fold(Array.empty[Double])(_.toSeq.distinct.sorted.toArray)
       }
-      out
     }
   }
+
+  /** One training partition's rows, held for the whole fit (XGBoost's
+    * quantized DMatrix, MLlib's `TreePoint`): each row's raw feature
+    * values (the subsample draw and DART's dropped share read them),
+    * its per-feature bin codes (row-major n × numFeat, see
+    * [[regionOf]]), label, instance weight (null: unweighted) and
+    * group id (null unless ranking), and the boosting state — margins
+    * `f` (n × K), the DART share `s` the next round drops (null:
+    * none), the next round's instance-weighted (g, h) (n × K), the
+    * grower's row order (null: block order; ranking sorts each
+    * group), each of the round's C trees' node position (n × C; ~node
+    * for a row outside that tree's row sample; null between rounds)
+    * and the loss partial of the pass that wrote `f`.
+    *
+    * Blocks are never mutated: every pass derives new blocks that
+    * share the unchanged arrays, so an evicted block recomputed from
+    * its lineage is the same block.
+    */
+  private[ml] final case class Block(
+      raw: Array[Array[Double]],
+      label: Array[Double],
+      weight: Array[Double],
+      group: Array[Long],
+      codes: Array[Int],
+      f: Array[Double],
+      s: Array[Double],
+      g: Array[Double],
+      h: Array[Double],
+      order: Array[Int],
+      pos: Array[Int],
+      loss: Array[Double]
+  ) {
+    def n: Int = label.length
+  }
+
+  /** The per-fit constants every pass reads: K margin channels, T trees
+    * per channel (C = K·T trees per round), each feature's missing bin
+    * and its offset in a node's histogram block.
+    */
+  private final case class Shape(numFeat: Int, K: Int, T: Int,
+      miss: Array[Int], featOff: Array[Int]) {
+    def C: Int = K * T
+    def perNode: Int = featOff(numFeat)
+  }
+
+  /** A tree's routing as of one pass: node i sends a row left iff its
+    * code for `feature(i)` is ≤ `bin(i)` (x ≤ threshold), the missing
+    * bin following `defaultLeft(i)`.
+    */
+  private final case class Route(feature: Array[Int], bin: Array[Int],
+      defaultLeft: Array[Boolean], left: Array[Int], right: Array[Int]) {
+    /** The leaf a row at node p reaches. */
+    def walk(p0: Int, codes: Array[Int], rowOff: Int, miss: Array[Int]): Int = {
+      var p = p0
+      while (feature(p) >= 0) {
+        val j = feature(p)
+        val code = codes(rowOff + j)
+        p = if (code == miss(j)) { if (defaultLeft(p)) left(p) else right(p) }
+          else if (code <= bin(p)) left(p) else right(p)
+      }
+      p
+    }
+    /** Same, for a position that may carry the out-of-sample mark. */
+    def move(p: Int, codes: Array[Int], rowOff: Int, miss: Array[Int]): Int =
+      if (p >= 0) walk(p, codes, rowOff, miss) else ~walk(~p, codes, rowOff, miss)
+  }
+
+  /** A tree's row sample: the rows [[GraftBoost.roundSample]] keeps
+    * at this seed (every row at keep ≥ 1000).
+    */
+  private final case class Draw(seed: Long, keep: Long) {
+    def takes(raw: Array[Double], label: Double): Boolean =
+      keep >= 1000 || GraftBoost.roundSample(raw, label, seed, keep)
+  }
+  private val AllRows = Draw(0L, 1000L)
 
   private final case class Split(
       feature: Int, bin: Int, defaultLeft: Boolean, gain: Double,
       gl: Double, hl: Double, cl: Double, gr: Double, hr: Double, cr: Double)
 
-  /** Grow one tree on (features, g, h) rows. One distributed
-    * histogram pass per level; all split math on the driver over
-    * model-sized aggregates. Returns the tree plus its per-feature
-    * gain totals (importance accumulation).
-    *
-    * @param allowed per-feature mask — the round's `colsample_bytree`
-    *                subset; masked features never enter split search
-    * @param constraints per-feature monotone direction (+1/−1/0).
-    *                Enforced XGBoost-style: a candidate split on a
-    *                constrained feature is REJECTED when its child
-    *                Newton weights violate the ordering, and accepted
-    *                splits propagate [lower, upper] value bounds to
-    *                their children (midpoint fencing), with every
-    *                leaf clamped into its node's bounds — monotone in
-    *                the MODEL, not merely per split.
+  /** One histogram pass — one Spark job — over the state: each row's
+    * positions first move (`draws`: reset to the root, in or out of
+    * each tree's row sample; otherwise `routes`: down the splits made
+    * since the last pass), then every row that sits in a scanned node
+    * (`slots`, node → slot per tree; null = none) adds its channel's
+    * (g, h, 1) to that node's (feature, bin) cells, rows taken in the
+    * block's order. Partials merge through [[PartialFold]] — partition-
+    * index-ordered, so each cell is the same float sum every time.
+    * Returns the new state (persisted; the caller unpersists the old
+    * one) and each tree's histogram (slots × perNode × 3).
     */
-  private[ml] def growTree(
-      fit: DataFrame,
-      edges: Array[Array[Double]],
-      params: GraftBoost.BoostParams,
-      acc: ImportanceAcc,
-      allowed: Array[Boolean],
-      constraints: Array[Int],
-      maskSeed: Long = 0L
-  ): SparseTree = {
-    val g = new Grower(fit, edges, params, acc, allowed, constraints, maskSeed)
-    try {
-      if (params.growPolicy == "lossguide") g.growLossguide() else g.growDepthwise()
-    } finally g.release()
+  private def histPass(
+      state: RDD[Block], shape: Shape, routes: Array[Route],
+      draws: Array[Draw], slots: Array[Array[Int]]
+  ): (RDD[Block], Array[Array[Double]]) = {
+    val Shape(numFeat, k, t, miss, featOff) = shape
+    val c = shape.C
+    val next = state.map { b =>
+      val pos = new Array[Int](b.n * c)
+      var i = 0
+      while (i < b.n) {
+        var tr = 0
+        while (tr < c) {
+          val at = i * c + tr
+          pos(at) =
+            if (draws != null && draws(tr) != null)
+              if (draws(tr).takes(b.raw(i), b.label(i))) 0 else ~0
+            else if (routes == null) b.pos(at)
+            else routes(tr).move(b.pos(at), b.codes, i * numFeat, miss)
+          tr += 1
+        }
+        i += 1
+      }
+      b.copy(pos = pos)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+
+    val cells = shape.perNode * 3
+    val sizes = slots.map(sl => if (sl == null) 0 else (sl.max + 1) * cells)
+    val offs = sizes.scanLeft(0)(_ + _)
+    val partials = next.map { b =>
+      val acc = new Array[Double](offs(c))
+      var o = 0
+      while (o < b.n) {
+        val i = if (b.order == null) o else b.order(o)
+        var tr = 0
+        while (tr < c) {
+          val sl = slots(tr)
+          val p = b.pos(i * c + tr)
+          if (sl != null && p >= 0 && p < sl.length && sl(p) >= 0) {
+            val base = offs(tr) + sl(p) * cells
+            val g = b.g(i * k + tr / t)
+            val h = b.h(i * k + tr / t)
+            val rowOff = i * numFeat
+            var j = 0
+            while (j < numFeat) {
+              val idx = base + (featOff(j) + b.codes(rowOff + j)) * 3
+              acc(idx) += g
+              acc(idx + 1) += h
+              acc(idx + 2) += 1.0
+              j += 1
+            }
+          }
+          tr += 1
+        }
+        o += 1
+      }
+      acc
+    }
+    val hist = PartialFold.sum(partials, offs(c))
+    (next, Array.tabulate(c)(tr => java.util.Arrays.copyOfRange(hist, offs(tr), offs(tr + 1))))
   }
 
-  /** Shared tree-growth machinery: the distributed histogram pass,
-    * the driver-side both-directions split search (missing-bin
-    * enumeration, monotone fences, interaction groups), and split
-    * application. Both growth policies drive it:
+  /** Grows one round's C trees together: a root pass (a tree whose
+    * draw holds no row — content-identical rows sample together, so a
+    * tiny frame with few distinct rows can draw none — gets a second
+    * root pass over every row, the whole-frame fallback), then one
+    * [[histPass]] per level (depthwise) or expansion (lossguide) for
+    * all trees at once, until every tree is done. Returns the last
+    * pass's state; its positions miss only the final splits.
+    */
+  private def growRound(state: RDD[Block], shape: Shape,
+      growers: Array[Grower], draws: Array[Draw]): RDD[Block] = {
+    val c = shape.C
+    val (first, roots) = histPass(state, shape, null, draws, Array.fill(c)(Array(0)))
+    var st = first
+    val empty = (0 until c).filter(tr => growers(tr).rowsIn(roots(tr)) == 0.0).toSet
+    if (empty.nonEmpty) {
+      val (again, full) = histPass(st, shape, null,
+        Array.tabulate(c)(tr => if (empty(tr)) AllRows else null),
+        Array.tabulate(c)(tr => if (empty(tr)) Array(0) else null))
+      st.unpersist(false)
+      st = again
+      empty.foreach(tr => roots(tr) = full(tr))
+    }
+    (0 until c).foreach(tr => growers(tr).start(roots(tr)))
+    var scans = growers.map(_.scans())
+    while (scans.exists(_ != null)) {
+      val (next, hists) = histPass(st, shape, growers.map(_.route), null, scans)
+      st.unpersist(false)
+      st = next
+      (0 until c).foreach(tr => if (scans(tr) != null) growers(tr).consume(hists(tr)))
+      scans = growers.map(_.scans())
+    }
+    st
+  }
+
+  /** Tree growth on the driver over the aggregated histograms: the
+    * driver-side both-directions split search (missing-bin
+    * enumeration, monotone fences, interaction groups) and split
+    * application, stepped by [[growRound]] one histogram pass at a
+    * time (`scans` names the nodes the next pass accumulates,
+    * `consume` takes their histogram). Both growth policies:
     *
-    *  - depthwise ([[Grower.growDepthwise]], XGBoost's default
-    *    `grow_policy`): one histogram pass per LEVEL covering the
-    *    whole frontier — the fewest distributed passes per tree,
-    *  - lossguide ([[Grower.growLossguide]], XGBoost/LightGBM
-    *    best-first): always expand the highest-gain leaf until
-    *    `max_leaves`; one histogram pass per EXPANSION covering the
-    *    two freshly created children. Deeper lopsided trees from the
-    *    same leaf budget — the policy that wins on targets whose
-    *    structure is concentrated in one region.
+    *  - depthwise (XGBoost's default `grow_policy`): one pass per
+    *    LEVEL covering the whole frontier — the fewest passes per tree,
+    *  - lossguide (XGBoost/LightGBM best-first): always expand the
+    *    highest-gain leaf until `max_leaves`; one pass per EXPANSION
+    *    covering the two freshly created children. Deeper lopsided
+    *    trees from the same leaf budget — the policy that wins on
+    *    targets whose structure is concentrated in one region.
     *
     * Both policies use the classic histogram-subtraction trick
     * (XGBoost's hist-method sibling derivation): each pass
@@ -488,13 +715,24 @@ object SparseBoost {
     * Split semantics are policy-independent by construction — one
     * `search` implementation — so a lossguide tree with an
     * unreachable leaf budget reproduces depthwise's split SET (pinned
-    * in SparseBoostSpec).
+    * in SparseBoostSpec). Importance statistics are buffered in
+    * `records`, in split order; the round replays them tree by tree.
+    *
+    * @param allowed per-feature mask — the tree's `colsample_bytree`
+    *                subset; masked features never enter split search
+    * @param constraints per-feature monotone direction (+1/−1/0).
+    *                Enforced XGBoost-style: a candidate split on a
+    *                constrained feature is REJECTED when its child
+    *                Newton weights violate the ordering, and accepted
+    *                splits propagate [lower, upper] value bounds to
+    *                their children (midpoint fencing), with every
+    *                leaf clamped into its node's bounds — monotone in
+    *                the MODEL, not merely per split.
     */
   private final class Grower(
-      fit: DataFrame,
       edges: Array[Array[Double]],
+      featOff: Array[Int],
       params: GraftBoost.BoostParams,
-      acc: ImportanceAcc,
       allowed: Array[Boolean],
       constraints: Array[Int],
       maskSeed: Long
@@ -504,20 +742,14 @@ object SparseBoost {
     private val minH = params.minChildWeight.toDouble
     private val minGain = math.max(params.gammaMinSplitLoss, 0.0) + 1e-12
     private val maxDelta = params.maxDeltaStep
-
     // per-node histogram block layout: feature j occupies
     // edges(j).length + 2 slots (regions 0..m_j plus one MISSING bin)
-    private val featOff: Array[Int] = {
-      val fo = new Array[Int](numFeat + 1)
-      var j = 0
-      while (j < numFeat) { fo(j + 1) = fo(j) + edges(j).length + 2; j += 1 }
-      fo
-    }
     private val perNode = featOff(numFeat)
 
     // growable tree arrays; children appended as they are created
     private val feature = ArrayBuffer(-1)
     private val thresh = ArrayBuffer(0.0)
+    private val bin = ArrayBuffer(-1)
     private val left = ArrayBuffer(-1)
     private val right = ArrayBuffer(-1)
     private val defLeft = ArrayBuffer(false)
@@ -525,27 +757,8 @@ object SparseBoost {
     private val cover = ArrayBuffer(0.0)
     private val nodeGain = ArrayBuffer(0.0)
 
-    private val rows = fit.select(col("features"), col("g").cast("double"),
-      col("h").cast("double"))
-
-    /** The SAME rows as a cached, already-deserialized typed RDD: a
-      * tree's growth reads the frame once per level (or lossguide
-      * expansion), and without this every pass re-decodes the whole
-      * frame's InternalRow→Vector — the dominant FIXED cost of a pass
-      * at bench scale (the per-row histogram arithmetic itself is
-      * microseconds). Identical partition layout and within-partition
-      * order as the source, so the driver's partition-index partial
-      * fold — and its bit-stable float sums — are unchanged. Released
-      * per tree by [[release]] (the next round's g/h differ).
-      */
-    private lazy val rowsTyped: org.apache.spark.rdd.RDD[(Vector, Double, Double)] = {
-      val s = fit.sparkSession
-      import s.implicits._
-      rows.as[(Vector, Double, Double)].rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
-    private[ml] def release(): Unit = rowsTyped.unpersist(false)
+    /** (feature, gain, cover) of every split, in split order. */
+    val records = ArrayBuffer.empty[(Int, Double, Double)]
 
     // interaction groups as index sets; empty = unconstrained
     private val interGroups: Array[Set[Int]] =
@@ -599,18 +812,22 @@ object SparseBoost {
       else sampleMask(lvl, params.colsampleBynode, 7919L + stat.node)
     }
 
-    /** Root (G, H, count) totals DERIVED from the root histogram —
-      * every row lands in exactly one bin of feature 0 (regions
-      * 0..m₀ plus the missing bin), so summing that feature's slots
-      * reproduces the totals without the separate aggregation pass
-      * the old rootStat ran (one full frame scan per TREE saved).
-      * The bins are summed in ascending order — deterministic; the
-      * totals differ from a row-order SQL sum only in float
-      * association, the same tolerance every non-root node's stats
-      * (split-derived, i.e. histogram-derived) already carry.
-      * Also seeds the root node's estimate and cover.
+    /** Rows in a root histogram: every row lands in exactly one bin of
+      * feature 0 (regions 0..m₀ plus the missing bin).
       */
-    def rootStatFrom(rootHist: Array[Double]): NodeStat = {
+    def rowsIn(rootHist: Array[Double]): Double = {
+      var n = 0.0
+      var b = 0
+      while (b <= edges(0).length + 1) { n += rootHist((featOff(0) + b) * 3 + 2); b += 1 }
+      n
+    }
+
+    /** Root (G, H, count) totals DERIVED from the root histogram by
+      * summing feature 0's slots in ascending bin order —
+      * deterministic, and no separate aggregation pass. Also seeds the
+      * root node's estimate and cover.
+      */
+    private def rootStatFrom(rootHist: Array[Double]): NodeStat = {
       val m0 = edges(0).length
       var gT = 0.0
       var hT = 0.0
@@ -629,68 +846,12 @@ object SparseBoost {
         Double.NegativeInfinity, Double.PositiveInfinity)
     }
 
-    /** One histogram pass for the given node → slot map: per
-      * (node, feature, bin) gradient/hessian/count triples, rows
-      * routed through the CURRENT tree, partials folded on the driver
-      * in partition-index order (deterministic float sum). Rows whose
-      * landing node is not in `slotOf` (finalized leaves, or — under
-      * lossguide — leaves queued but not being expanded) are skipped.
-      */
-    def histPass(slotOf: Map[Int, Int]): Array[Double] = {
-      // immutable snapshots for the task closure (small, model-sized)
-      val fSnap = feature.toArray
-      val tSnap = thresh.toArray
-      val lSnap = left.toArray
-      val rSnap = right.toArray
-      val dSnap = defLeft.toArray
-      val edgesL = edges
-      val featOffL = featOff
-      val perNodeL = perNode
-      val slotL = slotOf
-      val size = slotOf.size * perNode * 3
-
-      val partialsRdd = rowsTyped.mapPartitions { it =>
-        val acc = new Array[Double](size)
-        it.foreach { case (v, g, h) =>
-          var i = 0
-          while (fSnap(i) >= 0) {
-            val x = v(fSnap(i))
-            i = if (java.lang.Double.isNaN(x)) { if (dSnap(i)) lSnap(i) else rSnap(i) }
-              else if (x <= tSnap(i)) lSnap(i) else rSnap(i)
-          }
-          slotL.get(i) match {
-            case Some(s) =>
-              val base = s * perNodeL
-              var jj = 0
-              while (jj < edgesL.length) {
-                val x = v(jj)
-                val bin =
-                  if (java.lang.Double.isNaN(x)) edgesL(jj).length + 1
-                  else regionOf(x, edgesL(jj))
-                val idx = (base + featOffL(jj) + bin) * 3
-                acc(idx) += g
-                acc(idx + 1) += h
-                acc(idx + 2) += 1.0
-                jj += 1
-              }
-            case None => // not a target of this pass
-          }
-        }
-        Iterator.single(acc)
-      }
-      // deterministic partition-index-ordered merge; above
-      // PartialFold.BlockSize partitions the per-block folds run
-      // distributed and the driver only sees block sums (the
-      // cluster-scale shape — see PartialFold scaladoc)
-      PartialFold.sum(partialsRdd, size)
-    }
-
     /** Best split of one node from its histogram block (slot base
       * offset in `hist`): both-directions missing enumeration,
       * hessian-sum min_child_weight, monotone ordering inside the
       * node's value fence, interaction-group filtering.
       */
-    def search(hist: Array[Double], slotBase: Int, stat: NodeStat): Option[Split] = {
+    private def search(hist: Array[Double], slotBase: Int, stat: NodeStat): Option[Split] = {
       val NodeStat(_, gTot, hTot, cTot, vLo, vHi, path, _) = stat
       val nodeAllowed = allowedFor(stat)
       // XGBoost interaction rule: j is usable here iff one group
@@ -760,20 +921,21 @@ object SparseBoost {
       * monotone value fence (midpoint fencing — XGBoost's monotone
       * propagation) and the interaction path. Returns the child stats.
       */
-    def applySplit(stat: NodeStat, s: Split): (NodeStat, NodeStat) = {
+    private def applySplit(stat: NodeStat, s: Split): (NodeStat, NodeStat) = {
       val NodeStat(node, _, hTot, _, vLo, vHi, path, depth) = stat
-      acc.record(s.feature, s.gain, hTot)
+      records += ((s.feature, s.gain, hTot))
       val li = feature.length
-      feature += -1; thresh += 0.0; left += -1; right += -1
+      feature += -1; thresh += 0.0; bin += -1; left += -1; right += -1
       defLeft += false; value += nodeEstimate(s.gl, s.hl); cover += s.hl
       nodeGain += 0.0
       val ri = feature.length
-      feature += -1; thresh += 0.0; left += -1; right += -1
+      feature += -1; thresh += 0.0; bin += -1; left += -1; right += -1
       defLeft += false; value += nodeEstimate(s.gr, s.hr); cover += s.hr
       nodeGain += 0.0
       nodeGain(node) = s.gain
       feature(node) = s.feature
       thresh(node) = edges(s.feature)(s.bin)
+      bin(node) = s.bin
       left(node) = li
       right(node) = ri
       defLeft(node) = s.defaultLeft
@@ -793,7 +955,7 @@ object SparseBoost {
         NodeStat(ri, s.gr, s.hr, s.cr, loR, hiR, childPath, depth + 1))
     }
 
-    def finalizeLeaf(stat: NodeStat): Unit =
+    private def finalizeLeaf(stat: NodeStat): Unit =
       value(stat.node) = leafValue(stat.g, stat.h, stat.lo, stat.hi)
 
     /** One node's (g, h, count) block copied out of a multi-slot
@@ -820,38 +982,112 @@ object SparseBoost {
       out
     }
 
-    private def result(): SparseTree =
-      SparseTree(feature.toArray, thresh.toArray, left.toArray, right.toArray,
-        defLeft.toArray, value.toArray, cover.toArray, nodeGain.toArray)
+    /** The routing of the tree as grown so far. */
+    def route: Route = Route(feature.toArray, bin.toArray, defLeft.toArray,
+      left.toArray, right.toArray)
 
-    /** Breadth-first growth: one histogram pass per level — but each
-      * pass accumulates only the SMALLER sibling of every fresh split
-      * (XGBoost's hist-method sibling trick); the larger sibling's
-      * block is derived as parent − smaller. Halves per-level
-      * accumulation work and the collected partial size; rows landing
-      * in unscanned siblings still route through the tree but skip
-      * the per-feature binning loop.
-      */
-    def growDepthwise(): SparseTree = {
-      val rootHist = histPass(Map(0 -> 0))
-      val root = rootStatFrom(rootHist)
-      if (params.maxDepth <= 0) { finalizeLeaf(root); return result() }
-      // fresh sibling pairs awaiting search, with their parent's block
-      var pending = scala.Vector.empty[(NodeStat, NodeStat, Array[Double])]
-      search(rootHist, 0, root) match {
-        case Some(s) =>
-          val (l, r) = applySplit(root, s)
-          pending = scala.Vector((l, r, blockOf(rootHist, 0)))
-        case None => finalizeLeaf(root)
+    private val lossguide = params.growPolicy == "lossguide"
+
+    // depthwise: fresh sibling pairs awaiting search, with their
+    // parent's block, and the smaller siblings the next pass scans
+    private var pending = scala.Vector.empty[(NodeStat, NodeStat, Array[Double])]
+    private var scanned = scala.Vector.empty[NodeStat]
+    private var depth = 0
+
+    // lossguide: a max-heap of evaluated candidate splits — (split,
+    // node stat, the node's own histogram block, null once the
+    // retained-block budget is exhausted) — by (gain, LOWER node id),
+    // the live leaf count and the expansion the next pass scans for
+    private val queue = scala.collection.mutable.PriorityQueue.empty(
+      Ordering.by[(Split, NodeStat, Array[Double]), (Double, Int)] {
+        case (s, st, _) => (s.gain, -st.node)
+      })
+    private val maxLeaves = if (params.maxLeaves > 0) params.maxLeaves else Int.MaxValue
+    private var leaves = 1
+    private var expanding: (NodeStat, NodeStat, Array[Double]) = _
+
+    // Sibling subtraction needs each candidate leaf's OWN block
+    // retained until it is expanded or finalized. The retained set
+    // is capped at MaxRetainedBlocks × perNode×3 doubles so an
+    // unbounded (maxLeaves = 0) deep-and-wide growth can never pin
+    // unbounded driver heap: candidates enqueued past the cap hold
+    // null and their expansion re-scans both children (correct,
+    // one extra accumulation — and every realistic tree stays
+    // entirely on the subtraction path, which keeps unbounded
+    // lossguide bit-identical to depthwise, spec-pinned).
+    private def retained(hist: Array[Double], slot: Int): Array[Double] =
+      if (queue.size >= MaxRetainedBlocks) null
+      else if (slot == 0 && hist.length == perNode * 3) hist
+      else blockOf(hist, slot)
+
+    private def enqueueOrFinalize(stat: NodeStat, hist: Array[Double], slot: Int): Unit =
+      if (stat.depth >= params.maxDepth) finalizeLeaf(stat)
+      else search(hist, slot * perNode, stat) match {
+        case Some(s) => queue.enqueue((s, stat, retained(hist, slot)))
+        case None => finalizeLeaf(stat)
       }
-      var depth = 1
-      while (depth < params.maxDepth && pending.nonEmpty) {
-        val scans = pending.map { case (l, r, _) => if (l.cnt <= r.cnt) l else r }
-        val slotOf = scans.map(_.node).zipWithIndex.toMap
-        val hist = histPass(slotOf)
+
+    /** Takes the root histogram. */
+    def start(rootHist: Array[Double]): Unit = {
+      val root = rootStatFrom(rootHist)
+      if (lossguide) enqueueOrFinalize(root, rootHist, 0)
+      else if (params.maxDepth <= 0) finalizeLeaf(root)
+      else {
+        search(rootHist, 0, root) match {
+          case Some(s) =>
+            val (l, r) = applySplit(root, s)
+            pending = scala.Vector((l, r, blockOf(rootHist, 0)))
+          case None => finalizeLeaf(root)
+        }
+        depth = 1
+      }
+    }
+
+    /** Node → slot (−1: not scanned) of the next pass, or null when
+      * the tree is done. Lossguide applies its next expansion here.
+      */
+    def scans(): Array[Int] = {
+      val slotOf: Seq[(Int, Int)] =
+        if (lossguide) {
+          if (leaves >= maxLeaves || queue.isEmpty) Nil
+          else {
+            val (s, stat, pBlock) = queue.dequeue()
+            val (l, r) = applySplit(stat, s)
+            leaves += 1
+            expanding = (l, r, pBlock)
+            // sibling trick: scan the smaller child only
+            if (pBlock != null) Seq((if (l.cnt <= r.cnt) l else r).node -> 0)
+            else Seq(l.node -> 0, r.node -> 1)
+          }
+        } else if (depth < params.maxDepth && pending.nonEmpty) {
+          scanned = pending.map { case (l, r, _) => if (l.cnt <= r.cnt) l else r }
+          scanned.map(_.node).zipWithIndex
+        } else Nil
+      if (slotOf.isEmpty) null
+      else {
+        val out = Array.fill(feature.length)(-1)
+        slotOf.foreach { case (node, slot) => out(node) = slot }
+        out
+      }
+    }
+
+    /** Takes the histogram of the nodes [[scans]] named. */
+    def consume(hist: Array[Double]): Unit =
+      if (lossguide) {
+        val (l, r, pBlock) = expanding
+        if (pBlock != null) {
+          val smallIsLeft = l.cnt <= r.cnt
+          val bigBlock = minus(pBlock, hist)
+          enqueueOrFinalize(l, if (smallIsLeft) hist else bigBlock, 0)
+          enqueueOrFinalize(r, if (smallIsLeft) bigBlock else hist, 0)
+        } else {
+          enqueueOrFinalize(l, hist, 0)
+          enqueueOrFinalize(r, hist, 1)
+        }
+      } else {
         val next = scala.Vector.newBuilder[(NodeStat, NodeStat, Array[Double])]
-        pending.zip(scans).foreach { case ((l, r, pBlock), small) =>
-          val smallBlock = blockOf(hist, slotOf(small.node))
+        pending.zip(scanned).zipWithIndex.foreach { case (((l, r, pBlock), small), slot) =>
+          val smallBlock = blockOf(hist, slot)
           val bigBlock = minus(pBlock, smallBlock)
           // keep the level's left-to-right node order so tree-array
           // layout (and thus spec pins) match the pre-trick grower
@@ -869,77 +1105,15 @@ object SparseBoost {
         pending = next.result()
         depth += 1
       }
-      // depth budget exhausted: finalize the remaining frontier
-      pending.foreach { case (l, r, _) => finalizeLeaf(l); finalizeLeaf(r) }
-      result()
-    }
 
-    /** Best-first growth (`grow_policy = "lossguide"`): a max-heap of
-      * evaluated candidate splits ordered by gain (ties broken by
-      * node id — deterministic), expanded one at a time until
-      * `max_leaves` (0 = unbounded) or no candidate clears the gain /
-      * min_child_weight / depth bars. Each expansion costs one
-      * histogram pass over the two new children.
+    /** The grown tree: whatever is still open (the depth budget's
+      * frontier, or lossguide's queue at the leaf budget) becomes a leaf.
       */
-    def growLossguide(): SparseTree = {
-      val maxLeaves = if (params.maxLeaves > 0) params.maxLeaves else Int.MaxValue
-      // (candidate split, node stat, the node's own histogram block —
-      // null once the retained-block budget is exhausted); max by
-      // (gain, LOWER node id)
-      val ord = Ordering.by[(Split, NodeStat, Array[Double]), (Double, Int)] {
-        case (s, st, _) => (s.gain, -st.node)
-      }
-      val queue = scala.collection.mutable.PriorityQueue.empty(ord)
-      // leaves not in the queue are final; track live leaf count
-      var leaves = 1
-
-      // Sibling subtraction needs each candidate leaf's OWN block
-      // retained until it is expanded or finalized. The retained set
-      // is capped at MaxRetainedBlocks × perNode×3 doubles so an
-      // unbounded (maxLeaves = 0) deep-and-wide growth can never pin
-      // unbounded driver heap: candidates enqueued past the cap hold
-      // null and their expansion re-scans both children (correct,
-      // one extra accumulation — and every realistic tree stays
-      // entirely on the subtraction path, which keeps unbounded
-      // lossguide bit-identical to depthwise, spec-pinned).
-      def retained(hist: Array[Double], slot: Int): Array[Double] =
-        if (queue.size >= MaxRetainedBlocks) null
-        else if (slot == 0 && hist.length == perNode * 3) hist
-        else blockOf(hist, slot)
-
-      def enqueueOrFinalize(
-          stat: NodeStat, hist: Array[Double], slot: Int): Unit =
-        if (stat.depth >= params.maxDepth) finalizeLeaf(stat)
-        else search(hist, slot * perNode, stat) match {
-          case Some(s) => queue.enqueue((s, stat, retained(hist, slot)))
-          case None => finalizeLeaf(stat)
-        }
-
-      val rootHist = histPass(Map(0 -> 0))
-      val root = rootStatFrom(rootHist)
-      enqueueOrFinalize(root, rootHist, 0)
-      while (leaves < maxLeaves && queue.nonEmpty) {
-        val (s, stat, pBlock) = queue.dequeue()
-        val (l, r) = applySplit(stat, s)
-        leaves += 1
-        if (pBlock != null) {
-          // sibling trick: scan the smaller child only
-          val small = if (l.cnt <= r.cnt) l else r
-          val smallBlock = histPass(Map(small.node -> 0))
-          val bigBlock = minus(pBlock, smallBlock)
-          enqueueOrFinalize(l,
-            if (small.node == l.node) smallBlock else bigBlock, 0)
-          enqueueOrFinalize(r,
-            if (small.node == r.node) smallBlock else bigBlock, 0)
-        } else {
-          val hist = histPass(Map(l.node -> 0, r.node -> 1))
-          enqueueOrFinalize(l, hist, 0)
-          enqueueOrFinalize(r, hist, 1)
-        }
-      }
-      // leaf budget reached: whatever stayed queued becomes a leaf
+    def finish(): SparseTree = {
+      pending.foreach { case (l, r, _) => finalizeLeaf(l); finalizeLeaf(r) }
       queue.foreach { case (_, stat, _) => finalizeLeaf(stat) }
-      result()
+      SparseTree(feature.toArray, thresh.toArray, left.toArray, right.toArray,
+        defLeft.toArray, value.toArray, cover.toArray, nodeGain.toArray)
     }
   }
 
@@ -951,39 +1125,46 @@ object SparseBoost {
       node: Int, g: Double, h: Double, cnt: Double, lo: Double, hi: Double,
       path: Set[Int] = Set.empty, depth: Int = 0)
 
-  /** `reg:quantileerror`'s leaf rule, run on each tree right after
-    * [[growTree]]: every leaf is reset to η · the exact α-quantile of
-    * the residuals y − f of the rows that land in it, over the same
-    * round sample the tree was grown on (sklearn's QuantileLossFunction
-    * `_update_terminal_region`; Friedman's TreeBoost line search). The
-    * Newton values the grower wrote are discarded, so neither the
-    * monotone value fence nor `maxDeltaStep` constrains these leaves.
-    * Rows are routed by [[SparseTree.leafOf]], the scorer's own walk.
+  /** `reg:quantileerror`'s leaf rule, run on each round's trees right
+    * after they are grown: every leaf is reset to η · the exact
+    * α-quantile ([[percentilesByKey]]) of the residuals y − f of the
+    * rows that land in it, over the same row sample the tree was grown
+    * on (sklearn's QuantileLossFunction `_update_terminal_region`;
+    * Friedman's TreeBoost line search). The Newton values the grower
+    * wrote are discarded, so neither the monotone value fence nor
+    * `maxDeltaStep` constrains these leaves. One job: it also applies
+    * the trees' final splits, and returns that state.
     *
-    * The quantile is UNWEIGHTED: `percentile`'s frequency argument is
-    * integral, so fractional instance weights cannot reach the order
-    * statistic. Weights steer the split search only.
-    *
-    * The per-leaf value multiset is partition-order-free, so the
-    * merges run one leaf per task; the explicit keyed repartition
-    * stops AQE from coalescing this small shuffle back onto one
-    * reducer (×4 oversampling against hash collisions, as in
-    * [[proposeEdges]]).
+    * The quantile is UNWEIGHTED, as SQL `percentile`'s integral
+    * frequency argument was: weights steer the split search only.
     */
-  private[ml] def quantileLeaves(
-      tree: SparseTree, rows: DataFrame, resid: Column,
-      alpha: Double, eta: Double): Unit = {
-    val sc = rows.sparkSession.sparkContext
-    val bc = sc.broadcast(tree)
-    val leafU = udf((v: Vector) => bc.value.leafOf(v))
-    val parts = math.max(1, math.min(sc.defaultParallelism,
-      tree.feature.count(_ < 0) * 4))
-    rows.withColumn("leaf", leafU(col("features")))
-      .repartition(parts, col("leaf"))
-      .groupBy(col("leaf"))
-      .agg(percentile(resid, lit(alpha)))
-      .collect()
-      .foreach(r => tree.value(r.getInt(0)) = eta * r.getDouble(1))
+  private def quantileLeaves(state: RDD[Block], shape: Shape,
+      trees: Array[SparseTree], routes: Array[Route], alpha: Double,
+      eta: Double): RDD[Block] = {
+    val Shape(numFeat, _, _, miss, _) = shape
+    val c = shape.C
+    val walked = state.map { b =>
+      b.copy(pos = Array.tabulate(b.n * c) { at =>
+        routes(at % c).move(b.pos(at), b.codes, at / c * numFeat, miss)
+      })
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    val resid = walked.flatMap { b =>
+      val byLeaf = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), ArrayBuffer[Double]]
+      var at = 0
+      while (at < b.n * c) {
+        val p = b.pos(at)
+        if (p >= 0) {
+          val i = at / c
+          val fm = if (b.s == null) b.f(i) else b.f(i) - b.s(i)
+          byLeaf.getOrElseUpdate((at % c, p), new ArrayBuffer[Double]) += b.label(i) - fm
+        }
+        at += 1
+      }
+      byLeaf.iterator.map { case (key, xs) => (key, xs.toArray) }
+    }
+    percentilesByKey(resid, trees.map(_.feature.count(_ < 0)).sum, Array(alpha))
+      .foreach { case ((tr, leaf), q) => trees(tr).value(leaf) = eta * q(0) }
+    walked
   }
 
   /** What the round loop grew: the forest in growth order (round r,
@@ -1009,19 +1190,56 @@ object SparseBoost {
     }
   }
 
+  /** A partition's training rows as a [[Block]] without codes or
+    * boosting state: features, label, then the optional user weight,
+    * base margin and group columns at the given indices (−1: absent).
+    */
+  private def readBlock(rows: Iterator[Row], wIx: Int, bmIx: Int, gIx: Int,
+      objective: Objective): Block = {
+    val raw = new ArrayBuffer[Array[Double]]
+    val label = new ArrayBuffer[Double]
+    val user = new ArrayBuffer[Double]
+    val bm = new ArrayBuffer[Double]
+    val group = new ArrayBuffer[Long]
+    rows.foreach { r =>
+      raw += r.getAs[Vector](0).toArray
+      label += r.getDouble(1)
+      if (wIx >= 0) user += r.getDouble(wIx)
+      if (bmIx >= 0) bm += r.getDouble(bmIx)
+      if (gIx >= 0) group += r.getLong(gIx)
+    }
+    val weight =
+      if (!objective.weighted(wIx >= 0)) null
+      else Array.tabulate(label.length)(i =>
+        objective.rowWeight(if (wIx >= 0) user(i) else 1.0, label(i)))
+    Block(raw.toArray, label.toArray, weight,
+      if (gIx >= 0) group.toArray else null, codes = null,
+      f = if (bmIx >= 0) bm.toArray else null,
+      s = null, g = null, h = null, order = null, pos = null, loss = null)
+  }
+
   /** The boosting round loop — the one `xgb.train` loop of the
     * reference (`core.py:164-321`), for every [[Objective]]. `data`
     * must carry `features` (vector; NaN marks missing), `label` and
     * the objective's [[Objective.inputs]]; an optional weight column
     * scales each row's (g, h) — XGBoost's instance weights.
     *
-    * Round r grows T trees per channel k. Each tree draws its own
-    * `subsample` rows ([[GraftBoost.roundSample]]), `colsample_bytree`
-    * features and grower seed from its index idx = ((r−1)·K + k)·T + t:
-    * (r−1)·T + t for one channel, (r−1)·K + k + 1 for softprob's
-    * single trees. Softprob and ranking honour both samples too;
-    * softprob's rows are drawn per tree, where its old loop drew them
-    * once per round (no-ops at the default 1.0).
+    * The training rows become one [[Block]] per partition, once per
+    * fit (`boost: propose-edges` reads them for the exact edges,
+    * `boost: init-margin` bins them and writes round 1's gradients).
+    * A round then grows its K·T trees together ([[growRound]]: one
+    * `boost: r<r> grow` job per depthwise level) and ends with one
+    * fused `boost: r<r> margin-update` job: each row walks the last
+    * splits to its leaf, f gains the leaf values, the loss partials
+    * fold through [[PartialFold]] and the next round's (g, h) — and
+    * DART share — are written. A depthwise round is depth + 1 jobs
+    * (quantile adds its leaf job). Each round's state is a
+    * `localCheckpoint`, cutting the lineage.
+    *
+    * Tree idx = ((r−1)·K + k)·T + t draws its own `subsample` rows
+    * ([[GraftBoost.roundSample]]), `colsample_bytree` features and
+    * grower seed: (r−1)·T + t for one channel, (r−1)·K + k + 1 for
+    * softprob's single trees. Softprob and ranking honour both samples.
     *
     * `marginCol` names a per-row `base_margin` column (the reference
     * forwards it through `dmatrix_kwargs`, `core.py:143-147`): the
@@ -1041,10 +1259,12 @@ object SparseBoost {
       marginCol: Option[String] = None
   ): Fit = {
     val K = objective.channels
+    val T = params.numParallelTree
     require(params.booster != "dart" || objective.supportsDart,
       s"booster=\"dart\" drops trees from one per-row margin; " +
       s"${objective.name} has none")
-    val keep = Seq(col("features"), col("label")) ++ weightCol.map(col) ++
+    val keep = Seq(col("features"), col("label").cast("double").as("label")) ++
+      weightCol.map(c => col(c).cast("double").as("graft_w")) ++
       marginCol.map(c => GraftBoost.marginColumn(c).as("graft_bm")) ++
       objective.inputs
     val src = data.select(keep: _*)
@@ -1052,7 +1272,14 @@ object SparseBoost {
     val sc = data.sparkSession.sparkContext
     sc.setJobDescription("boost: propose-edges")
     val numFeat = src.select(col("features")).head().getAs[Vector](0).size
-    val edges = proposeEdges(src, numFeat, params.maxBins, params.splitProposal)
+    val laid = objective.layout(src)
+    val names = laid.columns
+    val (wIx, bmIx, gIx) = (names.indexOf("graft_w"), names.indexOf("graft_bm"),
+      names.indexOf("group"))
+    val rows = laid.rdd.mapPartitions(it =>
+      Iterator.single(readBlock(it, wIx, bmIx, gIx, objective)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = proposeEdges(src, rows, numFeat, params.maxBins, params.splitProposal)
     if (params.monotoneConstraints.nonEmpty) {
       require(params.monotoneConstraints.length == numFeat,
         s"monotoneConstraints has ${params.monotoneConstraints.length} " +
@@ -1095,16 +1322,33 @@ object SparseBoost {
     val base =
       if (!params.baseScore.isNaN) params.baseScore
       else objective.defaultBase(src)
-    // per-row base_margin REPLACES the scalar base as the boosting
-    // start point (stock: base_score is unused when base_margin rides
-    // the DMatrix)
-    val start =
-      if (marginCol.isDefined) col("graft_bm")
-      else if (K == 1) lit(base)
-      else array_repeat(lit(base), K)
+    val featOff = edges.scanLeft(0)(_ + _.length + 2)
+    val shape = Shape(numFeat, K, T, edges.map(_.length + 1), featOff)
+    // bins once; per-row base_margin REPLACES the scalar base as the
+    // boosting start point (stock: base_score is unused when
+    // base_margin rides the DMatrix)
     sc.setJobDescription("boost: init-margin")
-    var cur = objective.initMargins(src, start).localCheckpoint()
-    var scored = objective.scored(cur)
+    var state = rows.map { b =>
+      val codes = new Array[Int](b.n * numFeat)
+      var i = 0
+      while (i < b.n) {
+        var j = 0
+        while (j < numFeat) {
+          val x = b.raw(i)(j)
+          codes(i * numFeat + j) =
+            if (java.lang.Double.isNaN(x)) edges(j).length + 1 else regionOf(x, edges(j))
+          j += 1
+        }
+        i += 1
+      }
+      val f = if (b.f != null) b.f else Array.fill(b.n * K)(base)
+      val g = new Array[Double](b.n * K)
+      val h = new Array[Double](b.n * K)
+      val (loss, order) = objective.evaluate(b, f, null, g, h)
+      b.copy(codes = codes, f = f, g = g, h = h, order = order, loss = loss)
+    }.localCheckpoint()
+    state.count()
+    rows.unpersist(false)
 
     val roundAccs = new ArrayBuffer[ImportanceAcc](params.numRound)
     val hist = new ArrayBuffer[Double](params.numRound)
@@ -1119,84 +1363,51 @@ object SparseBoost {
         (b * 0xc2b2ae3d27d4eb4fL) ^ (c * 0xff51afd7ed558ccdL))
       (h >>> 11).toDouble / (1L << 53).toDouble
     }
-    val T = params.numParallelTree
-    val w = objective.instanceWeight(weightCol.map(col))
+    // DART: round r's dropped tree set (empty = plain round); its
+    // margin share s is written by the pass before the round
+    def dropSet(r: Int): Seq[Int] =
+      if (params.booster != "dart" || forest.isEmpty ||
+          (params.skipDrop > 0.0 && u01(2L, r, -1L) < params.skipDrop)) Nil
+      else forest.indices.filter(i => u01(1L, r, i) < params.rateDrop)
+    var dropped = dropSet(1)
+    val keepRows = math.round(params.subsample * 1000)
 
     for (r <- 1 to params.numRound) {
-      // DART: pick the round's dropped tree set (empty = plain round)
-      val dropped: Seq[Int] =
-        if (params.booster != "dart" || forest.isEmpty ||
-            (params.skipDrop > 0.0 && u01(2L, r, -1L) < params.skipDrop)) Nil
-        else forest.indices.filter(i => u01(1L, r, i) < params.rateDrop)
       val k = dropped.length
-      // s = the dropped trees' margin share; the round's gradients are
-      // taken at f − s (the paper's "fit against the rest")
-      val withS =
-        if (k == 0) scored.withColumn("s", lit(0.0))
-        else {
-          val bcD = sc.broadcast(dropped.map(forest).toArray)
-          val sU = udf((v: Vector) => {
-            var acc = 0.0
-            bcD.value.foreach(t => acc += t.valueOf(v))
-            acc
-          })
-          // pin s: growTree re-reads the frame once per level (or per
-          // lossguide expansion) and must not re-route the k dropped
-          // trees on every pass
-          scored.withColumn("s", sU(col("features"))).localCheckpoint()
-        }
-      val fm = col("f") - col("s")
-      val fitFrame = objective.roundFrame(withS, r)
       val roundAcc = ImportanceAcc(numFeat)
       roundAccs += roundAcc
       // num_parallel_tree: T trees per channel on the SAME round
       // gradients, each with its own deterministic subsample/colsample
       // draws; leaf values pre-scaled by 1/T so the stored model stays
       // a plain sum and the round's update is the ensemble AVERAGE
-      val newTrees = for (ch <- 0 until K; t <- 1 to T) yield {
-        val idx = ((r - 1) * K + ch) * T + t
-        sc.setJobDescription(s"boost: r$r grow")
-        val sampled = GraftBoost.roundSample(fitFrame, params.subsample,
-          params.seed + 197L * idx)
-        val (g, h) = objective.gradients(ch, fm)
-        val (gw, hw) = w match {
-          case Some(wc) => (g * wc, h * wc)
-          case None => (g, h)
-        }
-        val tree = growTree(
-          sampled.withColumn("g", gw).withColumn("h", hw), edges, params,
-          roundAcc, roundMask(idx), constraints, params.seed ^ (1337L * idx))
-        objective.leafRule(tree, sampled, fm, params.eta, r)
-        // "sum" (XGBoost compat) keeps member trees unscaled; the
-        // default averages them (1/T pre-scale, see BoostParams)
-        if (T > 1 && params.parallelTreeUpdate == "average") {
-          var j = 0
-          while (j < tree.value.length) { tree.value(j) /= T; j += 1 }
-        }
-        tree
+      val idxs = Array.tabulate(K * T)(c => ((r - 1) * K + c / T) * T + c % T + 1)
+      val growers = idxs.map(idx => new Grower(edges, featOff, params,
+        roundMask(idx), constraints, params.seed ^ (1337L * idx)))
+      sc.setJobDescription(s"boost: r$r grow")
+      var grown = growRound(state, shape, growers,
+        idxs.map(idx => Draw(params.seed + 197L * idx, keepRows)))
+      val newTrees = growers.map(_.finish())
+      // importance sums keep the tree-by-tree association
+      growers.foreach(_.records.foreach { case (j, gain, cov) =>
+        roundAcc.record(j, gain, cov) })
+      val routes = growers.map(_.route)
+      objective.leafQuantile.foreach { alpha =>
+        sc.setJobDescription(s"boost: r$r leaf-quantile")
+        val walked = quantileLeaves(grown, shape, newTrees, routes, alpha, params.eta)
+        grown.unpersist(false)
+        grown = walked
       }
-
-      // margin update f'_k = f_k + (Σ_t tree_{k,t} − s)/(k+1):
-      // simultaneously adds the channel's trees (1/T-pre-scaled under
-      // the default "average" mode; unscaled under "sum") and removes
-      // the share the dropped trees lose to their k/(k+1) rescale
-      // (k = 0 for every non-DART round — DART forbids T > 1, so Σ is
-      // one tree whenever k > 0). localCheckpoint is eager, so the
-      // in-place leaf rescale below cannot race the broadcast reads.
-      val bc = sc.broadcast(newTrees.toArray)
+      // "sum" (XGBoost compat) keeps member trees unscaled; the
+      // default averages them (1/T pre-scale, see BoostParams)
+      if (T > 1 && params.parallelTreeUpdate == "average")
+        newTrees.foreach { t =>
+          var j = 0
+          while (j < t.value.length) { t.value(j) /= T; j += 1 }
+        }
+      // the margin update reads these leaf values; the DART rescale
+      // below changes the trees themselves
+      val leafValues = newTrees.map(_.value.clone())
       val kd = (k + 1).toDouble
-      val margins =
-        if (K == 1)
-          udf((v: Vector, f: Double, sv: Double) =>
-            f + channelStep(bc.value, 0, T, v, sv, kd))
-            .apply(col("features"), col("f"), col("s"))
-        else
-          udf((v: Vector, f: Seq[Double]) =>
-            Array.tabulate(K)(ch => f(ch) + channelStep(bc.value, ch, T, v, 0.0, kd)))
-            .apply(col("features"), col("f"))
-      sc.setJobDescription(s"boost: r$r margin-update")
-      val next = withS.withColumn("f", margins)
-        .drop(withS.columns.diff(cur.columns): _*).localCheckpoint()
       if (k > 0) {
         anyDartRescale = true
         val scaleOld = k.toDouble / kd
@@ -1210,25 +1421,59 @@ object SparseBoost {
         while (j < t0.value.length) { t0.value(j) /= kd; j += 1 }
       }
       forest ++= newTrees
-      if (scored ne cur) scored.unpersist(false)
-      cur = next
-      sc.setJobDescription(s"boost: r$r loss")
-      scored = objective.scored(cur)
-      hist += objective.loss(scored)
+      val last = r == params.numRound
+      dropped = if (last) Nil else dropSet(r + 1)
+      val dropTrees = dropped.map(i => forest(i).copy(value = forest(i).value.clone())).toArray
+
+      // margin update f'_k = f_k + (Σ_t tree_{k,t} − s)/(k+1):
+      // simultaneously adds the channel's trees (1/T-pre-scaled under
+      // the default "average" mode; unscaled under "sum") and removes
+      // the share the dropped trees lose to their k/(k+1) rescale
+      // (k = 0 for every non-DART round — DART forbids T > 1, so Σ is
+      // one tree whenever k > 0); then the loss partial and, unless
+      // this is the last round, the next round's DART share and (g, h)
+      sc.setJobDescription(s"boost: r$r margin-update")
+      val miss = shape.miss
+      val c = shape.C
+      val next = grown.map { b =>
+        val f = new Array[Double](b.n * K)
+        var i = 0
+        while (i < b.n) {
+          var ch = 0
+          while (ch < K) {
+            var acc = if (b.s == null) -0.0 else -b.s(i)
+            var tr = ch * T
+            while (tr < (ch + 1) * T) {
+              val p = b.pos(i * c + tr)
+              acc += leafValues(tr)(routes(tr).walk(if (p >= 0) p else ~p,
+                b.codes, i * numFeat, miss))
+              tr += 1
+            }
+            f(i * K + ch) = b.f(i * K + ch) + acc / kd
+            ch += 1
+          }
+          i += 1
+        }
+        val s =
+          if (dropTrees.isEmpty) null
+          else Array.tabulate(b.n) { i =>
+            val v = Vectors.dense(b.raw(i))
+            var acc = 0.0
+            dropTrees.foreach(t => acc += t.valueOf(v))
+            acc
+          }
+        val (g, h) =
+          if (last) (null, null) else (new Array[Double](b.n * K), new Array[Double](b.n * K))
+        val (loss, order) = objective.evaluate(b, f, s, g, h)
+        b.copy(f = f, s = s, g = g, h = h, order = order, pos = null, loss = loss)
+      }.localCheckpoint()
+      hist += objective.loss(PartialFold.sum(next.map(_.loss), 2))
+      grown.unpersist(false)
+      state.unpersist(false)
+      state = next
     }
-    if (scored ne cur) scored.unpersist(false)
+    state.unpersist(false)
     Fit(forest.toArray, base, roundAccs.toSeq,
       ImportanceAcc.sum(roundAccs.toSeq, numFeat), hist.toArray, anyDartRescale)
-  }
-
-  /** Channel `ch`'s share of a round's margin step at `v`: its T trees
-    * (stored channel-major) less the dropped share `s`, over k + 1.
-    */
-  private def channelStep(trees: Array[SparseTree], ch: Int, T: Int,
-      v: Vector, s: Double, kd: Double): Double = {
-    var acc = -s
-    var i = ch * T
-    while (i < (ch + 1) * T) { acc += trees(i).valueOf(v); i += 1 }
-    acc / kd
   }
 }

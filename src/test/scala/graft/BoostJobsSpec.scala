@@ -1,0 +1,89 @@
+package graft
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ml._
+import graft.ml.GraftBoost._
+
+/** How many Spark jobs a boosting fit runs, read from its
+  * `boost: <phase>` job descriptions: a depthwise round is one job per
+  * level plus one fused margin/loss/gradient job, whatever the
+  * objective's channel count.
+  */
+class BoostJobsSpec extends AnyFunSuite {
+  import TestSession._
+  import spark.implicits._
+
+  /** The job descriptions `body` runs, in start order. A fence job
+    * after the body flushes the listener queue, which delivers events
+    * in order.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[String]()
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d == "jobs-spec fence") fenced.countDown() else seen.add(d)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobs-spec fence")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      assert(fenced.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  private val df: DataFrame = (0 until 400).map { i =>
+    val x1 = (i % 20).toDouble
+    val x2 = if (i % 7 == 0) -999.0 else ((i * 13) % 17).toDouble
+    val x3 = ((i * 7) % 11).toDouble
+    val y = if (x1 + 0.4 * x3 > 12.0) 1.0 else 0.0
+    val cls = if (x1 < 7) 0.0 else if (x1 < 14) 1.0 else 2.0
+    (x1, x2, x3, y, cls)
+  }.toDF("x1", "x2", "x3", "y", "cls")
+  private val feats = Seq("x1", "x2", "x3")
+  private val native = BoostParams("binary:logistic", numRound = 3, maxDepth = 3,
+    eta = 0.3, missing = Some(-999.0), missingStrategy = "native")
+
+  private def round2(jobs: Seq[String]): Seq[String] = jobs.filter(_.startsWith("boost: r2 "))
+
+  test("a depth-3 binary:logistic round runs one job per level plus one") {
+    val jobs = jobsOf(GraftBoost.train(df, feats, "y", native))
+    val r2 = round2(jobs)
+    assert(r2.size <= 4, s"round 2 ran ${r2.size} jobs: $r2")
+    assert(r2.toSet == Set("boost: r2 grow", "boost: r2 margin-update"), r2)
+    assert(jobs.contains("boost: propose-edges") && jobs.contains("boost: init-margin"),
+      jobs.distinct)
+  }
+
+  test("a depth-3 softprob round grows its K class trees in the same passes") {
+    val jobs = jobsOf(GraftBoost.train(df, feats, "cls",
+      BoostParams("multi:softprob", numRound = 3, maxDepth = 3, eta = 0.3,
+        missing = Some(-999.0), multiclassStrategy = "softprob")))
+    val r2 = round2(jobs)
+    assert(r2.size <= 4, s"round 2 ran ${r2.size} jobs: $r2")
+    // the imputation statistics and the class count are labelled too
+    assert(jobs.forall(_.startsWith("boost: ")), jobs.distinct)
+  }
+
+  test("a subsampled round runs no more jobs than a full one") {
+    val full = round2(jobsOf(GraftBoost.train(df, feats, "y", native)))
+    val sampled = round2(jobsOf(GraftBoost.train(df, feats, "y",
+      native.copy(subsample = 0.8))))
+    assert(sampled.size <= full.size, s"subsample 0.8: $sampled; 1.0: $full")
+  }
+}

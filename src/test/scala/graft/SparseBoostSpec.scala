@@ -939,13 +939,34 @@ class SparseBoostSpec extends AnyFunSuite {
     md.digest().map(b => f"$b%02x").mkString.take(16)
   }
 
+  /** Fits under a `graft.train.rowsPerTask` value: 100 gives the 400-row
+    * fixtures four training partitions, 1000000 gives them one (the
+    * benchmark's layout).
+    */
+  private def withRowsPerTask[T](rows: String)(body: => T): T = {
+    val saved = sys.props.get("graft.train.rowsPerTask")
+    sys.props("graft.train.rowsPerTask") = rows
+    try body
+    finally saved match {
+      case Some(v) => sys.props("graft.train.rowsPerTask") = v
+      case None => sys.props.remove("graft.train.rowsPerTask")
+    }
+  }
+
+  private def digestsMoved(
+      fits: Seq[(String, () => GraftBoostModel, String)]): Seq[String] =
+    fits.flatMap { case (name, fit, want) =>
+      val have = forestDigest(fit())
+      if (have == want) None else Some(s"$name: $have (pinned $want)")
+    }
+
   test("one round loop: every objective's forest matches its pinned TreeDump digest") {
-    // The expected digests were generated by the per-objective round
-    // loops this single loop replaced (SparseBoost.train, the
-    // softprob loop and the ranking loop, at the commit before they
-    // were folded together); every fit here must grow those exact
-    // trees. Four training partitions, so the partition-ordered
-    // histogram folds are pinned too.
+    // The expected digests were generated at the commit before the
+    // training state became quantized blocks (the first six at four
+    // partitions go back further, to the per-objective loops the one
+    // round loop replaced); every fit here must grow those exact
+    // trees. Four training partitions pin the partition-ordered
+    // histogram folds, one partition is the benchmark's layout.
     val df = (0 until 400).map { i =>
       val x1 = (i % 20).toDouble
       val x2 = if (i % 7 == 0) -999.0 else ((i * 13) % 17).toDouble
@@ -954,41 +975,79 @@ class SparseBoostSpec extends AnyFunSuite {
       val pos = 0.5 + x1 / 4.0 + ((i * 3) % 5) * 0.3
       val cls = if (x1 < 7) 0.0 else if (x1 < 14) 1.0 else 2.0
       val rel = math.min(3.0, math.floor((x1 + (i % 3)) / 6.0))
-      (i.toLong / 8, x1, x2, x3, y, pos, cls, rel)
-    }.toDF("group", "x1", "x2", "x3", "y", "pos", "cls", "rel")
+      val cnt = math.floor(x1 / 5.0 + (i % 4) * 0.5)
+      val w = 0.5 + (i % 3)
+      val bm = ((i * 11) % 9 - 4) * 0.1
+      (i.toLong / 8, x1, x2, x3, y, pos, cls, rel, cnt, w, bm)
+    }.toDF("group", "x1", "x2", "x3", "y", "pos", "cls", "rel", "cnt", "w", "bm")
     val feats = Seq("x1", "x2", "x3")
     val native = BoostParams("binary:logistic", numRound = 3, maxDepth = 3,
       eta = 0.3, missing = Some(-999.0), missingStrategy = "native")
-    val fits: Seq[(String, () => GraftBoostModel, String)] = Seq(
+    val softprob = BoostParams("multi:softprob", numRound = 3, maxDepth = 3,
+      eta = 0.3, missing = Some(-999.0), multiclassStrategy = "softprob")
+    // (name, fit, digest at four partitions, digest at one partition)
+    val pinned: Seq[(String, () => GraftBoostModel, String, String)] = Seq(
       ("binary:logistic", () => GraftBoost.train(df, feats, "y",
         native.copy(subsample = 0.8, colsampleBytree = 0.67)),
-        "fd2deb98a85faabd"),
+        "fd2deb98a85faabd", "8e4e51ae0315e1f3"),
       ("reg:gamma", () => GraftBoost.train(df, feats, "pos",
-        native.copy(objective = "reg:gamma")), "bf08420140e8704b"),
+        native.copy(objective = "reg:gamma")),
+        "bf08420140e8704b", "ad401703073bbdbe"),
       ("reg:quantileerror", () => GraftBoost.train(df, feats, "pos",
         native.copy(objective = "reg:quantileerror", quantileAlpha = 0.7)),
-        "27ae53953b9c99ee"),
+        "27ae53953b9c99ee", "27ae53953b9c99ee"),
       ("dart", () => GraftBoost.train(df, feats, "y",
         native.copy(numRound = 4, booster = "dart", rateDrop = 0.5)),
-        "e8dbb8788a79f089"),
-      ("multi:softprob", () => GraftBoost.train(df, feats, "cls",
-        BoostParams("multi:softprob", numRound = 3, maxDepth = 3, eta = 0.3,
-          missing = Some(-999.0), multiclassStrategy = "softprob")),
-        "89eecf5192b8dd19"),
+        "e8dbb8788a79f089", "ef57cc562a20b45e"),
+      ("multi:softprob", () => GraftBoost.train(df, feats, "cls", softprob),
+        "89eecf5192b8dd19", "5a4df1bcf0f82656"),
       ("rank:ndcg", () => GraftBoost.train(df, feats, "rel",
         native.copy(objective = "rank:ndcg"), groupCol = Some("group")),
-        "356a44192c4193d5"))
-    val saved = sys.props.get("graft.train.rowsPerTask")
-    sys.props("graft.train.rowsPerTask") = "100"
-    val got =
-      try fits.map { case (name, fit, _) => name -> forestDigest(fit()) }
-      finally saved match {
-        case Some(v) => sys.props("graft.train.rowsPerTask") = v
-        case None => sys.props.remove("graft.train.rowsPerTask")
-      }
-    val wrong = fits.zip(got).collect {
-      case ((name, _, want), (_, have)) if want != have => s"$name: $have (pinned $want)"
-    }
+        "356a44192c4193d5", "356a44192c4193d5"))
+    // pinned at four partitions only
+    val more: Seq[(String, () => GraftBoostModel, String)] = Seq(
+      ("lossguide", () => GraftBoost.train(df, feats, "y",
+        native.copy(growPolicy = "lossguide", maxLeaves = 6)),
+        "73a04bfcf7743bb3"),
+      ("num_parallel_tree", () => GraftBoost.train(df, feats, "y",
+        native.copy(numParallelTree = 2, subsample = 0.8)),
+        "d7de9f9d339c3084"),
+      ("weightCol", () => GraftBoost.train(df, feats, "y", native,
+        weightCol = Some("w")), "b55c4d082b92dbd4"),
+      ("base_margin", () => GraftBoost.train(df, feats, "y", native,
+        marginCol = Some("bm")), "827470efa83c343d"),
+      ("count:poisson", () => GraftBoost.train(df, feats, "cnt",
+        native.copy(objective = "count:poisson")), "c133802f62135155"),
+      ("reg:tweedie", () => GraftBoost.train(df, feats, "pos",
+        native.copy(objective = "reg:tweedie")), "467f05367aeea266"),
+      ("reg:squarederror", () => GraftBoost.train(df, feats, "pos",
+        native.copy(objective = "reg:squarederror")), "2f263c779d7c7a35"),
+      ("softprob subsample", () => GraftBoost.train(df, feats, "cls",
+        softprob.copy(subsample = 0.5)), "2c37e6658b07da24"))
+    val wrong =
+      withRowsPerTask("100")(digestsMoved(
+        pinned.map { case (n, f, four, _) => (n, f, four) } ++ more)) ++
+      withRowsPerTask("1000000")(digestsMoved(
+        pinned.map { case (n, f, _, one) => (s"$n (one partition)", f, one) }))
+    assert(wrong.isEmpty, s"forests moved: ${wrong.mkString("; ")}")
+  }
+
+  test("a subsample that draws no row falls back to the whole frame") {
+    // three distinct rows: content-identical rows sample together, so
+    // at 0.3 some trees draw nothing and train on the whole frame
+    // while others keep their draw; at 0.001 every draw is empty.
+    // Digests pinned at the commit before the in-block draw.
+    val df = (0 until 30).map { i =>
+      val x = (i % 3).toDouble
+      (x, 2.0 - x, if (x > 0.5) 1.0 else 0.0)
+    }.toDF("a", "b", "y")
+    val p = BoostParams("binary:logistic", numRound = 6, maxDepth = 2,
+      eta = 0.3, missingStrategy = "native")
+    val wrong = digestsMoved(Seq(
+      ("subsample 0.3", () => GraftBoost.train(df, Seq("a", "b"), "y",
+        p.copy(subsample = 0.3)), "76f101f0a347807e"),
+      ("subsample 0.001", () => GraftBoost.train(df, Seq("a", "b"), "y",
+        p.copy(subsample = 0.001)), "5993d966580f9325")))
     assert(wrong.isEmpty, s"forests moved: ${wrong.mkString("; ")}")
   }
 }
