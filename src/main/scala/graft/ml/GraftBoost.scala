@@ -12,6 +12,8 @@ import org.apache.spark.ml.Model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.ForestScore
+
 /** Distributed gradient-boosted training/scoring — the Spark-native
   * restatement of the reference's `train`/`predict` dataflow
   * (reference `core.py:268-321` train facade, `core.py:324-382`
@@ -27,9 +29,11 @@ import org.apache.spark.sql.functions._
   * the reference's rank-0 booster (`core.py:126-131, 255-257`).
   *
   * Scale posture: training data should be cached by the caller for
-  * iterative boosting; scoring broadcasts the model once into a
-  * codegen'd `transform` (vs. the reference's per-task closure
-  * serialization, `core.py:367`).
+  * iterative boosting. A native forest scores in one codegen'd
+  * projection ([[graft.plans.ForestScore]]) straight from the feature
+  * columns, the model broadcast once (vs. the reference's per-task
+  * closure serialization, `core.py:367`); the MLlib and linear models
+  * score their assembled `features` vector.
   */
 object GraftBoost {
 
@@ -402,52 +406,10 @@ object GraftBoost {
       calibration: Option[Array[(Double, Double)]] = None
   )
 
-  /** Assemble named feature columns into a `features` vector —
-    * the `xgb.DMatrix` featurizer equivalence (`core.py:108`;
-    * feature-name capture `core.py:107` becomes ML attribute
-    * metadata on the vector column). Applies the missing-marker
-    * imputation if configured.
-    */
-  /** Learn per-feature means over non-marker values (the imputation
-    * statistics stored on the model for serve-time parity).
-    */
-  def learnImputation(
-      df: DataFrame,
-      featureCols: Seq[String],
-      marker: Double
-  ): Map[String, Double] = {
-    val means = df
-      .select(featureCols.map(c =>
-        avg(when(col(c) =!= marker, col(c))).as(c)): _*)
-      .first()
-    featureCols.zipWithIndex.map { case (c, i) =>
-      c -> Option(means.get(i)).map(_.toString.toDouble).getOrElse(0.0)
-    }.toMap
-  }
-
-  /** Learn per-feature out-of-range sentinels (missingStrategy =
-    * "sentinel"): a value strictly beyond the observed non-marker max,
-    * so tree splits can isolate missing rows as their own group.
-    */
-  def learnSentinels(
-      df: DataFrame,
-      featureCols: Seq[String],
-      marker: Double
-  ): Map[String, Double] = {
-    val maxes = df
-      .select(featureCols.map(c =>
-        max(when(col(c) =!= marker, col(c))).as(c)): _*)
-      .first()
-    featureCols.zipWithIndex.map { case (c, i) =>
-      val mx = Option(maxes.get(i)).map(_.toString.toDouble).getOrElse(0.0)
-      c -> (mx + 1.0 + math.abs(mx))
-    }.toMap
-  }
-
-  /** `base_margin` column with a loud null/NaN guard: the margin
-    * scoring UDFs take a primitive Double, so Spark's null handling
-    * would otherwise short-circuit to silent null predictions (and a
-    * null margin in TRAINING would silently null the gradient chain).
+  /** `base_margin` column with a loud null/NaN guard: the scoring
+    * expression reads a primitive double, so a null margin would
+    * otherwise score as a default value (and a null margin in
+    * TRAINING would silently null the gradient chain).
     */
   private[ml] def marginColumn(mc: String): Column = {
     val c = col(mc).cast("double")
@@ -457,32 +419,45 @@ object GraftBoost {
       .otherwise(c)
   }
 
+  /** A pre-assembled vector column (e.g. embeddings via
+    * array_to_vector) stands for the features as it is.
+    */
+  private def preAssembled(df: DataFrame, featureCols: Seq[String]): Boolean =
+    featureCols == Seq("features") &&
+      df.schema("features").dataType.typeName == "vector"
+
+  /** The feature columns with the missing marker replaced by the
+    * TRAINING-time value (column mean, out-of-range sentinel, or NaN
+    * for the native sparse path — learned/fixed at fit time and
+    * carried on the model for serve parity), for one projection. A NaN
+    * marker (ingested-gblinear stock serving: missing entry = zero
+    * contribution) needs the explicit isnan test — equality on NaN is
+    * Spark-special-cased but isnan states the intent.
+    */
+  private def imputed(featureCols: Seq[String],
+      imputation: Option[(Double, Map[String, Double])]): Map[String, Column] =
+    imputation match {
+      case None => Map.empty
+      case Some((marker, repl)) =>
+        featureCols.map { c =>
+          val isMissing = if (marker.isNaN) isnan(col(c)) else col(c) === marker
+          c -> when(isMissing, repl(c)).otherwise(col(c))
+        }.toMap
+    }
+
+  /** Assemble named feature columns into a `features` vector —
+    * the `xgb.DMatrix` featurizer equivalence (`core.py:108`;
+    * feature-name capture `core.py:107` becomes ML attribute
+    * metadata on the vector column). Applies the missing-marker
+    * imputation if configured.
+    */
   def assemble(
       df: DataFrame,
       featureCols: Seq[String],
       imputation: Option[(Double, Map[String, Double])],
       keepNaN: Boolean = false
   ): DataFrame = {
-    // Pre-assembled vector column (e.g. embeddings via
-    // array_to_vector) passes straight through.
-    if (featureCols == Seq("features") &&
-        df.schema("features").dataType.typeName == "vector")
-      return df
-    val cleaned = imputation match {
-      case None => df
-      case Some((marker, repl)) =>
-        // Replace the marker with the TRAINING-time replacement value
-        // (column mean, out-of-range sentinel, or NaN for the native
-        // sparse path — learned/fixed at fit time and carried on the
-        // model for serve parity). A NaN marker (ingested-gblinear
-        // stock serving: missing entry = zero contribution) needs the
-        // explicit isnan test — equality on NaN is Spark-special-cased
-        // but isnan states the intent.
-        featureCols.foldLeft(df) { case (d, c) =>
-          val isMissing = if (marker.isNaN) isnan(col(c)) else col(c) === marker
-          d.withColumn(c, when(isMissing, repl(c)).otherwise(col(c)))
-        }
-    }
+    if (preAssembled(df, featureCols)) return df
     new VectorAssembler()
       .setInputCols(featureCols.toArray)
       .setOutputCol("features")
@@ -490,7 +465,10 @@ object GraftBoost {
       // sparse-skip path; MLlib-backed paths keep the erroring
       // default so a stray NaN fails loudly instead of mistraining
       .setHandleInvalid(if (keepNaN) "keep" else "error")
-      .transform(cleaned)
+      .transform(imputed(featureCols, imputation) match {
+        case m if m.isEmpty => df
+        case m => df.withColumns(m)
+      })
   }
 
   /** Distributed training — `train(client, params, data, labels, …)`
@@ -563,16 +541,35 @@ object GraftBoost {
         "the MLlib-backed, linear, ranking and multiclass paths have " +
         "no margin-initialization hook")
     val sc = df.sparkSession.sparkContext
-    sc.setJobDescription("boost: missing-stats")
-    val imputation = params.missing.map { m =>
-      params.missingStrategy match {
-        case "sentinel" => (m, learnSentinels(df, featureCols, m))
-        // native: the marker becomes NaN and the sparse loop routes
-        // it along the learned default branch — nothing to learn here
-        case "native" => (m, featureCols.map(_ -> Double.NaN).toMap)
-        case _ => (m, learnImputation(df, featureCols, m))
+    // The fit's input statistics in one aggregate over the caller's
+    // frame: the row count (sizes the train fan-out below), per feature
+    // the mean (impute) or max (sentinel) of the non-marker values —
+    // stored on the model for serve-time parity — and the class count.
+    // native: the marker becomes NaN and the sparse loop routes it
+    // along the learned default branch — nothing to learn there
+    val sentinel = params.missingStrategy == "sentinel"
+    val stats = params.missing.filter(_ => !native).toSeq.flatMap { m =>
+      featureCols.map { c =>
+        val present = when(col(c) =!= m, col(c))
+        if (sentinel) max(present) else avg(present)
       }
     }
+    sc.setJobDescription("boost: input stats")
+    val row = df.select((count(lit(1)) +: stats) ++
+      (if (multiclass) Seq(max(col(labelCol).cast("double"))) else Nil): _*).head()
+    val imputation = params.missing.map { m =>
+      m -> featureCols.zipWithIndex.map { case (c, i) =>
+        if (native) c -> Double.NaN
+        else {
+          // 0.0 when every value of the column is the marker
+          val v = Option(row.get(i + 1)).map(_.toString.toDouble).getOrElse(0.0)
+          c -> (if (sentinel) v + 1.0 + math.abs(v) else v)
+        }
+      }.toMap
+    }
+    // Class inference = the reference's eager distributed distinct
+    // (`core.py:561-566`).
+    lazy val numClasses = row.getDouble(1 + stats.length).toInt + 1
     // Fan the training frame out BY NUMBER before the fit: a
     // single-row-group parquet source leaves every row in ONE task
     // regardless of split count (splits below row-group size are
@@ -585,10 +582,10 @@ object GraftBoost {
     // frame (softprob's 1.6k-row per-class loops) must NOT be split
     // 32 ways, or task-launch overhead × (rounds × levels × classes)
     // passes dominates (measured: 9.5s → 15s on ml_multiclass_softprob
-    // with an unconditional fan-out). The count() is one cheap scan —
-    // training then reads the frame rounds × levels times. Partition
-    // contents stay deterministic (sortBeforeRepartition), so the
-    // partition-index partial folds keep their bit-stability contract.
+    // with an unconditional fan-out). The count rides the input-stats
+    // aggregate above. Partition contents stay deterministic
+    // (sortBeforeRepartition), so the partition-index partial folds
+    // keep their bit-stability contract.
     // Project to EXACTLY the columns training reads before anything is
     // shuffled or stored: VectorAssembler keeps its raw inputs (and
     // whatever else rides the frame — text payloads on the text
@@ -602,16 +599,12 @@ object GraftBoost {
     val assembled = assemble(df, featureCols, imputation, keepNaN = native)
       .withColumn("label", col(labelCol).cast("double"))
       .select(trainCols: _*)
-    val trainParts = {
-      sc.setJobDescription("boost: input count")
-      val n = assembled.count()
-      math.min(sc.defaultParallelism.toLong,
-        math.max(1L, n / TrainRowsPerTask)).toInt
-    }
+    val trainParts = math.min(sc.defaultParallelism.toLong,
+      math.max(1L, row.getLong(0) / TrainRowsPerTask)).toInt
     // Materialize the (repartitioned, slim) training frame ONCE before
-    // the fit. Without this every pre-round action — the numFeat
-    // head(), the proposeEdges quantile pass, the base-score mean, the
-    // round-0 margin checkpoint, MLlib's own input cache fill —
+    // the fit. Without this every pre-round action — the proposeEdges
+    // quantile pass, the base-score mean, the round-0 margin
+    // checkpoint, MLlib's own input cache fill —
     // re-executes the assemble pipeline AND the fan-out shuffle from
     // the source (3-4 redundant executions per fit; worse when the
     // source is a single-row-group parquet whose scan is one serial
@@ -672,24 +665,21 @@ object GraftBoost {
           "ranking objectives take no weightCol: their pair gradients " +
           "are per group, and a per-row weight has no place in them")
       }
-      // Class inference = the reference's eager distributed distinct
-      // (`core.py:561-566`).
-      sc.setJobDescription("boost: class-count")
-      val numClasses =
-        if (softprob) data.select(max(col("label"))).first().getDouble(0).toInt + 1
+      val classes =
+        if (softprob) numClasses
         else if (params.objective == "binary:logistic") 2
         else 0
-      val objective = Objective(params, numClasses)
+      val objective = Objective(params, classes)
       val fit = SparseBoost.train(
         if (ranking) data.withColumn("group", col(groupCol.get)) else data,
         params, objective, weightCol, marginCol)
       val model: Model[_] =
         if (softprob) // round-major: round r's K class trees follow round r−1's
           new MultiSparse.MultiSparseModel(s"softprob_${params.seed}", fit.trees,
-            Array.tabulate(fit.trees.length)(i => i / params.numParallelTree % numClasses),
-            numClasses, fit.base, objective.name, fit.stats)
+            Array.tabulate(fit.trees.length)(i => i / params.numParallelTree % classes),
+            classes, fit.base, objective.name, fit.stats)
         else fit.sparseModel(s"${if (ranking) "rank" else "sparse"}_${params.seed}", params)
-      return GraftBoostModel(model, featureCols, params.objective, numClasses,
+      return GraftBoostModel(model, featureCols, params.objective, classes,
         Map("train" -> Map(objective.metricName -> fit.history)), imputation,
         params.missingStrategy)
     }
@@ -741,9 +731,6 @@ object GraftBoost {
         require(!native,
           "missingStrategy=\"native\" trains multiclass only as " +
           "multiclassStrategy=\"softprob\"")
-        // Class inference = the reference's eager distributed distinct
-        // (`core.py:561-566`).
-        val numClasses = data.select(max(col("label"))).first().getDouble(0).toInt + 1
         val model: Model[_] = params.multiclassStrategy match {
           case "rf" =>
             require(validationCol.isEmpty,
@@ -795,29 +782,24 @@ object GraftBoost {
         */
       marginCol: Option[String] = None
   ): DataFrame = {
+    model.model match {
+      case _: SparseBoost.SparseModel =>
+        return scoreNative(model, df, "prediction", marginCol)
+      case _: MultiSparse.MultiSparseModel if marginCol.isEmpty =>
+        return scoreNative(model, df, "prediction", None)
+      case other if marginCol.isDefined => throw new IllegalArgumentException(
+        "per-row base_margin scoring is supported on native sparse " +
+        s"forests only, not ${other.getClass.getSimpleName}")
+      case _ =>
+    }
     val data = assemble(df, model.featureCols, model.imputation,
       keepNaN = model.missingStrategy == "native")
-    marginCol.foreach { mc =>
-      val m = model.model match {
-        case sm: SparseBoost.SparseModel => sm
-        case other => throw new IllegalArgumentException(
-          "per-row base_margin scoring is supported on native sparse " +
-          s"forests only, not ${other.getClass.getSimpleName}")
-      }
-      val bc = data.sparkSession.sparkContext.broadcast(m)
-      val pU = udf((v: Vector, bm: Double) => bc.value.predictOne(v, bm))
-      return data
-        .withColumn("prediction", pU(col("features"), marginColumn(mc)))
-        .drop("features")
-    }
     val scored = model.model match {
-      case m: SparseBoost.SparseModel     => m.transform(data)
       case m: LinearBoost.LinearModel     => m.transform(data)
       case m: GBTRegressionModel         => m.transform(data)
       case m: GBTClassificationModel     => m.transform(data)
       case m: RandomForestClassificationModel => m.transform(data)
       case m: OneVsRestModel             => m.transform(data)
-      case m: MultiSparse.MultiSparseModel => m.transform(data).drop("margins")
       case m => throw new IllegalStateException(s"unknown model ${m.getClass}")
     }
     scored.drop("features", "rawPrediction", "probability")
@@ -836,33 +818,22 @@ object GraftBoost {
         */
       marginCol: Option[String] = None
   ): DataFrame = {
-    val data = assemble(df, model.featureCols, model.imputation,
-      keepNaN = model.missingStrategy == "native")
-    marginCol.foreach { mc =>
-      val m = model.model match {
-        case sm: SparseBoost.SparseModel if sm.objective == "binary:logistic" => sm
-        case other => throw new IllegalArgumentException(
-          "per-row base_margin probabilities are supported on binary " +
-          s"native sparse forests only, not ${other.getClass.getSimpleName}")
-      }
-      val bc = data.sparkSession.sparkContext.broadcast(m)
-      val pU = udf((v: Vector, bm: Double) => {
-        val p = 1.0 / (1.0 + math.exp(-bc.value.marginWithBase(v, bm)))
-        Array(1.0 - p, p)
-      })
-      return data
-        .withColumn("proba", pU(col("features"), marginColumn(mc)))
-        .drop("features")
-    }
     model.model match {
       case m: SparseBoost.SparseModel if m.objective == "binary:logistic" =>
         // sigmoid of the boosted margin — the XGBoost binary proba
-        val bc = data.sparkSession.sparkContext.broadcast(m)
-        val pU = udf((v: Vector) => {
-          val p = bc.value.probOf(v)
-          Array(1.0 - p, p)
-        })
-        data.withColumn("proba", pU(col("features"))).drop("features")
+        return scoreNative(model, df, "proba", marginCol)
+      case _: MultiSparse.MultiSparseModel if marginCol.isEmpty =>
+        // TRUE multi:softprob probabilities: softmax of the jointly
+        // boosted margins — not an OvR renormalization
+        return scoreNative(model, df, "proba", None)
+      case other if marginCol.isDefined => throw new IllegalArgumentException(
+        "per-row base_margin probabilities are supported on binary " +
+        s"native sparse forests only, not ${other.getClass.getSimpleName}")
+      case _ =>
+    }
+    val data = assemble(df, model.featureCols, model.imputation,
+      keepNaN = model.missingStrategy == "native")
+    model.model match {
       case m: LinearBoost.LinearModel if m.objective == "binary:logistic" =>
         val bc = data.sparkSession.sparkContext.broadcast(m)
         val pU = udf((v: Vector) => {
@@ -870,7 +841,6 @@ object GraftBoost {
           Array(1.0 - p, p)
         })
         data.withColumn("proba", pU(col("features"))).drop("features")
-      case m: MultiSparse.MultiSparseModel => softmaxProba(m.transform(data))
       case m: ProbabilisticClassificationModel[_, _] =>
         m.transform(data)
           .withColumn("proba", vector_to_array(col("probability")))
@@ -908,17 +878,22 @@ object GraftBoost {
     }
   }
 
-  /** TRUE multi:softprob probabilities: softmax of the jointly
-    * boosted margins — not an OvR renormalization. exp array and
-    * sum materialized before the normalizing lambda (HOF rule).
+  /** A native forest's `output` in one projection: the caller's
+    * columns (named feature columns imputed, as [[assemble]] leaves
+    * them; a pre-assembled `features` vector dropped), then the score.
     */
-  private def softmaxProba(withMargins: DataFrame): DataFrame =
-    withMargins
-      .withColumn("ex", transform(col("margins"),
-        x => exp(x - array_max(col("margins")))))
-      .withColumn("exs", aggregate(col("ex"), lit(0.0), (a, y) => a + y))
-      .withColumn("proba", transform(col("ex"), x => x / col("exs")))
-      .drop("features", "margins", "ex", "exs")
+  private def scoreNative(model: GraftBoostModel, df: DataFrame, output: String,
+      marginCol: Option[String]): DataFrame = {
+    val bm = marginCol.map(marginColumn)
+    if (preAssembled(df, model.featureCols))
+      df.withColumn(output, ForestScore.overVector(df.sparkSession, model.model, output,
+        col("features"), bm)).drop("features")
+    else
+      df.withColumns(imputed(model.featureCols, model.imputation) +
+        (output -> ForestScore.overColumns(df.sparkSession, model.model, output,
+          model.featureCols, model.imputation,
+          keepNaN = model.missingStrategy == "native", bm)))
+  }
 
   /** Deterministic (train, calibration) split for [[calibrate]]:
     * rows are bucketed by a content hash over every column, so the

@@ -1240,7 +1240,8 @@ object MLQueries {
         }
         var margin = c.base
         var r = 0
-        while (r < c.trees.length) { margin += c.trees(r).valueOf(v); r += 1 }
+        val x = v.toArray
+        while (r < c.trees.length) { margin += c.trees(r).valueOf(x); r += 1 }
         (sym, math.abs(b + c.base + tot - margin), diag, off)
       })
       val out = GraftBoost.assemble(df, feats, model.imputation,
@@ -1320,9 +1321,10 @@ object MLQueries {
         val mSum = b.marginOf(v)
         val de = mAvg - y
         var mem = 0.0
+        val x = v.toArray
         var i = 0
         while (i < a.trees.length) {
-          val d = a.base + T * a.trees(i).valueOf(v) - y
+          val d = a.base + T * a.trees(i).valueOf(x) - y
           mem += d * d
           i += 1
         }

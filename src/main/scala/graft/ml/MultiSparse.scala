@@ -72,14 +72,15 @@ object MultiSparse {
       * order, so each class sums its rounds in the order
       * the boosting round loop accumulated its training margins.
       */
-    def marginsOf(v: Vector): Array[Double] = {
+    def marginsOf(x: Array[Double]): Array[Double] = {
       val m = Array.fill(numClasses)(base)
       var i = 0
       while (i < trees.length) {
-        m(treeInfo(i)) += trees(i).valueOf(v); i += 1
+        m(treeInfo(i)) += trees(i).valueOf(x); i += 1
       }
       m
     }
+    def marginsOf(v: Vector): Array[Double] = marginsOf(v.toArray)
 
     /** Softmax probabilities (max-shifted) for one feature vector. */
     def probaOf(v: Vector): Array[Double] = softmaxInPlace(marginsOf(v))
@@ -106,14 +107,12 @@ object MultiSparse {
       * argmax class id with ties breaking to the LOWEST class
       * (array_position finds the first maximum).
       */
-    override def transform(ds: Dataset[_]): DataFrame = {
-      val bc = ds.sparkSession.sparkContext.broadcast(this)
-      val mU = udf((v: Vector) => bc.value.marginsOf(v))
-      ds.withColumn("margins", mU(col("features")))
+    override def transform(ds: Dataset[_]): DataFrame =
+      ds.withColumn("margins", graft.plans.ForestScore.overVector(ds.sparkSession,
+          this, "margins", col("features"), None))
         .withColumn("prediction",
           (array_position(col("margins"), array_max(col("margins"))) - 1L)
             .cast(DoubleType))
-    }
 
     /** Boosting rounds of the plain round-major layout (tree i ->
       * class i mod K); refuses an irregular tree_info, which has no
@@ -150,11 +149,12 @@ object MultiSparse {
       val bc = df.sparkSession.sparkContext.broadcast(this)
       val perRound = udf((v: Vector, label: Double) => {
         val m = bc.value
+        val x = v.toArray
         val f = Array.fill(K)(m.base)
         val li = label.toInt
         (0 until rounds).map { r =>
           var k = 0
-          while (k < K) { f(k) += m.trees(r * K + k).valueOf(v); k += 1 }
+          while (k < K) { f(k) += m.trees(r * K + k).valueOf(x); k += 1 }
           val p = softmaxInPlace(f.clone())
           var am = 0; k = 1
           while (k < K) { if (f(k) > f(am)) am = k; k += 1 }

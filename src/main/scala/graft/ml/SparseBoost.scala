@@ -3,9 +3,10 @@ package graft.ml
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{GraftRddBridge, HashPartitioner}
 import org.apache.spark.ml.Model
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.attribute.AttributeGroup
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
@@ -134,21 +135,24 @@ object SparseBoost {
   ) extends Serializable {
     def hasCategorical: Boolean = cats != null
 
-    def leafOf(v: Vector): Int = {
+    /** The one routing rule, over a row's feature cells. */
+    def leafOf(x: Array[Double]): Int = {
       var i = 0
       while (feature(i) >= 0) {
-        val x = v(feature(i))
-        i = if (java.lang.Double.isNaN(x)) { if (defaultLeft(i)) left(i) else right(i) }
+        val xi = x(feature(i))
+        i = if (java.lang.Double.isNaN(xi)) { if (defaultLeft(i)) left(i) else right(i) }
           else if (cats != null && cats(i) != null) {
             // set-membership routing (stored set = right-goers);
             // AsCat truncation + InvalidCat→left, like stock
-            if (x >= 0.0 && contains(cats(i), x.toInt)) right(i) else left(i)
+            if (xi >= 0.0 && contains(cats(i), xi.toInt)) right(i) else left(i)
           }
-          else if (x <= thresh(i)) left(i) else right(i)
+          else if (xi <= thresh(i)) left(i) else right(i)
       }
       i
     }
-    def valueOf(v: Vector): Double = value(leafOf(v))
+    def leafOf(v: Vector): Int = leafOf(v.toArray)
+    def valueOf(x: Array[Double]): Double = value(leafOf(x))
+    def valueOf(v: Vector): Double = valueOf(v.toArray)
 
     private def contains(set: Array[Int], c: Int): Boolean = {
       var k = 0
@@ -226,21 +230,24 @@ object SparseBoost {
     override def transformSchema(schema: StructType): StructType =
       schema.add(StructField("prediction", DoubleType))
 
-    def marginOf(v: Vector): Double = {
+    /** base + Σ tree values, summed in tree order. */
+    def marginOf(x: Array[Double]): Double = {
       var f = base
       var r = 0
-      while (r < trees.length) { f += trees(r).valueOf(v); r += 1 }
+      while (r < trees.length) { f += trees(r).valueOf(x); r += 1 }
       f
     }
+    def marginOf(v: Vector): Double = marginOf(v.toArray)
 
-    def probOf(v: Vector): Double = 1.0 / (1.0 + math.exp(-marginOf(v)))
+    /** binary:logistic's probability of a margin. */
+    def probOfMargin(f: Double): Double = 1.0 / (1.0 + math.exp(-f))
 
     /** Response-scale value of a margin — the objective's inverse
       * link. count:* covers both a trained `count:poisson` forest and
       * any XgbJson-ingested count document; without that arm either
       * would silently emit log-rates instead of counts.
       */
-    private[ml] def link(f: Double): Double = objective match {
+    def link(f: Double): Double = objective match {
       case "binary:logistic" => if (f > 0.0) 1.0 else 0.0
       case "reg:gamma" | "reg:tweedie" => math.exp(f)
       case o if o.startsWith("count:") => math.exp(f)
@@ -254,17 +261,12 @@ object SparseBoost {
       * not added on top (`DMatrix(base_margin=...)` makes base_score
       * unused).
       */
-    def marginWithBase(v: Vector, baseMargin: Double): Double =
-      marginOf(v) - base + baseMargin
+    def marginWithBase(x: Array[Double], baseMargin: Double): Double =
+      marginOf(x) - base + baseMargin
 
-    def predictOne(v: Vector, baseMargin: Double): Double =
-      link(marginWithBase(v, baseMargin))
-
-    override def transform(ds: Dataset[_]): DataFrame = {
-      val bc = ds.sparkSession.sparkContext.broadcast(this)
-      val pU = udf((v: Vector) => bc.value.predictOne(v))
-      ds.withColumn("prediction", pU(col("features")))
-    }
+    override def transform(ds: Dataset[_]): DataFrame =
+      ds.withColumn("prediction", graft.plans.ForestScore.overVector(ds.sparkSession,
+        this, "prediction", col("features"), None))
 
     /** Truncated copy keeping the first `rounds` BOOSTING ROUNDS —
       * i.e. `rounds · treesPerRound` trees, so a parallel-tree forest
@@ -1271,7 +1273,12 @@ object SparseBoost {
 
     val sc = data.sparkSession.sparkContext
     sc.setJobDescription("boost: propose-edges")
-    val numFeat = src.select(col("features")).head().getAs[Vector](0).size
+    // VectorAssembler records the width; only a vector of unknown size
+    // (array_to_vector, a caller's own column) needs a row to read it
+    val numFeat = AttributeGroup.fromStructField(src.schema("features")).size match {
+      case -1 => src.select(col("features")).head().getAs[Vector](0).size
+      case n => n
+    }
     val laid = objective.layout(src)
     val names = laid.columns
     val (wIx, bmIx, gIx) = (names.indexOf("graft_w"), names.indexOf("graft_bm"),
@@ -1457,9 +1464,8 @@ object SparseBoost {
         val s =
           if (dropTrees.isEmpty) null
           else Array.tabulate(b.n) { i =>
-            val v = Vectors.dense(b.raw(i))
             var acc = 0.0
-            dropTrees.foreach(t => acc += t.valueOf(v))
+            dropTrees.foreach(t => acc += t.valueOf(b.raw(i)))
             acc
           }
         val (g, h) =
@@ -1469,10 +1475,10 @@ object SparseBoost {
       }.localCheckpoint()
       hist += objective.loss(PartialFold.sum(next.map(_.loss), 2))
       grown.unpersist(false)
-      state.unpersist(false)
+      GraftRddBridge.release(state)
       state = next
     }
-    state.unpersist(false)
+    GraftRddBridge.release(state)
     Fit(forest.toArray, base, roundAccs.toSeq,
       ImportanceAcc.sum(roundAccs.toSeq, numFeat), hist.toArray, anyDartRescale)
   }

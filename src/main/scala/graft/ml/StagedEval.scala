@@ -75,9 +75,10 @@ object StagedEval {
         // fractional rounds and mis-place best_iteration)
         (m.base, m.trees.grouped(m.treesPerRound).map { group =>
           (v: Vector) => {
+            val x = v.toArray
             var acc = 0.0
             var i = 0
-            while (i < group.length) { acc += group(i).valueOf(v); i += 1 }
+            while (i < group.length) { acc += group(i).valueOf(x); i += 1 }
             acc
           }
         }.toArray)

@@ -4,12 +4,20 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml._
 import graft.ml.GraftBoost._
+import graft.plans.ForestScore
 
 /** How many Spark jobs a boosting fit runs, read from its
   * `boost: <phase>` job descriptions: a depthwise round is one job per
@@ -85,5 +93,54 @@ class BoostJobsSpec extends AnyFunSuite {
     val sampled = round2(jobsOf(GraftBoost.train(df, feats, "y",
       native.copy(subsample = 0.8))))
     assert(sampled.size <= full.size, s"subsample 0.8: $sampled; 1.0: $full")
+  }
+
+  test("a softprob impute fit learns its input statistics in one aggregate") {
+    val jobs = jobsOf(GraftBoost.train(df, feats, "cls",
+      BoostParams("multi:softprob", numRound = 2, maxDepth = 3, eta = 0.3,
+        missing = Some(-999.0), multiclassStrategy = "softprob")))
+    val before = jobs.takeWhile(!_.startsWith("boost: r1 "))
+    assert(Seq("boost: missing-stats", "boost: input count", "boost: class-count")
+      .forall(p => !jobs.contains(p)), jobs.distinct)
+    assert(jobs.contains("boost: input stats"), jobs.distinct)
+    assert(before.size <= 5, s"${before.size} jobs before round 1: $before")
+  }
+
+  test("a native fit reads its feature count from the assembled column") {
+    val jobs = jobsOf(GraftBoost.train(df, feats, "y", native))
+    // the exact edges are one keyed shuffle job; a row probe would be a second
+    assert(jobs.count(_ == "boost: propose-edges") == 1, jobs)
+  }
+
+  test("predictProba of a native forest is one codegen'd projection, one job") {
+    val m = GraftBoost.train(df, feats, "y", native)
+    val frame = spark.range(5000).select(col("id"),
+      (col("id") % 20).cast("double").as("x1"),
+      when(col("id") % 7 === 0, lit(-999.0)).otherwise((col("id") * 13 % 17).cast("double"))
+        .as("x2"),
+      (col("id") * 7 % 11).cast("double").as("x3"))
+    val scored = GraftBoost.predictProba(m, frame)
+    val plan = scored.queryExecution.executedPlan
+    val fused = plan.collect { case w: WholeStageCodegenExec => w }
+      .exists(_.exists(_.expressions.exists(_.exists(_.isInstanceOf[ForestScore]))))
+    assert(fused, plan.toString)
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))), plan.toString)
+    val jobs = jobsOf(scored.write.format("noop").mode("overwrite").save())
+    assert(jobs.size == 1, jobs)
+  }
+
+  test("a fit releases its checkpointed round states without a warning") {
+    val logged = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("boost-jobs-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(capture)
+    try GraftBoost.train(df, feats, "y", native)
+    finally { root.removeAppender(capture); capture.stop() }
+    val warned = logged.asScala.filter(_.contains("was locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
   }
 }
