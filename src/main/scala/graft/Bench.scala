@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry: times every registered query at the target scale
   * factor and prints one JSON metrics line.
   *
@@ -13,21 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split small files down to ~bytes/parallelism (see GraftSession
-      // scaladoc: default 4 MB open-cost floor single-tasks the
-      // bench-scale scans; inert at 100 TB where maxPartitionBytes binds)
-      .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(Knobs.envInt("SPARK_GRAFT_CPUS", 32), "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     def materialize(name: String, dir: String): Unit = {
@@ -68,7 +52,7 @@ object Bench {
     // MINIMUM — the run-to-run variance killer for round-over-round
     // comparisons (the ML group alone swings ±5s at sf0.1). The
     // driver never sets it, so graded runs stay single-pass.
-    val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1)
+    val repeat = Knobs.envInt("SPARK_GRAFT_REPEAT", 1)
     val selected = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.contains)))
     def timed(run: () => Unit, label: String): Double = {

@@ -22,13 +22,21 @@ object Knobs {
       min: Long = 1L, max: Long = Long.MaxValue): Long = {
     val set = sys.props.get(prop).map(prop -> _)
       .orElse(env.flatMap(e => sys.env.get(e).map(e -> _)))
-    set.fold(default) { case (name, raw) =>
-      val v = raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"knob $name must be an integer, got '$raw'"))
-      require(v >= min && v <= max,
-        s"knob $name must be in [$min, $max], got $v")
-      v
-    }
+    set.fold(default) { case (name, raw) => parse(name, raw, min, max) }
+  }
+
+  /** An Int knob read from the environment variable `env` alone (the
+    * dev mains' `SPARK_GRAFT_*` settings), checked as [[long]] does.
+    */
+  def envInt(env: String, default: Int, min: Int = 1): Int =
+    sys.env.get(env).fold(default)(parse(env, _, min.toLong, Int.MaxValue.toLong).toInt)
+
+  private def parse(name: String, raw: String, min: Long, max: Long): Long = {
+    val v = raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"knob $name must be an integer, got '$raw'"))
+    require(v >= min && v <= max,
+      s"knob $name must be in [$min, $max], got $v")
+    v
   }
 
   /** [[long]] for knobs that size an Int quantity. */

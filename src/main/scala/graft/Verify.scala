@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,18 +13,7 @@ object Verify {
     // oracle gate must exercise the partition layouts the driver sees,
     // or config-dependent flakes hide (the round-8 red row passed at
     // the old 4-CPU default and failed only at 32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench/GraftSession's small-file splitting so the oracle
-      // gate exercises the same multi-partition plans (esp. float-sum
-      // partial orders) the bench runs — not a 1-split special case
-      .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(Knobs.envInt("SPARK_GRAFT_CPUS", 32), "graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,11 +1,6 @@
 package graft.ml
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.regression.GBTRegressionModel
-import org.apache.spark.ml.tree.{ContinuousSplit, InternalNode, LeafNode, Node}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,7 +10,7 @@ import org.apache.spark.sql.functions._
   * `child.prediction − node.prediction` of expected value, attributed
   * to the split feature, so
   *
-  *   margin(x) = Σ_m w_m·root_m.prediction  (bias)
+  *   margin(x) = base + Σ_m root_m.prediction  (bias)
   *             + Σ_features contrib_f(x)          — EXACTLY.
   *
   * This extends the reference's global `feature_importances_` surface
@@ -34,8 +29,7 @@ object Contributions {
     * a scorer's leaf-only walk, internal predictions matter here —
     * they are what the path deltas difference). Leaf iff
     * `feature(i) < 0`; else `x(feature(i)) ≤ thresh(i)` goes left,
-    * and a NaN feature follows `defaultLeft(i)` (native sparse
-    * forests; MLlib GBT never sees NaN, its flag array is all-false).
+    * and a NaN feature follows `defaultLeft(i)`.
     */
   final case class CTree(
       feature: Array[Int],
@@ -46,69 +40,35 @@ object Contributions {
       defaultLeft: Array[Boolean]
   ) extends Serializable
 
-  private[ml] def flatten(root: Node): CTree = {
-    val feature = ArrayBuffer.empty[Int]
-    val thresh = ArrayBuffer.empty[Double]
-    val left = ArrayBuffer.empty[Int]
-    val right = ArrayBuffer.empty[Int]
-    val pred = ArrayBuffer.empty[Double]
-    def walk(n: Node): Int = {
-      val id = feature.length
-      feature += -1; thresh += 0.0; left += -1; right += -1; pred += n.prediction
-      n match {
-        case _: LeafNode => ()
-        case in: InternalNode =>
-          val s = in.split match {
-            case c: ContinuousSplit => c
-            case other => throw new IllegalStateException(
-              s"unexpected categorical split: $other")
-          }
-          feature(id) = s.featureIndex
-          thresh(id) = s.threshold
-          left(id) = walk(in.leftChild)
-          right(id) = walk(in.rightChild)
-      }
-      id
-    }
-    walk(root)
-    CTree(feature.toArray, thresh.toArray, left.toArray, right.toArray,
-      pred.toArray, new Array[Boolean](feature.length))
-  }
-
-  /** The forest as (flattened tree, weight) pairs. A native sparse
-    * forest maps directly: every node carries its η-scaled Newton
-    * estimate (leaves the final fenced weight), and the learned
-    * default directions ride along so MISSING values attribute to the
-    * feature whose default branch routed them — XGBoost pred_contribs
-    * semantics.
+  /** The forest's flattened trees. A native sparse forest maps
+    * directly: every node carries its η-scaled Newton estimate (leaves
+    * the final fenced weight), and the learned default directions ride
+    * along so MISSING values attribute to the feature whose default
+    * branch routed them — XGBoost pred_contribs semantics.
     */
-  private[ml] def forestOf(model: GraftBoost.GraftBoostModel): Array[(CTree, Double)] =
+  private[ml] def forestOf(model: GraftBoost.GraftBoostModel): Array[CTree] =
     model.model match {
-      case m: GBTRegressionModel =>
-        m.trees.map(t => flatten(t.rootNode)).zip(m.treeWeights)
-      case m: GBTClassificationModel =>
-        m.trees.map(t => flatten(t.rootNode)).zip(m.treeWeights)
       case m: SparseBoost.SparseModel =>
         require(!m.trees.exists(_.hasCategorical),
           "Saabas contributions on a forest with categorical " +
           "(set-membership) splits are not supported: the walk is " +
           "numeric-threshold only")
-        m.trees.map(t => (CTree(t.feature, t.thresh, t.left, t.right,
-          t.value, t.defaultLeft), 1.0))
+        m.trees.map(t => CTree(t.feature, t.thresh, t.left, t.right,
+          t.value, t.defaultLeft))
       case m => throw new UnsupportedOperationException(
-        s"feature contributions need a GBT or native sparse forest, got ${m.getClass}")
+        s"feature contributions need a native sparse forest, got ${m.getClass}")
     }
 
   /** One row's decomposition: (bias, per-feature contributions). */
   private[ml] def contribsOne(
-      forest: Array[(CTree, Double)], numFeatures: Int, v: Vector
+      forest: Array[CTree], numFeatures: Int, v: Vector
   ): (Double, Array[Double]) = {
     var bias = 0.0
     val out = new Array[Double](numFeatures)
     var m = 0
     while (m < forest.length) {
-      val (t, w) = forest(m)
-      bias += w * t.pred(0)
+      val t = forest(m)
+      bias += t.pred(0)
       var i = 0
       while (t.feature(i) >= 0) {
         val x = v(t.feature(i))
@@ -116,7 +76,7 @@ object Contributions {
           if (java.lang.Double.isNaN(x)) {
             if (t.defaultLeft(i)) t.left(i) else t.right(i)
           } else if (x <= t.thresh(i)) t.left(i) else t.right(i)
-        out(t.feature(i)) += w * (t.pred(next) - t.pred(i))
+        out(t.feature(i)) += t.pred(next) - t.pred(i)
         i = next
       }
       m += 1
@@ -136,15 +96,12 @@ object Contributions {
     val nf = model.featureCols.length match {
       // pre-assembled vector column: take the width from the model
       case 1 if model.featureCols == Seq("features") =>
-        forest.map { case (t, _) => if (t.feature(0) >= 0) t.feature.max + 1 else 1 }.max
+        forest.map(t => if (t.feature(0) >= 0) t.feature.max + 1 else 1).max
       case n => n
     }
-    // the native booster's margin includes an explicit base score;
-    // fold it into the bias so additivity reproduces the margin
-    val baseOffset = model.model match {
-      case m: SparseBoost.SparseModel => m.base
-      case _ => 0.0
-    }
+    // the margin includes the booster's base score; fold it into the
+    // bias so additivity reproduces the margin
+    val baseOffset = model.model.asInstanceOf[SparseBoost.SparseModel].base
     val data = GraftBoost.assemble(df, model.featureCols, model.imputation,
       keepNaN = model.missingStrategy == "native")
     val bc = data.sparkSession.sparkContext.broadcast(forest)

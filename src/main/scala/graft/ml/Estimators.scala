@@ -68,9 +68,9 @@ sealed abstract class GraftEstimator[Self <: GraftEstimator[Self]] { self: Self 
   var bestIteration: Option[Int] = None
   /** Metric value at [[bestIteration]] (`best_score`). */
   var bestScore: Option[Double] = None
-  /** Total boosting rounds actually trained by the last early-stopped
-    * fit across its doubling chunks — the cost early stopping saved
-    * versus nEstimators. */
+  /** Boosting rounds the last early-stopped fit trained before its
+    * metric stalled — the cost early stopping saved versus
+    * nEstimators. */
   var roundsTrained: Option[Int] = None
 
   protected def recordEarlyStop(
@@ -96,13 +96,13 @@ sealed abstract class GraftEstimator[Self <: GraftEstimator[Self]] { self: Self 
     missingStrat = s; this
   }
   def setSeed(s: Long): Self = { seed = s; this }
-  /** MLlib histogram bins per feature (see BoostParams.maxBins). */
+  /** Histogram bins per feature (see BoostParams.maxBins). */
   def setMaxBins(b: Int): Self = { maxBins = b; this }
   /** Per-row `base_margin` column (reference `dmatrix_kwargs`,
     * `core.py:143-147`): fit starts each row's boosting recursion from
     * this margin instead of the scalar base, and predict scores from
-    * it — stock semantics (base_score unused when supplied). Native
-    * sparse loop only (missingStrategy="native" or gamma/tweedie).
+    * it — stock semantics (base_score unused when supplied). Per-row
+    * objectives only (not multiclass).
     */
   def setBaseMarginCol(c: String): Self = { baseMarginCol = Some(c); this }
   protected var baseMarginCol: Option[String] = None
@@ -180,8 +180,10 @@ final class GraftXGBRegressor extends GraftEstimator[GraftXGBRegressor] {
     * maps an eval-set name to its weight column
     * (`sample_weight_eval_set`, `core.py:138-151`; package positional
     * sets with [[Estimators.packageEvals]]) — weighted sets get a
-    * staged weighted-rmse history, unweighted ones MLlib's
-    * squared-error history.
+    * staged weighted-rmse history, unweighted ones the per-round mean
+    * squared error (`squarederror`), both from one staged pass
+    * ([[StagedEval.history]]). `earlyStoppingValidation` rows ride the
+    * fit and stop it once their rmse has not improved for a round.
     */
   def fit(
       df: DataFrame,
@@ -207,14 +209,13 @@ final class GraftXGBRegressor extends GraftEstimator[GraftXGBRegressor] {
       "trees with margin-less metrics — drop one of the two")
     model = Some(GraftBoost.train(data, featureCols, labelCol, params,
       weightCol, valCol, marginCol = baseMarginCol))
-    if (evalSets.nonEmpty) {
-      val (weighted, plain) = evalSets.partition { case (n, _) => evalWeights.contains(n) }
-      evalsResult = GraftBoost.evalHistory(fitted, plain, labelCol) ++
-        weighted.map { case (n, d) =>
-          n -> Map("rmse" ->
-            StagedEval.history(fitted, d, labelCol, "rmse", evalWeights.get(n)))
-        }
-    }
+    if (evalSets.nonEmpty)
+      evalsResult = evalSets.map { case (n, d) =>
+        val w = evalWeights.get(n)
+        val rmse = StagedEval.history(fitted, d, labelCol, "rmse", w)
+        n -> (if (w.isDefined) Map("rmse" -> rmse)
+          else Map("squarederror" -> rmse.map(r => r * r)))
+      }
     this
   }
 
@@ -225,8 +226,8 @@ final class GraftXGBRegressor extends GraftEstimator[GraftXGBRegressor] {
     GraftBoost.predict(fitted, df, baseMarginCol)
 
   /** Arbitrary-metric in-fit early stopping (`early_stopping_rounds` +
-    * `eval_metric`, `core.py:435-449`): trains in doubling chunks via
-    * [[StagedEval.fitWithEarlyStopping]], stops once `metric` (rmse
+    * `eval_metric`, `core.py:435-449`): one fit via
+    * [[StagedEval.fitWithEarlyStopping]] that stops once `metric` (rmse
     * here) stalls for `earlyStoppingRounds` rounds on `validation`,
     * and keeps the model truncated at its best round. Sets
     * [[bestIteration]]/[[bestScore]]/[[roundsTrained]]/[[evalsResult]].
@@ -327,49 +328,29 @@ final class GraftXGBClassifier extends GraftEstimator[GraftXGBClassifier] {
     model = Some(GraftBoost.train(data, featureCols, labelCol, params,
       weightCol, valCol, marginCol = baseMarginCol))
     if (evalSets.nonEmpty) {
-      if (effective == "binary:logistic") {
-        // weighted sets (`sample_weight_eval_set`) go through the
-        // staged weighted-logloss path; unweighted keep MLlib's
-        // per-iteration logloss
-        val (weighted, plain) = evalSets.partition { case (n, _) => evalWeights.contains(n) }
-        evalsResult = GraftBoost.evalHistory(fitted, plain, labelCol) ++
-          weighted.map { case (n, d) =>
-            n -> Map("logloss" ->
-              StagedEval.history(fitted, d, labelCol, "logloss", evalWeights.get(n)))
-          }
-      } else {
-        // multiclass history via staged OvR margins (reference
-        // `multi:softprob` evals_result, `core.py:120, 580-590`);
-        // RandomForest has no per-round structure — fail loudly
-        // rather than silently dropping the caller's eval sets
-        require(multiclassStrategy != "rf",
-          "eval-set history needs per-round models (multiclassStrategy=ovr " +
-          "or softprob); RandomForest multiclass has no boosting rounds")
-        evalsResult = fitted.model match {
-          case mm: MultiSparse.MultiSparseModel =>
-            // true softprob: one staged walk of the joint forest
-            evalSets.map { case (name, d) =>
-              val data = GraftBoost.assemble(
-                d.withColumn("label", col(labelCol).cast("double")),
-                featureCols, fitted.imputation)
-              name -> mm.stagedEval(data, evalWeights.get(name))
-            }
-          case _ =>
-            evalSets.map { case (name, d) =>
-              val w = evalWeights.get(name)
-              name -> Map(
-                "mlogloss" -> StagedEval.history(fitted, d, labelCol, "mlogloss", w),
-                "merror"   -> StagedEval.history(fitted, d, labelCol, "merror", w))
-            }
-        }
+      // one staged pass per eval set (reference evals_result,
+      // `core.py:120, 580-590`; weighted sets are the reference's
+      // `sample_weight_eval_set`). RandomForest has no per-round
+      // structure — fail loudly rather than silently dropping the
+      // caller's eval sets
+      require(multiclassStrategy != "rf" || effective == "binary:logistic",
+        "eval-set history needs per-round models (multiclassStrategy=ovr " +
+        "or softprob); RandomForest multiclass has no boosting rounds")
+      evalsResult = evalSets.map { case (n, d) =>
+        val w = evalWeights.get(n)
+        n -> (fitted.model match {
+          case _: MultiSparse.MultiSparseModel =>
+            StagedEval.multiclassHistory(fitted, d, labelCol, w)
+          case _ => Map("logloss" -> StagedEval.history(fitted, d, labelCol, "logloss", w))
+        })
       }
     }
     this
   }
 
   /** Class prediction (`core.py:617-624`): the argmax/threshold the
-    * reference computes over its probability matrix is internal to
-    * MLlib's `prediction` column.
+    * reference computes over its probability matrix is the model's
+    * `prediction` column.
     */
   def predict(df: DataFrame): DataFrame =
     GraftBoost.predict(fitted, df, baseMarginCol)
@@ -390,10 +371,11 @@ final class GraftXGBClassifier extends GraftEstimator[GraftXGBClassifier] {
 
   /** Arbitrary-metric in-fit early stopping — the reference's
     * `fit(..., early_stopping_rounds=…, eval_metric="auc")`
-    * (`test_core.py:104-146`): doubling-chunk training that stops once
-    * `metric` (auc/logloss) stalls for `earlyStoppingRounds` on
-    * `validation`, keeping the model truncated at its best round.
-    * Binary objective only (OvR multiclass has no truncation). Sets
+    * (`test_core.py:104-146`): one fit that stops once `metric`
+    * (auc/logloss/…) stalls for `earlyStoppingRounds` on `validation`,
+    * keeping the model truncated at its best round. Binary objective
+    * only: multiclass fits stop on their own mlogloss through
+    * `fit(earlyStoppingValidation = …)`. Sets
     * [[bestIteration]]/[[bestScore]]/[[roundsTrained]]/[[evalsResult]].
     */
   def fitWithEarlyStopping(
@@ -413,8 +395,8 @@ final class GraftXGBClassifier extends GraftEstimator[GraftXGBClassifier] {
       .distinct().collect().map(_.getDouble(0)).sorted
     classes = Some(inferred)
     require(inferred.length <= 2,
-      "arbitrary-metric early stopping is binary-only (OvR multiclass " +
-      "models cannot be truncated per round)")
+      "arbitrary-metric early stopping is binary-only (a multiclass fit " +
+      "stops on its mlogloss through fit(earlyStoppingValidation = ...))")
     val params = BoostParams("binary:logistic", nEstimators, maxDepth,
       learningRate, 1, subsample, missingValue, multiclassStrategy, seed,
       missingStrategy = missingStrat, maxBins = maxBins)
@@ -423,7 +405,7 @@ final class GraftXGBClassifier extends GraftEstimator[GraftXGBClassifier] {
     this
   }
 
-  /** Platt-scale the OvR probability surface on a calibration frame
+  /** Platt-scale the multiclass probability surface on a calibration frame
     * (ideally held out) — after this, predictProba emits calibrated
     * probabilities instead of softmax-of-margins.
     */

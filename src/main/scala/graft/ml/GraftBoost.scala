@@ -1,13 +1,11 @@
 package graft.ml
 
 import org.apache.spark.ml.classification.{
-  GBTClassificationModel, GBTClassifier, OneVsRest, OneVsRestModel,
-  ProbabilisticClassificationModel, RandomForestClassifier, RandomForestClassificationModel
+  RandomForestClassificationModel, RandomForestClassifier
 }
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.ml.Model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,17 +21,21 @@ import graft.plans.ForestScore
   * locality pinning, the Rabit allreduce tracker (`core.py:183-253`,
   * `tracker.py`) — is structurally subsumed here: one DataFrame
   * co-locates features/label/weight, Spark's scheduler places tasks
-  * data-local, and MLlib's boosting aggregates split statistics with
-  * `treeAggregate` instead of an external allreduce ring. `fit` is a
-  * sequence of distributed jobs; the model returns to the driver like
-  * the reference's rank-0 booster (`core.py:126-131, 255-257`).
+  * data-local, and the one boosting round loop ([[SparseBoost.train]])
+  * folds its histogram partials in partition order instead of an
+  * external allreduce ring. Every boosted objective fits there, early
+  * stopping included; the linear booster ([[LinearBoost]]) and the
+  * `rf` multiclass strategy (MLlib's random forest) are the other two
+  * fits. `fit` is a sequence of distributed jobs; the model returns to
+  * the driver like the reference's rank-0 booster (`core.py:126-131,
+  * 255-257`).
   *
   * Scale posture: training data should be cached by the caller for
   * iterative boosting. A native forest scores in one codegen'd
   * projection ([[graft.plans.ForestScore]]) straight from the feature
   * columns, the model broadcast once (vs. the reference's per-task
-  * closure serialization, `core.py:367`); the MLlib and linear models
-  * score their assembled `features` vector.
+  * closure serialization, `core.py:367`); the linear and random-forest
+  * models score their assembled `features` vector.
   */
 object GraftBoost {
 
@@ -60,18 +62,20 @@ object GraftBoost {
     * @param numRound         boosting rounds (`num_boost_round`)
     * @param maxDepth         tree depth
     * @param eta              learning rate / step size
-    * @param minChildWeight   approximated by minInstancesPerNode
+    * @param minChildWeight   minimum hessian sum of a child (XGBoost's
+    *                         `min_child_weight`); the `rf` strategy
+    *                         reads it as MLlib's minInstancesPerNode
     * @param subsample        row subsampling per tree
-    * @param missing          value to treat as missing. MLlib has no
-    *                         sparse-skip missing handling
-    *                         (`SURVEY.md` §7.6d): occurrences are
-    *                         replaced per `missingStrategy` before
-    *                         assembly — a documented divergence from
-    *                         XGBoost.
+    * @param missing          value to treat as missing: replaced per
+    *                         `missingStrategy` before the fit, and at
+    *                         scoring
     * @param multiclassStrategy "softprob" = true multi:softprob
     *                         boosting, K native trees per round
-    *                         ([[Objective.Softprob]]); "ovr" = OneVsRest
-    *                         over binary GBT; "rf" = RandomForest
+    *                         ([[Objective.Softprob]]); "ovr" = K
+    *                         independent logistic channels grown in one
+    *                         pass ([[Objective.Ovr]]), probabilities
+    *                         the softmax of the margins unless
+    *                         [[calibrate]]d; "rf" = MLlib RandomForest
     *                         (single model, native probabilities)
     * @param seed             determinism anchor
     */
@@ -90,32 +94,28 @@ object GraftBoost {
         *  - "impute": marker → training-time column mean (default;
         *    smooth but diverges from XGBoost on sparse data)
         *  - "sentinel": marker → a training-time out-of-range value
-        *    (beyond the feature's observed max). MLlib rejects NaN in
-        *    feature vectors outright (checkNonNanVectors), so true
-        *    NaN-routing is unavailable; the sentinel instead gives
-        *    missing rows their own separable region, letting each
-        *    split isolate them — the closest expressible analog of
-        *    XGBoost's learned default direction, and like XGBoost the
-        *    marker never blends into real-value statistics.
-        *  - "native": marker → NaN, trained by the from-scratch
-        *    sparsity-aware loop ([[SparseBoost]]) that LEARNS a
-        *    default direction per split — the actual XGBoost
-        *    mechanism (Chen & Guestrin §3.3). binary:logistic and
-        *    reg:squarederror only.
+        *    (beyond the feature's observed max), giving missing rows
+        *    their own separable region so each split can isolate
+        *    them; like XGBoost the marker never blends into
+        *    real-value statistics.
+        *  - "native": marker → NaN, routed by the sparsity-aware loop
+        *    ([[SparseBoost]]) along a default direction LEARNED per
+        *    split — the actual XGBoost mechanism (Chen & Guestrin
+        *    §3.3). Not for gblinear or the `rf` strategy.
         */
       missingStrategy: String = "impute",
-      /** Histogram bins per feature (MLlib maxBins). 32 is MLlib's
-        * default; 16 measurably cuts fit time on low-cardinality
-        * numeric features with no accuracy change (MaxBinsProbe).
+      /** Histogram bins per feature (XGBoost's `max_bin`): at most
+        * maxBins − 1 quantile split candidates. 16 measurably cuts fit
+        * time on low-cardinality numeric features with no accuracy
+        * change (MaxBinsProbe).
         */
       maxBins: Int = 32,
       /** Target quantile for `reg:quantileerror` (XGBoost's
         * `quantile_alpha`); ignored by other objectives.
         */
       quantileAlpha: Double = 0.5,
-      /** L2 leaf regularization (XGBoost's `lambda`, default 1).
-        * Used by the native sparse loop ([[SparseBoost]]); the
-        * MLlib-backed paths have no leaf shrinkage knob.
+      /** L2 leaf regularization (XGBoost's `lambda`, default 1), for
+        * the round loop ([[SparseBoost]]) and gblinear.
         */
       lambdaL2: Double = 1.0,
       /** Minimum loss reduction to make a split (XGBoost's `gamma` /
@@ -366,12 +366,6 @@ object GraftBoost {
     ((h % 1000) + 1000) % 1000 < keep
   }
 
-  /** Objectives MLlib GBT has no loss for: they train in the native
-    * sparse loop ([[SparseBoost]]) under every missing strategy.
-    */
-  private val NativeOnlyObjectives =
-    Set("reg:gamma", "reg:tweedie", "count:poisson", "reg:quantileerror")
-
   /** Single validator shared by BoostParams and the estimator setter
     * — one place to extend when a new strategy is added.
     */
@@ -382,7 +376,8 @@ object GraftBoost {
   /** Trained model + training metadata. `numClasses` mirrors the
     * reference's `num_class` model attribute (`core.py:262-264`);
     * `evalsResult` mirrors the per-eval-set history dict
-    * (`core.py:120, 259-260`), filled by [[evalHistory]].
+    * (`core.py:120, 259-260`): "train", and "validation" when the fit
+    * stopped early on validation rows, both filled as the loop trains.
     */
   final case class GraftBoostModel(
       model: Model[_],
@@ -400,7 +395,7 @@ object GraftBoost {
       /** "impute" or "sentinel" — see [[BoostParams.missingStrategy]]. */
       missingStrategy: String = "impute",
       /** Per-class Platt scaling (A, B) fitted by [[calibrate]]:
-        * OvR class probability = sigmoid(A·margin + B), renormalized.
+        * class probability = sigmoid(A·margin + B), renormalized.
         * None → predictProba falls back to softmax-of-margins.
         */
       calibration: Option[Array[(Double, Double)]] = None
@@ -462,7 +457,7 @@ object GraftBoost {
       .setInputCols(featureCols.toArray)
       .setOutputCol("features")
       // "keep" lets NaN ride into the vector for the native
-      // sparse-skip path; MLlib-backed paths keep the erroring
+      // sparse-skip path; the other strategies keep the erroring
       // default so a stray NaN fails loudly instead of mistraining
       .setHandleInvalid(if (keepNaN) "keep" else "error")
       .transform(imputed(featureCols, imputation) match {
@@ -480,9 +475,12 @@ object GraftBoost {
     *                    `labelCol`, optionally `weightCol` and an
     *                    `isVal` boolean validation indicator
     * @param validationCol when set, names a boolean column marking
-    *                    held-out rows — early stopping stops when the
-    *                    validation loss stops improving (reference
-    *                    early-stopping semantics, `core.py:435-449`)
+    *                    held-out rows: they train nothing, and the
+    *                    round loop stops once the objective's own
+    *                    metric over them has not improved for one
+    *                    round, keeping the best round's forest
+    *                    (reference early-stopping semantics,
+    *                    `core.py:435-449`; [[SparseBoost.EarlyStop]])
     */
   def train(
       df: DataFrame,
@@ -499,16 +497,35 @@ object GraftBoost {
         * `dmatrix_kwargs` surface, `core.py:143-147`): the boosting
         * recursion starts from this row's margin INSTEAD of the
         * scalar base — stock semantics (base_score unused when
-        * base_margin is supplied). Native sparse loop only.
+        * base_margin is supplied). Per-row objectives only.
         */
       marginCol: Option[String] = None
-  ): GraftBoostModel = {
-    // the fit labels its jobs `boost: <phase>`; the caller's own job
-    // description is put back however the fit ends
+  ): GraftBoostModel =
+    labelled(df)(fit(df, featureCols, labelCol, params, weightCol,
+      validationCol.map(SparseBoost.EarlyStop(_)), groupCol, marginCol, _))
+
+  /** [[train]] with its early stop spelled out: the validation
+    * column, the metric (None: the objective's own) and the patience
+    * — [[StagedEval.fitWithEarlyStopping]]'s entry.
+    */
+  private[ml] def trainEarlyStopped(
+      df: DataFrame,
+      featureCols: Seq[String],
+      labelCol: String,
+      params: BoostParams,
+      weightCol: Option[String],
+      earlyStop: SparseBoost.EarlyStop
+  ): GraftBoostModel =
+    labelled(df)(fit(df, featureCols, labelCol, params, weightCol, Some(earlyStop),
+      None, None, _))
+
+  /** A fit labels its jobs `boost: <phase>`; the caller's own job
+    * description (passed to `body`) is put back however the fit ends.
+    */
+  private def labelled[T](df: DataFrame)(body: String => T): T = {
     val sc = df.sparkSession.sparkContext
     val callerDescription = sc.getLocalProperty("spark.job.description")
-    try fit(df, featureCols, labelCol, params, weightCol, validationCol,
-      groupCol, marginCol, callerDescription)
+    try body(callerDescription)
     finally sc.setJobDescription(callerDescription)
   }
 
@@ -518,7 +535,7 @@ object GraftBoost {
       labelCol: String,
       params: BoostParams,
       weightCol: Option[String],
-      validationCol: Option[String],
+      earlyStop: Option[SparseBoost.EarlyStop],
       groupCol: Option[String],
       marginCol: Option[String],
       callerDescription: String
@@ -527,30 +544,26 @@ object GraftBoost {
     val ranking = params.objective.startsWith("rank:")
     val multiclass =
       params.objective == "multi:softprob" || params.objective == "multi:softmax"
-    val softprob = multiclass && params.multiclassStrategy == "softprob"
-    // the per-row objectives of the round loop (SparseBoost.train):
-    // all under missingStrategy "native", the native-only ones always.
-    // Ranking and softprob run in the same loop with their own rejections
-    val nativeLoop =
-      (native || NativeOnlyObjectives(params.objective)) && !ranking && !multiclass
-    val toNativeLoop = "set missingStrategy=\"native\" (or a gamma, " +
-      "tweedie, poisson or quantile objective)"
+    // multiclassStrategy "rf" is the one fit outside the round loop
+    val forest = multiclass && params.multiclassStrategy == "rf"
     if (marginCol.isDefined)
-      require(nativeLoop && params.booster != "gblinear",
-        s"per-row base_margin runs in the native sparse loop — $toNativeLoop; " +
-        "the MLlib-backed, linear, ranking and multiclass paths have " +
-        "no margin-initialization hook")
+      require(!ranking && !multiclass && params.booster != "gblinear",
+        "per-row base_margin starts the per-row objectives of the round " +
+        "loop; the linear, ranking and multiclass fits have no " +
+        "margin-initialization hook")
     val sc = df.sparkSession.sparkContext
     // The fit's input statistics in one aggregate over the caller's
     // frame: the row count (sizes the train fan-out below), per feature
-    // the mean (impute) or max (sentinel) of the non-marker values —
-    // stored on the model for serve-time parity — and the class count.
-    // native: the marker becomes NaN and the sparse loop routes it
-    // along the learned default branch — nothing to learn there
+    // the mean (impute) or max (sentinel) of the non-marker values of
+    // the training rows — stored on the model for serve-time parity —
+    // and the class count. native: the marker becomes NaN and the
+    // sparse loop routes it along the learned default branch — nothing
+    // to learn there
     val sentinel = params.missingStrategy == "sentinel"
+    val trains = earlyStop.fold(lit(true))(es => !coalesce(col(es.col), lit(false)))
     val stats = params.missing.filter(_ => !native).toSeq.flatMap { m =>
       featureCols.map { c =>
-        val present = when(col(c) =!= m, col(c))
+        val present = when(col(c) =!= m && trains, col(c))
         if (sentinel) max(present) else avg(present)
       }
     }
@@ -573,16 +586,15 @@ object GraftBoost {
     // Fan the training frame out BY NUMBER before the fit: a
     // single-row-group parquet source leaves every row in ONE task
     // regardless of split count (splits below row-group size are
-    // empty), which serializes every per-round stats/histogram pass —
-    // and MLlib's own iterations — onto one core. One shuffle of the
-    // slim assembled rows, amortized over numRound × levels passes;
-    // XGBoost4J-Spark likewise repartitions to its worker count at
-    // train entry. SIZE-AWARE: the partition count is
-    // n / TrainRowsPerTask capped at defaultParallelism — a tiny
-    // frame (softprob's 1.6k-row per-class loops) must NOT be split
-    // 32 ways, or task-launch overhead × (rounds × levels × classes)
-    // passes dominates (measured: 9.5s → 15s on ml_multiclass_softprob
-    // with an unconditional fan-out). The count rides the input-stats
+    // empty), which serializes every per-round stats/histogram pass
+    // onto one core. One shuffle of the slim assembled rows, amortized
+    // over numRound × levels passes; XGBoost4J-Spark likewise
+    // repartitions to its worker count at train entry. SIZE-AWARE: the
+    // partition count is n / TrainRowsPerTask capped at
+    // defaultParallelism — a tiny frame must NOT be split 32 ways, or
+    // task-launch overhead × (rounds × levels) passes dominates
+    // (measured: 9.5s → 15s on ml_multiclass_softprob with an
+    // unconditional fan-out). The count rides the input-stats
     // aggregate above. Partition contents stay deterministic
     // (sortBeforeRepartition), so the partition-index partial folds
     // keep their bit-stability contract.
@@ -594,7 +606,7 @@ object GraftBoost {
     // pass (guide §2.3 "project before the exchange").
     val trainCols: Seq[Column] =
       (Seq("features", "label") ++
-        (weightCol ++ validationCol ++ groupCol ++ marginCol))
+        (weightCol ++ earlyStop.map(_.col) ++ groupCol ++ marginCol))
         .distinct.map(col)
     val assembled = assemble(df, featureCols, imputation, keepNaN = native)
       .withColumn("label", col(labelCol).cast("double"))
@@ -604,11 +616,10 @@ object GraftBoost {
     // Materialize the (repartitioned, slim) training frame ONCE before
     // the fit. Without this every pre-round action — the proposeEdges
     // quantile pass, the base-score mean, the round-0 margin
-    // checkpoint, MLlib's own input cache fill —
-    // re-executes the assemble pipeline AND the fan-out shuffle from
-    // the source (3-4 redundant executions per fit; worse when the
-    // source is a single-row-group parquet whose scan is one serial
-    // task). localCheckpoint is eager and freezes the layout one
+    // checkpoint — re-executes the assemble pipeline AND the fan-out
+    // shuffle from the source (3-4 redundant executions per fit; worse
+    // when the source is a single-row-group parquet whose scan is one
+    // serial task). localCheckpoint is eager and freezes the layout one
     // repartition execution produces, so the partition-index partial
     // folds see one consistent layout; at cluster scale caching the
     // training frame across rounds×levels passes is the standard
@@ -618,153 +629,70 @@ object GraftBoost {
     val data =
       (if (trainParts > 1) assembled.repartition(trainParts) else assembled)
         .localCheckpoint()
-    // unlabelled phases (the MLlib fits) run under the caller's label
+    // unlabelled phases (the gblinear and random-forest fits) run
+    // under the caller's label
     sc.setJobDescription(callerDescription)
 
     if (params.booster == "gblinear") {
       require(!native,
         "gblinear has no sparse-skip routing — use missingStrategy " +
         "\"impute\" or \"sentinel\" with the linear booster")
-      require(validationCol.isEmpty,
-        "gblinear records its train history itself; use StagedEval-style " +
-        "post-hoc evaluation for validation metrics")
-      val (m, histL) = LinearBoost.train(data, params, weightCol)
+      val (m, histL, histV) = LinearBoost.train(data, params, weightCol, earlyStop)
+      val metric = Objective(params).metricName
       return GraftBoostModel(m, featureCols, params.objective,
         if (params.objective == "binary:logistic") 2 else 0,
-        Map("train" -> Map(Objective(params).metricName -> histL)),
+        Map("train" -> Map(metric -> histL)) ++ earlyStop.map(es =>
+          "validation" -> Map(es.metric.getOrElse(metric) -> histV)),
         imputation, params.missingStrategy)
     }
-    // DART dropout drops trees from one per-row margin — ignoring it
-    // silently on an MLlib path, or under the ranking and softprob
-    // objectives (per-group gradients, K margins), would fake the
-    // mechanism
-    if (params.booster == "dart")
-      require(nativeLoop,
-        s"booster=\"dart\" runs in the native loop — $toNativeLoop; " +
-        "ranking objectives have no DART path")
-    if (params.growPolicy == "lossguide")
-      require(nativeLoop || ranking,
-        s"grow_policy=\"lossguide\" runs in the native tree loop — " +
-        s"$toNativeLoop, or a rank objective")
-    if (params.numParallelTree > 1)
-      require(nativeLoop,
-        s"num_parallel_tree > 1 runs in the native tree loop — $toNativeLoop; " +
-        "the ranking loop has no parallel-tree path")
-
-    if (nativeLoop || ranking || softprob) {
-      // everything MLlib cannot grow: NaN routing, the native-only
-      // losses, true softprob and the pairwise rankers
-      require(validationCol.isEmpty,
-        "the boosting round loop records its train history itself; " +
-        "use StagedEval on the returned model for validation metrics " +
-        "(or multiclassStrategy=ovr for a validation column)")
-      if (ranking) {
-        require(groupCol.isDefined,
-          "ranking objectives need groupCol (the DMatrix group vector)")
-        require(weightCol.isEmpty,
-          "ranking objectives take no weightCol: their pair gradients " +
-          "are per group, and a per-row weight has no place in them")
-      }
-      val classes =
-        if (softprob) numClasses
-        else if (params.objective == "binary:logistic") 2
-        else 0
-      val objective = Objective(params, classes)
-      val fit = SparseBoost.train(
-        if (ranking) data.withColumn("group", col(groupCol.get)) else data,
-        params, objective, weightCol, marginCol)
-      val model: Model[_] =
-        if (softprob) // round-major: round r's K class trees follow round r−1's
-          new MultiSparse.MultiSparseModel(s"softprob_${params.seed}", fit.trees,
-            Array.tabulate(fit.trees.length)(i => i / params.numParallelTree % classes),
-            classes, fit.base, objective.name, fit.stats)
-        else fit.sparseModel(s"${if (ranking) "rank" else "sparse"}_${params.seed}", params)
-      return GraftBoostModel(model, featureCols, params.objective, classes,
-        Map("train" -> Map(objective.metricName -> fit.history)), imputation,
-        params.missingStrategy)
+    if (forest) {
+      // XGBoost's random-forest mode on this loop waits for the
+      // executor-side split search (ROADMAP direction 5)
+      require(!native && earlyStop.isEmpty && params.booster == "gbtree" &&
+          params.growPolicy == "depthwise" && params.numParallelTree == 1,
+        "multiclassStrategy=\"rf\" is a random forest of numRound trees: it " +
+        "takes no missingStrategy \"native\", validation rows, dart, " +
+        "lossguide or num_parallel_tree")
+      val rf = new RandomForestClassifier()
+        .setFeaturesCol("features").setLabelCol("label")
+        .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
+        .setSubsamplingRate(params.subsample)
+        .setMinInstancesPerNode(params.minChildWeight)
+        .setMaxBins(params.maxBins)
+        .setSeed(params.seed)
+      weightCol.foreach(rf.setWeightCol)
+      return GraftBoostModel(rf.fit(data), featureCols, params.objective,
+        numClasses, Map.empty, imputation, params.missingStrategy)
     }
 
-    params.objective match {
-      case "reg:squarederror" =>
-        val gbt = new GBTRegressor()
-          .setFeaturesCol("features").setLabelCol("label")
-          .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
-          .setStepSize(params.eta).setSubsamplingRate(params.subsample)
-          .setMinInstancesPerNode(params.minChildWeight)
-          .setMaxBins(params.maxBins)
-          .setSeed(params.seed)
-        weightCol.foreach(gbt.setWeightCol)
-        validationCol.foreach(gbt.setValidationIndicatorCol)
-        val model = gbt.fit(data)
-        GraftBoostModel(model, featureCols, params.objective, 0, Map.empty, imputation, params.missingStrategy)
-
-      case "reg:absoluteerror" =>
-        // XGBoost's L1 objective → MLlib's native absolute (LAD) GBT
-        // loss: median-seeking regression with the same lifecycle.
-        val gbt = new GBTRegressor()
-          .setFeaturesCol("features").setLabelCol("label")
-          .setLossType("absolute")
-          .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
-          .setStepSize(params.eta).setSubsamplingRate(params.subsample)
-          .setMinInstancesPerNode(params.minChildWeight)
-          .setMaxBins(params.maxBins)
-          .setSeed(params.seed)
-        weightCol.foreach(gbt.setWeightCol)
-        validationCol.foreach(gbt.setValidationIndicatorCol)
-        val model = gbt.fit(data)
-        GraftBoostModel(model, featureCols, params.objective, 0, Map.empty, imputation, params.missingStrategy)
-
-      case "binary:logistic" =>
-        val gbt = new GBTClassifier()
-          .setFeaturesCol("features").setLabelCol("label")
-          .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
-          .setStepSize(params.eta).setSubsamplingRate(params.subsample)
-          .setMinInstancesPerNode(params.minChildWeight)
-          .setMaxBins(params.maxBins)
-          .setSeed(params.seed)
-        weightCol.foreach(gbt.setWeightCol)
-        validationCol.foreach(gbt.setValidationIndicatorCol)
-        val model = gbt.fit(data)
-        GraftBoostModel(model, featureCols, params.objective, 2, Map.empty, imputation, params.missingStrategy)
-
-      case "multi:softprob" | "multi:softmax" =>
-        require(!native,
-          "missingStrategy=\"native\" trains multiclass only as " +
-          "multiclassStrategy=\"softprob\"")
-        val model: Model[_] = params.multiclassStrategy match {
-          case "rf" =>
-            require(validationCol.isEmpty,
-              "RandomForest multiclass has no validation-based early stopping; " +
-              "use multiclassStrategy=ovr for validation columns")
-            val rf = new RandomForestClassifier()
-              .setFeaturesCol("features").setLabelCol("label")
-              .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
-              .setSubsamplingRate(params.subsample)
-              .setMinInstancesPerNode(params.minChildWeight)
-              .setMaxBins(params.maxBins)
-              .setSeed(params.seed)
-            weightCol.foreach(rf.setWeightCol)
-            rf.fit(data)
-          case _ =>
-            val base = new GBTClassifier()
-              .setFeaturesCol("features").setLabelCol("label")
-              .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
-              .setStepSize(params.eta).setSubsamplingRate(params.subsample)
-              .setMaxBins(params.maxBins)
-              .setSeed(params.seed)
-            weightCol.foreach(base.setWeightCol)
-            validationCol.foreach(base.setValidationIndicatorCol)
-            val ovr = new OneVsRest().setClassifier(base)
-              .setFeaturesCol("features").setLabelCol("label")
-            weightCol.foreach(ovr.setWeightCol)
-            ovr.fit(data)
-        }
-        GraftBoostModel(model, featureCols, params.objective, numClasses,
-          Map.empty, imputation, params.missingStrategy)
-
-      case other =>
-        throw new IllegalArgumentException(s"unsupported objective: $other")
+    if (ranking) {
+      require(groupCol.isDefined,
+        "ranking objectives need groupCol (the DMatrix group vector)")
+      require(weightCol.isEmpty,
+        "ranking objectives take no weightCol: their pair gradients " +
+        "are per group, and a per-row weight has no place in them")
+      require(params.numParallelTree == 1,
+        "num_parallel_tree > 1 has no ranking path")
     }
+    val classes =
+      if (multiclass) numClasses
+      else if (params.objective == "binary:logistic") 2
+      else 0
+    val objective = Objective(params, classes)
+    val fit = SparseBoost.train(
+      if (ranking) data.withColumn("group", col(groupCol.get)) else data,
+      params, objective, weightCol, marginCol, earlyStop)
+    val model: Model[_] =
+      if (multiclass) // round-major: round r's K class trees follow round r−1's
+        new MultiSparse.MultiSparseModel(s"${params.multiclassStrategy}_${params.seed}",
+          fit.trees,
+          Array.tabulate(fit.trees.length)(i => i / params.numParallelTree % classes),
+          classes, fit.base, objective.name, fit.stats)
+      else fit.sparseModel(s"${if (ranking) "rank" else "sparse"}_${params.seed}", params)
+    GraftBoostModel(model, featureCols, params.objective, classes,
+      Map("train" -> Map(objective.metricName -> fit.history)) ++ earlyStop.map(es =>
+        "validation" -> Map(es.metric.getOrElse(objective.metricName) -> fit.validation)),
+      imputation, params.missingStrategy)
   }
 
   /** Distributed lazy scoring — `predict(client, model, data)` parity
@@ -796,10 +724,7 @@ object GraftBoost {
       keepNaN = model.missingStrategy == "native")
     val scored = model.model match {
       case m: LinearBoost.LinearModel     => m.transform(data)
-      case m: GBTRegressionModel         => m.transform(data)
-      case m: GBTClassificationModel     => m.transform(data)
       case m: RandomForestClassificationModel => m.transform(data)
-      case m: OneVsRestModel             => m.transform(data)
       case m => throw new IllegalStateException(s"unknown model ${m.getClass}")
     }
     scored.drop("features", "rawPrediction", "probability")
@@ -823,9 +748,21 @@ object GraftBoost {
         // sigmoid of the boosted margin — the XGBoost binary proba
         return scoreNative(model, df, "proba", marginCol)
       case _: MultiSparse.MultiSparseModel if marginCol.isEmpty =>
-        // TRUE multi:softprob probabilities: softmax of the jointly
-        // boosted margins — not an OvR renormalization
-        return scoreNative(model, df, "proba", None)
+        // softmax of the K margins — or, once [[calibrate]]d, each
+        // class's Platt sigmoid σ(A·margin + B), renormalized
+        return model.calibration.fold(scoreNative(model, df, "proba", None)) { ab =>
+          val margins = col("margins")
+          val scores = array(ab.toIndexedSeq.zipWithIndex.map { case ((a, b), i) =>
+            lit(1.0) / (lit(1.0) + exp(-(lit(a) * element_at(margins, i + 1) + lit(b))))
+          }: _*)
+          scoreNative(model, df, "margins", None)
+            .withColumn("sc", scores)
+            .withColumn("proba", {
+              val denom = aggregate(col("sc"), lit(0.0), (acc, x) => acc + x)
+              transform(col("sc"), x => x / denom)
+            })
+            .drop("margins", "sc")
+        }
       case other if marginCol.isDefined => throw new IllegalArgumentException(
         "per-row base_margin probabilities are supported on binary " +
         s"native sparse forests only, not ${other.getClass.getSimpleName}")
@@ -841,38 +778,10 @@ object GraftBoost {
           Array(1.0 - p, p)
         })
         data.withColumn("proba", pU(col("features"))).drop("features")
-      case m: ProbabilisticClassificationModel[_, _] =>
+      case m: RandomForestClassificationModel =>
         m.transform(data)
           .withColumn("proba", vector_to_array(col("probability")))
           .drop("features", "rawPrediction", "probability")
-      case m: OneVsRestModel =>
-        // per-class margins → probabilities. With [[calibrate]]d
-        // Platt parameters, each class gets sigmoid(A·margin + B)
-        // renormalized — real calibrated probabilities (reference
-        // multi:softprob contract). Uncalibrated fallback is softmax
-        // of margins: shape-correct, values are normalized margins
-        // (documented divergence). Work on a copy: mutating the
-        // shared model's output column would change later predict()
-        // calls' schema.
-        val scorer = m.copy(org.apache.spark.ml.param.ParamMap.empty)
-          .asInstanceOf[OneVsRestModel].setRawPredictionCol("rawAll")
-        val raw = scorer.transform(data)
-        val margins = vector_to_array(col("rawAll"))
-        val scores = model.calibration match {
-          case Some(ab) =>
-            array(ab.zipWithIndex.map { case ((a, b), i) =>
-              lit(1.0) / (lit(1.0) +
-                exp(-(lit(a) * element_at(margins, i + 1) + lit(b))))
-            }: _*)
-          case None => transform(margins, x => exp(x))
-        }
-        raw
-          .withColumn("sc", scores)
-          .withColumn("proba", {
-            val denom = aggregate(col("sc"), lit(0.0), (acc, x) => acc + x)
-            transform(col("sc"), x => x / denom)
-          })
-          .drop("features", "rawAll", "sc")
       case m =>
         throw new IllegalStateException(s"model has no probabilities: ${m.getClass}")
     }
@@ -917,7 +826,7 @@ object GraftBoost {
     (df.filter(bucket >= cut), df.filter(bucket < cut))
   }
 
-  /** Platt-scale an OvR multiclass model's per-class margins on a
+  /** Platt-scale a one-vs-rest forest's per-class margins on a
     * calibration frame (ideally held out): per class c, fit
     * p(y = c | margin_c) = sigmoid(A·margin_c + B) with a
     * single-feature logistic regression, store (A, B) on the model.
@@ -942,15 +851,13 @@ object GraftBoost {
       df: DataFrame,
       labelCol: String
   ): GraftBoostModel = model.model match {
-    case m: OneVsRestModel =>
+    // one-vs-rest: its K channels are binary:logistic forests
+    case m: MultiSparse.MultiSparseModel if !m.objective.startsWith("multi:") =>
       import org.apache.spark.ml.classification.LogisticRegression
       import org.apache.spark.ml.functions.array_to_vector
-      val data = assemble(df, model.featureCols, model.imputation)
-        .withColumn("label", col(labelCol).cast("double"))
-      val scorer = m.copy(org.apache.spark.ml.param.ParamMap.empty)
-        .asInstanceOf[OneVsRestModel].setRawPredictionCol("rawAll")
-      val raw = scorer.transform(data)
-        .select(vector_to_array(col("rawAll")).as("m"), col("label"))
+      val raw = scoreNative(model, df.withColumn("graft_cal_label",
+          col(labelCol).cast("double")), "margins", None)
+        .select(col("margins").as("m"), col("graft_cal_label").as("label"))
         .cache()
       // per-class positive counts for Platt's smoothed targets —
       // numClasses rows, model-sized by construction
@@ -977,7 +884,7 @@ object GraftBoost {
       raw.unpersist(false)
       model.copy(calibration = Some(params))
     case m => throw new UnsupportedOperationException(
-      s"Platt calibration targets OvR multiclass models, got ${m.getClass}")
+      s"Platt calibration targets one-vs-rest multiclass forests, got ${m.getClass}")
   }
 
   /** Local eager scoring of a single feature vector — the reference's
@@ -1000,18 +907,7 @@ object GraftBoost {
         org.apache.spark.ml.linalg.Vectors.dense(arr)
     }
     model.model match {
-      case m: GBTRegressionModel              => m.predict(f)
-      case m: GBTClassificationModel          => m.predict(f)
       case m: RandomForestClassificationModel => m.predict(f)
-      case m: OneVsRestModel =>
-        // same decision as the distributed OvR transform: argmax of
-        // each class model's positive raw score
-        val scores = m.models.map {
-          case g: GBTClassificationModel => g.predictRaw(f)(1)
-          case other => throw new UnsupportedOperationException(
-            s"local OvR predict needs GBT per class, got ${other.getClass}")
-        }
-        scores.indices.maxBy(scores(_)).toDouble
       case m: MultiSparse.MultiSparseModel =>
         val margins = m.marginsOf(f)
         margins.indices.maxBy(margins(_)).toDouble
@@ -1024,30 +920,20 @@ object GraftBoost {
 
   /** Per-feature importances — `feature_importances_` parity
     * (reference `test_core.py:57` asserts distributed ≡ local
-    * importances). MLlib exposes impurity-based importances natively;
-    * for OneVsRest the per-class GBT importances are averaged and
-    * renormalized to sum to 1. Keys are the training feature columns
-    * (or `f0..fn` for a pre-assembled vector).
+    * importances), normalized to sum to 1: the native forests' total
+    * split gain, the random forest's MLlib impurity importances.
+    * Keys are the training feature columns (or `f0..fn` for a
+    * pre-assembled vector).
     */
   def featureImportances(model: GraftBoostModel): Map[String, Double] = {
-    // equal-weight average over an ensemble's member importances,
-    // renormalized to sum 1
-    def avgNormalized(per: Seq[Array[Double]]): Array[Double] = {
-      val avg = per.head.indices.map(i => per.map(_(i)).sum / per.length).toArray
-      val total = avg.sum
-      if (total > 0) avg.map(_ / total) else avg
-    }
     def ofModel(m: Model[_]): Array[Double] = m match {
-      case g: GBTRegressionModel              => g.featureImportances.toArray
-      case g: GBTClassificationModel          => g.featureImportances.toArray
       case g: RandomForestClassificationModel => g.featureImportances.toArray
-      case o: OneVsRestModel => avgNormalized(o.models.map(ofModel))
       case sb: SparseBoost.SparseModel =>
         // per-feature total split gain accumulated during training —
         // XGBoost's `total_gain` importance, already normalized
         sb.importances
       case mm: MultiSparse.MultiSparseModel =>
-        // softprob forest: normalized total_gain over the training
+        // multiclass forest: normalized total_gain over the training
         // split statistics (or, for an ingested document, the ones
         // rebuilt from its loss_changes)
         val g = mm.importanceByType("total_gain")
@@ -1068,26 +954,4 @@ object GraftBoost {
       else model.featureCols
     names.zip(imp).toMap
   }
-
-  /** Per-round validation history — `evals_result` parity
-    * (`core.py:120, 259-260`). MLlib exposes it post-hoc via
-    * `evaluateEachIteration`; metric is logloss-family for
-    * classification, squared error for regression.
-    */
-  def evalHistory(
-      model: GraftBoostModel,
-      evalSets: Map[String, DataFrame],
-      labelCol: String
-  ): Map[String, Map[String, Array[Double]]] =
-    evalSets.map { case (name, df) =>
-      val data = assemble(df, model.featureCols, model.imputation)
-        .withColumn("label", col(labelCol).cast("double"))
-      val (metric, values) = model.model match {
-        case m: GBTClassificationModel => ("logloss", m.evaluateEachIteration(data))
-        case m: GBTRegressionModel     => ("squarederror", m.evaluateEachIteration(data, "squared"))
-        case m => throw new UnsupportedOperationException(
-          s"per-iteration history unavailable for ${m.getClass}")
-      }
-      name -> Map(metric -> values)
-    }
 }

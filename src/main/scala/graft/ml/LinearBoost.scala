@@ -116,21 +116,33 @@ object LinearBoost {
   /** Train the linear booster on a frame carrying `features` (dense
     * vector, NO NaN — gblinear has no sparse-skip routing) and
     * `label`; optional row weights scale (g, h) as in the tree loops.
+    * Under `earlyStop` the flagged rows move no coordinate: each stats
+    * pass folds their loss apart (the objective's own metric; no other
+    * is available here), and the loop stops and cuts to the best round
+    * as the tree loop does ([[SparseBoost.EarlyStop]]).
     *
-    * @return model + per-round train loss history (logloss / rmse)
+    * @return model + per-round train loss history (logloss / rmse) +
+    *         per-round validation history (empty without `earlyStop`)
     */
   def train(
       data: DataFrame,
       params: GraftBoost.BoostParams,
-      weightCol: Option[String] = None
-  ): (LinearModel, Array[Double]) = {
+      weightCol: Option[String] = None,
+      earlyStop: Option[SparseBoost.EarlyStop] = None
+  ): (LinearModel, Array[Double], Array[Double]) = {
     require(Set("binary:logistic", "reg:squarederror").contains(params.objective),
       s"gblinear supports binary:logistic and reg:squarederror, got ${params.objective}")
     val binary = params.objective == "binary:logistic"
+    val metric = if (binary) "logloss" else "rmse"
+    earlyStop.flatMap(_.metric).foreach(m => require(m == metric,
+      s"gblinear early stopping folds its own $metric, not $m"))
     val keep = Seq(col("features"), col("label").cast("double").as("label")) ++
-      weightCol.map(c => col(c).cast("double").as("w"))
+      weightCol.map(c => col(c).cast("double").as("w")) ++
+      earlyStop.map(es => coalesce(col(es.col).cast("boolean"), lit(false)).as("v"))
     val src = data.select(keep: _*)
     val hasW = weightCol.isDefined
+    val vIx = if (earlyStop.isEmpty) -1 else if (hasW) 3 else 2
+    val trainSrc = if (earlyStop.isEmpty) src else src.filter(!col("v"))
 
     val numFeat = src.select(col("features")).head().getAs[Vector](0).size
     val base =
@@ -143,16 +155,18 @@ object LinearBoost {
     val weights = new Array[Double](numFeat)
     var bias = 0.0
     val hist = new ArrayBuffer[Double](params.numRound)
+    val valHist = new ArrayBuffer[Double](params.numRound)
     val snaps = new ArrayBuffer[(Array[Double], Double)](params.numRound)
     val selHist = new ArrayBuffer[Array[Int]](params.numRound)
     // loss denominator: total weight (or row count), one action
     val denom = math.max(
-      if (hasW) src.select(sum(col("w"))).head().getDouble(0)
-      else src.count().toDouble, 1e-12)
+      if (hasW) trainSrc.select(sum(col("w"))).head().getDouble(0)
+      else trainSrc.count().toDouble, 1e-12)
 
     val sc = src.sparkSession.sparkContext
-    // one pass: [Σg, Σh, loss, {G_j, H_j, B_j}] at current margins
-    val size = 3 + numFeat * 3
+    // one pass: [Σg, Σh, loss, {G_j, H_j, B_j}] at current margins,
+    // then the validation rows' (loss, count)
+    val size = 3 + numFeat * 3 + (if (vIx >= 0) 2 else 0)
     def statsPass(): Array[Double] = {
       val bcW = sc.broadcast((weights.clone(), bias))
       val partials = src.rdd.mapPartitions { it =>
@@ -165,29 +179,40 @@ object LinearBoost {
           var f = base + bv
           var j = 0
           while (j < numFeat) { f += wv(j) * v(j); j += 1 }
-          var g = 0.0
-          var h = 0.0
-          if (binary) {
-            val p = 1.0 / (1.0 + math.exp(-f))
-            g = (p - y) * rw
-            h = math.max(p * (1.0 - p), 1e-16) * rw
-            val pc = math.min(math.max(p, 1e-15), 1.0 - 1e-15)
-            acc(2) += -rw * (y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc))
+          if (vIx >= 0 && row.getBoolean(vIx)) {
+            acc(size - 2) +=
+              (if (!binary) (f - y) * (f - y)
+              else {
+                val p = 1.0 / (1.0 + math.exp(-f))
+                val pc = math.min(math.max(p, 1e-15), 1.0 - 1e-15)
+                -(y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc))
+              })
+            acc(size - 1) += 1.0
           } else {
-            g = (f - y) * rw
-            h = rw
-            acc(2) += rw * (f - y) * (f - y)
-          }
-          acc(0) += g
-          acc(1) += h
-          j = 0
-          while (j < numFeat) {
-            val x = v(j)
-            val o = 3 + j * 3
-            acc(o) += g * x
-            acc(o + 1) += h * x * x
-            acc(o + 2) += h * x
-            j += 1
+            var g = 0.0
+            var h = 0.0
+            if (binary) {
+              val p = 1.0 / (1.0 + math.exp(-f))
+              g = (p - y) * rw
+              h = math.max(p * (1.0 - p), 1e-16) * rw
+              val pc = math.min(math.max(p, 1e-15), 1.0 - 1e-15)
+              acc(2) += -rw * (y * math.log(pc) + (1.0 - y) * math.log(1.0 - pc))
+            } else {
+              g = (f - y) * rw
+              h = rw
+              acc(2) += rw * (f - y) * (f - y)
+            }
+            acc(0) += g
+            acc(1) += h
+            j = 0
+            while (j < numFeat) {
+              val x = v(j)
+              val o = 3 + j * 3
+              acc(o) += g * x
+              acc(o + 1) += h * x * x
+              acc(o + 2) += h * x
+              j += 1
+            }
           }
         }
         Iterator.single(acc)
@@ -216,7 +241,9 @@ object LinearBoost {
       (0 until numFeat).sortBy(j =>
         (GraftBoost.fmix64(params.seed ^ (j * 0xc2b2ae3d27d4eb4fL)), j))
     var s = statsPass()
-    for (r <- 1 to params.numRound) {
+    var r = 1
+    while (r <= params.numRound &&
+        earlyStop.forall(es => StagedEval.stalledAt(valHist.toArray, metric, es.patience).isEmpty)) {
       val gSum = s(0)
       val hSum = s(1)
 
@@ -276,10 +303,17 @@ object LinearBoost {
       selHist += chosen.toArray
       s = statsPass()
       hist += lossOf(s)
+      if (vIx >= 0) {
+        val v = s(size - 2) / s(size - 1)
+        valHist += (if (binary) v else math.sqrt(v))
+      }
       snaps += ((weights.clone(), bias))
+      r += 1
     }
-    (new LinearModel(s"gblinear_${params.seed}", weights, bias, base,
-      params.objective, Some(snaps.toArray), Some(selHist.toArray)),
-      hist.toArray)
+    val model = new LinearModel(s"gblinear_${params.seed}", weights, bias, base,
+      params.objective, Some(snaps.toArray), Some(selHist.toArray))
+    (if (earlyStop.isEmpty) model
+      else model.truncate(StagedEval.bestIteration(valHist.toArray, metric)),
+      hist.toArray, valHist.toArray)
   }
 }

@@ -1,10 +1,7 @@
 package graft.ml
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ml.classification.{
-  GBTClassificationModel, OneVsRestModel, RandomForestClassificationModel
-}
-import org.apache.spark.ml.regression.GBTRegressionModel
+import org.apache.spark.ml.classification.RandomForestClassificationModel
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.SparkSession
 
@@ -15,12 +12,14 @@ import GraftBoost.GraftBoostModel
   * models are in-memory only, `core.py:255-264`) so a reloaded model
   * scores identically: featureCols, objective, numClasses, the
   * missing-marker imputation statistics, and the eval history are all
-  * saved alongside the MLlib model.
+  * saved alongside the model.
   *
-  * Layout: `<path>/model/` (MLlib's own writer — distributed,
-  * HDFS-compatible) plus `<path>/graft_meta.json` (one small JSON
-  * written through the Hadoop FileSystem API, so the sink works on
-  * any cluster filesystem, not just local disk).
+  * Layout: `<path>/model/` (one JSON of model-sized arrays for the
+  * native and linear boosters; MLlib's own writer for the random
+  * forest) plus `<path>/graft_meta.json` (one small JSON written
+  * through the Hadoop FileSystem API, so the sink works on any cluster
+  * filesystem, not just local disk). Artifacts of the MLlib GBT and
+  * one-vs-rest models earlier builds saved fail to load by class name.
   */
 object ModelIO {
 
@@ -146,6 +145,12 @@ object ModelIO {
     }
     val multi =
       if (model.numClasses > 2) model.model match {
+        case m: MultiSparse.MultiSparseModel if !m.objective.startsWith("multi:") =>
+          Some("multiclass: one-vs-rest forest — K independent " +
+            "binary:logistic channels grown together, probabilities the " +
+            "softmax of the K margins (+ optional Platt calibration) — NOT " +
+            "XGBoost multi:softprob joint gradients (core.py:580-590); " +
+            "argmax classes agree, probability vectors are approximate.")
         case _: MultiSparse.MultiSparseModel =>
           Some("multiclass: single-model softprob forest — K trees per " +
             "round on shared multinomial softmax gradients with Newton " +
@@ -154,10 +159,10 @@ object ModelIO {
             "routed document; per-class margins summed over the trees, " +
             "softmax probabilities, default-branch NaN routing.")
         case _ =>
-          Some("multiclass: one-vs-rest / RF ensemble, per-class scores " +
-            "normalized (+ optional Platt calibration) — NOT XGBoost " +
-            "multi:softprob single-model probabilities (core.py:580-590); " +
-            "argmax classes agree, probability vectors are approximate.")
+          Some("multiclass: random forest, per-class vote probabilities " +
+            "— NOT XGBoost multi:softprob single-model probabilities " +
+            "(core.py:580-590); argmax classes agree, probability " +
+            "vectors are approximate.")
       }
       else None
     val gblinear = model.model match {
@@ -314,11 +319,13 @@ object ModelIO {
 
     val modelPath = new Path(path, "model").toString
     val inner = meta.modelClass match {
-      case c if c.endsWith("GBTRegressionModel")  => GBTRegressionModel.load(modelPath)
-      case c if c.endsWith("GBTClassificationModel") => GBTClassificationModel.load(modelPath)
       case c if c.endsWith("RandomForestClassificationModel") =>
         RandomForestClassificationModel.load(modelPath)
-      case c if c.endsWith("OneVsRestModel") => OneVsRestModel.load(modelPath)
+      // the MLlib GBT and one-vs-rest models of earlier builds
+      case c if c.startsWith("org.apache.spark.ml.") =>
+        throw new UnsupportedOperationException(s"$path holds a $c, which this " +
+          "build no longer trains or loads: every boosted objective fits on " +
+          "the native round loop now — retrain the model and save it again")
       case c if c.endsWith("MultiSparseModel") =>
         // MUST precede the SparseModel case: that suffix matches too
         val inM = fs.open(new Path(path, "model/multisparse.json"))

@@ -3,15 +3,13 @@ package graft.ml
 import org.apache.spark.ml.Model
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.ml.regression.DecisionTreeRegressionModel
-import org.apache.spark.ml.tree.{ContinuousSplit, GraftTreeBridge, InternalNode, LeafNode, Node}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import SparseBoost.{ImportanceAcc, SparseTree}
 
-/** Native multiclass softprob forest — the array-flattened
+/** Native multiclass forest — the array-flattened
   * ([[SparseBoost.SparseTree]]) representation of a `multi:softprob`
   * model: `trees(i)` contributes its leaf value to class
   * `treeInfo(i)`'s margin, exactly the XGBoost gbtree layout where
@@ -19,7 +17,9 @@ import SparseBoost.{ImportanceAcc, SparseTree}
   * trees [r·K, (r+1)·K) for a plain K-class fit).
   *
   * This is the model the boosting round loop trains under
-  * [[Objective.Softprob]] (reference
+  * [[Objective.Softprob]] and, with `objective` "binary:logistic",
+  * under [[Objective.Ovr]] (K independent logistic channels,
+  * scored the same way) (reference
   * `core.py:580-590` rewrites binary objectives to `multi:softprob`;
   * its tests `test_core.py:72-101` exercise the multiclass lifecycle)
   * and the scorer multiclass [[XgbJson]] documents ingest into: a
@@ -222,70 +222,5 @@ object MultiSparse {
     k = 0
     while (k < m.length) { m(k) /= s; k += 1 }
     m
-  }
-
-  /** Flatten one MLlib regression tree into the array form, scaling
-    * every node value by `scale` (the GBT tree weight — XGBoost
-    * documents store plain-sum leaf values; internal `base_weights`
-    * then stay the cover-weighted subtree means of the scaled leaf
-    * outputs, because an MLlib variance-impurity node prediction IS
-    * the weight-weighted mean of its subtree's targets — the Saabas
-    * expectation holds by construction).
-    *
-    * Nodes are laid out breadth-first (root = 0). MLlib trees carry
-    * no missing-value routing (`VectorAssembler` rejects NaN on these
-    * paths), so `default_left` is uniformly false — a document
-    * consumer only sees it for rows with missing values, which the
-    * source model could never score anyway.
-    */
-  def fromMLlibTree(m: DecisionTreeRegressionModel, scale: Double): SparseTree = {
-    val nodes = scala.collection.mutable.ArrayBuffer.empty[Node]
-    val leftIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val rightIdx = scala.collection.mutable.ArrayBuffer.empty[Int]
-    nodes += m.rootNode; leftIdx += -1; rightIdx += -1
-    var i = 0
-    while (i < nodes.length) {
-      nodes(i) match {
-        case in: InternalNode =>
-          leftIdx(i) = nodes.length
-          nodes += in.leftChild; leftIdx += -1; rightIdx += -1
-          rightIdx(i) = nodes.length
-          nodes += in.rightChild; leftIdx += -1; rightIdx += -1
-        case _: LeafNode => ()
-      }
-      i += 1
-    }
-    val n = nodes.length
-    val feature = new Array[Int](n)
-    val thresh = new Array[Double](n)
-    val value = new Array[Double](n)
-    val cover = new Array[Double](n)
-    val gain = new Array[Double](n)
-    i = 0
-    while (i < n) {
-      cover(i) = GraftTreeBridge.nodeWeight(nodes(i))
-      value(i) = scale * nodes(i).prediction
-      nodes(i) match {
-        case in: InternalNode =>
-          val cs = in.split match {
-            case c: ContinuousSplit => c
-            case other => throw new IllegalArgumentException(
-              "only continuous splits convert to the XGBoost document " +
-              s"format; got ${other.getClass.getSimpleName} — categorical " +
-              "MLlib splits have no num-feature slot here")
-          }
-          feature(i) = cs.featureIndex
-          thresh(i) = cs.threshold
-          // MLlib variance gain (hessian-weighted impurity decrease)
-          // — a genuine loss change, though not XGBoost's regularized
-          // Newton gain formula (divergence stamped by the exporter)
-          gain(i) = in.gain
-        case _: LeafNode =>
-          feature(i) = -1
-      }
-      i += 1
-    }
-    SparseTree(feature, thresh, leftIdx.toArray, rightIdx.toArray,
-      Array.fill(n)(false), value, cover, gain)
   }
 }

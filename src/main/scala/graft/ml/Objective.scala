@@ -24,7 +24,12 @@ import SparseBoost.Block
   *    gradients are the bits the SQL forms gave,
   *  - the leaf rule: the grower's Newton leaves, or the α-quantile
   *    reset of `reg:quantileerror` ([[leafQuantile]]),
-  *  - the train-history loss ([[loss]]) and its metric name.
+  *  - the train-history loss ([[loss]]) and its metric name, and the
+  *    sum-decomposable eval metrics the loop folds over validation rows
+  *    ([[sumMetric]]).
+  *
+  * Validation rows (a block's `valid` flags) count toward no loss
+  * partial here; the loop folds their metric apart.
   */
 sealed abstract class Objective(val name: String, val metricName: String)
     extends Serializable {
@@ -52,9 +57,82 @@ sealed abstract class Objective(val name: String, val metricName: String)
       g: Array[Double], h: Array[Double]): (Array[Double], Array[Int])
   /** The history value of the partials folded over all blocks. */
   def loss(partial: Array[Double]): Double = partial(0) / partial(1)
+  /** The sum-decomposable eval metric `name` over this objective's K
+    * margin channels; None when `name` is not one (a rank metric).
+    */
+  def sumMetric(name: String): Option[Objective.SumMetric] =
+    Objective.SumMetric.generic(name, channels)
 }
 
 object Objective {
+
+  /** Whether block row i trains (it is no validation row). */
+  @inline private def trains(b: Block, i: Int): Boolean =
+    b.valid == null || !b.valid(i)
+
+  /** An eval metric folded as (Σ term, row count) over the rows it
+    * scores: `term` reads row i's label and its K margins at offset
+    * o = i·K; `value` finishes the folded sums.
+    */
+  final case class SumMetric(
+      term: (Double, Array[Double], Int) => Double,
+      value: (Double, Double) => Double = _ / _
+  ) {
+    /** (Σ term, count) over a block's validation rows at margins f. */
+    private[ml] def partial(b: Block, f: Array[Double], k: Int): Array[Double] = {
+      var sum = 0.0
+      var n = 0
+      var i = 0
+      while (i < b.n) {
+        if (b.valid(i)) { sum += term(b.label(i), f, i * k); n += 1 }
+        i += 1
+      }
+      Array(sum, n.toDouble)
+    }
+  }
+
+  object SumMetric {
+    /** The metrics [[StagedEval.history]] computes, in its formulas:
+      * logloss, error, rmse and mae over one channel; mlogloss and
+      * merror over K.
+      */
+    def generic(name: String, k: Int): Option[SumMetric] = (name, k) match {
+      case ("logloss", 1) => Some(SumMetric { (y, f, o) =>
+        val p = 1.0 / (1.0 + StrictMath.exp(-f(o)))
+        -StrictMath.log(math.max(if (y == 1.0) p else 1.0 - p, 1e-15))
+      })
+      case ("error", 1) => Some(SumMetric((y, f, o) =>
+        if ((f(o) > 0.0) == (y == 1.0)) 0.0 else 1.0))
+      case ("rmse", 1) => Some(SumMetric((y, f, o) => (f(o) - y) * (f(o) - y),
+        (s, n) => StrictMath.sqrt(s / n)))
+      case ("mae", 1) => Some(SumMetric((y, f, o) => math.abs(f(o) - y)))
+      case ("mlogloss", _) if k > 1 => Some(SumMetric((y, f, o) =>
+        softmaxLoss(f, o, k, y, new Array[Double](k))))
+      case ("merror", _) if k > 1 => Some(SumMetric { (y, f, o) =>
+        var am = 0
+        var c = 1
+        while (c < k) { if (f(o + c) > f(o + am)) am = c; c += 1 }
+        if (am.toDouble == y) 0.0 else 1.0
+      })
+      case _ => None
+    }
+  }
+
+  /** Row mlogloss at margins f(o until o + k): fills `p` with the
+    * max-shifted softmax, its sum taken left to right.
+    */
+  private def softmaxLoss(f: Array[Double], o: Int, k: Int, y: Double,
+      p: Array[Double]): Double = {
+    var mx = f(o)
+    var c = 1
+    while (c < k) { if (f(o + c) > mx) mx = f(o + c); c += 1 }
+    var exs = 0.0
+    c = 0
+    while (c < k) { p(c) = StrictMath.exp(f(o + c) - mx); exs += p(c); c += 1 }
+    c = 0
+    while (c < k) { p(c) = p(c) / exs; c += 1 }
+    -StrictMath.log(math.max(p(y.toInt), 1e-15))
+  }
 
   /** (g, h) and loss are per-row functions of one margin and the label;
     * the history is the mean row loss.
@@ -69,10 +147,11 @@ object Objective {
     def evaluate(b: Block, f: Array[Double], s: Array[Double],
         g: Array[Double], h: Array[Double]): (Array[Double], Array[Int]) = {
       var sum = 0.0
+      var n = 0
       var i = 0
       while (i < b.n) {
         val y = b.label(i)
-        sum += rowLoss(y, f(i))
+        if (trains(b, i)) { sum += rowLoss(y, f(i)); n += 1 }
         if (g != null) {
           gradient(y, if (s == null) f(i) else f(i) - s(i), g, h, i)
           if (b.weight != null) {
@@ -82,8 +161,16 @@ object Objective {
         }
         i += 1
       }
-      (Array(sum, b.n.toDouble), null)
+      (Array(sum, n.toDouble), null)
     }
+    /** The objective's own metric (the deviances, pinball) folds its
+      * row loss.
+      */
+    override def sumMetric(name: String): Option[SumMetric] =
+      super.sumMetric(name).orElse(
+        if (name == metricName) Some(SumMetric((y, f, o) => rowLoss(y, f(o)),
+          (s, n) => loss(Array(s, n))))
+        else None)
   }
 
   /** XGBoost base_score = 0.5, margin 0 for logistic. */
@@ -183,8 +270,8 @@ object Objective {
   /** Pinball loss at α; the split search sees its (g, h), the leaf
     * values come from the α-quantile leaf rule ([[leafQuantile]]).
     */
-  final case class Quantile(alpha: Double)
-      extends PerRow("reg:quantileerror", "pinball") {
+  sealed class Quantile(val alpha: Double, name: String = "reg:quantileerror",
+      metricName: String = "pinball") extends PerRow(name, metricName) {
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1), got $alpha")
     /** The exact α-quantile of the labels: the constant that
       * minimizes the pinball loss.
@@ -206,6 +293,19 @@ object Objective {
       math.max((y - f) * alpha, (y - f) * (alpha - 1.0))
   }
 
+  /** `reg:absoluteerror`, XGBoost's L1 objective: the median (α = 0.5)
+    * leaf rule, with mean absolute error as its metric.
+    */
+  case object AbsoluteError extends Quantile(0.5, "reg:absoluteerror", "mae") {
+    // XGBoost's L1 gradient: g = sign(f − y), h = 1
+    override protected def gradient(y: Double, fm: Double, g: Array[Double],
+        h: Array[Double], i: Int): Unit = {
+      g(i) = math.signum(fm - y)
+      h(i) = 1.0
+    }
+    override protected def rowLoss(y: Double, f: Double): Double = math.abs(y - f)
+  }
+
   /** `multi:softprob` (reference `core.py:580-590`): one forest whose
     * round fits K trees on the multinomial softmax gradients of the
     * row's K margins, g = p_k − y_k, h = max(p_k(1−p_k), 1e-6) —
@@ -223,21 +323,15 @@ object Objective {
       val k = numClasses
       val p = new Array[Double](k)
       var sum = 0.0
+      var n = 0
       var i = 0
       while (i < b.n) {
         val o = i * k
-        var mx = f(o)
-        var c = 1
-        while (c < k) { if (f(o + c) > mx) mx = f(o + c); c += 1 }
-        var exs = 0.0
-        c = 0
-        while (c < k) { p(c) = StrictMath.exp(f(o + c) - mx); exs += p(c); c += 1 }
-        c = 0
-        while (c < k) { p(c) = p(c) / exs; c += 1 }
         val y = b.label(i)
-        sum += -StrictMath.log(math.max(p(y.toInt), 1e-15))
+        val l = softmaxLoss(f, o, k, y, p)
+        if (trains(b, i)) { sum += l; n += 1 }
         if (g != null) {
-          c = 0
+          var c = 0
           while (c < k) {
             val yc = if (y == c.toDouble) 1.0 else 0.0
             g(o + c) = p(c) - yc
@@ -251,7 +345,48 @@ object Objective {
         }
         i += 1
       }
-      (Array(sum, b.n.toDouble), null)
+      (Array(sum, n.toDouble), null)
+    }
+  }
+
+  /** One-vs-rest multiclass (`multiclassStrategy = "ovr"`): K
+    * independent `binary:logistic` channels, channel k on the label
+    * indicator y = k (g = p_k − y_k, h = p_k(1 − p_k) with
+    * p_k = σ(f_k)), grown together in one pass per level. Its history
+    * and probabilities are the softmax of the K margins, as for
+    * softprob; [[GraftBoost.calibrate]] Platt-scales them.
+    */
+  final case class Ovr(numClasses: Int)
+      extends Objective("binary:logistic", "mlogloss") {
+    require(numClasses >= 2, s"numClasses must be >= 2, got $numClasses")
+    override def channels: Int = numClasses
+    def evaluate(b: Block, f: Array[Double], s: Array[Double],
+        g: Array[Double], h: Array[Double]): (Array[Double], Array[Int]) = {
+      val k = numClasses
+      val p = new Array[Double](k)
+      var sum = 0.0
+      var n = 0
+      var i = 0
+      while (i < b.n) {
+        val o = i * k
+        val y = b.label(i)
+        if (trains(b, i)) { sum += softmaxLoss(f, o, k, y, p); n += 1 }
+        if (g != null) {
+          var c = 0
+          while (c < k) {
+            val q = 1.0 / (1.0 + StrictMath.exp(-f(o + c)))
+            g(o + c) = q - (if (y == c.toDouble) 1.0 else 0.0)
+            h(o + c) = math.max(q * (1.0 - q), 1e-16)
+            if (b.weight != null) {
+              g(o + c) = g(o + c) * b.weight(i)
+              h(o + c) = h(o + c) * b.weight(i)
+            }
+            c += 1
+          }
+        }
+        i += 1
+      }
+      (Array(sum, n.toDouble), null)
     }
   }
 
@@ -284,7 +419,7 @@ object Objective {
     }
   }
 
-  /** `numClasses` is the class count of a `multi:softprob` fit. */
+  /** `numClasses` is the class count of a multiclass fit. */
   def apply(params: GraftBoost.BoostParams, numClasses: Int = 0): Objective =
     params.objective match {
       case "binary:logistic" => Logistic(params.scalePosWeight)
@@ -292,14 +427,18 @@ object Objective {
       case "reg:gamma" => Gamma
       case "reg:tweedie" => Tweedie(params.tweedieVariancePower)
       case "count:poisson" => Poisson
-      case "reg:quantileerror" => Quantile(params.quantileAlpha)
-      case "multi:softprob" | "multi:softmax" => Softprob(numClasses)
+      case "reg:quantileerror" => new Quantile(params.quantileAlpha)
+      case "reg:absoluteerror" => AbsoluteError
+      case "multi:softprob" | "multi:softmax" =>
+        if (params.multiclassStrategy == "softprob") Softprob(numClasses)
+        else Ovr(numClasses)
       case "rank:pairwise" => Rank(ndcgWeighted = false)
       case "rank:ndcg" => Rank(ndcgWeighted = true)
       case other => throw new IllegalArgumentException(
         "the boosting round loop supports binary:logistic, " +
-        "reg:squarederror, reg:gamma, reg:tweedie, count:poisson, " +
-        "reg:quantileerror, multi:softprob, rank:pairwise and rank:ndcg, " +
+        "reg:squarederror, reg:absoluteerror, reg:gamma, reg:tweedie, " +
+        "count:poisson, reg:quantileerror, multi:softprob, rank:pairwise " +
+        "and rank:ndcg, " +
         s"got $other")
     }
 }

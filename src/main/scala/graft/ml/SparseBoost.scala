@@ -9,7 +9,7 @@ import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -17,11 +17,10 @@ import org.apache.spark.storage.StorageLevel
 /** Sparsity-aware gradient boosting — XGBoost's learned default
   * direction for missing values (Chen & Guestrin 2016 §3.3, the
   * `missing=` semantics the reference forwards at `core.py:370-377`
-  * and pins in `test_core.py:365-382`). MLlib rejects NaN features
-  * outright, so the impute/sentinel strategies of [[GraftBoost]] were
-  * approximations; this is the real mechanism, as a from-scratch
-  * histogram tree learner, grown by the one boosting round loop
-  * ([[train]]) for every [[Objective]]:
+  * and pins in `test_core.py:365-382`), as a from-scratch histogram
+  * tree learner, grown by the one boosting round loop ([[train]]) for
+  * every [[Objective]]; the impute/sentinel strategies of
+  * [[GraftBoost]] are input transforms in front of it:
   *
   *  1. per feature, split candidates are the exact (maxBins−1)
   *     quantiles of the NON-missing values — XGBoost's global
@@ -45,20 +44,19 @@ import org.apache.spark.storage.StorageLevel
   *     winning direction is stored on the node as its default branch,
   *  4. leaf weights are Newton steps −G/(H+λ) (η-scaled), and
   *     `min_child_weight` bounds the child HESSIAN sums — XGBoost's
-  *     actual semantics, where the MLlib-backed paths could only
-  *     approximate it with minInstancesPerNode.
+  *     actual semantics.
   *
   * Objectives: `binary:logistic` (g = p − y, h = p(1−p)),
-  * `reg:squarederror` (g = f − y, h = 1), the log-link deviance
+  * `reg:squarederror` (g = f − y, h = 1), `reg:absoluteerror`
+  * (g = sign(f − y), h = 1, the median leaf rule), the log-link deviance
   * pair `reg:gamma` / `reg:tweedie` (XGBoost's insurance-severity
   * objectives; exact Newton g/h on the margin scale, predictions on
   * the response scale e^f), `count:poisson` (log link, g = μ − y,
   * h = μ, μ = e^f) and `reg:quantileerror` (pinball loss, g = 1{y ≤ f}
   * − α, h = 1, plus the α-quantile leaf rule of [[quantileLeaves]]).
-  * binary/squared are reached under `missingStrategy = "native"`; the
-  * other four ALWAYS train here — MLlib GBT has none of those losses.
   * The same loop grows `multi:softprob` (K trees per round on the
-  * softmax gradients, [[Objective.Softprob]]) and `rank:pairwise` /
+  * softmax gradients, [[Objective.Softprob]]), one-vs-rest multiclass
+  * (K logistic channels, [[Objective.Ovr]]) and `rank:pairwise` /
   * `rank:ndcg` (per-group pair gradients, [[Objective.Rank]]).
   *
   * Poisson and quantile moved here from their own per-round MLlib
@@ -464,7 +462,9 @@ object SparseBoost {
     * sketch whose per-partition memory is bounded by the accuracy
     * parameter, the proposal that survives a 100 TB scan where the
     * exact form's per-value merge cannot. The histogram passes
-    * downstream are identical either way.
+    * downstream are identical either way. Validation rows propose no
+    * edge: `data` holds the training rows only, and the exact form
+    * skips the blocks' flagged rows.
     *
     * "exact" assumes NARROW feature vectors: it shuffles every
     * non-missing value once to group them by feature, so its shuffle
@@ -498,8 +498,10 @@ object SparseBoost {
       }.toArray
     } else {
       val got = percentilesByKey(blocks.flatMap { b =>
+        val raw =
+          if (b.valid == null) b.raw else b.raw.indices.filterNot(b.valid(_)).map(b.raw).toArray
         (0 until numFeat).iterator
-          .map(j => (j, b.raw.map(_(j)).filter(!_.isNaN)))
+          .map(j => (j, raw.map(_(j)).filter(!_.isNaN)))
           .filter(_._2.nonEmpty)
       }, numFeat, probs)
       Array.tabulate(numFeat) { j =>
@@ -518,8 +520,12 @@ object SparseBoost {
     * none), the next round's instance-weighted (g, h) (n × K), the
     * grower's row order (null: block order; ranking sorts each
     * group), each of the round's C trees' node position (n × C; ~node
-    * for a row outside that tree's row sample; null between rounds)
-    * and the loss partial of the pass that wrote `f`.
+    * for a row outside that tree's row sample; null between rounds),
+    * the loss partial of the pass that wrote `f` (then the validation
+    * metric's, when the fit folds one) and the validation flags (null:
+    * no validation rows in the fit). A validation row sits outside
+    * every tree's sample, so it adds to no histogram and no quantile
+    * leaf, but walks to its leaves in every margin update.
     *
     * Blocks are never mutated: every pass derives new blocks that
     * share the unchanged arrays, so an evicted block recomputed from
@@ -537,7 +543,8 @@ object SparseBoost {
       h: Array[Double],
       order: Array[Int],
       pos: Array[Int],
-      loss: Array[Double]
+      loss: Array[Double],
+      valid: Array[Boolean]
   ) {
     def n: Int = label.length
   }
@@ -613,7 +620,8 @@ object SparseBoost {
           val at = i * c + tr
           pos(at) =
             if (draws != null && draws(tr) != null)
-              if (draws(tr).takes(b.raw(i), b.label(i))) 0 else ~0
+              if ((b.valid == null || !b.valid(i)) && draws(tr).takes(b.raw(i), b.label(i))) 0
+              else ~0
             else if (routes == null) b.pos(at)
             else routes(tr).move(b.pos(at), b.codes, i * numFeat, miss)
           tr += 1
@@ -1169,11 +1177,25 @@ object SparseBoost {
     walked
   }
 
+  /** Early stopping inside the round loop (the reference's
+    * `early_stopping_rounds`, `core.py:435-449`): rows whose boolean
+    * column `col` is true are validation rows. They get every round's
+    * margin update, and `metric` (None: the objective's own) is
+    * evaluated over them after each round; the loop stops once it has
+    * not improved for `patience` rounds ([[StagedEval.stalledAt]]) and
+    * keeps the forest of the best round ([[StagedEval.bestIteration]]).
+    * They get no gradient, histogram, base-margin, edge or quantile-leaf
+    * share.
+    */
+  final case class EarlyStop(col: String, metric: Option[String] = None, patience: Int = 1)
+
   /** What the round loop grew: the forest in growth order (round r,
     * channel k, parallel tree t at ((r−1)·K + k)·T + t − 1), the start
     * margin, the per-round split statistics and their sum, the
-    * per-round train history and whether a DART round rescaled
-    * earlier trees.
+    * per-round train history, whether a DART round rescaled earlier
+    * trees, and under [[EarlyStop]] the per-round validation history
+    * (one value per trained round; the forest and statistics are cut to
+    * the best round).
     */
   final case class Fit(
       trees: Array[SparseTree],
@@ -1181,7 +1203,8 @@ object SparseBoost {
       roundAccs: Seq[ImportanceAcc],
       stats: ImportanceAcc,
       history: Array[Double],
-      dartRescaled: Boolean
+      dartRescaled: Boolean,
+      validation: Array[Double] = Array.emptyDoubleArray
   ) {
     /** The forest as a single-channel model. */
     def sparseModel(uid: String, params: GraftBoost.BoostParams): SparseModel = {
@@ -1194,21 +1217,24 @@ object SparseBoost {
 
   /** A partition's training rows as a [[Block]] without codes or
     * boosting state: features, label, then the optional user weight,
-    * base margin and group columns at the given indices (−1: absent).
+    * base margin, group and validation-flag columns at the given
+    * indices (−1: absent).
     */
   private def readBlock(rows: Iterator[Row], wIx: Int, bmIx: Int, gIx: Int,
-      objective: Objective): Block = {
+      vIx: Int, objective: Objective): Block = {
     val raw = new ArrayBuffer[Array[Double]]
     val label = new ArrayBuffer[Double]
     val user = new ArrayBuffer[Double]
     val bm = new ArrayBuffer[Double]
     val group = new ArrayBuffer[Long]
+    val valid = new ArrayBuffer[Boolean]
     rows.foreach { r =>
       raw += r.getAs[Vector](0).toArray
       label += r.getDouble(1)
       if (wIx >= 0) user += r.getDouble(wIx)
       if (bmIx >= 0) bm += r.getDouble(bmIx)
       if (gIx >= 0) group += r.getLong(gIx)
+      if (vIx >= 0) valid += r.getBoolean(vIx)
     }
     val weight =
       if (!objective.weighted(wIx >= 0)) null
@@ -1217,7 +1243,8 @@ object SparseBoost {
     Block(raw.toArray, label.toArray, weight,
       if (gIx >= 0) group.toArray else null, codes = null,
       f = if (bmIx >= 0) bm.toArray else null,
-      s = null, g = null, h = null, order = null, pos = null, loss = null)
+      s = null, g = null, h = null, order = null, pos = null, loss = null,
+      valid = if (vIx >= 0) valid.toArray else null)
   }
 
   /** The boosting round loop — the one `xgb.train` loop of the
@@ -1252,24 +1279,47 @@ object SparseBoost {
     * trees continue that fit exactly. The returned base is still the
     * scalar one, so standalone scoring (no margin) falls back to
     * base_score — also stock behavior.
+    *
+    * `earlyStop` folds a validation metric into each round
+    * ([[EarlyStop]]): a sum-decomposable one ([[Objective.sumMetric]])
+    * inside the fused margin-update job, `auc` / `aucpr` by the rank
+    * arithmetic of [[StagedEval.aucByRound]] over that round's
+    * validation margins. Nothing is retrained.
     */
   def train(
       data: DataFrame,
       params: GraftBoost.BoostParams,
       objective: Objective,
       weightCol: Option[String] = None,
-      marginCol: Option[String] = None
+      marginCol: Option[String] = None,
+      earlyStop: Option[EarlyStop] = None
   ): Fit = {
     val K = objective.channels
     val T = params.numParallelTree
     require(params.booster != "dart" || objective.supportsDart,
       s"booster=\"dart\" drops trees from one per-row margin; " +
       s"${objective.name} has none")
+    val valMetric = earlyStop.map(_.metric.getOrElse(objective.metricName))
+    val sumMetric = valMetric.flatMap(objective.sumMetric)
+    valMetric.foreach { m =>
+      require(!objective.isInstanceOf[Objective.Rank],
+        "ranking objectives take no validation rows: their gradients and " +
+        "NDCG windows span whole groups")
+      require(params.booster != "dart",
+        "early stopping keeps the best round's forest; a DART forest's " +
+        "dropout rescales leave no round prefix to keep")
+      require(sumMetric.isDefined ||
+          (K == 1 && Set("auc", "aucpr", "aucpr-trapezoid")(m)),
+        s"unknown eval metric '$m' for ${objective.name}")
+    }
     val keep = Seq(col("features"), col("label").cast("double").as("label")) ++
       weightCol.map(c => col(c).cast("double").as("graft_w")) ++
       marginCol.map(c => GraftBoost.marginColumn(c).as("graft_bm")) ++
+      earlyStop.map(es => coalesce(col(es.col).cast("boolean"), lit(false)).as("graft_val")) ++
       objective.inputs
     val src = data.select(keep: _*)
+    // the rows the base margin and the approx edges are learned from
+    val trainSrc = if (earlyStop.isEmpty) src else src.filter(!col("graft_val"))
 
     val sc = data.sparkSession.sparkContext
     sc.setJobDescription("boost: propose-edges")
@@ -1281,12 +1331,12 @@ object SparseBoost {
     }
     val laid = objective.layout(src)
     val names = laid.columns
-    val (wIx, bmIx, gIx) = (names.indexOf("graft_w"), names.indexOf("graft_bm"),
-      names.indexOf("group"))
+    val (wIx, bmIx, gIx, vIx) = (names.indexOf("graft_w"), names.indexOf("graft_bm"),
+      names.indexOf("group"), names.indexOf("graft_val"))
     val rows = laid.rdd.mapPartitions(it =>
-      Iterator.single(readBlock(it, wIx, bmIx, gIx, objective)))
+      Iterator.single(readBlock(it, wIx, bmIx, gIx, vIx, objective)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = proposeEdges(src, rows, numFeat, params.maxBins, params.splitProposal)
+    val edges = proposeEdges(trainSrc, rows, numFeat, params.maxBins, params.splitProposal)
     if (params.monotoneConstraints.nonEmpty) {
       require(params.monotoneConstraints.length == numFeat,
         s"monotoneConstraints has ${params.monotoneConstraints.length} " +
@@ -1328,7 +1378,7 @@ object SparseBoost {
 
     val base =
       if (!params.baseScore.isNaN) params.baseScore
-      else objective.defaultBase(src)
+      else objective.defaultBase(trainSrc)
     val featOff = edges.scanLeft(0)(_ + _.length + 2)
     val shape = Shape(numFeat, K, T, edges.map(_.length + 1), featOff)
     // bins once; per-row base_margin REPLACES the scalar base as the
@@ -1378,8 +1428,11 @@ object SparseBoost {
       else forest.indices.filter(i => u01(1L, r, i) < params.rateDrop)
     var dropped = dropSet(1)
     val keepRows = math.round(params.subsample * 1000)
+    val valHist = new ArrayBuffer[Double](params.numRound)
+    var stopped = false
 
-    for (r <- 1 to params.numRound) {
+    var r = 1
+    while (r <= params.numRound && !stopped) {
       val k = dropped.length
       val roundAcc = ImportanceAcc(numFeat)
       roundAccs += roundAcc
@@ -1471,15 +1524,45 @@ object SparseBoost {
         val (g, h) =
           if (last) (null, null) else (new Array[Double](b.n * K), new Array[Double](b.n * K))
         val (loss, order) = objective.evaluate(b, f, s, g, h)
-        b.copy(f = f, s = s, g = g, h = h, order = order, pos = null, loss = loss)
+        b.copy(f = f, s = s, g = g, h = h, order = order, pos = null,
+          loss = sumMetric.fold(loss)(loss ++ _.partial(b, f, K)))
       }.localCheckpoint()
-      hist += objective.loss(PartialFold.sum(next.map(_.loss), 2))
+      val folded = PartialFold.sum(next.map(_.loss), if (sumMetric.isEmpty) 2 else 4)
+      hist += objective.loss(folded)
+      valMetric.foreach { m =>
+        val v = sumMetric.fold(rankMetric(data.sparkSession, next, m))(
+          _.value(folded(2), folded(3)))
+        // a one-class validation set makes AUC 0/0 every round, and an
+        // empty one every metric: no round could be ranked
+        require(!v.isNaN, s"$m is NaN on the validation rows (none, or one " +
+          "class only for AUC) — early stopping cannot rank rounds")
+        valHist += v
+        stopped = StagedEval.stalledAt(valHist.toArray, m, earlyStop.get.patience).isDefined
+      }
       grown.unpersist(false)
       GraftRddBridge.release(state)
       state = next
+      r += 1
     }
     GraftRddBridge.release(state)
-    Fit(forest.toArray, base, roundAccs.toSeq,
-      ImportanceAcc.sum(roundAccs.toSeq, numFeat), hist.toArray, anyDartRescale)
+    // early stopping keeps the best round's prefix
+    val kept = valMetric.fold(roundAccs.length)(StagedEval.bestIteration(valHist.toArray, _))
+    Fit(forest.take(kept * K * T).toArray, base, roundAccs.take(kept).toSeq,
+      ImportanceAcc.sum(roundAccs.take(kept).toSeq, numFeat), hist.toArray, anyDartRescale,
+      valHist.toArray)
+  }
+
+  /** `auc` / `aucpr` / `aucpr-trapezoid` over the validation rows'
+    * margins of one round's state, by [[StagedEval]]'s rank arithmetic.
+    */
+  private def rankMetric(spark: SparkSession, state: RDD[Block], metric: String): Double = {
+    import spark.implicits._
+    val staged = state.flatMap { b =>
+      (0 until b.n).iterator.filter(b.valid(_)).map(i => (1, b.label(i), b.f(i), 1.0))
+    }.toDF("round", "label", "margin", "w")
+    val byRound =
+      if (metric == "auc") StagedEval.aucByRound(staged)
+      else StagedEval.aucprByRound(staged, trapezoid = metric == "aucpr-trapezoid")
+    byRound.head().getAs[Double]("m")
   }
 }

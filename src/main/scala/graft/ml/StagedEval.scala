@@ -1,25 +1,26 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.{GBTClassificationModel, OneVsRestModel}
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.regression.GBTRegressionModel
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Per-round staged evaluation over a trained GBT — the engine's
-  * answer to the reference's arbitrary-metric `evals_result` and
-  * `best_iteration` semantics (`core.py:120, 435-449, 476-479`),
-  * which MLlib's loss-only early stopping can't express (SURVEY
-  * §7.6b/c).
+/** Per-round staged evaluation of a trained model — the reference's
+  * arbitrary-metric `evals_result` and `best_iteration` semantics
+  * (`core.py:120, 435-449, 476-479`) on any frame, after the fit.
+  * The round loop folds the same metrics over its validation rows as
+  * it trains ([[SparseBoost.EarlyStop]]); this is the post-hoc form,
+  * and the oracle those in-loop values are pinned against.
   *
   * One distributed pass computes the staged margins for EVERY
   * boosting round simultaneously (broadcast trees, incremental sum
   * per row), so the cost is O(rows × trees) — the same as a single
   * scoring pass — rather than one transform per round. Metrics are
   * then per-round aggregations:
-  *  - "auc": rank-statistic (Mann-Whitney) per round
-  *  - "logloss": mean log-loss of the sigmoid margin
-  *  - "rmse": regression root-mean-square error of staged prediction
+  *  - "auc", "aucpr", "aucpr-trapezoid": rank statistics per round
+  *  - "logloss", "error": of the sigmoid margin
+  *  - "rmse", "mae": of the staged prediction
+  *  - "mlogloss", "merror": of a multiclass forest's softmax
+  *    ([[MultiSparse.MultiSparseModel.stagedEval]])
   */
 object StagedEval {
 
@@ -45,23 +46,9 @@ object StagedEval {
     val spark = df.sparkSession
     import spark.implicits._
 
-    // (initial margin, per-round margin increments) — closures keep
-    // the walk uniform across MLlib GBT forests and the native sparse
-    // forest (η already baked into SparseTree leaf values)
-    // margins are emitted on the FULL-LOGIT scale (p = sigmoid(m)).
-    // MLlib GBT classification raw scores are HALF logits
-    // (p = sigmoid(2·raw)), so those steps are doubled here; the
-    // native sparse and gblinear margins are full logits already —
-    // one convention downstream, so the logloss metric is correct for
-    // every model family (it used to assume half logits universally,
-    // which mis-scored native/linear models)
+    // (initial margin, per-round margin increments; η is already baked
+    // into the stored leaf values) — full logits for binary:logistic
     val (init: Double, steps: Array[Vector => Double]) = model.model match {
-      case m: GBTClassificationModel =>
-        (0.0, m.trees.zip(m.treeWeights).map { case (t, tw) =>
-          (v: Vector) => 2.0 * tw * t.predict(v) })
-      case m: GBTRegressionModel =>
-        (0.0, m.trees.zip(m.treeWeights).map { case (t, tw) =>
-          (v: Vector) => tw * t.predict(v) })
       case m: SparseBoost.SparseModel if m.dartRescaled =>
         throw new UnsupportedOperationException(
           "staged evaluation is undefined for a DART forest whose " +
@@ -101,8 +88,8 @@ object StagedEval {
         }.toArray
         (m.base, steps)
       case m => throw new UnsupportedOperationException(
-        s"staged evaluation needs a GBT, native sparse or freshly " +
-        s"trained gblinear model, got ${m.getClass}")
+        s"staged evaluation needs a native sparse or freshly trained " +
+        s"gblinear model, got ${m.getClass}")
     }
     val bTrees = spark.sparkContext.broadcast((init, steps))
 
@@ -118,77 +105,11 @@ object StagedEval {
     }.toDF("round", "label", "margin", "w")
   }
 
-  /** (round, per-example mlogloss, correct-indicator, weight) rows
-    * for a OneVsRest-over-GBT multiclass model: one distributed pass
-    * accumulates every class's staged margin simultaneously, applies
-    * the same softmax as [[GraftBoost.predictProba]]'s OvR path per
-    * round, and emits the per-example metric parts narrow so the
-    * per-round metrics are plain groupBy aggregations — reference
-    * `multi:softprob` eval-history semantics (`core.py:120, 580-590`).
-    */
-  private def stagedMulticlass(
-      model: GraftBoost.GraftBoostModel,
-      df: DataFrame,
-      labelCol: String,
-      weightCol: Option[String]
-  ): DataFrame = {
-    val data = graft.functions.GraftFunctions.fanOut(
-      GraftBoost.assemble(df, model.featureCols, model.imputation)
-      .withColumn("label", col(labelCol).cast("double"))
-      .withColumn("w", weightCol.map(col(_).cast("double")).getOrElse(lit(1.0)))
-      .select(col("features"), col("label"), col("w")))
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    val perClass = model.model match {
-      case m: OneVsRestModel =>
-        m.models.map {
-          case g: GBTClassificationModel => (g.trees, g.treeWeights)
-          case other => throw new UnsupportedOperationException(
-            s"staged multiclass needs GBT per class, got ${other.getClass}")
-        }
-      case m => throw new UnsupportedOperationException(
-        s"staged multiclass metrics need a OneVsRest model, got ${m.getClass}")
-    }
-    val b = spark.sparkContext.broadcast(perClass)
-
-    data.as[(Vector, Double, Double)].mapPartitions { it =>
-      val pc = b.value
-      val nC = pc.length
-      val rounds = pc.map(_._1.length).min
-      it.flatMap { case (features, label, w) =>
-        val li = label.toInt
-        require(li >= 0 && li < nC && li.toDouble == label,
-          s"label $label out of range for $nC classes (eval frame contains " +
-          "a class the model was not trained on?)")
-        val margins = new Array[Double](nC)
-        (0 until rounds).iterator.map { r =>
-          var c = 0
-          while (c < nC) {
-            margins(c) += pc(c)._2(r) * pc(c)._1(r).predict(features); c += 1
-          }
-          var mx = margins(0); var argmax = 0
-          var i = 1
-          while (i < nC) {
-            if (margins(i) > mx) { mx = margins(i); argmax = i }; i += 1
-          }
-          var denom = 0.0
-          i = 0
-          while (i < nC) { denom += math.exp(margins(i) - mx); i += 1 }
-          val p = math.exp(margins(li) - mx) / denom
-          val correct = if (argmax == li) 1.0 else 0.0
-          (r + 1, -math.log(math.max(p, 1e-15)), correct, w)
-        }
-      }
-    }.toDF("round", "ll", "correct", "w")
-  }
-
   /** Per-round metric values, index 0 = after first round. `weightCol`
     * reproduces the reference's `sample_weight_eval_set`
-    * (`core.py:138-151`) for the weighted metrics (logloss/rmse/
-    * mlogloss/merror — the reference's weighted eval path; AUC stays
-    * unweighted). Binary/regression metrics need a single GBT model;
-    * "mlogloss"/"merror" need a OneVsRest-over-GBT multiclass model.
+    * (`core.py:138-151`) for the weighted metrics (every metric but the
+    * rank ones, which stay unweighted). "mlogloss"/"merror" need a
+    * multiclass forest, the others a single-margin model.
     */
   def history(
       model: GraftBoost.GraftBoostModel,
@@ -197,14 +118,8 @@ object StagedEval {
       metric: String,
       weightCol: Option[String] = None
   ): Array[Double] = {
-    if (metric == "mlogloss" || metric == "merror") {
-      val staged = stagedMulticlass(model, df, labelCol, weightCol)
-      val m =
-        if (metric == "mlogloss") (sum(col("ll") * col("w")) / sum(col("w"))).as("m")
-        else (lit(1.0) - sum(col("correct") * col("w")) / sum(col("w"))).as("m")
-      return staged.groupBy(col("round")).agg(m)
-        .orderBy(col("round")).collect().map(_.getAs[Double]("m"))
-    }
+    if (metric == "mlogloss" || metric == "merror")
+      return multiclassHistory(model, df, labelCol, weightCol)(metric)
     val staged = stagedMargins(model, df, labelCol, weightCol)
     val byRound: DataFrame = metric match {
       case "logloss" =>
@@ -215,9 +130,16 @@ object StagedEval {
           .otherwise(-log(greatest(lit(1.0) - p, lit(1e-15))))
         staged.groupBy(col("round"))
           .agg((sum(ll * col("w")) / sum(col("w"))).as("m"))
+      case "error" =>
+        val wrong = when((col("margin") > 0.0) === (col("label") === 1.0), 0.0).otherwise(1.0)
+        staged.groupBy(col("round"))
+          .agg((sum(wrong * col("w")) / sum(col("w"))).as("m"))
       case "rmse" =>
         staged.groupBy(col("round"))
           .agg(sqrt(sum(pow(col("margin") - col("label"), 2) * col("w")) / sum(col("w"))).as("m"))
+      case "mae" =>
+        staged.groupBy(col("round"))
+          .agg((sum(abs(col("margin") - col("label")) * col("w")) / sum(col("w"))).as("m"))
       case "auc" => aucByRound(staged)
       case "aucpr" => aucprByRound(staged)
       case "aucpr-trapezoid" => aucprByRound(staged, trapezoid = true)
@@ -225,6 +147,23 @@ object StagedEval {
         throw new IllegalArgumentException(s"unknown metric: $other")
     }
     byRound.orderBy(col("round")).collect().map(_.getAs[Double]("m"))
+  }
+
+  /** Per-round "mlogloss" and "merror" of a multiclass forest in one
+    * staged pass ([[MultiSparse.MultiSparseModel.stagedEval]]).
+    */
+  def multiclassHistory(
+      model: GraftBoost.GraftBoostModel,
+      df: DataFrame,
+      labelCol: String,
+      weightCol: Option[String] = None
+  ): Map[String, Array[Double]] = model.model match {
+    case mm: MultiSparse.MultiSparseModel =>
+      mm.stagedEval(GraftBoost.assemble(df, model.featureCols, model.imputation,
+          keepNaN = model.missingStrategy == "native")
+        .withColumn("label", col(labelCol).cast("double")), weightCol)
+    case m => throw new UnsupportedOperationException(
+      s"mlogloss and merror need a multiclass forest, got ${m.getClass}")
   }
 
   /** Exact per-round Mann-Whitney AUC with midrank tie handling,
@@ -385,7 +324,7 @@ object StagedEval {
 
   /** Best round under the metric (1-based, like `best_iteration`+1 in
     * the reference's 0-based counting; maximize AUC/PR-AUC, minimize
-    * logloss/rmse).
+    * the others).
     */
   def bestIteration(hist: Array[Double], metric: String): Int = {
     val idx = metric match {
@@ -415,26 +354,19 @@ object StagedEval {
     None
   }
 
-  /** In-fit early stopping on an ARBITRARY staged metric — the
-    * reference's `early_stopping_rounds` with `eval_metric=auc`
-    * (`core.py:435-449`, `test_core.py:104-146`), which MLlib's
-    * loss-only `validationIndicatorCol` cannot express.
-    *
-    * MLlib GBT has no warm start, so the literal round-at-a-time loop
-    * would retrain from scratch per round. Instead the fit runs in
-    * DOUBLING CHUNKS: train `chunk` rounds, compute the full per-round
-    * metric history in ONE staged pass, and stop as soon as the
-    * history shows a stall ([[stalledAt]]); otherwise double the chunk
-    * (capped at numRound) and retrain. When the metric stalls early —
-    * the case early stopping exists for — total trained rounds stay
-    * near the stall point instead of numRound; the worst case (no
-    * stall) is bounded by 2·numRound of training, the price of no
-    * warm start. The returned model is physically truncated to the
-    * best round ([[truncateToBest]]'s cut), the history is clipped at
+  /** In-fit early stopping on an ARBITRARY metric — the reference's
+    * `early_stopping_rounds` with `eval_metric=auc` (`core.py:435-449`,
+    * `test_core.py:104-146`): ONE fit over `train` with `validation`'s
+    * rows flagged as validation rows ([[SparseBoost.EarlyStop]]). The
+    * loop evaluates `metric` on them after every round and stops at the
+    * first [[stalledAt]] round, so at most stall + 1 rounds train; the
+    * returned model is cut to the best round, the history clipped at
     * the stopped round exactly as the reference's `evals_result` is.
+    * `validation` needs the feature and label columns; its rows are
+    * unweighted.
     *
     * @return (truncated model, best round (1-based), clipped history,
-    *         total rounds actually trained across chunks)
+    *         rounds trained)
     */
   def fitWithEarlyStopping(
       train: DataFrame,
@@ -446,39 +378,17 @@ object StagedEval {
       earlyStoppingRounds: Int,
       weightCol: Option[String] = None
   ): (GraftBoost.GraftBoostModel, Int, Array[Double], Int) = {
-    import org.apache.spark.ml.classification.{GBTClassificationModel, GraftModelBridge}
-    require(params.objective == "binary:logistic" || params.objective == "reg:squarederror",
-      "arbitrary-metric early stopping needs a single truncatable model " +
-      "(binary:logistic or reg:squarederror — GBT or native sparse); " +
-      "multiclass OvR has no truncation")
-    var chunk = math.min(math.max(2 * earlyStoppingRounds, 8), params.numRound)
-    var trained = 0
-    while (true) {
-      val m = GraftBoost.train(train, featureCols, labelCol,
-        params.copy(numRound = chunk), weightCol)
-      trained += chunk
-      val hist = history(m, validation, labelCol, metric)
-      // a one-class validation frame makes AUC 0/0 = NaN every round;
-      // indexOf on NaN would then truncate at round 0 — fail by name
-      require(!hist.exists(_.isNaN),
-        s"$metric is NaN on the validation frame (single-class validation " +
-        "set? AUC needs both labels) — early stopping cannot rank rounds")
-      val stall = stalledAt(hist, metric, earlyStoppingRounds)
-      if (stall.isDefined || chunk >= params.numRound) {
-        val clipped = hist.take(stall.getOrElse(hist.length))
-        val k = bestIteration(clipped, metric)
-        val cut = m.model match {
-          case g: GBTClassificationModel => GraftModelBridge.truncateClassifier(g, k)
-          case g: GBTRegressionModel     => GraftModelBridge.truncateRegressor(g, k)
-          case s: SparseBoost.SparseModel => s.truncate(k)
-          case l: LinearBoost.LinearModel => l.truncate(k)
-          case other => throw new UnsupportedOperationException(s"${other.getClass}")
-        }
-        return (m.copy(model = cut), k, clipped, trained)
-      }
-      chunk = math.min(chunk * 2, params.numRound)
-    }
-    throw new IllegalStateException("unreachable")
+    require(earlyStoppingRounds >= 1,
+      s"earlyStoppingRounds must be >= 1, got $earlyStoppingRounds")
+    val flag = "graft_validation"
+    val valRows = weightCol.filterNot(validation.columns.contains)
+      .fold(validation)(w => validation.withColumn(w, lit(1.0)))
+    val both = train.withColumn(flag, lit(false))
+      .unionByName(valRows.withColumn(flag, lit(true)), allowMissingColumns = true)
+    val m = GraftBoost.trainEarlyStopped(both, featureCols, labelCol, params, weightCol,
+      SparseBoost.EarlyStop(flag, Some(metric), earlyStoppingRounds))
+    val hist = m.evalsResult("validation")(metric)
+    (m, bestIteration(hist, metric), hist, hist.length)
   }
 
   /** Cut the model down to its best iteration under `metric` on a
@@ -492,13 +402,11 @@ object StagedEval {
       labelCol: String,
       metric: String
   ): (GraftBoost.GraftBoostModel, Int, Array[Double]) = {
-    import org.apache.spark.ml.classification.{GBTClassificationModel, GraftModelBridge}
     val hist = history(model, validation, labelCol, metric)
     val k = bestIteration(hist, metric)
     val cut = model.model match {
-      case m: GBTClassificationModel => GraftModelBridge.truncateClassifier(m, k)
-      case m: GBTRegressionModel     => GraftModelBridge.truncateRegressor(m, k)
       case m: SparseBoost.SparseModel => m.truncate(k)
+      case m: MultiSparse.MultiSparseModel => m.truncate(k)
       case m: LinearBoost.LinearModel => m.truncate(k)
       case m => throw new UnsupportedOperationException(s"${m.getClass}")
     }

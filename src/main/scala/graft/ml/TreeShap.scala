@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the forest (trees + cover) is a model-sized driver
   * artifact broadcast once; scoring is one map-side pass, no shuffle.
-  * Needs per-node cover, which the native loop records during growth;
-  * MLlib GBT hides its node statistics, so those models keep the
-  * Saabas decomposition ([[Contributions]]) — documented divergence.
+  * Needs per-node cover, which the native loop records during growth
+  * for every single-margin boosted fit; the Saabas decomposition
+  * ([[Contributions]]) is the cheaper path-only alternative.
   */
 object TreeShap {
 
@@ -284,8 +284,7 @@ object TreeShap {
       case m: SparseBoost.SparseModel => m
       case m => throw new UnsupportedOperationException(
         "exact TreeSHAP needs the native sparse forest's cover " +
-        s"statistics; got ${m.getClass} — use Contributions (Saabas) " +
-        "for MLlib-backed models")
+        s"statistics; got ${m.getClass}")
     }
     require(!sm.trees.exists(_.hasCategorical),
       "TreeSHAP on a forest with categorical (set-membership) splits " +

@@ -20,13 +20,11 @@ import SparseBoost.{ImportanceAcc, SparseModel, SparseTree}
   *    multiclass layout). The engine's true-softprob forests
   *    ([[Objective.Softprob]], reference `core.py:580-590`) ARE the native
   *    [[MultiSparse.MultiSparseModel]] scorer multiclass documents
-  *    ingest into. The wrapped MLlib GBT paths export too, through
-  *    the lossless MLlib→array walk ([[MultiSparse.fromMLlibTree]]):
-  *    regression folds each tree weight into its node values
-  *    (margins bit-exact), binary classification folds 2·wᵢ so stock
-  *    `sigmoid(margin)` matches MLlib's probability to
-  *    complement-form rounding (~ulp(1); MLlib evaluates
-  *    1 − sigmoid(−2m)) with the decision boundary exact.
+  *    ingest into. Every boosted objective trains on that loop, so
+  *    every boosted fit exports — except `reg:quantileerror` /
+  *    `reg:absoluteerror` (line-searched leaves) and one-vs-rest
+  *    forests (K binary channels, optionally Platt-calibrated), whose
+  *    scoring rules have no schema slot.
   *  - `dart` — a forest whose dropout rounds fired exports as the
   *    schema's dart slot (gbtree submodel + `weight_drop`); ingest
   *    folds `weight_drop` into the stored leaf values (the plain-sum
@@ -143,9 +141,9 @@ object XgbJson {
     * `dart` when dropout rounds fired; `count:poisson` among them,
     * its log-link base carried as an exp-link `base_score`), trained
     * softprob / ingested multiclass forests → multiclass `gbtree`,
-    * wrapped MLlib GBT → `gbtree` (tree weights folded into node
-    * values), linear models → `gblinear`. Refuses
-    * `reg:quantileerror` forests (by objective name) and the RF / OvR
+    * linear models → `gblinear`. Refuses the quantile-leaf forests
+    * (`reg:quantileerror`, `reg:absoluteerror`, by objective name) and
+    * the one-vs-rest (Platt-calibrated or not) and random-forest
     * multiclass models — their scoring rules have no schema slot;
     * [[ModelIO]] persists those.
     */
@@ -153,8 +151,8 @@ object XgbJson {
     case sm: SparseModel =>
       // the quantile leaf rule writes α-quantiles of residuals, not
       // the Newton steps a gbtree document's leaves are
-      require(sm.objective != "reg:quantileerror",
-        "XGBoost JSON has no slot for a reg:quantileerror forest's " +
+      require(sm.objective != "reg:quantileerror" && sm.objective != "reg:absoluteerror",
+        s"XGBoost JSON has no slot for a ${sm.objective} forest's " +
         "line-searched leaves — use ModelIO for engine-native " +
         "persistence")
       val maxIdx = sm.trees.iterator.flatMap(_.feature.iterator)
@@ -182,6 +180,11 @@ object XgbJson {
         categoricalFeatures = categoricalSlots(sm.trees))
 
     case mm: MultiSparseModel =>
+      // one-vs-rest: K binary:logistic channels, which no multiclass
+      // objective of the schema scores
+      require(mm.objective.startsWith("multi:"),
+        "XGBoost JSON has no slot for a one-vs-rest forest — use " +
+        "ModelIO for engine-native persistence")
       val maxIdx = mm.trees.iterator.flatMap(_.feature.iterator)
         .filter(_ >= 0).maxOption.getOrElse(-1)
       namedFeatureGuard(model, maxIdx)
@@ -224,62 +227,13 @@ object XgbJson {
       learnerDoc(model, booster, numClass = 0, lm.base,
         objectiveJson(lm.objective, 0), statsAbsent = false)
 
-    // wrapped-MLlib paths: margin = Σ wᵢ·treeᵢ(x); each tree weight
-    // folds into its node values through the lossless walk, so the
-    // document is a plain gbtree sum (base margin 0 — MLlib GBT has
-    // no separate intercept, its first tree carries it)
-    case g: org.apache.spark.ml.regression.GBTRegressionModel =>
-      walkedGbtreeDoc(model,
-        g.trees.zip(g.treeWeights)
-          .map { case (t, w) => MultiSparse.fromMLlibTree(t, w) },
-        model.objective, baseMargin = 0.0)
-
-    // MLlib binary GBT probability = sigmoid(2·Σ wᵢ·treeᵢ(x)) —
-    // folding 2·wᵢ into the node values makes stock XGBoost's
-    // sigmoid(margin) reproduce the probability up to the complement
-    // form's ~ulp(1) rounding (MLlib evaluates 1 − sigmoid(−2m)) and
-    // the decision boundary EXACTLY (margin sign is unchanged)
-    case g: org.apache.spark.ml.classification.GBTClassificationModel =>
-      walkedGbtreeDoc(model,
-        g.trees.zip(g.treeWeights)
-          .map { case (t, w) => MultiSparse.fromMLlibTree(t, 2.0 * w) },
-        "binary:logistic", baseMargin = 0.0)
-
     case other => throw new IllegalArgumentException(
       "XGBoost JSON interchange covers the native-loop forests " +
-      "(single and multiclass, softprob included), the wrapped MLlib " +
-      s"GBT paths and the linear booster; got " +
+      "(single and multiclass, softprob included) and the linear " +
+      s"booster; got " +
       s"${other.getClass.getSimpleName} — use ModelIO for " +
       "engine-native persistence")
   }
-
-  /** Single-target gbtree document for an MLlib-walked forest (the
-    * wrapped GBT regression and classification paths): one shared
-    * guard + booster + learner assembly so the two arms cannot drift.
-    */
-  private def walkedGbtreeDoc(
-      model: GraftBoostModel,
-      flat: Array[SparseTree],
-      objective: String,
-      baseMargin: Double
-  ): String = {
-    val maxIdx = flat.iterator.flatMap(_.feature.iterator)
-      .filter(_ >= 0).maxOption.getOrElse(-1)
-    namedFeatureGuard(model, maxIdx)
-    val booster = JObject(
-      "model" -> treeModelJson(flat, Array.fill(flat.length)(0),
-        model.featureCols.length, 1),
-      "name" -> JString("gbtree"))
-    learnerDoc(model, booster, numClass = 0, baseMargin,
-      objectiveJson(objective, 0), statsAbsent = false,
-      extraDivergence = MLlibGainNote)
-  }
-
-  /** Divergence stamp shared by the MLlib-tree-walked exports. */
-  private val MLlibGainNote =
-    "; per-node gains are MLlib impurity decreases, not regularized " +
-    "Newton gains, and sum_hessian carries the node's instance-weight " +
-    "mass"
 
   /** trees-per-iteration for a multiclass forest: K when `tree_info`
     * has the plain round-major layout, else the whole forest is one
@@ -400,13 +354,12 @@ object XgbJson {
       objective: JObject,
       statsAbsent: Boolean,
       dartRescaled: Boolean = false,
-      extraDivergence: String = "",
       categoricalFeatures: Set[Int] = Set.empty
   ): String = {
     val objectiveName = (objective \ "name").extract[String]
     val attrs = List(
       "graft.base_margin" -> (JString(baseMargin.toString): JValue),
-      "graft.divergences" -> (JString(DivergenceNote + extraDivergence): JValue)) ++
+      "graft.divergences" -> (JString(DivergenceNote): JValue)) ++
       (if (statsAbsent)
         // pre-gain source artifact: the zeros in loss_changes are
         // NOT real gains — ingest must restore "stats unavailable"

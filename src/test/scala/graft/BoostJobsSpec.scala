@@ -143,4 +143,23 @@ class BoostJobsSpec extends AnyFunSuite {
     val warned = logged.asScala.filter(_.contains("was locally checkpointed"))
     assert(warned.isEmpty, warned.mkString("\n"))
   }
+
+  test("an early-stopped fit runs its trained rounds once, with no retrain") {
+    val train = df.filter(col("x3") =!= 5.0)
+    val valid = df.filter(col("x3") === 5.0)
+    var trained = 0
+    val jobs = jobsOf {
+      trained = StagedEval.fitWithEarlyStopping(train, valid, feats, "y",
+        native.copy(numRound = 30), "logloss", earlyStoppingRounds = 1)._4
+    }
+    assert(trained < 30, s"the fixture must stop early: $trained rounds")
+    // the rows are read and binned once, then depth + 1 jobs for each
+    // trained round: the logloss folds inside the margin-update job
+    Seq("boost: train materialize", "boost: propose-edges", "boost: init-margin")
+      .foreach(p => assert(jobs.count(_ == p) == 1, s"$p: $jobs"))
+    val rounds = jobs.filter(_.matches("boost: r[0-9]+ .*"))
+    assert(jobs.count(_.endsWith(" margin-update")) == trained, jobs)
+    assert(rounds.size <= trained * 4, s"${rounds.size} round jobs for $trained rounds")
+    assert(!jobs.exists(_.startsWith(s"boost: r${trained + 1} ")), jobs)
+  }
 }

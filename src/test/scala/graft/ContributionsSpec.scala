@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,12 +53,12 @@ class ContributionsSpec extends AnyFunSuite {
     val bin = reg.withColumn("label", (col("x1") >= 12.0).cast("double"))
     val m = GraftBoost.train(bin, Seq("x1", "x3"), "label",
       BoostParams("binary:logistic", numRound = 5, maxDepth = 2))
-    val gbt = m.model.asInstanceOf[GBTClassificationModel]
+    val forest = m.model.asInstanceOf[SparseBoost.SparseModel]
     val at = Contributions.transform(m, bin.limit(20))
       .withColumn("csum", aggregate(col("contribs"), lit(0.0), (a, x) => a + x))
       .select("x1", "x3", "bias", "csum").collect()
     at.foreach { r =>
-      val margin = gbt.predictRaw(Vectors.dense(r.getDouble(0), r.getDouble(1)))(1)
+      val margin = forest.marginOf(Vectors.dense(r.getDouble(0), r.getDouble(1)))
       val decomposed = r.getDouble(2) + r.getDouble(3)
       assert(math.abs(decomposed - margin) < 1e-9,
         s"margin $margin vs decomposition $decomposed")

@@ -47,7 +47,6 @@ class MLInputSpec extends AnyFunSuite {
   }
 
   test("model persistence round-trip preserves predictions") {
-    import org.apache.spark.ml.classification.{GBTClassificationModel}
     val df = (0 until 100).map(i => ((i % 10).toDouble, (i % 2).toDouble))
       .toDF("x", "label")
     val clf = new GraftXGBClassifier().setNEstimators(5).setMaxDepth(2)
@@ -55,10 +54,8 @@ class MLInputSpec extends AnyFunSuite {
     val before = clf.predict(df).select("x", "prediction")
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     val tmp = java.nio.file.Files.createTempDirectory("graft_model").toString + "/m"
-    clf.model.get.model.asInstanceOf[GBTClassificationModel].write.overwrite().save(tmp)
-    val loaded = GBTClassificationModel.load(tmp)
-    val rebuilt = GraftBoostModel(loaded, Seq("x"), "binary:logistic", 2, Map.empty)
-    val after = GraftBoost.predict(rebuilt, df)
+    ModelIO.save(spark, clf.model.get, tmp)
+    val after = GraftBoost.predict(ModelIO.load(spark, tmp), df)
       .withColumn("prediction", col("prediction").cast("long"))
       .select("x", "prediction")
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
@@ -135,5 +132,22 @@ class MLInputSpec extends AnyFunSuite {
     intercept[Exception] {
       GraftBoost.train(df, Seq("nope"), "label", BoostParams(numRound = 1))
     }
+  }
+
+  test("ModelIO refuses an MLlib GBT artifact by its class name") {
+    val df = (0 until 100).map(i => ((i % 10).toDouble, (i % 2).toDouble))
+      .toDF("x", "label")
+    val clf = new GraftXGBClassifier().setNEstimators(2).setMaxDepth(2)
+    clf.fit(df, Seq("x"), "label")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_modelio_gbt").toString + "/m"
+    ModelIO.save(spark, clf.model.get, tmp)
+    // the metadata an earlier build wrote beside an MLlib GBT model
+    val meta = java.nio.file.Paths.get(tmp, "graft_meta.json")
+    val gbt = "org.apache.spark.ml.classification.GBTClassificationModel"
+    java.nio.file.Files.writeString(meta, java.nio.file.Files.readString(meta)
+      .replaceFirst("\"modelClass\":\"[^\"]*\"", s"\"modelClass\":\"$gbt\""))
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tmp, ".graft_meta.json.crc"))
+    val e = intercept[UnsupportedOperationException](ModelIO.load(spark, tmp))
+    assert(e.getMessage.contains(gbt) && e.getMessage.contains("retrain"), e.getMessage)
   }
 }

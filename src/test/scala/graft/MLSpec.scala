@@ -74,13 +74,17 @@ class MLSpec extends AnyFunSuite {
   }
 
   test("early stopping with a validation frame runs and bounds trees") {
-    import org.apache.spark.ml.classification.GBTClassificationModel
     val train = separable.filter($"x2" =!= 0)
     val valid = separable.filter($"x2" === 0)
     val clf = new GraftXGBClassifier().setNEstimators(30).setMaxDepth(2)
     clf.fit(train, Seq("x1", "x2"), "label", earlyStoppingValidation = Some(valid))
-    val trees = clf.model.get.model.asInstanceOf[GBTClassificationModel].getNumTrees
-    assert(trees <= 30 && trees > 0)
+    val rounds = clf.model.get.model.asInstanceOf[SparseBoost.SparseModel].numRounds
+    val hist = clf.model.get.evalsResult("validation")("logloss")
+    // the objective's logloss with patience 1: the loop stops one round
+    // after its best and keeps the best round's forest
+    assert(rounds > 0 && rounds <= hist.length && hist.length <= 30)
+    assert(rounds == StagedEval.bestIteration(hist, "logloss"))
+    assert(hist.length == 30 || StagedEval.stalledAt(hist, "logloss", 1).contains(hist.length))
   }
 
   test("evals_result history has one entry per boosting round") {
@@ -201,11 +205,9 @@ class MLSpec extends AnyFunSuite {
     // the marker must not shape the trees as a real value: the naive
     // model needs sub-zero thresholds to wall off -999; the sentinel
     // model sees only [0, 19] ∪ {sentinel} and must have none
-    import org.apache.spark.ml.classification.GBTClassificationModel
-    def thresholds(c: GraftXGBClassifier): Seq[Double] = {
-      val s = c.model.get.model.asInstanceOf[GBTClassificationModel].toDebugString
-      raw"<= (-?[0-9.]+)".r.findAllMatchIn(s).map(_.group(1).toDouble).toSeq
-    }
+    def thresholds(c: GraftXGBClassifier): Seq[Double] =
+      c.model.get.model.asInstanceOf[SparseBoost.SparseModel].trees.toSeq
+        .flatMap(t => t.feature.indices.filter(t.feature(_) >= 0).map(t.thresh(_)))
     assert(thresholds(naive).exists(_ < 0.0),
       "naive model should split below zero to separate the -999 'value'")
     assert(thresholds(sent).forall(_ >= 0.0),
@@ -309,9 +311,8 @@ class MLSpec extends AnyFunSuite {
   test("OvR+Platt is the FINAL multiclass mechanism: held-out mlogloss within " +
       "a pinned bound of RandomForest probabilities") {
     // noisy 3-class data with a held-out test split — the quality gate
-    // that documents OvR(GBT)+Platt as the engine's multi:softprob
-    // answer (capability-equivalent to the reference's single-model
-    // softprob; MLlib GBT is binary-only, SURVEY §7.6a)
+    // of OvR+Platt, the default multiclass strategy (the reference's
+    // single-model softprob is multiclassStrategy = "softprob")
     import MLTestFixtures.{multiclassTrain => train, multiclassHeldOut => heldOut, mlogloss}
     val ovr = new GraftXGBClassifier().setNEstimators(8).setMaxDepth(3)
     ovr.fitCalibrated(train, Seq("x1", "x2"), "label")
@@ -349,7 +350,12 @@ class MLSpec extends AnyFunSuite {
   }
 
   test("weighted eval history: weights move the metric, uniform scaling doesn't") {
+    // two flipped labels in the up-weighted region: on the separable
+    // frame alone a Newton forest's two leaves are mirror images, every
+    // row scores the same loss, and no weighting can move the mean
     val df = separable
+      .withColumn("label", when(col("x1") === 0.0 && col("x2") === 0.0, 1.0)
+        .otherwise(col("label")))
       .withColumn("w", when(col("x1") < 5, 100.0).otherwise(1.0))
       .withColumn("w2", (when(col("x1") < 5, 100.0).otherwise(1.0)) * 3.0)
     val pkg = Estimators.packageEvals(Seq(df, df, df),
@@ -474,5 +480,23 @@ class MLSpec extends AnyFunSuite {
       assert(r.getBoolean(3), "some feature must matter")
       assert(r.getLong(1) > 0L)
     }
+  }
+
+  test("eval sets on a native-missing fit get per-round histories") {
+    val marked = separable.withColumn("x2",
+      when($"x1" % 5 === 0, lit(-999.0)).otherwise($"x2"))
+    val clf = new GraftXGBClassifier().setNEstimators(4).setMaxDepth(2)
+      .setMissing(-999.0).setMissingStrategy("native")
+    clf.fit(marked, Seq("x1", "x2"), "label", evalSets = Map("validation_0" -> marked))
+    val ll = clf.evalsResult("validation_0")("logloss")
+    assert(ll.length == 4 && ll.last < ll.head, ll.toSeq)
+    val reg = new GraftXGBRegressor().setNEstimators(4).setMaxDepth(2)
+      .setMissing(-999.0).setMissingStrategy("native")
+    reg.fit(marked, Seq("x1", "x2"), "x1", evalSets = Map("validation_0" -> marked))
+    val mse = reg.evalsResult("validation_0")("squarederror")
+    // the unweighted regressor key is the per-round MSE
+    val rmse = StagedEval.history(reg.model.get, marked, "x1", "rmse")
+    assert(mse.length == 4)
+    mse.zip(rmse).foreach { case (a, b) => assert(math.abs(a - b * b) <= 1e-9 * (1 + a)) }
   }
 }

@@ -101,14 +101,12 @@ class QuantileBoostSpec extends AnyFunSuite {
     }
   }
 
-  test("reg:absoluteerror maps to MLlib LAD loss and beats the mean on skewed data") {
+  test("reg:absoluteerror fits the median and beats the mean on skewed data") {
     // right skew in EVERY x-group: 25% outliers at +4, independent of
     // x (outlier pattern keyed on i/10, base on i%10). Median
-    // predictor MAE = 1.0, mean predictor MAE = 1.5. The offset is
-    // SMALL on purpose: MLlib's absolute loss has no median line
-    // search (leaves average gradient SIGNS, so each round moves at
-    // most stepSize) — LAD converges to the median only when the
-    // mean→median distance fits inside stepSize·numRound.
+    // predictor MAE = 1.0, mean predictor MAE = 1.5. Each leaf is
+    // η · the median residual of its rows (the α = 0.5 quantile rule),
+    // so the fit walks to the per-group median.
     val skew = (0 until 2000).map { i =>
       val base = (i % 10).toDouble
       val y = if ((i / 10) % 4 == 0) base + 4.0 else base

@@ -85,12 +85,8 @@ class SparkMLSpec extends AnyFunSuite {
     val m1 = est.fit(df)
     val m2 = est.copy(org.apache.spark.ml.param.ParamMap(
       est.numRound -> 6)).fit(df)
-    val n1 = m1.inner.model
-      .asInstanceOf[org.apache.spark.ml.regression.GBTRegressionModel]
-      .trees.length
-    val n2 = m2.inner.model
-      .asInstanceOf[org.apache.spark.ml.regression.GBTRegressionModel]
-      .trees.length
+    val n1 = m1.inner.model.asInstanceOf[graft.ml.SparseBoost.SparseModel].numRounds
+    val n2 = m2.inner.model.asInstanceOf[graft.ml.SparseBoost.SparseModel].numRounds
     assert(n1 == 2 && n2 == 6, s"copy must re-wire numRound: $n1 / $n2")
   }
 

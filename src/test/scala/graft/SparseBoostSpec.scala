@@ -803,17 +803,17 @@ class SparseBoostSpec extends AnyFunSuite {
     assert(fullP.keys.exists(k => math.abs(standalone(k) - fullP(k)) > 0.1),
       "standalone scoring must NOT silently include the stage-1 margins")
 
-    // refusals: non-native paths have no margin-initialization hook,
+    // refusals: the linear booster has no margin-initialization hook,
     // and margin scoring is native-forest-only
     intercept[IllegalArgumentException] {
       GraftBoost.train(withBm, Seq("x1", "x2"), "y",
-        BoostParams("reg:squarederror", numRound = 2),
+        BoostParams("reg:squarederror", numRound = 2, booster = "gblinear"),
         marginCol = Some("bm"))
     }
     intercept[IllegalArgumentException] {
-      val mlModel = GraftBoost.train(df, Seq("x1", "x2"), "y",
-        BoostParams("reg:squarederror", numRound = 2))
-      GraftBoost.predict(mlModel, withBm, marginCol = Some("bm"))
+      val linear = GraftBoost.train(df, Seq("x1", "x2"), "y",
+        BoostParams("reg:squarederror", numRound = 2, booster = "gblinear"))
+      GraftBoost.predict(linear, withBm, marginCol = Some("bm"))
     }
   }
 

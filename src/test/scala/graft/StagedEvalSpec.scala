@@ -37,18 +37,16 @@ class StagedEvalSpec extends AnyFunSuite {
     assert(hist.last < hist.head, s"logloss ${hist.head} -> ${hist.last}")
   }
 
-  test("staged final logloss matches evaluateEachIteration's final round") {
-    import org.apache.spark.ml.classification.GBTClassificationModel
+  test("staged logloss on the train rows equals the loop's train history") {
     val m = GraftBoost.train(train, Seq("x1", "x2"), "label",
       BoostParams(numRound = 5, maxDepth = 2))
-    val mine = StagedEval.history(m, valid, "label", "logloss")
-    val mllib = m.model.asInstanceOf[GBTClassificationModel]
-      .evaluateEachIteration(
-        GraftBoost.assemble(valid, Seq("x1", "x2"), None)
-          .withColumn("label", org.apache.spark.sql.functions.col("label")))
-    assert(mine.length == mllib.length)
-    // same shape: both must improve from round 1 to the last round
-    assert((mine.last < mine.head) == (mllib.last < mllib.head))
+    val staged = StagedEval.history(m, train, "label", "logloss")
+    val own = m.evalsResult("train")("logloss")
+    assert(staged.length == own.length)
+    // the same margins; the two only sum the row losses in different
+    // orders (and clip p at 1e-15 slightly differently)
+    staged.zip(own).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-9, s"staged $a vs loop $b") }
   }
 
   test("bestIteration picks max for auc, min for logloss") {
@@ -57,14 +55,13 @@ class StagedEvalSpec extends AnyFunSuite {
   }
 
   test("truncateToBest physically cuts the model to the best round") {
-    import org.apache.spark.ml.classification.GBTClassificationModel
     val m = GraftBoost.train(train, Seq("x1", "x2"), "label",
       BoostParams(numRound = 10, maxDepth = 2))
     val (cut, k, hist) = StagedEval.truncateToBest(m, valid, "label", "logloss")
     assert(hist.length == 10)
     assert(k >= 1 && k <= 10)
-    val trees = cut.model.asInstanceOf[GBTClassificationModel].getNumTrees
-    assert(trees == k, s"truncated model has $trees trees, best round was $k")
+    val rounds = cut.model.asInstanceOf[SparseBoost.SparseModel].numRounds
+    assert(rounds == k, s"truncated model has $rounds rounds, best round was $k")
     // truncated model still scores
     assert(GraftBoost.predict(cut, valid).count() == valid.count())
   }
@@ -88,7 +85,7 @@ class StagedEvalSpec extends AnyFunSuite {
       train, valid, Seq("x1", "x2"), "label",
       BoostParams(numRound = numRound, maxDepth = 3),
       "auc", earlyStoppingRounds = 3)
-    // the separable toy saturates AUC within the first chunks: the fit
+    // the separable toy saturates AUC within a few rounds: the fit
     // must stop well short of numRound's training cost
     assert(trainedRounds < numRound,
       s"early stopping trained $trainedRounds rounds of $numRound")
@@ -96,8 +93,7 @@ class StagedEvalSpec extends AnyFunSuite {
     assert(best >= 1 && best <= hist.length)
     assert(hist(best - 1) == hist.max, "best round must carry the max AUC")
     // the model is PHYSICALLY truncated to the best round
-    import org.apache.spark.ml.classification.GBTClassificationModel
-    assert(m.model.asInstanceOf[GBTClassificationModel].getNumTrees == best)
+    assert(m.model.asInstanceOf[SparseBoost.SparseModel].numRounds == best)
     // and the stall is real: patience rounds after best show no improvement
     assert(StagedEval.stalledAt(hist, "auc", 3).forall(_ == hist.length))
     assert(GraftBoost.predict(m, valid).count() == valid.count())
@@ -268,5 +264,59 @@ class StagedEvalSpec extends AnyFunSuite {
     val hist = StagedEval.history(m, df, "y", "rmse")
     assert(hist.length == 6)
     assert(hist.last < hist.head, s"rmse ${hist.head} -> ${hist.last}")
+  }
+
+  test("an early-stopped fit whose metric stalls at round s trains at most s + 1 rounds") {
+    val params = BoostParams(numRound = 40, maxDepth = 3, eta = 0.5)
+    def fit(patience: Int) = StagedEval.fitWithEarlyStopping(
+      train, valid, Seq("x1", "x2"), "label", params, "logloss", patience)
+    // a patience past numRound never stops: the full history of the
+    // very same fit (same rows, same layout, same trees)
+    val (_, _, full, fullRounds) = fit(1000)
+    assert(fullRounds == 40 && full.length == 40)
+    // s = the last round of the first improving run
+    val s = StagedEval.stalledAt(full, "logloss", 1)
+      .getOrElse(fail(s"fixture must stall: ${full.toSeq}")) - 1
+    val (m, best, hist, trained) = fit(1)
+    assert(trained <= s + 1, s"metric stalled at round $s, trained $trained")
+    assert(trained < 40)
+    // the stopped fit is the full one's prefix, bit for bit
+    assert(hist.sameElements(full.take(trained)))
+    assert(best == s && m.model.asInstanceOf[SparseBoost.SparseModel].numRounds == s)
+  }
+
+  test("the in-loop validation history equals StagedEval.history of the returned model") {
+    // StagedEval.history is the oracle. Both read bit-identical margins
+    // (the loop's f + leaf is the staged walk's running sum); only the
+    // order the row terms are summed in (and exp/log in SQL vs Scala)
+    // differs, so the tolerance is 1e-9 absolute.
+    def check(params: BoostParams, label: String, metric: String): Unit = {
+      val (m, best, hist, trained) = StagedEval.fitWithEarlyStopping(
+        train, valid, Seq("x1", "x2"), label, params, metric, earlyStoppingRounds = 2)
+      val staged = StagedEval.history(m, valid, label, metric)
+      assert(staged.length == best && best <= trained, s"$metric: $best of $trained")
+      staged.zip(hist).foreach { case (a, b) =>
+        assert(math.abs(a - b) <= 1e-9, s"$metric: staged $a vs in-loop $b") }
+    }
+    val reg = BoostParams("reg:squarederror", numRound = 12, maxDepth = 2, eta = 0.3)
+    check(BoostParams(numRound = 12, maxDepth = 2), "label", "logloss")
+    check(BoostParams(numRound = 12, maxDepth = 2), "label", "auc")
+    check(BoostParams(numRound = 12, maxDepth = 2), "label", "error")
+    check(reg, "x1", "rmse")
+    check(reg.copy(objective = "reg:absoluteerror"), "x1", "mae")
+    // multiclass: the one-vs-rest forest's mlogloss against its staged
+    // softmax walk
+    val cls = train.withColumn("k", (org.apache.spark.sql.functions.col("x1") / 7).cast("int"))
+    val vcls = valid.withColumn("k", (org.apache.spark.sql.functions.col("x1") / 7).cast("int"))
+    val m = GraftBoost.train(
+      cls.withColumn("v", org.apache.spark.sql.functions.lit(false))
+        .unionByName(vcls.withColumn("v", org.apache.spark.sql.functions.lit(true))),
+      Seq("x1", "x2"), "k", BoostParams("multi:softprob", numRound = 6, maxDepth = 2),
+      validationCol = Some("v"))
+    val inLoop = m.evalsResult("validation")("mlogloss")
+    val staged = StagedEval.history(m, vcls, "k", "mlogloss")
+    assert(staged.length == StagedEval.bestIteration(inLoop, "mlogloss"))
+    staged.zip(inLoop).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-9, s"mlogloss: staged $a vs in-loop $b") }
   }
 }

@@ -673,9 +673,9 @@ class XgbJsonSpec extends AnyFunSuite {
     assert(dump.filter(_.getString(3) != "Leaf").forall(_.isNullAt(8)))
   }
 
-  // ---- wrapped MLlib GBT interchange -------------------------------
+  // ---- default-strategy interchange -------------------------------
 
-  private def fitWrapped(objective: String): (GraftBoost.GraftBoostModel,
+  private def fitDefault(objective: String): (GraftBoost.GraftBoostModel,
       org.apache.spark.sql.DataFrame) = {
     val t = Tables(spark, sf)
     val feats = Seq("l_quantity", "l_discount", "l_tax")
@@ -687,20 +687,18 @@ class XgbJsonSpec extends AnyFunSuite {
         else col("label"))
       .select((feats.map(col) :+ col("label")): _*)
       .cache()
-    // default missingStrategy ("impute", no marker) -> the MLlib GBT
-    // wrapper paths, not the native loop
+    // default missingStrategy ("impute", no marker): the same round
+    // loop as "native", with no NaN to route
     val m = GraftBoost.train(df, feats, "label",
       GraftBoost.BoostParams(objective, numRound = 4, maxDepth = 3,
         maxBins = 16))
     (m, df)
   }
 
-  test("wrapped MLlib GBT regression exports and scores bit-identically") {
-    val (m, df) = fitWrapped("reg:squarederror")
-    assert(m.model.isInstanceOf[org.apache.spark.ml.regression.GBTRegressionModel])
+  test("default-strategy regression exports and scores bit-identically") {
+    val (m, df) = fitDefault("reg:squarederror")
+    assert(m.model.isInstanceOf[SparseBoost.SparseModel])
     val back = XgbJson.importModel(XgbJson.export(m))
-    // tree weights folded in: the ingested plain-sum forest must
-    // reproduce MLlib's weighted dot product exactly
     val orig = GraftBoost.predict(m, df).select("prediction")
       .collect().map(_.getDouble(0))
     val rt = GraftBoost.predict(back, df).select("prediction")
@@ -709,9 +707,9 @@ class XgbJsonSpec extends AnyFunSuite {
     df.unpersist()
   }
 
-  test("wrapped MLlib GBT classifier exports: sigmoid(margin) = MLlib probability") {
-    val (m, df) = fitWrapped("binary:logistic")
-    assert(m.model.isInstanceOf[org.apache.spark.ml.classification.GBTClassificationModel])
+  test("default-strategy classifier exports and round-trips its probabilities") {
+    val (m, df) = fitDefault("binary:logistic")
+    assert(m.model.isInstanceOf[SparseBoost.SparseModel])
     val doc = XgbJson.export(m)
     assert(doc.contains("binary:logistic"))
     val back = XgbJson.importModel(doc)
@@ -720,21 +718,13 @@ class XgbJsonSpec extends AnyFunSuite {
     val rt = GraftBoost.predict(back, df).select("prediction")
       .collect().map(_.getDouble(0))
     assert(orig.sameElements(rt), "decision boundary must be unchanged")
-    // the 2·w fold makes sigmoid(margin) MLlib's probability up to
-    // the COMPLEMENT form's rounding: MLlib evaluates p₁ as
-    // 1 − sigmoid(−2m) (LogLoss.computeProbability on raw(0) = −m),
-    // a subtraction from 1 whose absolute error sits at the scale of
-    // ulp(1.0) ≈ 2.2e-16 regardless of how small p₁ is — the direct
-    // sigmoid here is the more accurate of the two; mathematically
-    // they are identical
+    // the exact margin-space base rides the document: probabilities
+    // round-trip bit for bit
     val pOrig = GraftBoost.predictProba(m, df).select("proba")
       .collect().map(_.getSeq[Double](0)(1))
     val pRt = GraftBoost.predictProba(back, df).select("proba")
       .collect().map(_.getSeq[Double](0)(1))
-    pOrig.zip(pRt).foreach { case (a, b) =>
-      assert(math.abs(a - b) <= 4 * math.ulp(1.0),
-        s"probability drift beyond complement-form rounding: $a vs $b")
-    }
+    assert(pOrig.sameElements(pRt))
     df.unpersist()
   }
 

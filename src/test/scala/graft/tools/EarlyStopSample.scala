@@ -8,9 +8,10 @@ import graft.ml.GraftBoost.BoostParams
 import graft.sources.Tables
 
 /** Library-boundary sample: the full arbitrary-metric early-stopping
-  * flow a downstream user runs — train, staged AUC history on a
-  * validation frame, truncate to the best round, score with the cut
-  * model.
+  * flow a downstream user runs — one fit that stops on its validation
+  * AUC and keeps the best round, the post-hoc staged history of that
+  * model, and scoring with it. Run with
+  * `sbt "Test/runMain graft.tools.EarlyStopSample"`.
   */
 object EarlyStopSample {
   def main(args: Array[String]): Unit = {
@@ -22,12 +23,14 @@ object EarlyStopSample {
       .withColumn("isVal", pmod(col("l_orderkey"), lit(4)) === 0)
     val train = df.filter(!col("isVal")).cache()
     val valid = df.filter(col("isVal")).cache()
-    val model = GraftBoost.train(train, feats, "label",
-      BoostParams(numRound = 10, maxDepth = 3))
-    val (cut, k, hist) = StagedEval.truncateToBest(model, valid, "label", "auc")
-    println(s"[sample] auc history: ${hist.map(v => f"$v%.4f").mkString(", ")}")
-    println(s"[sample] best round k=$k (of ${hist.length})")
-    val scored = GraftBoost.predict(cut, valid)
+    val (model, k, hist, trained) = StagedEval.fitWithEarlyStopping(train, valid,
+      feats, "label", BoostParams(numRound = 30, maxDepth = 3), "auc",
+      earlyStoppingRounds = 2)
+    println(s"[sample] in-loop auc history: ${hist.map(v => f"$v%.4f").mkString(", ")}")
+    println(s"[sample] best round k=$k, trained $trained of 30 rounds")
+    val staged = StagedEval.history(model, valid, "label", "auc")
+    println(s"[sample] staged auc of the kept rounds: ${staged.map(v => f"$v%.4f").mkString(", ")}")
+    val scored = GraftBoost.predict(model, valid)
     println(s"[sample] truncated model scored rows=${scored.count()}")
     val weighted = valid.withColumn("w", when(col("label") === 1.0, 10.0).otherwise(1.0))
     val wHist = StagedEval.history(model, weighted, "label", "logloss", Some("w"))

@@ -7,8 +7,10 @@ import graft.ml.GraftXGBClassifier
 import graft.functions.GraftFunctions.toDoubleArray
 import org.apache.spark.ml.functions.array_to_vector
 
-/** Library-boundary sample: multiclass OneVsRest boosting with
-  * predict_proba over the real embeddings table.
+/** Library-boundary sample: one-vs-rest multiclass boosting (the
+  * default `multiclassStrategy`, K logistic channels on the round
+  * loop) with predict_proba over the real embeddings table. Run with
+  * `sbt "Test/runMain graft.tools.OvrProbaSample"`.
   */
 object OvrProbaSample {
   def main(args: Array[String]): Unit = {

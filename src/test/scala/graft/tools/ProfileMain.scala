@@ -5,7 +5,6 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.scheduler.{
   SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -20,18 +19,8 @@ import graft.SparkEntry
 object ProfileMain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.Knobs.envInt("SPARK_GRAFT_CPUS", 32),
+      "graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class JobRow(id: Int, desc: String, start: Long,
