@@ -1,8 +1,7 @@
 package graft.ml
 
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 
 /** Per-prediction additive feature attribution for the boosted-tree
   * models — the Saabas decomposition (the tree-path special case of
@@ -19,69 +18,40 @@ import org.apache.spark.sql.functions._
   * given the model; the exact additivity identity is what the query
   * gate and spec pin.
   *
-  * Scale: the flattened trees are model-sized driver artifacts
-  * broadcast once; scoring is one map-side pass per row (no shuffle,
-  * no per-row allocation beyond the contribution array).
+  * Scale: the contributions are the `contribs` output of
+  * [[graft.plans.ForestScore]], one codegen'd projection over the
+  * feature columns that walks the broadcast forest's trees directly
+  * (no shuffle, no per-row allocation beyond the contribution array).
+  * The bias is the same for every row and is computed on the driver.
   */
 object Contributions {
 
-  /** Array-flattened tree with per-NODE expected values (unlike
-    * a scorer's leaf-only walk, internal predictions matter here —
-    * they are what the path deltas difference). Leaf iff
-    * `feature(i) < 0`; else `x(feature(i)) ≤ thresh(i)` goes left,
-    * and a NaN feature follows `defaultLeft(i)`.
+  /** One row's per-feature contributions over a native forest: every
+    * node carries its η-scaled Newton estimate (leaves the final fenced
+    * weight), and a MISSING value follows the node's learned default
+    * direction, so it attributes to the feature whose default branch
+    * routed it — XGBoost pred_contribs semantics.
     */
-  final case class CTree(
-      feature: Array[Int],
-      thresh: Array[Double],
-      left: Array[Int],
-      right: Array[Int],
-      pred: Array[Double],
-      defaultLeft: Array[Boolean]
-  ) extends Serializable
-
-  /** The forest's flattened trees. A native sparse forest maps
-    * directly: every node carries its η-scaled Newton estimate (leaves
-    * the final fenced weight), and the learned default directions ride
-    * along so MISSING values attribute to the feature whose default
-    * branch routed them — XGBoost pred_contribs semantics.
-    */
-  private[ml] def forestOf(model: GraftBoost.GraftBoostModel): Array[CTree] =
-    model.model match {
-      case m: SparseBoost.SparseModel =>
-        require(!m.trees.exists(_.hasCategorical),
-          "Saabas contributions on a forest with categorical " +
-          "(set-membership) splits are not supported: the walk is " +
-          "numeric-threshold only")
-        m.trees.map(t => CTree(t.feature, t.thresh, t.left, t.right,
-          t.value, t.defaultLeft))
-      case m => throw new UnsupportedOperationException(
-        s"feature contributions need a native sparse forest, got ${m.getClass}")
-    }
-
-  /** One row's decomposition: (bias, per-feature contributions). */
-  private[ml] def contribsOne(
-      forest: Array[CTree], numFeatures: Int, v: Vector
-  ): (Double, Array[Double]) = {
-    var bias = 0.0
+  private[graft] def contribsOne(
+      trees: Array[SparseBoost.SparseTree], numFeatures: Int, x: Array[Double]
+  ): Array[Double] = {
     val out = new Array[Double](numFeatures)
     var m = 0
-    while (m < forest.length) {
-      val t = forest(m)
-      bias += t.pred(0)
+    while (m < trees.length) {
+      val t = trees(m)
       var i = 0
       while (t.feature(i) >= 0) {
-        val x = v(t.feature(i))
+        val xi = x(t.feature(i))
         val next =
-          if (java.lang.Double.isNaN(x)) {
+          if (java.lang.Double.isNaN(xi)) {
             if (t.defaultLeft(i)) t.left(i) else t.right(i)
-          } else if (x <= t.thresh(i)) t.left(i) else t.right(i)
-        out(t.feature(i)) += t.pred(next) - t.pred(i)
+          } else if (xi <= t.thresh(i)) t.left(i) else t.right(i)
+        out(t.feature(i)) += t.value(next) - t.value(i)
         i = next
       }
       m += 1
     }
-    (bias, out)
+    out
   }
 
   /** Score `df` with per-row attributions: appends `bias` (double) and
@@ -92,27 +62,19 @@ object Contributions {
     * pre-sigmoid score, for regression it is the prediction itself.
     */
   def transform(model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame = {
-    val forest = forestOf(model)
-    val nf = model.featureCols.length match {
-      // pre-assembled vector column: take the width from the model
-      case 1 if model.featureCols == Seq("features") =>
-        forest.map(t => if (t.feature(0) >= 0) t.feature.max + 1 else 1).max
-      case n => n
+    val sm = model.model match {
+      case m: SparseBoost.SparseModel =>
+        require(!m.trees.exists(_.hasCategorical),
+          "Saabas contributions on a forest with categorical " +
+          "(set-membership) splits are not supported: the walk is " +
+          "numeric-threshold only")
+        m
+      case m => throw new UnsupportedOperationException(
+        s"feature contributions need a native sparse forest, got ${m.getClass}")
     }
-    // the margin includes the booster's base score; fold it into the
-    // bias so additivity reproduces the margin
-    val baseOffset = model.model.asInstanceOf[SparseBoost.SparseModel].base
-    val data = GraftBoost.assemble(df, model.featureCols, model.imputation,
-      keepNaN = model.missingStrategy == "native")
-    val bc = data.sparkSession.sparkContext.broadcast(forest)
-    val cu = udf((v: Vector) => {
-      val (b, c) = contribsOne(bc.value, nf, v)
-      (b + baseOffset, c.toSeq)
-    })
-    data
-      .withColumn("_bc", cu(col("features")))
-      .withColumn("bias", col("_bc")("_1"))
-      .withColumn("contribs", col("_bc")("_2"))
-      .drop("_bc", "features")
+    // Σ root values in tree order, plus the base the margin carries
+    var bias = 0.0
+    sm.trees.foreach(t => bias += t.value(0))
+    GraftBoost.scoreNative(model, df, "contribs", lead = Seq("bias" -> lit(bias + sm.base)))
   }
 }

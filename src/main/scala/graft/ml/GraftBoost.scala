@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.GraftRddBridge
 import org.apache.spark.ml.classification.{
   RandomForestClassificationModel, RandomForestClassifier
 }
@@ -9,6 +10,8 @@ import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.Model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 import graft.plans.ForestScore
 
@@ -34,8 +37,8 @@ import graft.plans.ForestScore
   * iterative boosting. A native forest scores in one codegen'd
   * projection ([[graft.plans.ForestScore]]) straight from the feature
   * columns, the model broadcast once (vs. the reference's per-task
-  * closure serialization, `core.py:367`); the linear and random-forest
-  * models score their assembled `features` vector.
+  * closure serialization, `core.py:367`), and so does a linear model;
+  * the random forest scores its assembled `features` vector.
   */
 object GraftBoost {
 
@@ -632,67 +635,70 @@ object GraftBoost {
     // unlabelled phases (the gblinear and random-forest fits) run
     // under the caller's label
     sc.setJobDescription(callerDescription)
+    // the checkpoint is released however the fit ends: nothing reads it
+    // after the loop returns, and the model holds no reference to it
+    try {
+      if (params.booster == "gblinear") {
+        require(!native,
+          "gblinear has no sparse-skip routing — use missingStrategy " +
+          "\"impute\" or \"sentinel\" with the linear booster")
+        val (m, histL, histV) = LinearBoost.train(data, params, weightCol, earlyStop)
+        val metric = Objective(params).metricName
+        return GraftBoostModel(m, featureCols, params.objective,
+          if (params.objective == "binary:logistic") 2 else 0,
+          Map("train" -> Map(metric -> histL)) ++ earlyStop.map(es =>
+            "validation" -> Map(es.metric.getOrElse(metric) -> histV)),
+          imputation, params.missingStrategy)
+      }
+      if (forest) {
+        // XGBoost's random-forest mode on this loop waits for the
+        // executor-side split search (ROADMAP direction 5)
+        require(!native && earlyStop.isEmpty && params.booster == "gbtree" &&
+            params.growPolicy == "depthwise" && params.numParallelTree == 1,
+          "multiclassStrategy=\"rf\" is a random forest of numRound trees: it " +
+          "takes no missingStrategy \"native\", validation rows, dart, " +
+          "lossguide or num_parallel_tree")
+        val rf = new RandomForestClassifier()
+          .setFeaturesCol("features").setLabelCol("label")
+          .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
+          .setSubsamplingRate(params.subsample)
+          .setMinInstancesPerNode(params.minChildWeight)
+          .setMaxBins(params.maxBins)
+          .setSeed(params.seed)
+        weightCol.foreach(rf.setWeightCol)
+        return GraftBoostModel(rf.fit(data), featureCols, params.objective,
+          numClasses, Map.empty, imputation, params.missingStrategy)
+      }
 
-    if (params.booster == "gblinear") {
-      require(!native,
-        "gblinear has no sparse-skip routing — use missingStrategy " +
-        "\"impute\" or \"sentinel\" with the linear booster")
-      val (m, histL, histV) = LinearBoost.train(data, params, weightCol, earlyStop)
-      val metric = Objective(params).metricName
-      return GraftBoostModel(m, featureCols, params.objective,
-        if (params.objective == "binary:logistic") 2 else 0,
-        Map("train" -> Map(metric -> histL)) ++ earlyStop.map(es =>
-          "validation" -> Map(es.metric.getOrElse(metric) -> histV)),
+      if (ranking) {
+        require(groupCol.isDefined,
+          "ranking objectives need groupCol (the DMatrix group vector)")
+        require(weightCol.isEmpty,
+          "ranking objectives take no weightCol: their pair gradients " +
+          "are per group, and a per-row weight has no place in them")
+        require(params.numParallelTree == 1,
+          "num_parallel_tree > 1 has no ranking path")
+      }
+      val classes =
+        if (multiclass) numClasses
+        else if (params.objective == "binary:logistic") 2
+        else 0
+      val objective = Objective(params, classes)
+      val fit = SparseBoost.train(
+        if (ranking) data.withColumn("group", col(groupCol.get)) else data,
+        params, objective, weightCol, marginCol, earlyStop)
+      val model: Model[_] =
+        if (multiclass) // round-major: round r's K class trees follow round r−1's
+          new MultiSparse.MultiSparseModel(s"${params.multiclassStrategy}_${params.seed}",
+            fit.trees,
+            Array.tabulate(fit.trees.length)(i => i / params.numParallelTree % classes),
+            classes, fit.base, objective.name, fit.stats)
+        else fit.sparseModel(s"${if (ranking) "rank" else "sparse"}_${params.seed}", params)
+      GraftBoostModel(model, featureCols, params.objective, classes,
+        Map("train" -> Map(objective.metricName -> fit.history)) ++ earlyStop.map(es =>
+          "validation" -> Map(es.metric.getOrElse(objective.metricName) -> fit.validation)),
         imputation, params.missingStrategy)
-    }
-    if (forest) {
-      // XGBoost's random-forest mode on this loop waits for the
-      // executor-side split search (ROADMAP direction 5)
-      require(!native && earlyStop.isEmpty && params.booster == "gbtree" &&
-          params.growPolicy == "depthwise" && params.numParallelTree == 1,
-        "multiclassStrategy=\"rf\" is a random forest of numRound trees: it " +
-        "takes no missingStrategy \"native\", validation rows, dart, " +
-        "lossguide or num_parallel_tree")
-      val rf = new RandomForestClassifier()
-        .setFeaturesCol("features").setLabelCol("label")
-        .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
-        .setSubsamplingRate(params.subsample)
-        .setMinInstancesPerNode(params.minChildWeight)
-        .setMaxBins(params.maxBins)
-        .setSeed(params.seed)
-      weightCol.foreach(rf.setWeightCol)
-      return GraftBoostModel(rf.fit(data), featureCols, params.objective,
-        numClasses, Map.empty, imputation, params.missingStrategy)
-    }
-
-    if (ranking) {
-      require(groupCol.isDefined,
-        "ranking objectives need groupCol (the DMatrix group vector)")
-      require(weightCol.isEmpty,
-        "ranking objectives take no weightCol: their pair gradients " +
-        "are per group, and a per-row weight has no place in them")
-      require(params.numParallelTree == 1,
-        "num_parallel_tree > 1 has no ranking path")
-    }
-    val classes =
-      if (multiclass) numClasses
-      else if (params.objective == "binary:logistic") 2
-      else 0
-    val objective = Objective(params, classes)
-    val fit = SparseBoost.train(
-      if (ranking) data.withColumn("group", col(groupCol.get)) else data,
-      params, objective, weightCol, marginCol, earlyStop)
-    val model: Model[_] =
-      if (multiclass) // round-major: round r's K class trees follow round r−1's
-        new MultiSparse.MultiSparseModel(s"${params.multiclassStrategy}_${params.seed}",
-          fit.trees,
-          Array.tabulate(fit.trees.length)(i => i / params.numParallelTree % classes),
-          classes, fit.base, objective.name, fit.stats)
-      else fit.sparseModel(s"${if (ranking) "rank" else "sparse"}_${params.seed}", params)
-    GraftBoostModel(model, featureCols, params.objective, classes,
-      Map("train" -> Map(objective.metricName -> fit.history)) ++ earlyStop.map(es =>
-        "validation" -> Map(es.metric.getOrElse(objective.metricName) -> fit.validation)),
-      imputation, params.missingStrategy)
+    } finally GraftRddBridge.release(data)
   }
 
   /** Distributed lazy scoring — `predict(client, model, data)` parity
@@ -709,25 +715,15 @@ object GraftBoost {
         * Native sparse forests only.
         */
       marginCol: Option[String] = None
-  ): DataFrame = {
-    model.model match {
-      case _: SparseBoost.SparseModel =>
-        return scoreNative(model, df, "prediction", marginCol)
-      case _: MultiSparse.MultiSparseModel if marginCol.isEmpty =>
-        return scoreNative(model, df, "prediction", None)
-      case other if marginCol.isDefined => throw new IllegalArgumentException(
-        "per-row base_margin scoring is supported on native sparse " +
-        s"forests only, not ${other.getClass.getSimpleName}")
-      case _ =>
-    }
-    val data = assemble(df, model.featureCols, model.imputation,
-      keepNaN = model.missingStrategy == "native")
-    val scored = model.model match {
-      case m: LinearBoost.LinearModel     => m.transform(data)
-      case m: RandomForestClassificationModel => m.transform(data)
-      case m => throw new IllegalStateException(s"unknown model ${m.getClass}")
-    }
-    scored.drop("features", "rawPrediction", "probability")
+  ): DataFrame = model.model match {
+    case _: SparseBoost.SparseModel => scoreNative(model, df, "prediction", marginCol)
+    case other if marginCol.isDefined => throw new IllegalArgumentException(
+      "per-row base_margin scoring is supported on native sparse " +
+      s"forests only, not ${other.getClass.getSimpleName}")
+    case m: RandomForestClassificationModel =>
+      m.transform(assemble(df, model.featureCols, model.imputation))
+        .drop("features", "rawPrediction", "probability")
+    case _ => scoreNative(model, df, "prediction")
   }
 
   /** Class-probability scoring — `predict_proba` parity
@@ -742,66 +738,57 @@ object GraftBoost {
         * native sparse forests only.
         */
       marginCol: Option[String] = None
-  ): DataFrame = {
-    model.model match {
-      case m: SparseBoost.SparseModel if m.objective == "binary:logistic" =>
-        // sigmoid of the boosted margin — the XGBoost binary proba
-        return scoreNative(model, df, "proba", marginCol)
-      case _: MultiSparse.MultiSparseModel if marginCol.isEmpty =>
-        // softmax of the K margins — or, once [[calibrate]]d, each
-        // class's Platt sigmoid σ(A·margin + B), renormalized
-        return model.calibration.fold(scoreNative(model, df, "proba", None)) { ab =>
-          val margins = col("margins")
-          val scores = array(ab.toIndexedSeq.zipWithIndex.map { case ((a, b), i) =>
-            lit(1.0) / (lit(1.0) + exp(-(lit(a) * element_at(margins, i + 1) + lit(b))))
-          }: _*)
-          scoreNative(model, df, "margins", None)
-            .withColumn("sc", scores)
-            .withColumn("proba", {
-              val denom = aggregate(col("sc"), lit(0.0), (acc, x) => acc + x)
-              transform(col("sc"), x => x / denom)
-            })
-            .drop("margins", "sc")
-        }
-      case other if marginCol.isDefined => throw new IllegalArgumentException(
-        "per-row base_margin probabilities are supported on binary " +
-        s"native sparse forests only, not ${other.getClass.getSimpleName}")
-      case _ =>
-    }
-    val data = assemble(df, model.featureCols, model.imputation,
-      keepNaN = model.missingStrategy == "native")
-    model.model match {
-      case m: LinearBoost.LinearModel if m.objective == "binary:logistic" =>
-        val bc = data.sparkSession.sparkContext.broadcast(m)
-        val pU = udf((v: Vector) => {
-          val p = bc.value.probOf(v)
-          Array(1.0 - p, p)
-        })
-        data.withColumn("proba", pU(col("features"))).drop("features")
-      case m: RandomForestClassificationModel =>
-        m.transform(data)
-          .withColumn("proba", vector_to_array(col("probability")))
-          .drop("features", "rawPrediction", "probability")
-      case m =>
-        throw new IllegalStateException(s"model has no probabilities: ${m.getClass}")
-    }
+  ): DataFrame = model.model match {
+    case m: SparseBoost.SparseModel if m.objective == "binary:logistic" =>
+      // sigmoid of the boosted margin — the XGBoost binary proba
+      scoreNative(model, df, "proba", marginCol)
+    case other if marginCol.isDefined => throw new IllegalArgumentException(
+      "per-row base_margin probabilities are supported on binary " +
+      s"native sparse forests only, not ${other.getClass.getSimpleName}")
+    case _: MultiSparse.MultiSparseModel =>
+      // softmax of the K margins — or, once [[calibrate]]d, each
+      // class's Platt sigmoid σ(A·margin + B), renormalized
+      model.calibration.fold(scoreNative(model, df, "proba")) { ab =>
+        val margins = col("margins")
+        val scores = array(ab.toIndexedSeq.zipWithIndex.map { case ((a, b), i) =>
+          lit(1.0) / (lit(1.0) + exp(-(lit(a) * element_at(margins, i + 1) + lit(b))))
+        }: _*)
+        scoreNative(model, df, "margins")
+          .withColumn("sc", scores)
+          .withColumn("proba", {
+            val denom = aggregate(col("sc"), lit(0.0), (acc, x) => acc + x)
+            transform(col("sc"), x => x / denom)
+          })
+          .drop("margins", "sc")
+      }
+    case m: LinearBoost.LinearModel if m.objective == "binary:logistic" =>
+      scoreNative(model, df, "proba")
+    case m: RandomForestClassificationModel =>
+      m.transform(assemble(df, model.featureCols, model.imputation))
+        .withColumn("proba", vector_to_array(col("probability")))
+        .drop("features", "rawPrediction", "probability")
+    case m =>
+      throw new IllegalStateException(s"model has no probabilities: ${m.getClass}")
   }
 
-  /** A native forest's `output` in one projection: the caller's
-    * columns (named feature columns imputed, as [[assemble]] leaves
-    * them; a pre-assembled `features` vector dropped), then the score.
+  /** A model's `output` ([[ForestScore]]) in one projection: the
+    * caller's columns (named feature columns imputed, as [[assemble]]
+    * leaves them; a pre-assembled `features` vector dropped), then the
+    * `lead` columns (an attribution's constant bias), then the score.
     */
-  private def scoreNative(model: GraftBoostModel, df: DataFrame, output: String,
-      marginCol: Option[String]): DataFrame = {
+  private[ml] def scoreNative(model: GraftBoostModel, df: DataFrame, output: String,
+      marginCol: Option[String] = None, lead: Seq[(String, Column)] = Nil): DataFrame = {
     val bm = marginCol.map(marginColumn)
+    // one projection, so the scorer reads the raw cells under its own
+    // marker rule
     if (preAssembled(df, model.featureCols))
-      df.withColumn(output, ForestScore.overVector(df.sparkSession, model.model, output,
-        col("features"), bm)).drop("features")
+      df.withColumns(ListMap(lead :+ (output -> ForestScore.overVector(df.sparkSession,
+        model.model, output, col("features"), bm)): _*)).drop("features")
     else
-      df.withColumns(imputed(model.featureCols, model.imputation) +
+      df.withColumns(ListMap(imputed(model.featureCols, model.imputation).toSeq ++ lead :+
         (output -> ForestScore.overColumns(df.sparkSession, model.model, output,
           model.featureCols, model.imputation,
-          keepNaN = model.missingStrategy == "native", bm)))
+          keepNaN = model.missingStrategy == "native", bm)): _*))
   }
 
   /** Deterministic (train, calibration) split for [[calibrate]]:
@@ -912,7 +899,7 @@ object GraftBoost {
         val margins = m.marginsOf(f)
         margins.indices.maxBy(margins(_)).toDouble
       case m: SparseBoost.SparseModel     => m.predictOne(f)
-      case m: LinearBoost.LinearModel     => m.predictOne(f)
+      case m: LinearBoost.LinearModel     => m.predictOne(f.toArray)
       case m => throw new UnsupportedOperationException(
         s"local predict unavailable for ${m.getClass}")
     }

@@ -89,28 +89,27 @@ object LinearBoost {
     override def transformSchema(schema: StructType): StructType =
       schema.add(StructField("prediction", DoubleType))
 
-    def marginOf(v: Vector): Double = {
+    def marginOf(x: Array[Double]): Double = {
       var f = base + bias
       var j = 0
-      while (j < weights.length) { f += weights(j) * v(j); j += 1 }
+      while (j < weights.length) { f += weights(j) * x(j); j += 1 }
       f
     }
 
-    def probOf(v: Vector): Double = 1.0 / (1.0 + math.exp(-marginOf(v)))
+    def probOf(x: Array[Double]): Double = 1.0 / (1.0 + math.exp(-marginOf(x)))
 
-    def predictOne(v: Vector): Double = objective match {
-      case "binary:logistic" => if (marginOf(v) > 0.0) 1.0 else 0.0
-      case _ => marginOf(v)
+    def predictOne(x: Array[Double]): Double = objective match {
+      case "binary:logistic" => if (marginOf(x) > 0.0) 1.0 else 0.0
+      case _ => marginOf(x)
     }
 
-    override def transform(ds: org.apache.spark.sql.Dataset[_]): DataFrame = {
-      // scoring reads weights/bias only — never ship the per-round
-      // snapshot history (numRound × numFeat doubles) to executors
-      val bc = ds.sparkSession.sparkContext.broadcast(
-        new LinearModel(uid, weights, bias, base, objective))
-      val pU = udf((v: Vector) => bc.value.predictOne(v))
-      ds.withColumn("prediction", pU(col("features")))
-    }
+    /** Appends `prediction`: the [[graft.plans.ForestScore]] projection
+      * over the `features` vector, whose scorer reads the weights and
+      * bias only — never the per-round snapshots.
+      */
+    override def transform(ds: org.apache.spark.sql.Dataset[_]): DataFrame =
+      ds.withColumn("prediction", graft.plans.ForestScore.overVector(ds.sparkSession,
+        this, "prediction", col("features"), None))
   }
 
   /** Train the linear booster on a frame carrying `features` (dense

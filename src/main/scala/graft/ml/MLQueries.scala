@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
@@ -1131,18 +1131,13 @@ object MLQueries {
       // recursion, so they gate nothing. NaN-safe: a NaN symErr
       // fails the < comparison.
       val interactionSymErr = {
-        val ctx = TreeShap.forestCtx(model)
-        val bc = s.sparkContext.broadcast(ctx)
-        val errU = udf((v: org.apache.spark.ml.linalg.Vector) => {
-          val c = bc.value
-          val (_, _, mat) = TreeShap.interactionsOne(
-            c.trees, c.expected, c.pathCap, c.numFeatures, v)
-          val n = c.numFeatures
-          (for (i <- 0 until n; j <- i + 1 until n)
-            yield math.abs(mat(i)(j) - mat(j)(i))).foldLeft(0.0)(math.max)
-        })
-        GraftBoost.assemble(df.limit(500), feats, model.imputation, keepNaN = true)
-          .agg(max(errU(col("features")))).head().getDouble(0)
+        val ix = col("interactions")
+        val n = feats.length
+        def cell(i: Int, j: Int) = element_at(ix, i * n + j + 1)
+        val symErr = (for (i <- 0 until n; j <- i + 1 until n)
+          yield abs(cell(i, j) - cell(j, i))).foldLeft(lit(0.0))(greatest(_, _))
+        TreeShap.transformInteractions(model, df.limit(500).select(feats.map(col): _*))
+          .agg(max(symErr)).head().getDouble(0)
       }
       val out = attributed.agg(
           count(lit(1)).as("n_rows"),
@@ -1209,50 +1204,26 @@ object MLQueries {
         GraftBoost.BoostParams("reg:squarederror", numRound = 2, maxDepth = 2,
           maxBins = 8, splitProposal = "approx",
           missing = Some(-999.0), missingStrategy = "native"))
-      val ctx = TreeShap.forestCtx(model)
-      val bc = s.sparkContext.broadcast(ctx)
-      // per-row kernel: (max pairwise symmetry error, efficiency
-      // error vs the margin, diagonal |Φ| mass, off-diagonal |Φ|
-      // mass) — one struct per row, aggregated map-side
-      val kernelU = udf((v: org.apache.spark.ml.linalg.Vector) => {
-        val c = bc.value
-        val (b, _, mat) = TreeShap.interactionsOne(
-          c.trees, c.expected, c.pathCap, c.numFeatures, v)
-        val n = c.numFeatures
-        var sym = 0.0; var tot = 0.0; var diag = 0.0; var off = 0.0
-        var i = 0
-        while (i < n) {
-          var j = 0
-          while (j < n) {
-            val x = mat(i)(j)
-            tot += x
-            if (i == j) diag += math.abs(x)
-            else {
-              off += math.abs(x)
-              if (j > i) {
-                val d = math.abs(x - mat(j)(i))
-                if (d > sym) sym = d
-              }
-            }
-            j += 1
-          }
-          i += 1
-        }
-        var margin = c.base
-        var r = 0
-        val x = v.toArray
-        while (r < c.trees.length) { margin += c.trees(r).valueOf(x); r += 1 }
-        (sym, math.abs(b + c.base + tot - margin), diag, off)
-      })
-      val out = GraftBoost.assemble(df, feats, model.imputation,
-          keepNaN = true)
-        .select(kernelU(col("features")).as("k"))
+      // per row: the max pairwise symmetry error, the efficiency error
+      // against the margin (the prediction of this squared-error
+      // forest), and the diagonal and off-diagonal |Φ| mass — Column
+      // arithmetic over the matrix cells, aggregated map-side
+      val n = feats.length
+      val ix = col("interactions")
+      val cells = for (i <- 0 until n; j <- 0 until n) yield (i, j, element_at(ix, i * n + j + 1))
+      def total(cs: Seq[Column]) = cs.foldLeft(lit(0.0))(_ + _)
+      val symErr = cells.collect { case (i, j, x) if j > i =>
+        abs(x - element_at(ix, j * n + i + 1)) }.foldLeft(lit(0.0))(greatest(_, _))
+      val effErr = abs(col("bias") + aggregate(ix, lit(0.0), (a, x) => a + x) -
+        col("prediction"))
+      val out = TreeShap.transformInteractions(model,
+          GraftBoost.predict(model, df).select((feats :+ "prediction").map(col): _*))
         .agg(
           count(lit(1)).as("n"),
-          max(col("k._1")).as("symerr"),
-          max(col("k._2")).as("efferr"),
-          sum(col("k._3")).as("diag"),
-          sum(col("k._4")).as("off"))
+          max(symErr).as("symerr"),
+          max(effErr).as("efferr"),
+          sum(total(cells.collect { case (i, j, x) if i == j => abs(x) })).as("diag"),
+          sum(total(cells.collect { case (i, j, x) if i != j => abs(x) })).as("off"))
         .select(
           col("n").cast("long").as("n_rows"),
           (col("n") * lit(feats.length.toLong * feats.length))

@@ -24,9 +24,9 @@ import SparseBoost.{ImportanceAcc, SparseTree}
   * its tests `test_core.py:72-101` exercise the multiclass lifecycle)
   * and the scorer multiclass [[XgbJson]] documents ingest into: a
   * stock XGBoost multiclass document scores with serving semantics
-  * (NaN routed along each split's `default_left`). Scoring broadcasts
-  * the model-sized tree arrays once — one map-side pass, no shuffle,
-  * no driver data path.
+  * (NaN routed along each split's `default_left`). Scoring is one
+  * [[graft.plans.ForestScore]] projection that reads the model-sized
+  * tree arrays broadcast once — no shuffle, no driver data path.
   */
 object MultiSparse {
 
@@ -125,55 +125,6 @@ object MultiSparse {
         "round-indexed use needs the round-major tree layout (tree i -> " +
         "class i mod K); this document's tree_info is irregular")
       trees.length / numClasses
-    }
-
-    /** Per-round eval history on a frame in ONE pass (the multiclass
-      * analog of [[StagedEval]]'s staged margins): each row walks the
-      * forest once, round by round (K trees each), emitting that
-      * round's (logloss, error) contribution; the per-round averages
-      * are one weighted aggregation. `df` must carry `features` and
-      * `label`; the optional weight column weights both metrics
-      * (`sample_weight_eval_set`).
-      *
-      * @return ("mlogloss" → per-round, "merror" → per-round)
-      */
-    def stagedEval(
-        df: DataFrame,
-        weightCol: Option[String] = None
-    ): Map[String, Array[Double]] = {
-      require(!dartFolded,
-        "staged evaluation of a dart-folded forest: its tree prefixes " +
-        "are no training-time round margins")
-      val rounds = numRounds
-      val K = numClasses
-      val bc = df.sparkSession.sparkContext.broadcast(this)
-      val perRound = udf((v: Vector, label: Double) => {
-        val m = bc.value
-        val x = v.toArray
-        val f = Array.fill(K)(m.base)
-        val li = label.toInt
-        (0 until rounds).map { r =>
-          var k = 0
-          while (k < K) { f(k) += m.trees(r * K + k).valueOf(x); k += 1 }
-          val p = softmaxInPlace(f.clone())
-          var am = 0; k = 1
-          while (k < K) { if (f(k) > f(am)) am = k; k += 1 }
-          (-math.log(math.max(p(li), 1e-15)), if (am == li) 0.0 else 1.0)
-        }
-      })
-      val w = weightCol.map(col).getOrElse(lit(1.0))
-      val staged = df
-        .select(perRound(col("features"), col("label").cast(DoubleType)).as("s"),
-          w.as("w"))
-      val aggs = (0 until rounds).flatMap { r =>
-        Seq(sum(element_at(col("s"), r + 1)("_1") * col("w")).as(s"l$r"),
-          sum(element_at(col("s"), r + 1)("_2") * col("w")).as(s"e$r"))
-      } :+ sum(col("w")).as("wt")
-      val row = staged.agg(aggs.head, aggs.tail: _*).head()
-      val wt = row.getDouble(2 * rounds)
-      val lo = Array.tabulate(rounds)(r => row.getDouble(2 * r) / wt)
-      val er = Array.tabulate(rounds)(r => row.getDouble(2 * r + 1) / wt)
-      Map("mlogloss" -> lo, "merror" -> er)
     }
 
     /** Truncated copy keeping the first `rounds` boosting rounds —

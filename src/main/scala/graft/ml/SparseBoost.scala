@@ -1563,6 +1563,6 @@ object SparseBoost {
     val byRound =
       if (metric == "auc") StagedEval.aucByRound(staged)
       else StagedEval.aucprByRound(staged, trapezoid = metric == "aucpr-trapezoid")
-    byRound.head().getAs[Double]("m")
+    byRound.head
   }
 }

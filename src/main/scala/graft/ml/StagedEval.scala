@@ -1,7 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Per-round staged evaluation of a trained model — the reference's
@@ -11,44 +10,44 @@ import org.apache.spark.sql.functions._
   * it trains ([[SparseBoost.EarlyStop]]); this is the post-hoc form,
   * and the oracle those in-loop values are pinned against.
   *
-  * One distributed pass computes the staged margins for EVERY
-  * boosting round simultaneously (broadcast trees, incremental sum
-  * per row), so the cost is O(rows × trees) — the same as a single
-  * scoring pass — rather than one transform per round. Metrics are
-  * then per-round aggregations:
+  * Every round's margin comes from one projection: the `staged` output
+  * of [[graft.plans.ForestScore]] walks each row through the forest
+  * once, round by round, so the cost is O(rows × trees) — the same as
+  * a single scoring pass — rather than one transform per round. The
+  * array is posexploded into (round, label, margin, w) rows and each
+  * metric is a per-round aggregation:
   *  - "auc", "aucpr", "aucpr-trapezoid": rank statistics per round
   *  - "logloss", "error": of the sigmoid margin
   *  - "rmse", "mae": of the staged prediction
-  *  - "mlogloss", "merror": of a multiclass forest's softmax
-  *    ([[MultiSparse.MultiSparseModel.stagedEval]])
+  *  - "mlogloss", "merror": of a multiclass forest's softmax, over the
+  *    round's K class margins
   */
 object StagedEval {
 
-  /** (round → margin) rows: staged margin after each round for one
-    * example. Emitted narrow (round, label, margin) so per-round
-    * metrics are plain groupBy aggregations.
+  /** (round, label, margin, w) rows: each example's margin after every
+    * round — for a multiclass forest (`multiclass`) its K class margins
+    * (`margins`) instead — so per-round metrics are plain groupBy
+    * aggregations.
     */
-  private def stagedMargins(
+  private[graft] def stagedRows(
       model: GraftBoost.GraftBoostModel,
       df: DataFrame,
       labelCol: String,
-      weightCol: Option[String]
+      weightCol: Option[String],
+      multiclass: Boolean
   ): DataFrame = {
-    // fanOut: the staged walk does rounds × rows work in one
-    // mapPartitions — on a single-row-group source that is ONE task
-    // without the by-number repartition (see GraftBoost.train)
-    val data = graft.functions.GraftFunctions.fanOut(
-      GraftBoost.assemble(df, model.featureCols, model.imputation,
-        keepNaN = model.missingStrategy == "native")
-      .withColumn("label", col(labelCol).cast("double"))
-      .withColumn("w", weightCol.map(col(_).cast("double")).getOrElse(lit(1.0)))
-      .select(col("features"), col("label"), col("w")))
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    // (initial margin, per-round margin increments; η is already baked
-    // into the stored leaf values) — full logits for binary:logistic
-    val (init: Double, steps: Array[Vector => Double]) = model.model match {
+    val staged = col("staged")
+    // a multiclass forest's rounds: slices of K class margins
+    val perRound = model.model match {
+      case m: MultiSparse.MultiSparseModel if multiclass =>
+        require(!m.dartFolded,
+          "staged evaluation of a dart-folded forest: its tree prefixes " +
+          "are no training-time round margins")
+        val k = m.numClasses
+        transform(sequence(lit(0), lit(m.numRounds - 1)),
+          r => slice(staged, r * k + 1, lit(k)))
+      case m if multiclass => throw new UnsupportedOperationException(
+        s"mlogloss and merror need a multiclass forest, got ${m.getClass}")
       case m: SparseBoost.SparseModel if m.dartRescaled =>
         throw new UnsupportedOperationException(
           "staged evaluation is undefined for a DART forest whose " +
@@ -56,53 +55,68 @@ object StagedEval {
           "earlier rounds' stored trees, so per-round prefix margins " +
           "do not correspond to any training-time round margin " +
           "(XGBoost likewise forbids ntree_limit with booster='dart')")
-      case m: SparseBoost.SparseModel =>
-        // one step per ROUND: a parallel-tree round's T trees move
-        // together (each is 1/T-scaled; a per-tree walk would score
-        // fractional rounds and mis-place best_iteration)
-        (m.base, m.trees.grouped(m.treesPerRound).map { group =>
-          (v: Vector) => {
-            val x = v.toArray
-            var acc = 0.0
-            var i = 0
-            while (i < group.length) { acc += group(i).valueOf(x); i += 1 }
-            acc
-          }
-        }.toArray)
-      case m: LinearBoost.LinearModel if m.snapshots.isDefined =>
-        // per-round margin deltas from the recorded weight snapshots:
-        // step_r(x) = Δbias_r + Δw_r·x
-        val snaps = m.snapshots.get
-        val steps = snaps.indices.map { r =>
-          val (w1, b1) = snaps(r)
-          val (w0, b0) =
-            if (r == 0) (new Array[Double](w1.length), 0.0) else snaps(r - 1)
-          val dw = w1.indices.map(j => w1(j) - w0(j)).toArray
-          val db = b1 - b0
-          (v: Vector) => {
-            var acc = db
-            var j = 0
-            while (j < dw.length) { acc += dw(j) * v(j); j += 1 }
-            acc
-          }
-        }.toArray
-        (m.base, steps)
+      case _: SparseBoost.SparseModel => staged
+      case m: LinearBoost.LinearModel if m.snapshots.isDefined => staged
       case m => throw new UnsupportedOperationException(
         s"staged evaluation needs a native sparse or freshly trained " +
         s"gblinear model, got ${m.getClass}")
     }
-    val bTrees = spark.sparkContext.broadcast((init, steps))
+    val margin = if (multiclass) "margins" else "margin"
+    // fanOut: the staged walk does rounds × rows work per row — on a
+    // single-row-group source that is ONE task without the by-number
+    // repartition (see GraftBoost.train). A multiclass history sums in
+    // the caller's partitions, the layout its values are pinned to.
+    val slim = df.select((model.featureCols ++ Seq(labelCol) ++ weightCol).distinct.map(col): _*)
+    val rows = if (multiclass) slim else graft.functions.GraftFunctions.fanOut(slim)
+    GraftBoost.scoreNative(model, rows, "staged")
+      .select(posexplode(perRound).as(Seq("r", margin)),
+        col(labelCol).cast("double").as("label"),
+        weightCol.fold(lit(1.0))(col(_).cast("double")).as("w"))
+      .select((col("r") + 1).as("round"), col("label"), col(margin), col("w"))
+  }
 
-    data.as[(Vector, Double, Double)].mapPartitions { it =>
-      val (i0, ts) = bTrees.value
-      it.flatMap { case (features, label, w) =>
-        var margin = i0
-        ts.indices.iterator.map { r =>
-          margin += ts(r)(features)
-          (r + 1, label, margin, w)
-        }
-      }
-    }.toDF("round", "label", "margin", "w")
+  /** The weighted per-round mean of a sum-decomposable metric. */
+  private def meanByRound(metric: String): Column = {
+    val (margin, label, w) = (col("margin"), col("label"), col("w"))
+    val term = metric match {
+      case "logloss" =>
+        // p = sigmoid(margin): the staged margins are full logits
+        val p = lit(1.0) / (lit(1.0) + exp(-margin))
+        when(label === 1.0, -log(greatest(p, lit(1e-15))))
+          .otherwise(-log(greatest(lit(1.0) - p, lit(1e-15))))
+      case "error" => when((margin > 0.0) === (label === 1.0), 0.0).otherwise(1.0)
+      case "rmse" => pow(margin - label, 2)
+      case "mae" => abs(margin - label)
+      case "mlogloss" =>
+        // the max-shifted softmax of the round's class margins
+        val m = col("margins")
+        val e = transform(m, x => exp(x - array_max(m)))
+        val p = element_at(e, label.cast("int") + 1) /
+          aggregate(e, lit(0.0), (acc, x) => acc + x)
+        -log(greatest(p, lit(1e-15)))
+      case "merror" =>
+        val m = col("margins")
+        when(array_position(m, array_max(m)) - 1 === label.cast("int"), 0.0).otherwise(1.0)
+      case other => throw new IllegalArgumentException(s"unknown metric: $other")
+    }
+    val mean = sum(term * w) / sum(w)
+    (if (metric == "rmse") sqrt(mean) else mean).as(metric)
+  }
+
+  /** Per-round values of `metrics` over one staged pass; the
+    * sum-decomposable ones share one aggregation.
+    */
+  private def byRound(staged: DataFrame, metrics: Seq[String]): Map[String, Array[Double]] = {
+    val (rank, sums) = metrics.partition(m => m == "auc" || m.startsWith("aucpr"))
+    val means = if (sums.isEmpty) Map.empty[String, Array[Double]] else {
+      val rows = staged.groupBy(col("round")).agg(meanByRound(sums.head),
+        sums.tail.map(meanByRound): _*).orderBy(col("round")).collect()
+      sums.map(m => m -> rows.map(_.getAs[Double](m))).toMap
+    }
+    means ++ rank.map {
+      case "auc" => "auc" -> aucByRound(staged)
+      case m => m -> aucprByRound(staged, trapezoid = m == "aucpr-trapezoid")
+    }
   }
 
   /** Per-round metric values, index 0 = after first round. `weightCol`
@@ -118,73 +132,22 @@ object StagedEval {
       metric: String,
       weightCol: Option[String] = None
   ): Array[Double] = {
-    if (metric == "mlogloss" || metric == "merror")
-      return multiclassHistory(model, df, labelCol, weightCol)(metric)
-    val staged = stagedMargins(model, df, labelCol, weightCol)
-    val byRound: DataFrame = metric match {
-      case "logloss" =>
-        // p = sigmoid(margin) — stagedMargins normalizes every model
-        // family to full logits
-        val p = lit(1.0) / (lit(1.0) + exp(-col("margin")))
-        val ll = when(col("label") === 1.0, -log(greatest(p, lit(1e-15))))
-          .otherwise(-log(greatest(lit(1.0) - p, lit(1e-15))))
-        staged.groupBy(col("round"))
-          .agg((sum(ll * col("w")) / sum(col("w"))).as("m"))
-      case "error" =>
-        val wrong = when((col("margin") > 0.0) === (col("label") === 1.0), 0.0).otherwise(1.0)
-        staged.groupBy(col("round"))
-          .agg((sum(wrong * col("w")) / sum(col("w"))).as("m"))
-      case "rmse" =>
-        staged.groupBy(col("round"))
-          .agg(sqrt(sum(pow(col("margin") - col("label"), 2) * col("w")) / sum(col("w"))).as("m"))
-      case "mae" =>
-        staged.groupBy(col("round"))
-          .agg((sum(abs(col("margin") - col("label")) * col("w")) / sum(col("w"))).as("m"))
-      case "auc" => aucByRound(staged)
-      case "aucpr" => aucprByRound(staged)
-      case "aucpr-trapezoid" => aucprByRound(staged, trapezoid = true)
-      case other =>
-        throw new IllegalArgumentException(s"unknown metric: $other")
-    }
-    byRound.orderBy(col("round")).collect().map(_.getAs[Double]("m"))
+    val multiclass = metric == "mlogloss" || metric == "merror"
+    byRound(stagedRows(model, df, labelCol, weightCol, multiclass), Seq(metric))(metric)
   }
 
   /** Per-round "mlogloss" and "merror" of a multiclass forest in one
-    * staged pass ([[MultiSparse.MultiSparseModel.stagedEval]]).
+    * staged pass.
     */
   def multiclassHistory(
       model: GraftBoost.GraftBoostModel,
       df: DataFrame,
       labelCol: String,
       weightCol: Option[String] = None
-  ): Map[String, Array[Double]] = model.model match {
-    case mm: MultiSparse.MultiSparseModel =>
-      mm.stagedEval(GraftBoost.assemble(df, model.featureCols, model.imputation,
-          keepNaN = model.missingStrategy == "native")
-        .withColumn("label", col(labelCol).cast("double")), weightCol)
-    case m => throw new UnsupportedOperationException(
-      s"mlogloss and merror need a multiclass forest, got ${m.getClass}")
-  }
+  ): Map[String, Array[Double]] =
+    byRound(stagedRows(model, df, labelCol, weightCol, multiclass = true),
+      Seq("mlogloss", "merror"))
 
-  /** Exact per-round Mann-Whitney AUC with midrank tie handling,
-    * computed without any per-round single-reducer window.
-    *
-    * U = #{(pos, neg) pairs with pos.margin > neg.margin}
-    *     + ½·#{tied pairs};  AUC = U / (nPos · nNeg)
-    *
-    * Shape: (1) collapse ties into (round, margin) groups with
-    * positive/negative counts — one hash aggregation; (2) range-
-    * partition the groups on (round, margin) and sort within
-    * partitions, so every round's margins ascend across partition
-    * boundaries; (3) one small pass collects per-(partition, round)
-    * negative totals (O(partitions × rounds) values on the driver —
-    * the only driver data); (4) one distributed pass walks each
-    * partition with a running negatives-below counter seeded from the
-    * prefix offsets and sums p_g · (negBelow + n_g/2) per round.
-    * Identical midrank math to a global rank window, but every stage
-    * is a hash agg or a per-partition scan — no round lands on a
-    * single reducer, so the same code holds on a full corpus.
-    */
   /** Shared machinery of the per-round rank statistics ([[aucByRound]]
     * / [[aucprByRound]]): collapse ties into (round, margin, pos, neg)
     * groups — one hash aggregation — range-partition + sort them on
@@ -233,7 +196,28 @@ object StagedEval {
     })
   }
 
-  private[graft] def aucByRound(staged: DataFrame): DataFrame = {
+  /** Exact per-round Mann-Whitney AUC with midrank tie handling,
+    * computed without any per-round single-reducer window.
+    *
+    * U = #{(pos, neg) pairs with pos.margin > neg.margin}
+    *     + ½·#{tied pairs};  AUC = U / (nPos · nNeg)
+    *
+    * Shape: (1) collapse ties into (round, margin) groups with
+    * positive/negative counts — one hash aggregation; (2) range-
+    * partition the groups on (round, margin) and sort within
+    * partitions, so every round's margins ascend across partition
+    * boundaries; (3) one small pass collects per-(partition, round)
+    * negative totals (O(partitions × rounds) values on the driver —
+    * the only driver data); (4) one distributed pass walks each
+    * partition with a running negatives-below counter seeded from the
+    * prefix offsets and sums p_g · (negBelow + n_g/2) per round.
+    * Identical midrank math to a global rank window, but every stage
+    * is a hash agg or a per-partition scan — no round lands on a
+    * single reducer, so the same code holds on a full corpus. Returns
+    * the per-round values, index 0 = round 1, collected before the
+    * sorted groups are released.
+    */
+  private[graft] def aucByRound(staged: DataFrame): Array[Double] = {
     val spark = staged.sparkSession
     import spark.implicits._
     // ascending margins: the walk counts negatives BELOW each group
@@ -256,7 +240,7 @@ object StagedEval {
       contrib.groupBy(col("round"))
         .agg((sum(col("u")) / (sum(col("np")) * sum(col("nn")))).as("m"))
         .orderBy(col("round"))
-        .localCheckpoint(true)
+        .collect().map(_.getAs[Double]("m"))
     } finally release()
   }
 
@@ -287,7 +271,7 @@ object StagedEval {
     * aggregation.
     */
   private[graft] def aucprByRound(
-      staged: DataFrame, trapezoid: Boolean = false): DataFrame = {
+      staged: DataFrame, trapezoid: Boolean = false): Array[Double] = {
     val spark = staged.sparkSession
     import spark.implicits._
     val (sorted, bOff, release) = tieGroupsWithOffsets(staged, descending = true)
@@ -318,7 +302,7 @@ object StagedEval {
       contrib.groupBy(col("round"))
         .agg((sum(col("a")) / sum(col("np"))).as("m"))
         .orderBy(col("round"))
-        .localCheckpoint(true)
+        .collect().map(_.getAs[Double]("m"))
     } finally release()
   }
 

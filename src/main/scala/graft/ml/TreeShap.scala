@@ -1,8 +1,8 @@
 package graft.ml
 
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.Model
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{lit, typedLit}
 
 /** Exact TreeSHAP — XGBoost's `pred_contribs=True` semantics
   * (Lundberg, Erion & Lee 2018, "Consistent Individualized Feature
@@ -28,11 +28,14 @@ import org.apache.spark.sql.functions._
   * subset-enumeration Shapley values on small forests — the algorithm
   * is verified against the definition, not against itself.
   *
-  * Scale posture: the forest (trees + cover) is a model-sized driver
-  * artifact broadcast once; scoring is one map-side pass, no shuffle.
-  * Needs per-node cover, which the native loop records during growth
-  * for every single-margin boosted fit; the Saabas decomposition
-  * ([[Contributions]]) is the cheaper path-only alternative.
+  * Scale posture: the values are the `shap` and `interactions` outputs
+  * of [[graft.plans.ForestScore]], one codegen'd projection over the
+  * feature columns that reads the model-sized forest (trees + cover)
+  * broadcast once; no shuffle beyond the fan-out. The bias is the same
+  * for every row and is computed on the driver. Needs per-node cover,
+  * which the native loop records during growth for every fit; the
+  * Saabas decomposition ([[Contributions]]) is the cheaper path-only
+  * alternative.
   */
 object TreeShap {
 
@@ -136,7 +139,7 @@ object TreeShap {
     * ("feature known absent"). `cond = 0` is plain TreeSHAP.
     */
   private def recurse(
-      t: SparseBoost.SparseTree, v: Vector, phi: Array[Double],
+      t: SparseBoost.SparseTree, v: Array[Double], phi: Array[Double],
       node: Int, m: Path, pz: Double, po: Double, pi: Int,
       cond: Int = 0, condF: Int = -1, condFrac: Double = 1.0
   ): Unit = {
@@ -210,7 +213,7 @@ object TreeShap {
       expected: Array[Double],
       pathCap: Int,
       numFeatures: Int,
-      v: Vector
+      v: Array[Double]
   ): (Double, Array[Double]) = {
     val phi = new Array[Double](numFeatures)
     var bias = 0.0
@@ -237,7 +240,7 @@ object TreeShap {
       expected: Array[Double],
       pathCap: Int,
       numFeatures: Int,
-      v: Vector
+      v: Array[Double]
   ): (Double, Array[Double], Array[Array[Double]]) = {
     val (bias, plain) = shapOne(trees, expected, pathCap, numFeatures, v)
     val mat = Array.ofDim[Double](numFeatures, numFeatures)
@@ -266,71 +269,94 @@ object TreeShap {
     (bias, plain, mat)
   }
 
-  /** The scoring context a kernel needs: the sparse forest, its
-    * per-tree expected values, the path-buffer cap, the feature
-    * count, and the base score — derived once per transform and
-    * broadcast-ready.
+  /** What the SHAP outputs read: per class, the forest in stored tree
+    * order (the margin's sum order) and each tree's expected value; the
+    * path-buffer cap; the base. A single-margin forest is one class.
     */
-  private[graft] final case class ForestCtx(
-      trees: Array[SparseBoost.SparseTree],
-      expected: Array[Double],
+  private[graft] final case class Explainer(
+      byClass: Array[Array[SparseBoost.SparseTree]],
+      expected: Array[Array[Double]],
       pathCap: Int,
-      numFeatures: Int,
       base: Double
-  ) extends Serializable
-
-  private[graft] def forestCtx(model: GraftBoost.GraftBoostModel): ForestCtx = {
-    val sm = model.model match {
-      case m: SparseBoost.SparseModel => m
-      case m => throw new UnsupportedOperationException(
-        "exact TreeSHAP needs the native sparse forest's cover " +
-        s"statistics; got ${m.getClass}")
+  ) {
+    /** Per class, Σ expected values in tree order + base: every row's
+      * bias, as [[shapOne]] sums it.
+      */
+    def bias: Array[Double] = expected.map { e =>
+      var b = 0.0
+      e.foreach(b += _)
+      b + base
     }
-    require(!sm.trees.exists(_.hasCategorical),
+
+    /** One row's φ per class, K×M row-major. */
+    def shap(x: Array[Double], numFeatures: Int): Array[Double] = {
+      val flat = new Array[Double](byClass.length * numFeatures)
+      var k = 0
+      while (k < byClass.length) {
+        val (_, phi) = shapOne(byClass(k), expected(k), pathCap, numFeatures, x)
+        System.arraycopy(phi, 0, flat, k * numFeatures, numFeatures)
+        k += 1
+      }
+      flat
+    }
+
+    /** One row's interaction matrix of the first class, M×M row-major. */
+    def interactions(x: Array[Double], numFeatures: Int): Array[Double] = {
+      val (_, _, mat) = interactionsOne(byClass(0), expected(0), pathCap, numFeatures, x)
+      val flat = new Array[Double](numFeatures * numFeatures)
+      var i = 0
+      while (i < numFeatures) {
+        System.arraycopy(mat(i), 0, flat, i * numFeatures, numFeatures)
+        i += 1
+      }
+      flat
+    }
+  }
+
+  private[graft] def explainer(model: Model[_]): Explainer = {
+    val (trees, classOf, numClasses, base) = model match {
+      case m: SparseBoost.SparseModel => (m.trees, new Array[Int](m.trees.length), 1, m.base)
+      case m: MultiSparse.MultiSparseModel => (m.trees, m.treeInfo, m.numClasses, m.base)
+      case m => throw new UnsupportedOperationException(
+        s"exact TreeSHAP needs a native forest's cover statistics; got ${m.getClass}")
+    }
+    require(!trees.exists(_.hasCategorical),
       "TreeSHAP on a forest with categorical (set-membership) splits " +
       "is not supported: the path-conditioning walk is " +
       "numeric-threshold only — score the model as-is or re-encode " +
       "the categorical features")
-    ForestCtx(sm.trees, sm.trees.map(expectedValue),
-      (if (sm.trees.isEmpty) 1 else sm.trees.map(depthOf).max) + 2,
-      model.featureCols.length, sm.base)
+    val byClass = Array.tabulate(numClasses)(k =>
+      trees.indices.collect { case i if classOf(i) == k => trees(i) }.toArray)
+    Explainer(byClass, byClass.map(_.map(expectedValue)),
+      (if (trees.isEmpty) 1 else trees.map(depthOf).max) + 2, base)
   }
 
-  /** One assemble + broadcast + UDF pass appending `bias` and a
-    * kernel-computed column — the plumbing [[transform]] and
-    * [[transformInteractions]] share.
-    */
+  /** `bias` and the `output` column in one fanned-out projection. */
   private def scoreWith(
-      model: GraftBoost.GraftBoostModel, df: DataFrame, outCol: String
-  )(kernel: (ForestCtx, Vector) => (Double, Seq[Double])): DataFrame = {
+      model: GraftBoost.GraftBoostModel, df: DataFrame, output: String): DataFrame = {
     // withColumn silently REPLACES an existing column — an input that
-    // already carries `bias`/`shap`/`interactions` (or the temp) would
-    // lose it without a trace; refuse up front like the other
-    // withColumn-contract operators
-    val clash = Seq("_kv", "bias", outCol).filter(df.columns.contains)
+    // already carries `bias`/`shap`/`interactions` would lose it
+    // without a trace; refuse up front like the other withColumn-
+    // contract operators
+    val clash = Seq("bias", output).filter(df.columns.contains)
     require(clash.isEmpty,
       s"input already has column(s) ${clash.mkString(", ")} that " +
       s"TreeShap would overwrite — rename or drop them before scoring")
-    val ctx = forestCtx(model)
+    val bias = explainer(model.model).bias
     // fanOut: the SHAP kernel is O(trees × depth²) per row (2·M
     // conditioned walks for interactions) — heavy enough that the
     // by-number repartition pays even at scale, and on a
     // single-row-group source it is the difference between one task
     // and the whole cluster (see GraftBoost.train)
-    val data = graft.functions.GraftFunctions.fanOut(
-      GraftBoost.assemble(df, model.featureCols, model.imputation,
-        keepNaN = model.missingStrategy == "native"))
-    val bc = data.sparkSession.sparkContext.broadcast(ctx)
-    val ku = udf((v: Vector) => {
-      val c = bc.value
-      val (b, out) = kernel(c, v)
-      (b + c.base, out)
-    })
-    data
-      .withColumn("_kv", ku(col("features")))
-      .withColumn("bias", col("_kv")("_1"))
-      .withColumn(outCol, col("_kv")("_2"))
-      .drop("_kv", "features")
+    GraftBoost.scoreNative(model, graft.functions.GraftFunctions.fanOut(df), output,
+      lead = Seq("bias" -> (if (bias.length == 1) lit(bias(0)) else typedLit(bias))))
+  }
+
+  private def singleMargin(model: GraftBoost.GraftBoostModel): Unit = model.model match {
+    case _: SparseBoost.SparseModel =>
+    case m => throw new UnsupportedOperationException(
+      "exact TreeSHAP needs the native sparse forest's cover " +
+      s"statistics; got ${m.getClass}")
   }
 
   /** Score `df` with exact SHAP interaction matrices (XGBoost's
@@ -340,12 +366,10 @@ object TreeShap {
     * corpora, unless M is small.
     */
   def transformInteractions(
-      model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame =
-    scoreWith(model, df, "interactions") { (c, v) =>
-      val (b, _, mat) = interactionsOne(c.trees, c.expected, c.pathCap,
-        c.numFeatures, v)
-      (b, mat.flatten.toSeq)
-    }
+      model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame = {
+    singleMargin(model)
+    scoreWith(model, df, "interactions")
+  }
 
   /** Score `df` with exact TreeSHAP attributions: appends `bias`
     * (double; forest expected value + base score — identical for
@@ -354,11 +378,10 @@ object TreeShap {
     * accuracy identity `bias + Σshap = margin` holds exactly up to
     * float summation order.
     */
-  def transform(model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame =
-    scoreWith(model, df, "shap") { (c, v) =>
-      val (b, phi) = shapOne(c.trees, c.expected, c.pathCap, c.numFeatures, v)
-      (b, phi.toSeq)
-    }
+  def transform(model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame = {
+    singleMargin(model)
+    scoreWith(model, df, "shap")
+  }
 
   /** Per-class exact TreeSHAP for multiclass forests — XGBoost's
     * `pred_contribs=True` with `num_class > 1` (one attribution
@@ -374,59 +397,15 @@ object TreeShap {
     * exactly up to float summation order.
     *
     * Scale posture: identical to [[transform]] — model-sized
-    * broadcast, one fanned map-side pass, no shuffle; per-row cost is
-    * the single-class kernel summed over the K class forests.
+    * broadcast, one fanned projection, no other shuffle; per-row cost
+    * is the single-class kernel summed over the K class forests.
     */
   def transformMulticlass(
-      model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame = {
-    val mm = model.model match {
-      case m: MultiSparse.MultiSparseModel => m
-      case m => throw new UnsupportedOperationException(
-        "multiclass TreeSHAP needs a multiclass forest (softprob or " +
-        s"ingested MultiSparseModel); got ${m.getClass} — use " +
-        "transform for single-target forests")
-    }
-    require(!mm.trees.exists(_.hasCategorical),
-      "TreeSHAP on a forest with categorical (set-membership) splits " +
-      "is not supported: the path-conditioning walk is " +
-      "numeric-threshold only — score the model as-is or re-encode " +
-      "the categorical features")
-    val clash = Seq("_kv", "bias", "shap").filter(df.columns.contains)
-    require(clash.isEmpty,
-      s"input already has column(s) ${clash.mkString(", ")} that " +
-      s"TreeShap would overwrite — rename or drop them before scoring")
-    val K = mm.numClasses
-    val M = model.featureCols.length
-    // per-class forests in stored tree order (the margin sum order)
-    val byClass = Array.tabulate(K)(k =>
-      mm.treeInfo.indices.collect {
-        case i if mm.treeInfo(i) == k => mm.trees(i)
-      }.toArray)
-    val expected = byClass.map(_.map(expectedValue))
-    val pathCap =
-      (if (mm.trees.isEmpty) 1 else mm.trees.map(depthOf).max) + 2
-    val base = mm.base
-    val data = graft.functions.GraftFunctions.fanOut(
-      GraftBoost.assemble(df, model.featureCols, model.imputation,
-        keepNaN = model.missingStrategy == "native"))
-    val bc = data.sparkSession.sparkContext.broadcast((byClass, expected))
-    val ku = udf((v: Vector) => {
-      val (forests, exps) = bc.value
-      val bias = new Array[Double](K)
-      val flat = new Array[Double](K * M)
-      var k = 0
-      while (k < K) {
-        val (b, phi) = shapOne(forests(k), exps(k), pathCap, M, v)
-        bias(k) = b + base
-        System.arraycopy(phi, 0, flat, k * M, M)
-        k += 1
-      }
-      (bias.toSeq, flat.toSeq)
-    })
-    data
-      .withColumn("_kv", ku(col("features")))
-      .withColumn("bias", col("_kv")("_1"))
-      .withColumn("shap", col("_kv")("_2"))
-      .drop("_kv", "features")
+      model: GraftBoost.GraftBoostModel, df: DataFrame): DataFrame = model.model match {
+    case _: MultiSparse.MultiSparseModel => scoreWith(model, df, "shap")
+    case m => throw new UnsupportedOperationException(
+      "multiclass TreeSHAP needs a multiclass forest (softprob or " +
+      s"ingested MultiSparseModel); got ${m.getClass} — use " +
+      "transform for single-target forests")
   }
 }

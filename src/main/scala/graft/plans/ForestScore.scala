@@ -14,22 +14,35 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
+import graft.ml.{Contributions, TreeShap}
+import graft.ml.LinearBoost.LinearModel
 import graft.ml.MultiSparse.MultiSparseModel
 import graft.ml.SparseBoost.SparseModel
 
-/** Scores a native forest ([[SparseModel]], [[MultiSparseModel]]) in
-  * one codegen'd expression — the reference's per-partition batch
-  * predict (`core.py:324-337, 366-377`: one `DMatrix(part)`, one
-  * `booster.predict`) as a Catalyst projection.
+/** Scores a boosted model ([[SparseModel]], [[MultiSparseModel]],
+  * [[LinearModel]]) in one codegen'd expression — the reference's
+  * per-partition batch predict (`core.py:324-337, 366-377`: one
+  * `DMatrix(part)`, one `booster.predict`) as a Catalyst projection.
   *
   * The children are either the model's feature columns (cast to
   * double) or one pre-assembled `features` vector, then optionally a
   * per-row base margin. Each row fills a reused `double[]` — a null
   * cell becomes NaN, the missing marker its training-time
-  * replacement — and makes one call into the model's own walk, which
-  * returns `prediction`, `proba` or `margins`. No vector is built and
-  * no UDF boundary is crossed; the forest is broadcast once per query
-  * and read once per task.
+  * replacement — and makes one call into the output's kernel. No
+  * vector is built and no UDF boundary is crossed; the scorer is
+  * broadcast once per query and read once per task. The outputs:
+  *  - `prediction`: the objective's response, or a multiclass
+  *    forest's argmax class;
+  *  - `proba`: binary (1 − p, p), or the softmax of the class margins;
+  *  - `margins`: a multiclass forest's K class margins;
+  *  - `contribs`: Saabas path attributions, one per feature
+  *    ([[graft.ml.Contributions]]);
+  *  - `shap`: exact TreeSHAP values, K×M row-major for a multiclass
+  *    forest ([[graft.ml.TreeShap]]);
+  *  - `interactions`: the M×M SHAP interaction matrix, row-major;
+  *  - `staged`: the margin after each boosting round, K per round for
+  *    a multiclass forest ([[graft.ml.StagedEval]]).
+  * A gblinear model gives `prediction`, `proba` and `staged`.
   */
 case class ForestScore(
     children: Seq[Expression],
@@ -70,7 +83,11 @@ case class ForestScore(
     output match {
       case "prediction" => f.prediction(x, bm)
       case "proba" => f.proba(x, bm)
-      case _ => f.margins(x, bm)
+      case "margins" => f.margins(x, bm)
+      case "contribs" => f.contribs(x, bm)
+      case "shap" => f.shap(x, bm)
+      case "interactions" => f.interactions(x, bm)
+      case _ => f.staged(x, bm)
     }
   }
 
@@ -129,7 +146,10 @@ object ForestScore {
   private def defaultOf(output: String): String =
     if (output == "prediction") "0.0" else "null"
 
-  /** `output` of a native forest over the named feature columns (non
+  private val outputs =
+    Set("prediction", "proba", "margins", "contribs", "shap", "interactions", "staged")
+
+  /** `output` of a model over the named feature columns (non
     * double numeric columns are cast). `imputation` is the model's
     * missing-marker rule (marker, replacement per column); unless
     * `keepNaN`, a null or NaN cell left after it fails the query and
@@ -148,13 +168,13 @@ object ForestScore {
       case Some((m, repl)) => (m, featureCols.map(repl).toArray)
       case None => (Double.NaN, null)
     }
-    val scorer = new ForestScorer(model, featureCols.toArray, marker, replace,
+    val scorer = new ForestScorer(model, output, featureCols.toArray, marker, replace,
       keepNaN, baseMargin.isDefined)
     build(spark, scorer, output, featureCols.map(c => col(c).cast(DoubleType)),
       featureCols.length, baseMargin)
   }
 
-  /** `output` of a native forest over a pre-assembled vector column. */
+  /** `output` of a model over a pre-assembled vector column. */
   def overVector(
       spark: SparkSession,
       model: Model[_],
@@ -162,14 +182,14 @@ object ForestScore {
       vector: Column,
       baseMargin: Option[Column]
   ): Column = {
-    val scorer = new ForestScorer(model, Array.empty, Double.NaN, null,
+    val scorer = new ForestScorer(model, output, Array.empty, Double.NaN, null,
       keepNaN = true, baseMargin.isDefined)
     build(spark, scorer, output, Seq(vector), 0, baseMargin)
   }
 
   private def build(spark: SparkSession, scorer: ForestScorer, output: String,
       inputs: Seq[Column], cells: Int, baseMargin: Option[Column]): Column = {
-    require(Set("prediction", "proba", "margins")(output), s"unknown forest output $output")
+    require(outputs(output), s"unknown forest output $output")
     val children = (inputs ++ baseMargin.map(_.cast(DoubleType)))
       .map(GraftColumnBridge.expression)
     GraftColumnBridge.column(ForestScore(children,
@@ -177,11 +197,14 @@ object ForestScore {
   }
 }
 
-/** The row side of [[ForestScore]]: the forest, the cell rule of the
-  * frame it reads and the arithmetic of each output.
+/** The row side of [[ForestScore]]: the model, the cell rule of the
+  * frame it reads and the arithmetic of each output. Each scorer
+  * derives only the state its own output reads, so a `proba` scorer
+  * ships no SHAP or staged state.
   */
 final class ForestScorer(
     model: Model[_],
+    output: String,
     names: Array[String],
     marker: Double,
     /** Replacement per feature cell for the missing marker; null when
@@ -193,9 +216,35 @@ final class ForestScorer(
 ) extends Serializable {
   private val single = model match { case m: SparseModel => m; case _ => null }
   private val multi = model match { case m: MultiSparseModel => m; case _ => null }
-  require(single != null || multi != null,
-    s"forest_score scores native forests, not ${model.getClass.getSimpleName}")
+  /** gblinear's weights and bias, without its per-round snapshots. */
+  private val linear = model match {
+    case m: LinearModel => new LinearModel(m.uid, m.weights, m.bias, m.base, m.objective)
+    case _ => null
+  }
+  require(single != null || multi != null || linear != null,
+    s"forest_score scores boosted models, not ${model.getClass.getSimpleName}")
   private val markerNaN = java.lang.Double.isNaN(marker)
+  private val explainer =
+    if (output == "shap" || output == "interactions") TreeShap.explainer(model) else null
+  /** Features of an attribution: the named columns, or for a vector the
+    * forest's highest split feature + 1.
+    */
+  private val numFeatures =
+    if (output != "contribs" && explainer == null) 0
+    else if (names.nonEmpty) names.length
+    else (if (single != null) single.trees else multi.trees)
+      .foldLeft(1)((w, t) => math.max(w, t.feature.max + 1))
+  /** gblinear's per-round steps from its snapshots: (Δbias, Δweights…). */
+  private val linearSteps = model match {
+    case m: LinearModel if output == "staged" =>
+      val snaps = m.snapshots.get
+      Array.tabulate(snaps.length) { r =>
+        val (w1, b1) = snaps(r)
+        val (w0, b0) = if (r == 0) (new Array[Double](w1.length), 0.0) else snaps(r - 1)
+        (b1 - b0) +: Array.tabulate(w1.length)(j => w1(j) - w0(j))
+      }
+    case _ => null
+  }
 
   /** Feature cell j of a row: null → NaN, the marker → its replacement
     * (matched by `==`, or `isNaN` for a NaN marker); without `keepNaN`
@@ -245,6 +294,7 @@ final class ForestScorer(
     */
   def prediction(x: Array[Double], bm: Double): Double =
     if (single != null) single.link(margin(x, bm))
+    else if (linear != null) linear.predictOne(x)
     else {
       val m = multi.marginsOf(x)
       var best = 0
@@ -256,13 +306,13 @@ final class ForestScorer(
       best.toDouble
     }
 
-  /** Binary: (1 − p, p) with p = σ(margin). Softprob: the SQL chain
-    * `exp(m − array_max(m))`, summed left to right from 0.0, then
-    * divided — StrictMath, as Spark's `exp`.
+  /** Binary (a forest or gblinear): (1 − p, p) with p = σ(margin).
+    * Multiclass: the SQL chain `exp(m − array_max(m))`, summed left to
+    * right from 0.0, then divided — StrictMath, as Spark's `exp`.
     */
   def proba(x: Array[Double], bm: Double): ArrayData =
-    if (single != null) {
-      val p = single.probOfMargin(margin(x, bm))
+    if (single != null || linear != null) {
+      val p = if (single != null) single.probOfMargin(margin(x, bm)) else linear.probOf(x)
       UnsafeArrayData.fromPrimitiveArray(Array(1.0 - p, p))
     } else {
       val m = multi.marginsOf(x)
@@ -282,4 +332,66 @@ final class ForestScorer(
 
   def margins(x: Array[Double], bm: Double): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(multi.marginsOf(x))
+
+  /** Saabas contributions of a single-margin forest. */
+  def contribs(x: Array[Double], bm: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(Contributions.contribsOne(single.trees, numFeatures, x))
+
+  def shap(x: Array[Double], bm: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(explainer.shap(x, numFeatures))
+
+  def interactions(x: Array[Double], bm: Double): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(explainer.interactions(x, numFeatures))
+
+  /** The margin after each round. A forest adds each round's trees
+    * (`treesPerRound` of them, summed apart first); a multiclass
+    * forest adds round r's K class trees to their class margins, in
+    * round-major layout; gblinear adds Δbias + Δw·x.
+    */
+  def staged(x: Array[Double], bm: Double): ArrayData = {
+    val out =
+      if (single != null) {
+        val trees = single.trees
+        val t = single.treesPerRound
+        val margins = new Array[Double]((trees.length + t - 1) / t)
+        var f = single.base
+        var i = 0
+        var r = 0
+        while (r < margins.length) {
+          val end = math.min(i + t, trees.length)
+          var acc = 0.0
+          while (i < end) { acc += trees(i).valueOf(x); i += 1 }
+          f += acc
+          margins(r) = f
+          r += 1
+        }
+        margins
+      } else if (multi != null) {
+        val f = Array.fill(multi.numClasses)(multi.base)
+        val margins = new Array[Double](multi.trees.length)
+        var i = 0
+        while (i < margins.length) {
+          val k = i % f.length
+          f(k) += multi.trees(i).valueOf(x)
+          margins(i) = f(k)
+          i += 1
+        }
+        margins
+      } else {
+        val margins = new Array[Double](linearSteps.length)
+        var f = linear.base
+        var r = 0
+        while (r < margins.length) {
+          val step = linearSteps(r)
+          var acc = step(0)
+          var j = 1
+          while (j < step.length) { acc += step(j) * x(j - 1); j += 1 }
+          f += acc
+          margins(r) = f
+          r += 1
+        }
+        margins
+      }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }

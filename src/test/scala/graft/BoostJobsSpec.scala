@@ -129,6 +129,52 @@ class BoostJobsSpec extends AnyFunSuite {
     assert(jobs.size == 1, jobs)
   }
 
+  test("every post-hoc output is a codegen'd ForestScore projection, with no UDF") {
+    val m = GraftBoost.train(df, feats, "y", native)
+    val reg = GraftBoost.train(df, feats, "x1", native.copy(objective = "reg:squarederror"))
+    val softprob = GraftBoost.train(df, feats, "cls",
+      native.copy(objective = "multi:softprob", multiclassStrategy = "softprob"))
+    val linear = GraftBoost.train(df, feats, "y",
+      BoostParams("binary:logistic", numRound = 3, booster = "gblinear"))
+    // scan-backed: the optimizer would score a local relation itself
+    val scan = spark.createDataFrame(df.rdd, df.schema)
+    val frames: Seq[(String, () => DataFrame)] = Seq(
+      "TreeShap.transform" -> (() => TreeShap.transform(m, scan)),
+      "TreeShap.transformInteractions" -> (() => TreeShap.transformInteractions(reg, scan)),
+      "TreeShap.transformMulticlass" -> (() => TreeShap.transformMulticlass(softprob, scan)),
+      "Contributions.transform" -> (() => Contributions.transform(m, scan)),
+      "StagedEval.history's staged frame" ->
+        (() => StagedEval.stagedRows(m, scan, "y", Some("x3"), multiclass = false)),
+      "StagedEval.history's multiclass staged frame" ->
+        (() => StagedEval.stagedRows(softprob, scan, "cls", None, multiclass = true)),
+      "gblinear predict" -> (() => GraftBoost.predict(linear, scan)),
+      "gblinear predictProba" -> (() => GraftBoost.predictProba(linear, scan)))
+    // without adaptive execution the physical plan holds its codegen
+    // stages before it runs
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try frames.foreach { case (name, frame) =>
+      val plan = frame().queryExecution.executedPlan
+      val fused = plan.collect { case w: WholeStageCodegenExec => w }
+        .exists(_.exists(_.expressions.exists(_.exists(_.isInstanceOf[ForestScore]))))
+      assert(fused, s"$name:\n$plan")
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
+        s"$name:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("three fits leave no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    GraftBoost.train(df, feats, "y", native)
+    GraftBoost.train(df, feats, "y", BoostParams("binary:logistic", numRound = 3,
+      booster = "gblinear"))
+    GraftBoost.train(df, feats, "cls", BoostParams("multi:softprob", numRound = 3,
+      multiclassStrategy = "rf"))
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, left.values.map(r => s"$r ${r.getStorageLevel}").mkString("\n"))
+  }
+
   test("a fit releases its checkpointed round states without a warning") {
     val logged = new ConcurrentLinkedQueue[String]()
     val capture = new AbstractAppender("boost-jobs-capture", null, null, true,

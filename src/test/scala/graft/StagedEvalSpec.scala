@@ -49,6 +49,16 @@ class StagedEvalSpec extends AnyFunSuite {
       assert(math.abs(a - b) <= 1e-9, s"staged $a vs loop $b") }
   }
 
+  test("a staged auc history leaves no persisted RDD behind") {
+    val m = GraftBoost.train(train, Seq("x1", "x2"), "label",
+      BoostParams(numRound = 3, maxDepth = 2))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Seq("auc", "aucpr").foreach(metric =>
+      assert(StagedEval.history(m, valid, "label", metric).length == 3))
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("bestIteration picks max for auc, min for logloss") {
     assert(StagedEval.bestIteration(Array(0.6, 0.9, 0.8), "auc") == 2)
     assert(StagedEval.bestIteration(Array(0.9, 0.3, 0.5), "logloss") == 2)
@@ -156,8 +166,7 @@ class StagedEvalSpec extends AnyFunSuite {
       (2, 1.0, 0.7), (2, 0.0, 0.4)
     )
     val df = rows.toDF("round", "label", "margin")
-    val got = StagedEval.aucByRound(df).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val got = StagedEval.aucByRound(df).zipWithIndex.map { case (m, i) => (i + 1) -> m }.toMap
     // brute force: U = #{pos>neg} + 0.5*#{ties}; AUC = U/(nPos*nNeg)
     val expected = rows.groupBy(_._1).map { case (round, rs) =>
       val pos = rs.filter(_._2 == 1.0).map(_._3)
@@ -183,8 +192,7 @@ class StagedEvalSpec extends AnyFunSuite {
       (2, 1.0, 0.7), (2, 0.0, 0.4)
     )
     val df = rows.toDF("round", "label", "margin")
-    val got = StagedEval.aucprByRound(df).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val got = StagedEval.aucprByRound(df).zipWithIndex.map { case (m, i) => (i + 1) -> m }.toMap
     // brute force: walk unique margins descending; each tie group g
     // contributes p_g * precision(after absorbing g); AP = sum / nPos
     val expected = rows.groupBy(_._1).map { case (round, rs) =>
@@ -209,8 +217,8 @@ class StagedEvalSpec extends AnyFunSuite {
     // trapezoid variant (XGBoost-style interpolation): brute force is
     // the same walk with the group contribution averaged between the
     // previous and current precision, anchored at P=1 for zero recall
-    val gotT = StagedEval.aucprByRound(df, trapezoid = true).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val gotT = StagedEval.aucprByRound(df, trapezoid = true).zipWithIndex
+      .map { case (m, i) => (i + 1) -> m }.toMap
     val expectedT = rows.groupBy(_._1).map { case (round, rs) =>
       val byMargin = rs.groupBy(_._3).toSeq.sortBy(-_._1)
       var tp = 0L; var fp = 0L; var ap = 0.0

@@ -83,7 +83,7 @@ class TreeShapSpec extends AnyFunSuite {
       Vectors.dense(6.0, 4.0, 0.0))
     probes.foreach { v =>
       val (bias, fast) =
-        TreeShap.shapOne(sm.trees, sm.trees.map(TreeShap.expectedValue), cap, 3, v)
+        TreeShap.shapOne(sm.trees, sm.trees.map(TreeShap.expectedValue), cap, 3, v.toArray)
       val brute = sm.trees.map(t => bruteShap(t, v, 3))
         .foldLeft(new Array[Double](3)) { (a, b) =>
           a.indices.foreach(i => a(i) += b(i)); a
@@ -114,8 +114,7 @@ class TreeShapSpec extends AnyFunSuite {
     val sm = m.model.asInstanceOf[SparseBoost.SparseModel]
     val t = sm.trees.head
     val exp = TreeShap.expectedValue(t)
-    val (bias, phi) = TreeShap.shapOne(sm.trees, Array(exp), 4, 1,
-      Vectors.dense(1.0))
+    val (bias, phi) = TreeShap.shapOne(sm.trees, Array(exp), 4, 1, Array(1.0))
     // phi_x = f(x) - E[f]: the entire deviation belongs to the only feature
     assert(math.abs(phi(0) - (t.valueOf(Vectors.dense(1.0)) - exp)) < 1e-12)
     assert(math.abs(bias - exp) < 1e-12)
@@ -138,7 +137,7 @@ class TreeShapSpec extends AnyFunSuite {
     val cap = sm.trees.map(TreeShap.depthOf).max + 2
     val vMiss = Vectors.dense(Double.NaN, 0.0)
     val (bias, phi) = TreeShap.shapOne(sm.trees,
-      sm.trees.map(TreeShap.expectedValue), cap, 2, vMiss)
+      sm.trees.map(TreeShap.expectedValue), cap, 2, vMiss.toArray)
     val margin = sm.trees.map(_.valueOf(vMiss)).sum
     assert(math.abs(bias + phi.sum - margin) < 1e-9,
       "additivity must hold on all-missing routing")
@@ -225,8 +224,10 @@ class TreeShapSpec extends AnyFunSuite {
     // reloaded model produces identical SHAP values
     val v = Vectors.dense(4.0)
     val capA = a.trees.map(TreeShap.depthOf).max + 2
-    val (biasA, phiA) = TreeShap.shapOne(a.trees, a.trees.map(TreeShap.expectedValue), capA, 1, v)
-    val (biasB, phiB) = TreeShap.shapOne(b.trees, b.trees.map(TreeShap.expectedValue), capA, 1, v)
+    val (biasA, phiA) =
+      TreeShap.shapOne(a.trees, a.trees.map(TreeShap.expectedValue), capA, 1, v.toArray)
+    val (biasB, phiB) =
+      TreeShap.shapOne(b.trees, b.trees.map(TreeShap.expectedValue), capA, 1, v.toArray)
     assert(biasA == biasB && phiA.toSeq == phiB.toSeq)
     // per-round stats persist too: truncation of the reloaded model
     // reports the SAME exact kept-prefix importances as a fresh fit
@@ -287,7 +288,7 @@ class TreeShapSpec extends AnyFunSuite {
       Vectors.dense(7.0, 0.0, 1.0))
     probes.foreach { v =>
       val exp = sm.trees.map(TreeShap.expectedValue)
-      val (bias, plain, mat) = TreeShap.interactionsOne(sm.trees, exp, cap, M, v)
+      val (bias, plain, mat) = TreeShap.interactionsOne(sm.trees, exp, cap, M, v.toArray)
       for (i <- 0 until M; j <- 0 until M if i != j) {
         val brute = sm.trees.map(t => bruteInter(t, v, i, j)).sum
         assert(math.abs(mat(i)(j) - brute) < 1e-9,
@@ -311,7 +312,7 @@ class TreeShapSpec extends AnyFunSuite {
     val vRow = one.select("x1", "x2", "x3").head()
     val vv = Vectors.dense(vRow.getDouble(0), vRow.getDouble(1), vRow.getDouble(2))
     val (_, _, direct) = TreeShap.interactionsOne(sm.trees,
-      sm.trees.map(TreeShap.expectedValue), cap, M, vv)
+      sm.trees.map(TreeShap.expectedValue), cap, M, vv.toArray)
     assert(viaDf == direct.flatten.toSeq,
       "transformInteractions must equal the kernel bit-for-bit")
   }

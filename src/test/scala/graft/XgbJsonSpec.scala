@@ -387,9 +387,8 @@ class XgbJsonSpec extends AnyFunSuite {
     val m = XgbJson.importModel(doc)
     val lm = m.model.asInstanceOf[graft.ml.LinearBoost.LinearModel]
     assert(lm.weights.toSeq == Seq(2.0, -1.0) && lm.bias == 0.5)
-    import org.apache.spark.ml.linalg.Vectors
     // margin = base(0.25, identity link) + bias + w.x
-    assert(lm.marginOf(Vectors.dense(1.0, 1.0)) == 0.25 + 0.5 + 1.0)
+    assert(lm.marginOf(Array(1.0, 1.0)) == 0.25 + 0.5 + 1.0)
   }
 
   test("gblinear: ingested document scores NaN entries as zero contribution") {
@@ -517,8 +516,8 @@ class XgbJsonSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.ml.TreeDump.treesToDataFrame(spark, m)
     }
-    // ... and the MULTICLASS TreeSHAP path refuses too (it builds its
-    // forest context without going through the guarded forestCtx)
+    // ... and the MULTICLASS TreeSHAP path refuses too (its per-class
+    // forests pass the same guard)
     val mmCat = graft.ml.GraftBoost.GraftBoostModel(
       new graft.ml.MultiSparse.MultiSparseModel("catmm",
         Array(sm.trees.head, sm.trees.head), Array(0, 1), 2,
